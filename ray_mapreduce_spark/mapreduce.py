@@ -119,6 +119,20 @@ def _run(
     )
 
 
+def _chunk_size(n: int, num_mappers: int, max_chunk_size: int) -> int:
+    """The reference's chunk arithmetic (mapreduce.py:148-150); ``n``
+    is the dataset_size hint or the true row count."""
+    return min(max_chunk_size, math.ceil(n / max(num_mappers, 1))) or 1
+
+
+def _num_partitions(n: int, count: int, num_mappers: int, max_chunk_size: int) -> int:
+    """Input partitions for ``count`` rows: one per chunk, capped at
+    10,000 and floored at num_mappers — the one rule for list, range
+    and streamed inputs."""
+    chunks = math.ceil(count / _chunk_size(n, num_mappers, max_chunk_size))
+    return max(min(chunks, 10_000), int(num_mappers), 1)
+
+
 def MapReduceBulk(
     data_list: Iterable,
     map_fcn: MapFcn,
@@ -144,6 +158,44 @@ def MapReduceBulk(
     (see ``_run``); omit it for reference-exact holistic reduces.
     """
     spark = spark or get_spark()
+    sc = spark.sparkContext
+    if not isinstance(data_list, (list, tuple, range)):
+        # Lazy/unsized iterables: STREAM driver-side in buffers instead
+        # of materializing one full Python list (r16, guide §4/§5).
+        # Each buffer becomes one parallelize call — the serialized
+        # rows then sit in JVM driver memory until the job runs, so
+        # this bounds Python-side memory, not the driver's total. The
+        # buffer is a multiple of chunk_size (and >= 100k rows, so a
+        # small reference-default max_chunk_size of 1000 cannot
+        # degenerate into thousands of per-chunk py4j calls): every
+        # full buffer slices into whole chunks, and union preserves
+        # buffer order. An input that fits in the first buffer is
+        # just a list and takes the list path below.
+        import itertools
+
+        if dataset_size is not None:
+            chunk_size = _chunk_size(dataset_size, num_mappers, max_chunk_size)
+        else:
+            chunk_size = max(int(max_chunk_size), 1)
+        buf_rows = chunk_size * math.ceil(100_000 / chunk_size)
+        it = iter(data_list)
+        chunk = list(itertools.islice(it, buf_rows))
+        if len(chunk) == buf_rows:
+            rdds, count = [], 0
+            while chunk:
+                count += len(chunk)
+                rdds.append(sc.parallelize(chunk, math.ceil(len(chunk) / chunk_size)))
+                chunk = list(itertools.islice(it, buf_rows))
+            rdd = sc.union(rdds)
+            n = dataset_size if dataset_size is not None else count
+            num_parts = _num_partitions(n, count, num_mappers, max_chunk_size)
+            if rdd.getNumPartitions() != num_parts:
+                # the list path's num_mappers floor (a shuffle, only for
+                # a multi-buffer stream cut into fewer chunks than
+                # mappers) or its partition cap (a narrow coalesce)
+                rdd = rdd.coalesce(num_parts, shuffle=rdd.getNumPartitions() < num_parts)
+            return _run(rdd, map_fcn, reduce_fcn, num_reducers, strict_keys, combiner)
+        data_list = chunk
     # Keep ``range`` inputs unconverted: SparkContext.parallelize has a
     # dedicated range fast path ("Using range is recommended if the
     # input represents a range for performance" — pyspark docs) that
@@ -153,52 +205,8 @@ def MapReduceBulk(
     # across the Python boundary). Same elements, same order — the
     # reference's 2M-record job drops its driver-side serialization
     # entirely. list/tuple inputs are unchanged.
-    if isinstance(data_list, (list, tuple, range)):
-        data = data_list
-        n = dataset_size if dataset_size is not None else len(data)
-        chunk_size = min(max_chunk_size, math.ceil(n / max(num_mappers, 1))) or 1
-        num_parts = max(
-            min(math.ceil(len(data) / chunk_size), 10_000), int(num_mappers), 1
-        )
-        rdd = spark.sparkContext.parallelize(data, num_parts)
-    else:
-        # Lazy/unsized iterables: STREAM driver-side in bounded buffers
-        # instead of materializing one full list (r16, guide §4/§5 —
-        # the driver should hold O(buffer), not O(n)). Each buffer
-        # becomes one parallelize call sliced into
-        # ceil(len/chunk_size) partitions, so the total partition
-        # count matches the list path's arithmetic; union preserves
-        # buffer order, so element order matches the list path exactly
-        # (equivalence test: test_bulk_generator_input_matches_list).
-        # The buffer is >= chunk_size so a small reference-default
-        # max_chunk_size (1000) cannot degenerate into thousands of
-        # per-chunk py4j parallelize calls. The shuffle/reduce stages
-        # are unchanged.
-        import itertools
-
-        if dataset_size is not None:
-            chunk_size = (
-                min(max_chunk_size, math.ceil(dataset_size / max(num_mappers, 1))) or 1
-            )
-        else:
-            chunk_size = max(int(max_chunk_size), 1)
-        buf_rows = max(chunk_size, 100_000)
-        sc = spark.sparkContext
-        it = iter(data_list)
-        rdds = []
-        while True:
-            chunk = list(itertools.islice(it, buf_rows))
-            if not chunk:
-                break
-            rdds.append(
-                sc.parallelize(chunk, max(1, math.ceil(len(chunk) / chunk_size)))
-            )
-        if not rdds:
-            rdd = sc.parallelize([], max(int(num_mappers), 1))
-        elif len(rdds) == 1:
-            rdd = rdds[0]
-        else:
-            rdd = sc.union(rdds)
+    n = dataset_size if dataset_size is not None else len(data_list)
+    rdd = sc.parallelize(data_list, _num_partitions(n, len(data_list), num_mappers, max_chunk_size))
     return _run(rdd, map_fcn, reduce_fcn, num_reducers, strict_keys, combiner)
 
 

@@ -26,7 +26,6 @@ def connected_components(
     src: str = "doc_a",
     dst: str = "doc_b",
     max_iters: int = 50,
-    pairs_unique: bool = False,
 ) -> DataFrame:
     """(src, dst) undirected pair list -> (node, component) with
     component = min node id reachable. Deterministic.
@@ -37,18 +36,16 @@ def connected_components(
     returning split components — label propagation needs rounds =
     graph diameter, so 50 covers any realistic near-dup chain.
 
-    ``pairs_unique=True`` skips the edge ``distinct()``: min-label
-    propagation is duplicate-tolerant by algebra (every aggregation
-    is a min, so repeated edges cannot change any label), and when
-    the caller's pair frame is already unique on (src, dst) with
-    src < dst — true for every pair family in this repo, each keyed
-    by a groupBy/dropDuplicates on (doc_a, doc_b) — the exploded
-    directed edges are unique by construction and the distinct is a
-    pure extra exchange+aggregate inside the (heaviest) checkpoint
-    job (r15 optimization: guide §2.4 "remove shuffles outright";
-    measured -0.1-0.2s on pipeline_clean_corpus at sf0.1). Leave it
-    False for arbitrary pair inputs, where deduping once beats
-    carrying duplicate edges through every propagation round."""
+    Edges are NOT deduplicated: min-label propagation is
+    duplicate-tolerant by algebra (every aggregation is a min, so
+    repeated edges cannot change any label), and every pair family
+    in this repo is already unique on (src, dst) — each is keyed by a
+    groupBy/dropDuplicates on (doc_a, doc_b) — so an edge
+    ``distinct()`` would be a pure extra exchange+aggregate inside the
+    (heaviest) checkpoint job (guide §2.4 "remove shuffles outright";
+    measured -0.1-0.2s on pipeline_clean_corpus at sf0.1). A caller
+    with a heavily duplicated pair list should dedupe it once
+    upstream rather than carry the duplicates through every round."""
     # Both edge directions via ONE explode over the pair row — never a
     # self-union: a union references the ``pairs`` subtree twice, and
     # the two branches race to execute the full upstream
@@ -63,11 +60,8 @@ def connected_components(
             F.struct(F.col(dst).alias("u"), F.col(src).alias("v")),
         )
     )
-    edges = pairs.select(both_dirs.alias("e")).select("e.u", "e.v")
-    if not pairs_unique:
-        edges = edges.distinct()
     # materialize: every iteration joins against edges
-    edges = edges.localCheckpoint(eager=True)
+    edges = pairs.select(both_dirs.alias("e")).select("e.u", "e.v").localCheckpoint(eager=True)
     # Initial labels = min over the CLOSED neighborhood (self + direct
     # neighbors). The identity init ("comp = node") needs a distinct —
     # a shuffle by node — anyway, so computing round 1's result inside
@@ -127,13 +121,10 @@ def connected_components(
     return labels
 
 
-def dedup_cluster_survivors(
-    docs: DataFrame, pairs: DataFrame, pairs_unique: bool = False
-) -> DataFrame:
+def dedup_cluster_survivors(docs: DataFrame, pairs: DataFrame) -> DataFrame:
     """Full cluster-dedup: docs + near-dup pairs -> every doc mapped to
     its cluster and a keep/drop flag (survivor = min doc_id per
-    cluster; singletons survive trivially). ``pairs_unique`` is passed
-    through to ``connected_components``.
+    cluster; singletons survive trivially).
 
     Requires pair endpoints ⊆ docs.doc_id (true by construction for
     every caller — pairs are derived from the same docs frame). Under
@@ -144,7 +135,7 @@ def dedup_cluster_survivors(
     singletons are labeled by their own doc_id — so
     ``is_survivor = (doc_id == cluster)`` is the identical flag with
     no exchange and no sort (one full shuffle removed)."""
-    comps = connected_components(pairs, pairs_unique=pairs_unique)
+    comps = connected_components(pairs)
     return (
         docs.select("doc_id")
         .join(comps, docs.doc_id == comps.node, "left")

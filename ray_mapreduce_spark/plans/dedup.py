@@ -394,11 +394,6 @@ def _signatures_from_shingles(sh: DataFrame) -> DataFrame:
     )
 
 
-def minhash_signatures(d: DataFrame) -> DataFrame:
-    """doc_id -> minhash signature for a documents frame."""
-    return _signatures_from_shingles(_shingle_hashes(d))
-
-
 def minhash_pairs(docs: DataFrame, bucket_cap: int = DEFAULT_DF_CAP) -> DataFrame:
     """LSH candidate pairs + exact-Jaccard verify for ``docs`` (any
     frame with doc_id/lang/text) — emits pairs with jaccard >= 0.6.
@@ -691,8 +686,7 @@ def dedup_clusters(
     d = load_table(spark, sf_dir, "documents")
     if pairs is None:
         pairs = dedup_minhash_pairs(spark, sf_dir)
-    # minhash pairs are unique on (doc_a, doc_b) — skip the edge distinct
-    return dedup_cluster_survivors(d, pairs, pairs_unique=True)
+    return dedup_cluster_survivors(d, pairs)
 
 
 # --------------------------------------------------------------------------
@@ -762,8 +756,7 @@ def pipeline_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = minhash_pairs(exact.select("doc_id", "lang", "text"))
 
     # 4. cluster and keep the best-quality doc per cluster
-    # minhash pairs are unique on (doc_a, doc_b) — skip the edge distinct
-    comps = connected_components(pairs, pairs_unique=True)
+    comps = connected_components(pairs)
     clustered = exact.join(comps, exact.doc_id == comps.node, "left").select(
         "doc_id", "lang", "quality", F.coalesce("comp", F.col("doc_id")).alias("cluster")
     )
@@ -996,8 +989,7 @@ def dedup_clusters_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.clustering import connected_components
 
     pairs = ngram_jaccard_pairs(load_table(spark, sf_dir, "documents"))
-    # ngram pairs are unique on (doc_a, doc_b) — skip the edge distinct
-    return connected_components(pairs, pairs_unique=True).select(
+    return connected_components(pairs).select(
         F.col("node").alias("doc_id"), F.col("comp").alias("cluster")
     )
 
@@ -1181,7 +1173,7 @@ def survivors_quality(d: DataFrame) -> DataFrame:
     from ..operators.clustering import connected_components
     from .text_analysis import quality_raw_col
 
-    clusters = connected_components(ngram_jaccard_pairs(d), pairs_unique=True).select(
+    clusters = connected_components(ngram_jaccard_pairs(d)).select(
         F.col("node").alias("doc_id"), F.col("comp").alias("cluster")
     )
     q = d.select("doc_id", "lang", quality_raw_col().alias("qr"))

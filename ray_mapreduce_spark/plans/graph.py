@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 
 from ..sources import load_table
 from .registry import register
-from .similarity import _dot, _norm, _with_vec
+from .similarity import _cos, _with_vec
 
 # Edge rule shared with dedup_embedding_cosine (plans/similarity.py):
 # same-label pairs at cosine >= EDGE_COS_THRESHOLD. The oracles
@@ -72,7 +72,7 @@ def _pair_edges(v: DataFrame, threshold: float = EDGE_COS_THRESHOLD) -> DataFram
     computes the projection once (gotcha #14, self-join case)."""
     a = v.alias("a")
     b = v.alias("b")
-    cos = _dot("a.vec", "b.vec") / (_norm("a.vec") * _norm("b.vec"))
+    cos = _cos("a.vec", "b.vec")
     return (
         a.join(
             b,

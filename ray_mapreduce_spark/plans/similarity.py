@@ -62,6 +62,17 @@ def _norm(a: Column | str) -> Column:
     )
 
 
+def _cos(a: Column | str, b: Column | str) -> Column:
+    return _dot(a, b) / (_norm(a) * _norm(b))
+
+
+def _d2(a: Column | str, b: Column | str) -> Column:
+    """Squared L2 distance rounded to 4dp — the k-means/PQ lockstep
+    rule: both engines fold the same dots left to right, and the
+    round absorbs the last-ulp drift before any argmin compares."""
+    return F.round(_dot(a, a) - 2 * _dot(a, b) + _dot(b, b), 4)
+
+
 def _with_vec(d: DataFrame) -> DataFrame:
     """Widen the float embedding to double once so both engines
     compute the same double-precision dot products (left-to-right
@@ -120,12 +131,15 @@ def similarity_topk_brute(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = (
         F.broadcast(q)
         .join(c, F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            (_dot("qvec", "cvec") / (_norm("qvec") * _norm("cvec"))).alias("cos"),
-        )
+        .select("query_id", "neighbor_id", _cos("qvec", "cvec").alias("cos"))
     )
+    return _topk_cosine(scored)
+
+
+def _topk_cosine(scored: DataFrame) -> DataFrame:
+    """Per-query top-TOP_K cut of (query_id, neighbor_id, cos) rows:
+    cosine descending with a neighbor_id tiebreak, cosine rounded to
+    4dp only at output."""
     w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), "neighbor_id")
     return (
         scored.withColumn("rk", F.row_number().over(w))
@@ -160,7 +174,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = _with_vec(load_table(spark, sf_dir, "embeddings"))
     a = v.alias("a")
     b = v.alias("b")
-    cos = _dot("a.vec", "b.vec") / (_norm("a.vec") * _norm("b.vec"))
+    cos = _cos("a.vec", "b.vec")
     return (
         a.join(b, (F.col("a.label") == F.col("b.label")) & (F.col("a.vec_id") < F.col("b.vec_id")))
         .withColumn("cos", cos)
@@ -177,10 +191,9 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Sign-LSH (random hyperplane) bucketed ANN: the scale path.
 # Pseudo-hyperplanes are derived deterministically: component j of
 # hyperplane p = (xxhash64(p, j) mod 2001 - 1000)/1000 -> values in
-# [-1, 1]. Bucket = bit pattern of sign(v . h_p) for p in 0..n_planes-1.
-# No oracle (bucketing is engine-specific); pytest checks recall vs the
-# brute-force result at small sf.
-N_PLANES = 8
+# [-1, 1]. Bucket = bit pattern of sign(v . h_p) over a table's planes
+# (_table_bucket_sql). No oracle (bucketing is engine-specific); pytest
+# checks recall vs the brute-force result at small sf.
 
 
 def _plane_dot_sql(vec: str, p: int) -> str:
@@ -199,20 +212,6 @@ def _plane_dot_sql(vec: str, p: int) -> str:
         f"(x, j) -> x * (CAST(xxhash64({p}, j) % 2001 - 1000 AS DOUBLE) / 1000.0)), "
         f"CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
     )
-
-
-def _bucket_sql(vec: str) -> str:
-    """Sign pattern of N_PLANES hyperplane dots packed into an int —
-    one SQL expression string."""
-    bits = " | ".join(
-        f"(CASE WHEN {_plane_dot_sql(vec, p)} > 0 THEN {1 << p} ELSE 0 END)"
-        for p in range(N_PLANES)
-    )
-    return f"({bits})"
-
-
-def _bucket_col(vec: str) -> Column:
-    return F.expr(_bucket_sql(vec))
 
 
 def _banded_vectors(v: DataFrame) -> DataFrame:
@@ -251,16 +250,8 @@ def similarity_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .dropDuplicates(["query_id", "neighbor_id"])
     )
-    scored = cand.select(
-        "query_id",
-        "neighbor_id",
-        (_dot("qvec", "cvec") / (_norm("qvec") * _norm("cvec"))).alias("cos"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), "neighbor_id")
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= TOP_K)
-        .select("query_id", "neighbor_id", F.round("cos", 4).alias("cosine"), "rk")
+    return _topk_cosine(
+        cand.select("query_id", "neighbor_id", _cos("qvec", "cvec").alias("cos"))
     )
 
 
@@ -330,7 +321,7 @@ def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = cand.join(
         vec.select(F.col("vec_id").alias("id_a"), F.col("vec").alias("va")), "id_a"
     ).join(vec.select(F.col("vec_id").alias("id_b"), F.col("vec").alias("vb")), "id_b")
-    cos = _dot("va", "vb") / (_norm("va") * _norm("vb"))
+    cos = _cos("va", "vb")
     return (
         pairs.withColumn("cos", cos)
         .filter(F.col("cos") >= EMB_NEARDUP_THRESHOLD)
@@ -357,15 +348,19 @@ N_PROBE = 2
 )
 def similarity_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = _with_vec(load_table(spark, sf_dir, "embeddings"))
-    # centroids: the N_CELLS ids with the smallest xxhash64(vec_id) —
-    # a deterministic uniform sample. orderBy+limit compiles to
-    # TakeOrderedAndProject (per-partition top-K, then a K·P-row
-    # gather), so no task ever streams the full id set — unlike the
-    # pre-r3 ntile over a global Window.orderBy, which funneled every
-    # vec_id through one task. The row_number window that assigns cell
-    # numbers runs AFTER the limit, over exactly N_CELLS rows. A real
-    # deployment would k-means these seeds; the assignment/probe joins
-    # below are the part whose shape matters at 100 TB.
+    return _ivf_probe_topk(v, _seed_cells(v))
+
+
+def _seed_cells(v: DataFrame) -> DataFrame:
+    """(cell, cvec) seed centroids: the N_CELLS vectors with the
+    smallest xxhash64(vec_id) — a deterministic uniform sample.
+    orderBy+limit compiles to TakeOrderedAndProject (per-partition
+    top-K, then a K·P-row gather), so no task ever streams the full id
+    set — unlike the pre-r3 ntile over a global Window.orderBy, which
+    funneled every vec_id through one task. The row_number window that
+    assigns cell numbers runs AFTER the limit, over exactly N_CELLS
+    rows. similarity_topk_ivf probes these seeds as they are;
+    _ivf_trained_centroids refines them with Lloyd rounds."""
     seed_ids = (
         v.select("vec_id", F.xxhash64("vec_id").alias("h"))
         .orderBy("h", "vec_id")
@@ -373,10 +368,7 @@ def similarity_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("cell", F.row_number().over(Window.orderBy("h", "vec_id")) - 1)
         .select("vec_id", "cell")
     )
-    centroids = v.join(F.broadcast(seed_ids), "vec_id").select(
-        "cell", F.col("vec").alias("cvec")
-    )
-    return _ivf_probe_topk(v, centroids)
+    return v.join(F.broadcast(seed_ids), "vec_id").select("cell", F.col("vec").alias("cvec"))
 
 
 def _ranked_cells(
@@ -387,7 +379,7 @@ def _ranked_cells(
     scored = side.crossJoin(F.broadcast(centroids)).select(
         *side.columns,
         "cell",
-        (_dot(vec_col, "cvec") / (_norm(vec_col) * _norm("cvec"))).alias("ccos"),
+        _cos(vec_col, "cvec").alias("ccos"),
     )
     w = Window.partitionBy(*[c for c in side.columns if c != vec_col]).orderBy(
         F.col("ccos").desc(), "cell"
@@ -415,28 +407,19 @@ def _ivf_probe_topk(v: DataFrame, centroids: DataFrame) -> DataFrame:
         F.broadcast(query_cells)
         .join(corpus_cells, "cell")
         .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            (_dot("qvec", "cvec_n") / (_norm("qvec") * _norm("cvec_n"))).alias("cos"),
-        )
+        .select("query_id", "neighbor_id", _cos("qvec", "cvec_n").alias("cos"))
         .dropDuplicates(["query_id", "neighbor_id"])
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), "neighbor_id")
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= TOP_K)
-        .select("query_id", "neighbor_id", F.round("cos", 4).alias("cosine"), "rk")
-    )
+    return _topk_cosine(scored)
 
 
 # IVF with TRAINED cells: the seed-sampled variant above concedes "a
 # real deployment would k-means these seeds" — this variant does,
-# reusing the Lloyd kernel (unrounded: no oracle needs lockstep here)
-# before the identical probe stage. Trained cells align with the data
-# distribution, which is exactly where seed-IVF loses recall (the
-# adversarial clustered fixture measures the gap; see
-# tests/test_ann_adversarial.py).
+# with the shared _lloyd kernel (its rounded distances keep the
+# trained cells partition-independent) before the identical probe
+# stage. Trained cells align with the data distribution, which is
+# exactly where seed-IVF loses recall (the adversarial clustered
+# fixture measures the gap; see tests/test_ann_adversarial.py).
 IVF_KMEANS_ITERS = 2
 
 
@@ -448,72 +431,26 @@ IVF_KMEANS_ITERS = 2
 def similarity_topk_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF top-k with Lloyd-refined centroids.
 
-    Scale shape: training = IVF_KMEANS_ITERS rounds of the
-    cluster_kmeans_assign kernel (broadcast centroids, partial min_by
-    assignment, posexplode partial-avg update) seeded by the same
-    deterministic hash-ordered sample as similarity_topk_ivf; the
-    final K x dim centroid frame is eager-localCheckpointed — it is
-    tiny, and it feeds TWO broadcast builds (corpus-side and
-    query-side cell ranking), which are sibling branches that would
-    otherwise re-run training twice (gotcha #9, sibling case). Probe
-    stage identical to similarity_topk_ivf."""
-    from pyspark import StorageLevel
-
-    v = (
-        _with_vec(load_table(spark, sf_dir, "embeddings"))
-        .select("vec_id", "vec")
-        .persist(StorageLevel.MEMORY_AND_DISK)  # loop-invariant corpus
-    )
+    Scale shape: training = IVF_KMEANS_ITERS _lloyd rounds seeded by
+    the same deterministic hash-ordered sample as similarity_topk_ivf
+    (_seed_cells); the final K x dim centroid frame is
+    eager-localCheckpointed — it is tiny, and it feeds TWO broadcast
+    builds (corpus-side and query-side cell ranking), which are
+    sibling branches that would otherwise re-run training twice
+    (gotcha #9, sibling case). Probe stage identical to
+    similarity_topk_ivf."""
+    v = _persisted_corpus(spark, sf_dir)
     return _ivf_probe_topk(v, _ivf_trained_centroids(v))
 
 
 def _ivf_trained_centroids(v: DataFrame) -> DataFrame:
     """Lloyd-refined IVF cells over a persisted (vec_id, vec) frame,
-    seeded by the deterministic hash-ordered sample; returns the
-    eager-checkpointed (cell, cvec) frame (it feeds sibling broadcast
-    builds, gotcha #9). Shared by similarity_topk_ivf_kmeans and the
-    composed IVF-PQ pipeline."""
-    seed_ids = (
-        v.select("vec_id", F.xxhash64("vec_id").alias("h"))
-        .orderBy("h", "vec_id")
-        .limit(N_CELLS)
-        .withColumn("cell", F.row_number().over(Window.orderBy("h", "vec_id")) - 1)
-        .select("vec_id", "cell")
+    seeded by _seed_cells; returns the eager-checkpointed (cell, cvec)
+    frame (it feeds sibling broadcast builds, gotcha #9). Shared by
+    similarity_topk_ivf_kmeans and the composed IVF-PQ pipeline."""
+    return _lloyd(v, _seed_cells(v), "cell", "vec", IVF_KMEANS_ITERS).localCheckpoint(
+        eager=True
     )
-    cent = v.join(F.broadcast(seed_ids), "vec_id").select(
-        "cell", F.col("vec").alias("cvec")
-    )
-    for _ in range(IVF_KMEANS_ITERS):
-        # Same determinism discipline as cluster_kmeans_assign (gotcha
-        # #13): distances rounded with a cell tiebreak before argmin,
-        # centroid means re-rounded — float summation order varies
-        # with partitioning, and an unrounded near-tie would make the
-        # trained cells (and thus the result set) partition-dependent.
-        d2 = F.round(
-            _dot("vec", "vec") - 2 * _dot("vec", "cvec") + _dot("cvec", "cvec"), 4
-        )
-        assigned = (
-            v.crossJoin(F.broadcast(cent))
-            .withColumn("d2", d2)
-            .groupBy("vec_id")
-            .agg(
-                F.min_by("cell", F.struct("d2", "cell")).alias("cell"),
-                F.first("vec").alias("vec"),
-            )
-        )
-        cent = (
-            assigned.select("cell", F.posexplode("vec").alias("pos", "val"))
-            .groupBy("cell", "pos")
-            .agg(F.round(F.avg("val"), 6).alias("cval"))
-            .groupBy("cell")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "cval"))),
-                    lambda s: s["cval"],
-                ).alias("cvec")
-            )
-        )
-    return cent.localCheckpoint(eager=True)
 
 
 # --------------------------------------------------------------------------
@@ -593,19 +530,21 @@ K_MEANS_K = 8
 K_MEANS_ITERS = 3
 
 
+def _pq_d2_sql(v: str, c: str) -> str:
+    """DuckDB text of _d2: the 4dp-rounded squared L2 distance every
+    k-means, PQ and k-center oracle replays."""
+    return (
+        f"round(list_inner_product({v}, {v})"
+        f" - 2 * list_inner_product({v}, {c})"
+        f" + list_inner_product({c}, {c}), 4)"
+    )
+
+
 def _kmeans_cte(k: int, iters: int, dim: int) -> str:
     """Unrolled DuckDB Lloyd-iteration CTE chain; the final assignment
     lives in ``a{iters}`` as (vec_id, vec, cluster). Shared by
     cluster_kmeans_assign and dedup_semantic_kmeans so the two oracles
     cannot drift."""
-
-    def d2(v: str, c: str) -> str:
-        return (
-            f"round(list_inner_product({v}, {v})"
-            f" - 2 * list_inner_product({v}, {c})"
-            f" + list_inner_product({c}, {c}), 4)"
-        )
-
     parts = [
         "WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vec FROM embeddings)",
         f"c0 AS (SELECT CAST(vec_id AS INT) AS cluster, vec AS cvec"
@@ -616,7 +555,7 @@ def _kmeans_cte(k: int, iters: int, dim: int) -> str:
             f"a{i} AS (SELECT vec_id, vec, cluster FROM ("
             f" SELECT v.vec_id, v.vec, c.cluster,"
             f" row_number() OVER (PARTITION BY v.vec_id"
-            f" ORDER BY {d2('v.vec', 'c.cvec')}, c.cluster) AS rn"
+            f" ORDER BY {_pq_d2_sql('v.vec', 'c.cvec')}, c.cluster) AS rn"
             f" FROM v CROSS JOIN c{i - 1} c) WHERE rn = 1)"
         )
         if i < iters:
@@ -646,23 +585,73 @@ def cluster_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, cluster) after K_MEANS_ITERS Lloyd rounds from the
     deterministic vec_id < K seed centroids.
 
-    Scale shape per iteration: assignment is a BROADCAST cross join
-    against the K centroids (K·n scored rows that partial-aggregate
-    map-side through min_by before the one O(n) shuffle on vec_id —
-    no window over the scored set), and the centroid update shuffles
-    only (cluster, pos, partial sum/count) ≤ K·dim rows per map
-    partition (posexplode + partial avg, the
-    embedding_centroid_by_bucket kernel). The corpus projection is
-    lazily persisted: its per-iteration consumers are
+    Scale shape per iteration: assignment (_nearest) is a BROADCAST
+    cross join against the K centroids (K·n scored rows that
+    partial-aggregate map-side through min_by before the one O(n)
+    shuffle on vec_id — no window over the scored set), and the
+    centroid update (_centroids) shuffles only (cluster, pos, partial
+    sum/count) ≤ K·dim rows per map partition. The corpus projection
+    is lazily persisted: its per-iteration consumers are
     dependency-ordered (iteration i+1 needs centroids from iteration
     i), so the first assignment materializes it once (gotcha #9,
-    dependency-ordered case). min_by ties are impossible by
-    construction — the ordering struct includes the cluster id
-    (gotcha from the r3 sf0.1 sweep: plain min_by on a value with
-    duplicates is partition-order nondeterministic)."""
+    dependency-ordered case)."""
     v = _persisted_corpus(spark, sf_dir)
     assigned = _lloyd_assign(v, K_MEANS_K, K_MEANS_ITERS)
     return assigned.select("vec_id", F.col("cluster").cast("bigint").alias("cluster"))
+
+
+def _nearest(
+    points: DataFrame, cent: DataFrame, label: str, vec: str, by: tuple = ()
+) -> DataFrame:
+    """Lloyd assign step: each (vec_id, *by) point of ``points`` takes
+    the ``label`` of its nearest ``cent`` row (one broadcast join —
+    a cross join, or an equi-join on ``by``); returns
+    (vec_id, *by, label, vec). Determinism (gotcha #13): float
+    summation order varies with partitioning, so distances are _d2's
+    4dp-rounded values and min_by orders on (d2, label) — plain
+    min_by on a value with duplicates is partition-order
+    nondeterministic. min_by partial-aggregates map-side, so the one
+    shuffle carries a single row per point."""
+    cent = F.broadcast(cent)
+    joined = points.join(cent, list(by)) if by else points.crossJoin(cent)
+    return (
+        joined.withColumn("d2", _d2(vec, "cvec"))
+        .groupBy("vec_id", *by)
+        .agg(
+            F.min_by(label, F.struct("d2", label)).alias(label),
+            F.first(vec).alias(vec),  # constant per point
+        )
+    )
+
+
+def _centroids(assigned: DataFrame, label: str, vec: str, by: tuple = ()) -> DataFrame:
+    """Lloyd update step: component-wise mean of ``vec`` per
+    (*by, label), re-rounded to 6dp; returns (*by, label, cvec).
+    posexplode + partial avg shuffles only (*by, label, pos, partial
+    sum/count) rows (the embedding_centroid_by_bucket kernel); the
+    array is reassembled in pos order."""
+    return (
+        assigned.select(*by, label, F.posexplode(vec).alias("pos", "val"))
+        .groupBy(*by, label, "pos")
+        .agg(F.round(F.avg("val"), 6).alias("cval"))
+        .groupBy(*by, label)
+        .agg(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("pos", "cval"))),
+                lambda s: s["cval"],
+            ).alias("cvec")
+        )
+    )
+
+
+def _lloyd(
+    points: DataFrame, cent: DataFrame, label: str, vec: str, rounds: int, by: tuple = ()
+) -> DataFrame:
+    """``rounds`` full Lloyd rounds (_nearest, then _centroids) from
+    ``cent``; returns the refined (*by, label, cvec) centroids."""
+    for _ in range(rounds):
+        cent = _centroids(_nearest(points, cent, label, vec, by), label, vec, by)
+    return cent
 
 
 def _persisted_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -682,38 +671,14 @@ def _persisted_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _lloyd_assign(v: DataFrame, k: int, iters: int) -> DataFrame:
-    """``iters`` Lloyd rounds from the deterministic vec_id < k seed
-    centroids over a persisted (vec_id, vec) frame; returns
-    (vec_id, cluster INT, vec). Plan-shape rationale lives on
-    cluster_kmeans_assign (broadcast centroids, min_by partial
-    assignment, composite tiebreak, 6dp centroid re-round)."""
+    """``iters`` Lloyd assignments from the deterministic vec_id < k
+    seed centroids over a persisted (vec_id, vec) frame (``iters - 1``
+    _lloyd rounds, then a final _nearest); returns
+    (vec_id, cluster INT, vec)."""
     cent = v.filter(F.col("vec_id") < k).select(
         F.col("vec_id").cast("int").alias("cluster"), F.col("vec").alias("cvec")
     )
-    assigned = None
-    for it in range(1, iters + 1):
-        d2 = F.round(
-            _dot("vec", "vec") - 2 * _dot("vec", "cvec") + _dot("cvec", "cvec"), 4
-        )
-        scored = v.crossJoin(F.broadcast(cent)).withColumn("d2", d2)
-        assigned = scored.groupBy("vec_id").agg(
-            F.min_by("cluster", F.struct("d2", "cluster")).alias("cluster"),
-            F.first("vec").alias("vec"),  # constant per vec_id
-        )
-        if it < iters:
-            cent = (
-                assigned.select("cluster", F.posexplode("vec").alias("pos", "val"))
-                .groupBy("cluster", "pos")
-                .agg(F.round(F.avg("val"), 6).alias("cval"))
-                .groupBy("cluster")
-                .agg(
-                    F.transform(
-                        F.array_sort(F.collect_list(F.struct("pos", "cval"))),
-                        lambda s: s["cval"],
-                    ).alias("cvec")
-                )
-            )
-    return assigned
+    return _nearest(v, _lloyd(v, cent, "cluster", "vec", iters - 1), "cluster", "vec")
 
 
 # --------------------------------------------------------------------------
@@ -775,7 +740,7 @@ def dedup_semantic_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     assigned = _lloyd_assign(v, K_MEANS_K, K_MEANS_ITERS).localCheckpoint(eager=True)
     a = assigned.alias("a")
     b = assigned.alias("b")
-    cos = _dot("a.vec", "b.vec") / (_norm("a.vec") * _norm("b.vec"))
+    cos = _cos("a.vec", "b.vec")
     return (
         a.join(
             b,
@@ -853,7 +818,7 @@ def hybrid_neardup_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pairs = ngram_jaccard_pairs(load_table(spark, sf_dir, "documents"))
     v = _with_vec(load_table(spark, sf_dir, "embeddings")).select("vec_id", "vec")
-    cos = _dot("va", "vb") / (_norm("va") * _norm("vb"))
+    cos = _cos("va", "vb")
     return (
         pairs.join(
             v.select(F.col("vec_id").alias("doc_a"), F.col("vec").alias("va")), "doc_a"
@@ -908,7 +873,7 @@ def decontaminate_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("b_id"), F.col("vec").alias("bvec")
     )
     train = v.filter(F.pmod("vec_id", F.lit(7)) != 0)
-    cos = _dot("vec", "bvec") / (_norm("vec") * _norm("bvec"))
+    cos = _cos("vec", "bvec")
     return (
         train.crossJoin(F.broadcast(bench))
         .select("vec_id", cos.alias("cos"))
@@ -934,14 +899,6 @@ PQ_M = 8  # subspaces
 PQ_SUBDIM = DIM // PQ_M
 PQ_K = 16  # cells per subspace (codebook = PQ_M x PQ_K centroids)
 PQ_ITERS = 2
-
-
-def _pq_d2_sql(v: str, c: str) -> str:
-    return (
-        f"round(list_inner_product({v}, {v})"
-        f" - 2 * list_inner_product({v}, {c})"
-        f" + list_inner_product({c}, {c}), 4)"
-    )
 
 
 def _pq_cte(m_count: int, subdim: int, k: int, iters: int) -> str:
@@ -1043,9 +1000,9 @@ def _pq_codebook(v: DataFrame):
     broadcast-join on m, and the min_by assignment / centroid update
     group on (vec_id, m) / (m, cluster, pos) — one pass over the
     corpus per iteration regardless of PQ_M, instead of PQ_M
-    independent k-means jobs. Same rounding discipline as
-    cluster_kmeans_assign (4dp distances with cluster tiebreak, 6dp
-    centroid re-round) so the unrolled DuckDB CTEs replay training
+    independent k-means jobs. These are the shared _lloyd/_nearest
+    kernels grouped by m (4dp _d2 distances with cluster tiebreak, 6dp
+    centroid re-round), so the unrolled DuckDB CTEs replay training
     exactly."""
     sub = v.select(
         "vec_id",
@@ -1064,36 +1021,27 @@ def _pq_codebook(v: DataFrame):
     cent = sub.filter(F.col("vec_id") < PQ_K).select(
         "m", F.col("vec_id").cast("int").alias("cluster"), F.col("sv").alias("cvec")
     )
-    d2 = F.round(_dot("sv", "sv") - 2 * _dot("sv", "cvec") + _dot("cvec", "cvec"), 4)
-    for _ in range(1, PQ_ITERS):
-        scored = sub.join(F.broadcast(cent), "m").withColumn("d2", d2)
-        assigned = scored.groupBy("vec_id", "m").agg(
-            F.min_by("cluster", F.struct("d2", "cluster")).alias("cluster"),
-            F.first("sv").alias("sv"),
-        )
-        cent = (
-            assigned.select("m", "cluster", F.posexplode("sv").alias("pos", "val"))
-            .groupBy("m", "cluster", "pos")
-            .agg(F.round(F.avg("val"), 6).alias("cval"))
-            .groupBy("m", "cluster")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "cval"))),
-                    lambda s: s["cval"],
-                ).alias("cvec")
-            )
-        )
-    cent = cent.localCheckpoint(eager=True)
-    assigned = (
-        sub.join(F.broadcast(cent), "m")
-        .withColumn("d2", d2)
-        .groupBy("vec_id", "m")
-        .agg(
-            F.min_by("cluster", F.struct("d2", "cluster")).alias("cluster"),
-            F.first("sv").alias("sv"),
+    by = ("m",)
+    cent = _lloyd(sub, cent, "cluster", "sv", PQ_ITERS - 1, by).localCheckpoint(eager=True)
+    return _nearest(sub, cent, "cluster", "sv", by), cent
+
+
+def _pq_lut(assigned: DataFrame, cent: DataFrame) -> DataFrame:
+    """ADC lookup table (query_id, m, cluster, d2i): each query
+    subvector's _d2 to every codebook cell, in exact integer 1e-4
+    units so ADC sums are order-free. N_QUERIES·PQ_M·PQ_K rows, built
+    from the checkpointed codebook and broadcast by its consumers."""
+    return (
+        assigned.filter(F.col("vec_id") < N_QUERIES)
+        .select(F.col("vec_id").alias("query_id"), "m", F.col("sv").alias("qv"))
+        .join(F.broadcast(cent), "m")
+        .select(
+            "query_id",
+            "m",
+            "cluster",
+            F.round(_d2("qv", "cvec") * 10000, 0).cast("bigint").alias("d2i"),
         )
     )
-    return assigned, cent
 
 
 @register(
@@ -1106,8 +1054,8 @@ def similarity_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus vector — 64 floats compressed to PQ_M small ints. The
     oracle replays the full per-subspace Lloyd training in unrolled
     DuckDB CTEs, so the TRAINED codebook (not just the encoding) is
-    hash-verified. Scale shape: training is the cluster_kmeans_assign
-    loop over (vec_id, m) keys; encoding is one broadcast join + one
+    hash-verified. Scale shape: training is the _lloyd loop over
+    (vec_id, m) keys; encoding is one broadcast join + one
     partial-aggregated groupBy; the pivot to wide codes shuffles only
     PQ_M ints per vector."""
     v = _persisted_corpus(spark, sf_dir)
@@ -1147,20 +1095,7 @@ def similarity_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate rows per query."""
     v = _persisted_corpus(spark, sf_dir)
     assigned, cent = _pq_codebook(v)
-    qd2 = F.round(
-        _dot("qv", "qv") - 2 * _dot("qv", "cvec") + _dot("cvec", "cvec"), 4
-    )
-    lut = (
-        assigned.filter(F.col("vec_id") < N_QUERIES)
-        .select(F.col("vec_id").alias("query_id"), "m", F.col("sv").alias("qv"))
-        .join(F.broadcast(cent), "m")
-        .select(
-            "query_id",
-            "m",
-            "cluster",
-            F.round(qd2 * 10000, 0).cast("bigint").alias("d2i"),
-        )
-    )
+    lut = _pq_lut(assigned, cent)
     adc = (
         assigned.select("vec_id", "m", "cluster")
         .join(F.broadcast(lut), ["m", "cluster"])
@@ -1253,20 +1188,7 @@ def similarity_pq_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     point-lookup join (vec_id-bucketed table), not a scan."""
     v = _persisted_corpus(spark, sf_dir)
     assigned, cent = _pq_codebook(v)
-    qd2 = F.round(
-        _dot("qv", "qv") - 2 * _dot("qv", "cvec") + _dot("cvec", "cvec"), 4
-    )
-    lut = (
-        assigned.filter(F.col("vec_id") < N_QUERIES)
-        .select(F.col("vec_id").alias("query_id"), "m", F.col("sv").alias("qv"))
-        .join(F.broadcast(cent), "m")
-        .select(
-            "query_id",
-            "m",
-            "cluster",
-            F.round(qd2 * 10000, 0).cast("bigint").alias("d2i"),
-        )
-    )
+    lut = _pq_lut(assigned, cent)
     wshort = Window.partitionBy("query_id").orderBy("adci", "neighbor_id")
     short = (
         assigned.select("vec_id", "m", "cluster")
@@ -1798,17 +1720,10 @@ KCENTER_K = 8
 
 
 def _kcenter_oracle(k: int) -> str:
-    def d2(v: str, c: str) -> str:
-        return (
-            f"round(list_inner_product({v}, {v})"
-            f" - 2 * list_inner_product({v}, {c})"
-            f" + list_inner_product({c}, {c}), 4)"
-        )
-
     parts = [
         "WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vec FROM embeddings)",
         "s1 AS (SELECT vec_id, vec FROM v ORDER BY vec_id LIMIT 1)",
-        f"d1 AS (SELECT v.vec_id, v.vec, {d2('v.vec', 's1.vec')} AS dmin FROM v, s1)",
+        f"d1 AS (SELECT v.vec_id, v.vec, {_pq_d2_sql('v.vec', 's1.vec')} AS dmin FROM v, s1)",
     ]
     for r in range(2, k + 1):
         parts.append(
@@ -1817,7 +1732,7 @@ def _kcenter_oracle(k: int) -> str:
         )
         parts.append(
             f"d{r} AS (SELECT d.vec_id, d.vec,"
-            f" least(d.dmin, {d2('d.vec', f's{r}.vec')}) AS dmin"
+            f" least(d.dmin, {_pq_d2_sql('d.vec', f's{r}.vec')}) AS dmin"
             f" FROM d{r - 1} d, s{r})"
         )
     selects = [
@@ -1837,10 +1752,10 @@ def sample_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(sel_order, vec_id, radius2): KCENTER_K greedy k-center picks
     over the embeddings, radius2 = max over the corpus of the rounded
     squared distance to the nearest selected center AFTER each pick
-    (the 2-approx covering radius). Determinism: distances use the
-    exact _lloyd_assign discipline — identical sequential fold
-    cross-engine, 4dp round — so argmax is on identical values with
-    the (dmin DESC, vec_id ASC) composite tiebreak; `least` of
+    (the 2-approx covering radius). Determinism: distances are the
+    k-means _d2 kernel — identical sequential fold cross-engine, 4dp
+    round — so argmax is on identical values with the
+    (dmin DESC, vec_id ASC) composite tiebreak; `least` of
     rounded values and `max` radii introduce no new floats. Scale
     shape: the corpus frame is the LOOP INVARIANT (checkpointed
     once); each round is one broadcast of a 1-ROW center frame + a
@@ -1857,12 +1772,9 @@ def sample_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("p.vec_id").alias("vec_id"), F.col("p.vec").alias("cvec"))
         .localCheckpoint(eager=True)
     )
-    d2 = lambda: F.round(  # noqa: E731 — distance to the broadcast cvec
-        _dot("vec", "vec") - 2 * _dot("vec", "cvec") + _dot("cvec", "cvec"), 4
-    )
     state = (
         v.crossJoin(F.broadcast(seed.select("cvec")))
-        .select("vec_id", "vec", d2().alias("dmin"))
+        .select("vec_id", "vec", _d2("vec", "cvec").alias("dmin"))
         .localCheckpoint(eager=True)
     )
     out = [
@@ -1887,7 +1799,7 @@ def sample_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
         state = (
             state.crossJoin(F.broadcast(pick.select("cvec")))
             .select(
-                "vec_id", "vec", F.least("dmin", d2()).alias("dmin")
+                "vec_id", "vec", F.least("dmin", _d2("vec", "cvec")).alias("dmin")
             )
             .localCheckpoint(eager=True)
         )
@@ -2045,9 +1957,7 @@ def similarity_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(q))
         .select(
             "vec_id",
-            F.round(
-                _dot("vec", "qvec") / (_norm("vec") * _norm("qvec")), 4
-            ).alias("cos"),
+            F.round(_cos("vec", "qvec"), 4).alias("cos"),
         )
     )
     w_sem = Window.orderBy(F.col("cos").desc(), "vec_id")
@@ -2156,9 +2066,7 @@ def embedding_label_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
             "qid",
             "qlabel",
             F.col("label").alias("clabel"),
-            F.round(
-                _dot("vec", "qvec") / (_norm("vec") * _norm("qvec")), 4
-            ).alias("cos"),
+            F.round(_cos("vec", "qvec"), 4).alias("cos"),
             F.col("vec_id").alias("nid"),
         )
     )
@@ -2401,7 +2309,7 @@ def dedup_funnel_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     a = v2.alias("a")
     b = v2.alias("b")
-    cos = _dot("a.vec", "b.vec") / (_norm("a.vec") * _norm("b.vec"))
+    cos = _cos("a.vec", "b.vec")
     rm3 = (
         a.join(
             b,
@@ -2436,11 +2344,7 @@ def dedup_funnel_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 # "simplified" silhouette is the standard scale form — O(nK) vs the
 # O(n^2) pairwise definition.
 def _silhouette_oracle(k: int, iters: int, dim: int) -> str:
-    d2 = (
-        "greatest(round(list_inner_product(a.vec, a.vec)"
-        " - 2 * list_inner_product(a.vec, c.cvec)"
-        " + list_inner_product(c.cvec, c.cvec), 4), 0)"
-    )
+    d2 = f"greatest({_pq_d2_sql('a.vec', 'c.cvec')}, 0)"
     return (
         _kmeans_cte(k, iters, dim)
         + f""",
@@ -2494,25 +2398,8 @@ def cluster_silhouette_simplified(spark: SparkSession, sf_dir: str) -> DataFrame
     assigned = _lloyd_assign(v, K_MEANS_K, K_MEANS_ITERS).localCheckpoint(
         eager=True
     )
-    cent_fin = (
-        assigned.select("cluster", F.posexplode("vec").alias("pos", "val"))
-        .groupBy("cluster", "pos")
-        .agg(F.round(F.avg("val"), 6).alias("cval"))
-        .groupBy("cluster")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "cval"))),
-                lambda s: s["cval"],
-            ).alias("cvec")
-        )
-        .withColumnRenamed("cluster", "ocl")
-    )
-    d2 = F.greatest(
-        F.round(
-            _dot("vec", "vec") - 2 * _dot("vec", "cvec") + _dot("cvec", "cvec"), 4
-        ),
-        F.lit(0.0),
-    )
+    cent_fin = _centroids(assigned, "cluster", "vec").withColumnRenamed("cluster", "ocl")
+    d2 = F.greatest(_d2("vec", "cvec"), F.lit(0.0))
     scored = assigned.crossJoin(F.broadcast(cent_fin)).select(
         "vec_id", "cluster", "ocl", F.sqrt(d2).alias("dist")
     )
@@ -2651,20 +2538,7 @@ def similarity_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
         .dropDuplicates(["query_id", "neighbor_id"])
     )
 
-    qd2 = F.round(
-        _dot("qv", "qv") - 2 * _dot("qv", "cvec") + _dot("cvec", "cvec"), 4
-    )
-    lut = (
-        assigned.filter(F.col("vec_id") < N_QUERIES)
-        .select(F.col("vec_id").alias("query_id"), "m", F.col("sv").alias("qv"))
-        .join(F.broadcast(pq_cent), "m")
-        .select(
-            "query_id",
-            "m",
-            "cluster",
-            F.round(qd2 * 10000, 0).cast("bigint").alias("d2i"),
-        )
-    )
+    lut = _pq_lut(assigned, pq_cent)
     codes = assigned.select(
         F.col("vec_id").alias("neighbor_id"), "m", "cluster"
     )
@@ -2797,9 +2671,7 @@ def similarity_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_id"), F.col("vec").alias("qvec")
     )
     n = v.select(F.col("vec_id").alias("nid"), F.col("vec").alias("nvec"))
-    qcos = F.round(
-        _dot("qvec", "nvec") / (_norm("qvec") * _norm("nvec")), 6
-    )
+    qcos = F.round(_cos("qvec", "nvec"), 6)
     wp = Window.partitionBy("query_id").orderBy(F.col("qcos").desc(), "nid")
     pool = (
         n.crossJoin(F.broadcast(q))
@@ -2816,9 +2688,7 @@ def similarity_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .drop("rn")
         .withColumn("mmr_rank", F.lit(1))
     )
-    psim = F.round(
-        _dot("p.nvec", "s.nvec") / (_norm("p.nvec") * _norm("s.nvec")), 6
-    )
+    psim = F.round(_cos("p.nvec", "s.nvec"), 6)
     for r in range(2, MMR_K + 1):
         p = pool.alias("p")
         s = sel.alias("s")
@@ -2926,9 +2796,7 @@ def sample_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
             "anchor_label",
             F.col("label").alias("neg_label"),
             F.col("vec_id").alias("neg_id"),
-            F.round(
-                _dot("vec", "qvec") / (_norm("vec") * _norm("qvec")), 4
-            ).alias("cos"),
+            F.round(_cos("vec", "qvec"), 4).alias("cos"),
         )
     )
     w = Window.partitionBy("qid").orderBy(F.col("cos").desc(), "neg_id")

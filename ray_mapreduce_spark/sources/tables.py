@@ -38,14 +38,16 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # r16, guide §1/§5 — at an overhead-bound bench SF, driver latency IS
 # the query time). First read of a (sf_dir, table) infers and caches;
 # later reads pass the schema explicitly (measured ~19 ms/call).
-# Data is immutable within a process lifetime (testdata regeneration
-# happens between driver rounds), so the cache cannot go stale.
+# Keyed on (abspath, mtime_ns, size): a file rewritten in place — e.g.
+# regenerated with a different events.ts dtype — gets a new key and
+# its schema is inferred again instead of served stale.
 _SCHEMA_CACHE: dict = {}
 
 
 def _read_parquet(spark: SparkSession, sf_dir: str, filename: str) -> DataFrame:
-    path = os.path.join(sf_dir, filename)
-    key = (os.path.abspath(path),)
+    path = os.path.abspath(os.path.join(sf_dir, filename))
+    st = os.stat(path)
+    key = (path, st.st_mtime_ns, st.st_size)
     schema = _SCHEMA_CACHE.get(key)
     if schema is None:
         df = spark.read.parquet(path)

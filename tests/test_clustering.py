@@ -4,6 +4,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+import pytest
+
 from ray_mapreduce_spark.operators.clustering import (
     connected_components,
     dedup_cluster_survivors,
@@ -12,24 +14,18 @@ from ray_mapreduce_spark.plans import all_queries
 from ray_mapreduce_spark.sources import load_table
 
 
-import pytest
-
-
-@pytest.mark.parametrize("pairs_unique", [False, True])
-def test_cc_on_known_graph(spark, pairs_unique):
+@pytest.mark.parametrize("duplicated", [False, True])
+def test_cc_on_known_graph(spark, duplicated):
     # components: {1,2,3,4} (chain), {10,11}, singleton 20 not in edges.
-    # pairs_unique=True gets DELIBERATELY duplicated edges: the
-    # fast path's correctness claim is that min-label propagation is
-    # duplicate-TOLERANT (every aggregation is a min), not that inputs
-    # happen to be unique — pin it (ADVICE r15).
+    # duplicated=True feeds DELIBERATELY duplicated edges:
+    # connected_components skips the edge distinct because min-label
+    # propagation is duplicate-TOLERANT (every aggregation is a min),
+    # not because inputs happen to be unique — pin it (ADVICE r15).
     edges = [(1, 2), (2, 3), (3, 4), (10, 11)]
-    if pairs_unique:
+    if duplicated:
         edges = edges + edges + [(2, 3)]
     pairs = spark.createDataFrame(edges, "doc_a: long, doc_b: long")
-    comps = {
-        r["node"]: r["comp"]
-        for r in connected_components(pairs, pairs_unique=pairs_unique).collect()
-    }
+    comps = {r["node"]: r["comp"] for r in connected_components(pairs).collect()}
     assert comps == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10}
 
 
@@ -107,14 +103,15 @@ def test_cc_raises_on_nonconvergence(spark):
     assert {r["comp"] for r in comps} == {0}
 
 
-@pytest.mark.parametrize("pairs_unique", [False, True])
-def test_cc_matches_union_find_on_random_graphs(spark, pairs_unique):
+@pytest.mark.parametrize("duplicated", [False, True])
+def test_cc_matches_union_find_on_random_graphs(spark, duplicated):
     """connected_components vs a pure-Python union-find on seeded
     random graphs: same partition of nodes into components (component
     LABELS are min-node by construction — compare those too). The
-    pairs_unique=True arm feeds a deliberately DUPLICATED edge list
-    (the random draw already repeats edges, plus the list is doubled)
-    to pin the fast path's duplicate-tolerance claim (ADVICE r15)."""
+    duplicated=True arm feeds a deliberately DUPLICATED edge list (the
+    random draw already repeats edges, plus the list is doubled) to pin the
+    duplicate-tolerance claim that lets the operator skip the edge
+    distinct (ADVICE r15)."""
     import random
 
     from ray_mapreduce_spark.operators.clustering import connected_components
@@ -148,12 +145,9 @@ def test_cc_matches_union_find_on_random_graphs(spark, pairs_unique):
             comp_min[r] = min(comp_min.get(r, x), x)
         expected = {x: comp_min[find(x)] for x in touched}
 
-        fed = edges + edges if pairs_unique else edges
+        fed = edges + edges if duplicated else edges
         pairs = spark.createDataFrame(fed, "doc_a long, doc_b long")
-        got = {
-            r["node"]: r["comp"]
-            for r in connected_components(pairs, pairs_unique=pairs_unique).collect()
-        }
+        got = {r["node"]: r["comp"] for r in connected_components(pairs).collect()}
         assert got == expected, f"seed {seed}: component mismatch"
 
 

@@ -337,12 +337,38 @@ def test_bulk_range_input_matches_list(spark):
     assert sorted(comb_range) == sorted(out_list)
 
 
-def test_bulk_generator_input_matches_list(spark):
+def test_bulk_generator_input_matches_list(spark, monkeypatch):
     """r16 optimization: lazy/unsized iterables stream driver-side in
-    chunks (one parallelize slice per chunk, union'd in order) instead
-    of materializing one full list — the driver holds O(chunk) not
-    O(n). Results must match the list path exactly, with and without
-    dataset_size, for both reduce paths, and for an empty generator."""
+    buffers (one parallelize call per buffer, union'd in order)
+    instead of materializing one full Python list. Results must match
+    the list path exactly, with and without dataset_size, for both
+    reduce paths, and for an empty generator — and so must the input
+    partition count: the num_mappers floor and the 10,000 cap apply
+    to both, also for a stream longer than one 100k-row buffer."""
+    import ray_mapreduce_spark.mapreduce as mr
+
+    def parts(data, *args, **kw):
+        # count the input partitions MapReduceBulk hands to _run
+        # without running the job (the cap case would be 10,000 tasks)
+        with monkeypatch.context() as m:
+            m.setattr(mr, "_run", lambda rdd, *a: rdd.getNumPartitions())
+            return MapReduceBulk(data, map_fcn, reduce_max, *args, spark=spark, **kw)
+
+    cases = [
+        # one buffer; floor binds (ceil(496/1000) = 1 chunk < 4 mappers)
+        (range(5, 997, 2), (4, 4), {}, 4),
+        # three buffers; floor binds (5 chunks of 50k < 8 mappers)
+        (range(250_000), (8, 4), {"max_chunk_size": 50_000}, 8),
+        (range(250_000), (8, 4), {"max_chunk_size": 50_000, "dataset_size": 250_000}, 8),
+        (range(250_000), (3, 4), {"max_chunk_size": 20_000}, 13),
+        # cap: one partition per 1-row chunk, at most 10,000
+        (range(20_000), (3, 4), {"max_chunk_size": 1}, 10_000),
+        (range(250_000), (3, 4), {"max_chunk_size": 10}, 10_000),
+    ]
+    for data, args, kw, want in cases:
+        assert parts(list(data), *args, **kw) == want, (args, kw)
+        assert parts(iter(data), *args, **kw) == want, (args, kw)
+
     vals = list(range(5, 997, 2))
     out_list = MapReduceBulk(vals, map_fcn, reduce_max, 3, 4, max_chunk_size=50, spark=spark)
     out_gen = MapReduceBulk(

@@ -202,6 +202,47 @@ def test_events_ts_guard_rejects_unknown_dtype(spark, tmp_path):
         load_table(spark, str(tmp_path), "events")
 
 
+def test_schema_cache_sees_rewritten_file(spark, tmp_path):
+    """The loader's per-process schema cache is keyed on
+    (abspath, mtime_ns, size): rewriting a table in place with a
+    different ``ts`` dtype must re-infer the schema — a path-only key
+    would replay the old timestamp schema onto the new file and the
+    dtype guard would never see the string column."""
+    import datetime
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    import pytest as _pytest
+
+    from ray_mapreduce_spark.sources import load_table
+
+    def write(ts):
+        pq.write_table(
+            pa.table(
+                {
+                    "event_id": pa.array([1], pa.int64()),
+                    "ts": ts,
+                    "user_id": pa.array([1], pa.int64()),
+                    "event_type": pa.array(["view"], pa.string()),
+                    "value": pa.array([1.0], pa.float64()),
+                    "props": pa.array(["{}"], pa.string()),
+                }
+            ),
+            str(path),
+        )
+
+    path = tmp_path / "events.parquet"
+    write(pa.array([datetime.datetime(2024, 1, 1)], pa.timestamp("us")))
+    assert dict(load_table(spark, str(tmp_path), "events").dtypes)["ts"] == "timestamp"
+    before = os.stat(path).st_mtime_ns
+    write(pa.array(["2024-01-01 00:00:00"], pa.string()))
+    # a coarse filesystem clock may not advance between the two writes
+    os.utime(path, ns=(before + 10**9, before + 10**9))
+    with _pytest.raises(TypeError, match="unexpected dtype 'string'"):
+        load_table(spark, str(tmp_path), "events")
+
+
 # ---------------------------------------------------------------------------
 # Executed-ADAPTIVE-plan shape (gotchas #9/#14, promoted from the r6
 # A/B measurements to regression tests): static explain always shows

@@ -1,4 +1,4 @@
-"""Tests for tools/ — currently the audit-sweep cache key.
+"""Tests for tools/ — the audit-sweep cache key and plan digests.
 
 The --changed-only cache must invalidate a query's key when ANY code
 that can alter its result changes: the builder's own plans module,
@@ -55,3 +55,18 @@ def test_own_module_edit_changes_only_its_dependents():
     assert base["window_running_and_lag"] != edited["window_running_and_lag"]
     assert base["dedup_exact"] == edited["dedup_exact"]
     assert base["q1_pricing_summary"] == edited["q1_pricing_summary"]
+
+
+def test_plan_digests_ignore_session_counters(spark, sf_dir):
+    """Building the same query twice in one session draws fresh
+    expression ids and lambda-variable suffixes, so the raw analyzed
+    plans differ; the ``plans`` mode's normalized digests must not."""
+    from audit_sweep import query_digests
+
+    from ray_mapreduce_spark.plans import all_queries
+
+    spec = all_queries()["similarity_topk_ivf_kmeans"]
+    first, second = spec.builder(spark, sf_dir), spec.builder(spark, sf_dir)
+    raw = [df._jdf.queryExecution().analyzed().toString() for df in (first, second)]
+    assert raw[0] != raw[1]
+    assert query_digests(spark, spec, sf_dir) == query_digests(spark, spec, sf_dir)

@@ -4,6 +4,7 @@
 Usage:
     python tools/audit_sweep.py oracle [SF_DIR] [--changed-only]
     python tools/audit_sweep.py determinism [SF_DIR] [--changed-only]
+    python tools/audit_sweep.py plans [SF_DIR] --out FILE [--against FILE]
 
 - ``oracle``: compare every oracle-paired query against DuckDB at
   SF_DIR (default sf0.1 — 10x the driver's scale; ties and rounding
@@ -12,7 +13,17 @@ Usage:
   shuffle-partition settings and require identical sorted results
   (catches min_by-style ties, unordered limits, partition-id leaks).
 
-Both print one summary line; non-empty failure lists exit 1.
+- ``plans``: for EVERY registered query record three sha256 digests
+  — the oracle text, the analyzed logical plan with expression ids
+  (``#N``) and PySpark lambda-variable suffixes (``x_79``) renumbered
+  by first appearance, and the sorted collected rows — as JSON in
+  ``--out``. ``--against`` compares with an earlier file and names
+  every query whose digests differ. The output digest is needed as
+  well as the plan digest: an eager ``localCheckpoint`` frame shows
+  up in the analyzed plan as a bare ``LogicalRDD`` leaf, which hides
+  the code that built it.
+
+Each prints one summary line; non-empty failure lists exit 1.
 
 ``--changed-only`` skips queries whose plan hash already passed this
 mode+SF in ``tools/.sweep_cache.json``. Since r9 the hash covers the
@@ -31,7 +42,10 @@ query's persisted corpus until LRU eviction.
 
 from __future__ import annotations
 
+import hashlib
+import json
 import os
+import re
 import sys
 import time
 
@@ -58,9 +72,7 @@ def _plan_hashes(source_overrides: dict | None = None) -> dict:
 
     ``source_overrides`` maps package-relative paths (e.g.
     ``sources/__init__.py``) to replacement source — test hook."""
-    import hashlib
     import pathlib
-    import re
 
     from ray_mapreduce_spark.plans import all_queries
 
@@ -109,8 +121,6 @@ def _plan_hashes(source_overrides: dict | None = None) -> dict:
 
 
 def _cache_load() -> dict:
-    import json
-
     try:
         with open(_CACHE_PATH) as f:
             return json.load(f)
@@ -119,8 +129,6 @@ def _cache_load() -> dict:
 
 
 def _cache_store(cache: dict) -> None:
-    import json
-
     with open(_CACHE_PATH, "w") as f:
         json.dump(cache, f, indent=0, sort_keys=True)
 
@@ -230,6 +238,76 @@ def determinism_sweep(sf_dir: str, changed_only: bool = False) -> int:
     return 1 if bad else 0
 
 
+_EXPR_ID = re.compile(r"#\d+")
+_LAMBDA_DEF = re.compile(r"lambda ([A-Za-z_]\w*?_\d+)\b")
+
+
+def normalized_plan(df) -> str:
+    """``df``'s analyzed logical plan with session-global counters
+    renumbered by first appearance: expression ids ``#N`` and the
+    ``_N`` suffix PySpark gives each lambda variable. Two builds of
+    the same query then yield the same text."""
+    text = df._jdf.queryExecution().analyzed().toString()
+    ids: dict = {}
+    text = _EXPR_ID.sub(lambda m: "#" + str(ids.setdefault(m.group(), len(ids))), text)
+    lambdas: dict = {}
+    for name in _LAMBDA_DEF.findall(text):
+        lambdas.setdefault(name, f"{name.rsplit('_', 1)[0]}_{len(lambdas)}")
+    if lambdas:
+        pattern = re.compile(r"\b(" + "|".join(map(re.escape, lambdas)) + r")\b")
+        text = pattern.sub(lambda m: lambdas[m.group()], text)
+    return text
+
+
+def query_digests(spark, spec, sf_dir: str) -> dict:
+    """Oracle, normalized-plan and sorted-output sha256 digests."""
+
+    def sha(text: str) -> str:
+        return hashlib.sha256(text.encode()).hexdigest()
+
+    df = spec.builder(spark, sf_dir)
+    rows = sorted(repr(tuple(r)) for r in df.collect())
+    return {
+        "oracle": sha(spec.oracle or ""),
+        "plan": sha(normalized_plan(df)),
+        "output": sha("\n".join(rows)),
+    }
+
+
+def plans_sweep(sf_dir: str, out: str, against: str | None = None) -> int:
+    from ray_mapreduce_spark.plans import all_queries
+
+    spark = _spark()
+    hyg = _Hygiene(spark)
+    t0 = time.time()
+    digests = {}
+    for name, spec in sorted(all_queries().items()):
+        digests[name] = query_digests(spark, spec, sf_dir)
+        print(f"# {name}: {digests[name]['plan'][:12]}", file=sys.stderr)
+        hyg.after_query()
+    with open(out, "w") as f:
+        json.dump(digests, f, indent=1, sort_keys=True)
+    summary = f"plans @ {sf_dir}: {len(digests)} queries -> {out}, {time.time()-t0:.0f}s"
+    if against is None:
+        print(summary)
+        return 0
+    with open(against) as f:
+        before = json.load(f)
+    bad = []
+    for name in sorted(set(before) | set(digests)):
+        a, b = before.get(name), digests.get(name)
+        if a is None or b is None:
+            bad.append(f"{name} ({'added' if a is None else 'removed'})")
+        elif a != b:
+            bad.append(f"{name} ({', '.join(k for k in sorted(a) if a[k] != b.get(k))})")
+    same = sum(1 for n in digests if before.get(n) == digests[n])
+    print(
+        f"{summary}; {same}/{len(digests)} identical oracle+plan+output vs {against},"
+        f" differing: {bad or 'none'}"
+    )
+    return 1 if bad else 0
+
+
 def recall_sweep(sf_dir: str) -> int:
     """Run the extension quality gates (tests/test_extensions.py —
     recall/exactness contracts for every rows-only LSH/sketch query)
@@ -249,12 +327,26 @@ def recall_sweep(sf_dir: str) -> int:
     return rc
 
 
+def _option(args: list, flag: str) -> str | None:
+    if flag not in args:
+        return None
+    i = args.index(flag)
+    value = args[i + 1]
+    del args[i : i + 2]
+    return value
+
+
 if __name__ == "__main__":
     args = [a for a in sys.argv[1:] if a != "--changed-only"]
+    out, against = _option(args, "--out"), _option(args, "--against")
     changed_only = "--changed-only" in sys.argv[1:]
     mode = args[0] if args else "oracle"
     sf = args[1] if len(args) > 1 else "/root/testdata/sf0.1"
     if mode == "recall":
         sys.exit(recall_sweep(sf))
+    if mode == "plans":
+        if out is None:
+            sys.exit("plans mode needs --out FILE")
+        sys.exit(plans_sweep(sf, out, against))
     fns = {"oracle": oracle_sweep, "determinism": determinism_sweep}
     sys.exit(fns[mode](sf, changed_only))
