@@ -85,17 +85,21 @@ def compact_parquet(
     ``shuffle=True`` repartitions for evenly-sized output (full
     shuffle — the default, since compaction jobs are about layout);
     ``shuffle=False`` coalesces instead (no shuffle, but file sizes
-    inherit input skew). Writes to a NEW directory — swap-in belongs
-    to the caller's metastore/manifest layer, keeping the rewrite
-    atomic-by-rename like every serious table format does."""
+    inherit input skew). When the input fits in ONE file (n == 1) both
+    modes coalesce: a single output file is balanced by construction,
+    so the shuffle would buy nothing. Writes to a NEW directory —
+    swap-in belongs to the caller's metastore/manifest layer, keeping
+    the rewrite atomic-by-rename like every serious table format does.
+    The output files are listed under the input's schema (no second
+    schema-inference job)."""
     import math
 
     df = spark.read.parquet(src)
     size_bytes = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
     n = max(1, math.ceil(size_bytes / (target_mb * 1024 * 1024)))
-    out = df.repartition(n) if shuffle else df.coalesce(n)
+    out = df.repartition(n) if shuffle and n > 1 else df.coalesce(n)
     out.write.mode("overwrite").parquet(dst)
-    return len([f for f in spark.read.parquet(dst).inputFiles()])
+    return len(spark.read.schema(df.schema).parquet(dst).inputFiles())
 
 
 def write_zordered(
@@ -165,42 +169,67 @@ def merge_upsert_parquet(
     layer (the compact_parquet atomicity contract). Returns
     {"inserted", "updated", "deleted", "total"} counts.
 
-    Scale shape: ONE left-anti join of base against the update keys
-    (hash equi-join; the update batch is broadcast whenever it fits —
-    the common CDC case) unioned with the surviving updates — base
-    rows that don't collide stream through untouched, nothing is
-    rewritten per-row, and the only shuffle is the anti join's (none
-    when broadcast). At 100 TB with hive-partitioned bases, partition
-    pruning confines the rewrite to partitions the update batch
-    touches — pass the pruned base path in; this function stays
-    layout-agnostic. Updates must be key-unique (enforced — a
-    duplicate-keyed MERGE is undefined in every table format; we
-    raise instead of picking silently)."""
+    Scale shape: TWO Spark actions (each Spark job costs a fixed
+    60-100 ms, which dominates at CDC batch sizes).
+    1. One stats aggregate, collected BEFORE the write: the update
+       keys unioned with the base rows restricted to them by a left
+       semi join (the update keys are broadcast whenever they fit, so
+       only touched base rows reach the shuffle), grouped by key into
+       update rows, base hits and max delete flag. Its one-row total
+       carries the duplicate-key check, ``updated`` (surviving update
+       rows whose key is in base), ``inserted`` (the other surviving
+       update rows) and ``deleted`` (base rows matched by a
+       delete-marked key).
+    2. The write: ONE left-anti join of base against the update keys
+       (hash equi-join, broadcast likewise) unioned with the surviving
+       updates — base rows that don't collide stream through
+       untouched, nothing is rewritten per-row. ``total`` is the row
+       count an Observation takes as the write runs, so ``dst`` is
+       never read back.
+    At 100 TB with hive-partitioned bases, partition pruning confines
+    the rewrite to partitions the update batch touches — pass the
+    pruned base path in; this function stays layout-agnostic. Updates
+    must be key-unique (enforced before anything is written — a
+    duplicate-keyed MERGE is undefined in every table format; we raise
+    instead of picking silently). Null keys never match: a null-keyed
+    update inserts and a null-keyed base row survives. An update whose
+    delete flag is null drops its key's base rows and is itself
+    dropped, counted in none of the stats."""
+    from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
     keys = [key] if isinstance(key, str) else list(key)
     b = spark.read.parquet(base)
-    dup = updates.groupBy(*keys).count().filter(F.col("count") > 1)
-    if dup.limit(1).count() > 0:
+    is_del = F.col(delete_col) if delete_col is not None else F.lit(False)
+    upd = updates.select(*keys, F.lit(1).alias("__u"), is_del.alias("__del"))
+    hit = b.join(updates.select(*keys), keys, "left_semi").select(
+        *keys, F.lit(0).alias("__u"), F.lit(None).cast("boolean").alias("__del")
+    )
+    per_key = upd.unionByName(hit).groupBy(*keys).agg(
+        F.sum("__u").alias("__n"),
+        F.max("__del").alias("__del"),
+        F.count(F.when(F.col("__u") == 0, 1)).alias("__hits"),
+    )
+    live, found = ~F.col("__del"), F.col("__hits") > 0
+    stats = per_key.agg(
+        F.count(F.when(F.col("__n") > 1, 1)).alias("dup"),
+        F.count(F.when(live & ~found, 1)).alias("inserted"),
+        F.count(F.when(live & found, 1)).alias("updated"),
+        F.coalesce(F.sum(F.when(F.col("__del"), F.col("__hits"))), F.lit(0)).alias("deleted"),
+    ).first()
+    if stats["dup"] > 0:
         raise ValueError("updates contain duplicate merge keys")
-    if delete_col is not None:
-        survivors = updates.filter(~F.col(delete_col)).drop(delete_col)
-        dels = updates.filter(F.col(delete_col)).select(*keys)
-    else:
-        survivors = updates
-        dels = None
+    survivors = (
+        updates.filter(~is_del).drop(delete_col) if delete_col is not None else updates
+    )
     kept = b.join(updates.select(*keys), keys, "left_anti")
     merged = kept.select(*b.columns).union(survivors.select(*b.columns))
+    written = Observation()
+    merged = merged.observe(written, F.count(F.lit(1)).alias("rows"))
     merged.write.mode("overwrite").parquet(dst)
-
-    n_updated = survivors.join(b.select(*keys), keys, "left_semi").count()
-    n_inserted = survivors.count() - n_updated
-    n_deleted = (
-        b.join(dels, keys, "left_semi").count() if dels is not None else 0
-    )
     return {
-        "inserted": n_inserted,
-        "updated": n_updated,
-        "deleted": n_deleted,
-        "total": spark.read.parquet(dst).count(),
+        "inserted": stats["inserted"],
+        "updated": stats["updated"],
+        "deleted": stats["deleted"],
+        "total": written.get["rows"],
     }

@@ -386,3 +386,26 @@ def test_bulk_generator_input_matches_list(spark, monkeypatch):
     )
     assert sorted(comb_gen) == sorted(out_list)
     assert MapReduceBulk(iter(()), map_fcn, reduce_max, 3, 4, spark=spark) == []
+
+
+# --- empty inputs ----------------------------------------------------------
+
+def test_empty_inputs_return_empty_list(spark, tmp_path):
+    """Every entry point returns [] on an input with no records: an
+    empty list, a header-only file read with ``ignore_first_line``, an
+    empty file, and an empty multi-file index."""
+    assert MapReduceBulk([], map_fcn, reduce_max, 3, 4, spark=spark) == []
+
+    header_only = tmp_path / "header_only"
+    header_only.write_text("header\n")
+    assert MapReduceWithOneFileInput(
+        str(header_only), map_fcn, reduce_max, 3, 4, ignore_first_line=True, spark=spark
+    ) == []
+
+    empty = tmp_path / "empty"
+    empty.write_text("")
+    assert MapReduceWithOneFileInput(str(empty), map_fcn, reduce_max, 3, 4, spark=spark) == []
+
+    index = tmp_path / "index"
+    index.write_text("")
+    assert MapReduceWithMultipleFiles(str(index), map_fcn, reduce_max, 2, 3, spark=spark) == []

@@ -366,3 +366,164 @@ def test_csv_with_rejects_dlq(spark, tmp_path):
     assert any("notanumber" in r for r in raws)
     replay = spark.read.json(rej_path)
     assert replay.count() == 2
+
+
+def _sorted_rows(spark, path):
+    """Rows of a parquet directory as tuples, sorted with None first."""
+    rows = [tuple(r) for r in spark.read.parquet(path).collect()]
+    return sorted(rows, key=lambda t: [(v is not None, v) for v in t])
+
+
+def test_merge_upsert_parquet_edge_cases(spark, tmp_path):
+    """Pins MERGE stats and written rows on the inputs the unit test
+    above does not cover: duplicate base keys (``deleted`` counts base
+    rows, ``updated`` counts update rows), a composite key, an empty
+    update batch, a null delete flag (the key still leaves the base,
+    but the row is neither kept, inserted, updated nor counted as
+    deleted) and null keys (never match: a null-keyed base row
+    survives, a null-keyed update inserts, two null-keyed updates are
+    duplicates)."""
+    import pytest
+
+    from ray_mapreduce_spark.sources.sinks import merge_upsert_parquet
+
+    schema = "id long, name string, v double"
+    uschema = schema + ", del boolean"
+
+    def merge(tag, base_rows, update_rows, key="id", bschema=schema, uschema=uschema,
+              delete_col="del"):
+        base_path = str(tmp_path / f"{tag}_base")
+        spark.createDataFrame(base_rows, bschema).write.parquet(base_path)
+        updates = spark.createDataFrame(update_rows, uschema)
+        if delete_col is None:
+            updates = updates.drop("del")
+        dst = str(tmp_path / f"{tag}_merged")
+        stats = merge_upsert_parquet(spark, base_path, updates, dst, key=key,
+                                     delete_col=delete_col)
+        return stats, _sorted_rows(spark, dst)
+
+    # duplicate base keys
+    dup_base = [(1, "a", 1.0), (1, "a2", 1.5), (2, "b", 2.0), (2, "b2", 2.5), (3, "c", 3.0)]
+    dup_upd = [(1, "X", 10.0, False), (2, "gone", 0.0, True), (4, "d", 4.0, False)]
+    assert merge("dupbase", dup_base, dup_upd) == (
+        {"inserted": 1, "updated": 1, "deleted": 2, "total": 3},
+        [(1, "X", 10.0), (3, "c", 3.0), (4, "d", 4.0)],
+    )
+    assert merge("dupbase_nodel", dup_base, dup_upd, delete_col=None) == (
+        {"inserted": 1, "updated": 2, "deleted": 0, "total": 4},
+        [(1, "X", 10.0), (2, "gone", 0.0), (3, "c", 3.0), (4, "d", 4.0)],
+    )
+
+    # composite key
+    cschema = "k1 long, k2 string, v double"
+    cbase = [(1, "x", 10.0), (1, "y", 11.0), (2, "x", 20.0)]
+    cupd = [
+        (1, "x", 100.0, False),  # update
+        (1, "z", 12.0, False),   # insert (k1 alone matches, the pair does not)
+        (2, "x", 0.0, True),     # delete
+        (2, "y", 0.0, True),     # delete of absent key: no-op
+    ]
+    assert merge("composite", cbase, cupd, key=["k1", "k2"], bschema=cschema,
+                 uschema=cschema + ", del boolean") == (
+        {"inserted": 1, "updated": 1, "deleted": 1, "total": 3},
+        [(1, "x", 100.0), (1, "y", 11.0), (1, "z", 12.0)],
+    )
+    with pytest.raises(ValueError, match="duplicate merge keys"):
+        merge("composite_dup", cbase, [(1, "x", 1.0, False), (1, "x", 2.0, False)],
+              key=["k1", "k2"], bschema=cschema, uschema=cschema + ", del boolean")
+    assert not (tmp_path / "composite_dup_merged").exists()
+
+    # empty update batch
+    base = [(1, "a", 1.0), (2, "b", 2.0), (3, "c", 3.0)]
+    for delete_col in ("del", None):
+        assert merge(f"empty_{delete_col}", base, [], delete_col=delete_col) == (
+            {"inserted": 0, "updated": 0, "deleted": 0, "total": 3},
+            base,
+        )
+
+    # null delete flag
+    assert merge("nullflag", base, [(2, "B", 20.0, None), (5, "e", 5.0, None)]) == (
+        {"inserted": 0, "updated": 0, "deleted": 0, "total": 2},
+        [(1, "a", 1.0), (3, "c", 3.0)],
+    )
+
+    # null key on both sides
+    nbase = [(None, "n", 0.0), (1, "a", 1.0)]
+    assert merge("nullkey", nbase, [(None, "N", 9.0, False), (1, "A", 10.0, False)]) == (
+        {"inserted": 1, "updated": 1, "deleted": 0, "total": 3},
+        [(None, "N", 9.0), (None, "n", 0.0), (1, "A", 10.0)],
+    )
+    assert merge("nullkey_del", nbase, [(None, "x", 0.0, True)]) == (
+        {"inserted": 0, "updated": 0, "deleted": 0, "total": 2},
+        [(None, "n", 0.0), (1, "a", 1.0)],
+    )
+    with pytest.raises(ValueError, match="duplicate merge keys"):
+        merge("nullkey_dup", nbase, [(None, "x", 1.0, False), (None, "y", 2.0, False)])
+
+
+def test_compact_parquet_shuffle_path_splits_large_input(spark, tmp_path):
+    """An input larger than ``target_mb`` takes the ``repartition(n)``
+    branch: more than one output file, evenly filled even though the
+    input files are skewed (a coalesce would keep the skew), the same
+    rows, and the returned count is the number of files written."""
+    from ray_mapreduce_spark.sources.sinks import compact_parquet
+
+    src = str(tmp_path / "src")
+    rows = spark.range(60_000).select(
+        "id", F.sha2(F.col("id").cast("string"), 256).alias("h")
+    )
+    rows.filter("id < 45000").coalesce(1).write.parquet(src)
+    rows.filter("id >= 45000").repartition(3).write.mode("append").parquet(src)
+    size = spark.read.parquet(src)._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    assert int(size) > 1024 * 1024
+    dst = str(tmp_path / "dst")
+    n = compact_parquet(spark, src, dst, target_mb=1)
+    assert n > 1
+    per_file = [
+        r["count"]
+        for r in spark.read.parquet(dst).groupBy(F.input_file_name()).count().collect()
+    ]
+    assert len(per_file) == n
+    assert max(per_file) <= 1.05 * min(per_file)
+    assert _sorted_rows(spark, dst) == _sorted_rows(spark, src)
+
+
+def test_sink_job_counts(spark, tmp_path):
+    """Spark jobs per call, the fixed cost that dominates these sinks
+    at CDC batch sizes: merge_upsert_parquet runs one stats aggregate
+    and one observed write (7 jobs with parquet-backed base and
+    updates), and a single-file compact_parquet runs one schema
+    inference and one write (2 jobs)."""
+    from ray_mapreduce_spark.sources.sinks import compact_parquet, merge_upsert_parquet
+
+    sc = spark.sparkContext
+    base_path, upd_path = str(tmp_path / "base"), str(tmp_path / "updates")
+    spark.range(2000).selectExpr("id", "cast(id * 2 as double) v").write.parquet(base_path)
+    spark.range(1900, 2100).selectExpr(
+        "id", "cast(id as double) v", "id % 3 = 0 del"
+    ).write.parquet(upd_path)
+    updates = spark.read.parquet(upd_path)
+
+    def jobs(group, call):
+        sc.setJobGroup(group, group)
+        try:
+            result = call()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return result, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    merged = str(tmp_path / "merged")
+    stats, n_merge = jobs(
+        "test_sink_job_counts.merge",
+        lambda: merge_upsert_parquet(spark, base_path, updates, merged, key="id",
+                                     delete_col="del"),
+    )
+    assert stats == {"inserted": 67, "updated": 67, "deleted": 33, "total": 2034}
+    n_files, n_compact = jobs(
+        "test_sink_job_counts.compact",
+        lambda: compact_parquet(spark, merged, str(tmp_path / "compacted")),
+    )
+    assert n_files == 1
+    assert (n_merge, n_compact) == (7, 2)
+    assert sc.getLocalProperty("spark.jobGroup.id") is None
