@@ -11,6 +11,7 @@ north star mandates.
 Layout
 ------
 - ``session``    : SparkSession builder with scale-appropriate conf.
+- ``worker_daemon``: the Python worker daemon ``session`` names.
 - ``sources``    : table/text/manifest readers (reference E1/E4/E9/E12).
 - ``operators``  : composable DataFrame operators (joins, windows,
                    dedup, similarity, text analysis, multimodal).

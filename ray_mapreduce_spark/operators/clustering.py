@@ -134,7 +134,13 @@ def dedup_cluster_survivors(docs: DataFrame, pairs: DataFrame) -> DataFrame:
     min node id, that node is itself a doc of the cluster, and
     singletons are labeled by their own doc_id — so
     ``is_survivor = (doc_id == cluster)`` is the identical flag with
-    no exchange and no sort (one full shuffle removed)."""
+    no exchange and no sort (one full shuffle removed).
+
+    The contract is not checked. A pair endpoint missing from ``docs``
+    is dropped from the output, but it still labels its component: if
+    it is that component's minimum, every member's ``cluster`` is the
+    missing id and the cluster has no survivor (all ``is_survivor``
+    false)."""
     comps = connected_components(pairs)
     return (
         docs.select("doc_id")

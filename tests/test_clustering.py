@@ -170,3 +170,15 @@ def test_cluster_survivors_all_singletons(spark):
     rows = {r["doc_id"]: r for r in dedup_cluster_survivors(docs, pairs).collect()}
     assert len(rows) == 3
     assert all(r["is_survivor"] and r["cluster"] == k for k, r in rows.items())
+
+
+def test_cluster_survivors_missing_min_endpoint(spark):
+    """Outside the pairs ⊆ docs contract: a pair endpoint missing from
+    ``docs`` that is its component's minimum still labels the
+    component, so that cluster has no survivor. Other clusters are
+    unaffected."""
+    docs = spark.createDataFrame([(2,), (3,), (10,), (11,)], "doc_id long")
+    pairs = spark.createDataFrame([(1, 2), (2, 3), (10, 11)], "doc_a long, doc_b long")
+    rows = {r["doc_id"]: (r["cluster"], r["is_survivor"])
+            for r in dedup_cluster_survivors(docs, pairs).collect()}
+    assert rows == {2: (1, False), 3: (1, False), 10: (10, True), 11: (10, False)}

@@ -8,6 +8,8 @@ dropped rows, zero/multi-emit, strict-key mode, malformed input).
 from __future__ import annotations
 
 import os
+import subprocess
+import sys
 
 import pytest
 
@@ -409,3 +411,60 @@ def test_empty_inputs_return_empty_list(spark, tmp_path):
     index = tmp_path / "index"
     index.write_text("")
     assert MapReduceWithMultipleFiles(str(index), map_fcn, reduce_max, 2, 3, spark=spark) == []
+
+
+# --- task retries and worker crashes ----------------------------------------
+
+_RETRY_SCRIPT = '''
+import os, sys
+sys.path.insert(0, sys.argv[1])
+from pyspark import TaskContext
+from ray_mapreduce_spark.mapreduce import MapReduceBulk
+from ray_mapreduce_spark.session import get_spark
+
+def map_fcn(x):
+    yield (str(x % 9), x * x)
+
+def raise_on_first_attempt(x):
+    if TaskContext.get().attemptNumber() == 0:
+        raise RuntimeError("planted failure on attempt 0")
+    yield from map_fcn(x)
+
+def exit_on_first_attempt(x):
+    if TaskContext.get().attemptNumber() == 0:
+        os._exit(1)  # the Python worker dies mid-task
+    yield from map_fcn(x)
+
+def reduce_count_max(k, values):
+    return (k, len(values), max(values))
+
+spark = get_spark("shim-retries", cpus=4, extra_conf={"spark.master": "local[4,3]"})
+spark.sparkContext.setLogLevel("OFF")
+def run(fn):
+    return sorted(MapReduceBulk(range(1000), fn, reduce_count_max, 4, 4, max_chunk_size=100, spark=spark))
+clean = run(map_fcn)
+print("CLEAN", clean)
+for fn in (raise_on_first_attempt, exit_on_first_attempt):
+    print(fn.__name__, run(fn) == clean)
+spark.stop()
+'''
+
+
+def test_shim_survives_task_retries_and_worker_crashes(tmp_path):
+    """On ``local[4,3]`` (3 attempts per task) a map fn that raises, or
+    kills its Python worker, on every task's first attempt gives the
+    clean run's output: Spark retries the task and the worker daemon
+    forks a fresh worker. Own process: the shared session allows no
+    retries."""
+    script = tmp_path / "retries.py"
+    script.write_text(_RETRY_SCRIPT)
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run(
+        [sys.executable, str(script), repo], capture_output=True, text=True, timeout=300
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    lines = proc.stdout.splitlines()
+    expected = [(str(r), len(range(r, 1000, 9)), max(range(r, 1000, 9)) ** 2) for r in range(9)]
+    assert f"CLEAN {expected}" in lines
+    assert "raise_on_first_attempt True" in lines
+    assert "exit_on_first_attempt True" in lines
