@@ -841,7 +841,7 @@ def q19_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-key out of the disjunction, so this stays a broadcast hash
     join with the residual OR as a post-join filter — and the
     IN-set of brands implied by the OR is pushable to the part scan
-    (verified in EXPLAINS.md: no cartesian, dim side pruned)."""
+    (its entry in tests/plan_shapes.json: no cartesian)."""
     l = _t(spark, sf_dir, "lineitem")
     p = _t(spark, sf_dir, "part").select("p_partkey", "p_brand", "p_size")
     cond = (

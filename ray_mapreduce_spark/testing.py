@@ -183,3 +183,125 @@ def release_caches(spark: SparkSession) -> None:
     GC of their RDD handles, not by clearCache — that release happens
     when the frame goes out of scope on the Python side."""
     spark.catalog.clearCache()
+
+
+def _plan_children(p) -> list:
+    """The nodes a physical plan runs below ``p``: an adaptive plan's
+    current plan (AQE's initial plan before any action, the final plan
+    after one) and a query stage's inner plan count as children. An
+    ``InMemoryRelation``'s ``cachedPlan`` does not: a cache scan is a
+    leaf."""
+    cls = p.getClass().getSimpleName()
+    if cls == "AdaptiveSparkPlanExec":
+        return [p.executedPlan()]
+    if cls.endswith("QueryStageExec"):
+        return [p.plan()]
+    kids = p.children()
+    return [kids.apply(i) for i in range(kids.length())]
+
+
+def walk_plan(plan, visit) -> None:
+    """Call ``visit`` on every node of the JVM physical plan ``plan``,
+    parent before children (see ``_plan_children`` for what is
+    followed)."""
+    todo = [plan]
+    while todo:
+        p = todo.pop()
+        visit(p)
+        todo.extend(reversed(_plan_children(p)))
+
+
+_EXCHANGE_KINDS = {
+    "HashPartitioning": "hash",
+    "RangePartitioning": "range",
+    "RoundRobinPartitioning": "roundrobin",
+    "SinglePartition$": "single",
+}
+_COUNTED = {
+    "BroadcastExchange": "broadcast_exchange",
+    "Sort": "sort",
+    "HashAggregate": "hash_aggregate",
+    "BroadcastHashJoin": "bhj",
+    "SortMergeJoin": "smj",
+    "BroadcastNestedLoopJoin": "bnlj",
+    "CartesianProduct": "cartesian",
+    "Scan ExistingRDD": "scan_existing_rdd",
+}
+
+
+def _exchange_kind(p) -> str:
+    name = p.outputPartitioning().getClass().getSimpleName()
+    return _EXCHANGE_KINDS.get(name, name)
+
+
+def _below(p, name: str) -> list:
+    """Nodes called ``name`` under ``p`` with no Exchange between."""
+    found, todo = [], _plan_children(p)
+    while todo:
+        n = todo.pop()
+        if n.nodeName() == name:
+            found.append(n)
+        elif n.nodeName() != "Exchange":
+            todo.extend(_plan_children(n))
+    return found
+
+
+def _names(seq) -> set:
+    return {seq.apply(i).name() for i in range(seq.length())}
+
+
+def _c6_hits(exchange) -> list[bool]:
+    """One entry per C6 hit at a hash ``exchange``: a ``Generate``
+    below it that reads a round-robin Exchange, so a round-robin spread
+    is exploded and then re-shuffled. True when a hash key is one of
+    the Generate's pass-through columns: ``spread_by(key)`` before the
+    explode would then make this exchange unnecessary."""
+    keys = set()
+    exprs = exchange.outputPartitioning().expressions()
+    for i in range(exprs.length()):
+        keys |= _names(exprs.apply(i).references().toSeq())
+    hits = []
+    for gen in _below(exchange, "Generate"):
+        passthrough = _names(gen.requiredChildOutput())
+        for rr in _below(gen, "Exchange"):
+            if _exchange_kind(rr) == "roundrobin":
+                hits.append(bool(keys & passthrough))
+    return hits
+
+
+def plan_shape(df) -> dict[str, int]:
+    """Non-zero node counts of ``df``'s executed physical plan: its
+    Exchanges by partitioning kind, broadcasts, sorts, hash aggregates,
+    joins by strategy, Python-eval nodes, ``Scan ExistingRDD`` leaves
+    (eager checkpoints) and C6 hits (``_c6_hits``). Each distinct
+    cached relation's plan is walked once however often the query
+    reads it, since the persisted lineage runs once."""
+    counts: dict[str, int] = {}
+    seen_caches: set = set()
+    identity = df.sparkSession._jvm.java.lang.System.identityHashCode
+
+    def bump(key: str, n: int = 1) -> None:
+        if n:
+            counts[key] = counts.get(key, 0) + n
+
+    def visit(p) -> None:
+        name = p.nodeName()
+        if name == "Exchange":
+            kind = _exchange_kind(p)
+            bump(f"exchange_{kind}")
+            if kind == "hash":
+                hits = _c6_hits(p)
+                bump("c6", len(hits))
+                bump("c6_convertible", sum(hits))
+        elif name in _COUNTED:
+            bump(_COUNTED[name])
+        elif name == "InMemoryTableScan":
+            builder = p.relation().cacheBuilder()
+            if identity(builder) not in seen_caches:
+                seen_caches.add(identity(builder))
+                walk_plan(builder.cachedPlan(), visit)
+        if ".python." in p.getClass().getName():
+            bump("python_eval")
+
+    walk_plan(df._jdf.queryExecution().executedPlan(), visit)
+    return dict(sorted(counts.items()))

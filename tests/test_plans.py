@@ -6,6 +6,7 @@ fails CI, not the cluster.
 from __future__ import annotations
 
 from ray_mapreduce_spark.plans import all_queries
+from ray_mapreduce_spark.testing import walk_plan
 
 
 def _plan(spark, name, sf_dir) -> str:
@@ -243,6 +244,34 @@ def test_schema_cache_sees_rewritten_file(spark, tmp_path):
         load_table(spark, str(tmp_path), "events")
 
 
+def test_load_table_rejects_unknown_table(spark, sf_dir):
+    """A misspelled table name fails with the list of valid names,
+    not with a missing-file error for a path nobody meant."""
+    import pytest as _pytest
+
+    from ray_mapreduce_spark.sources import TABLE_NAMES, load_table
+
+    with _pytest.raises(KeyError, match="unknown table 'lineitems'") as err:
+        load_table(spark, sf_dir, "lineitems")
+    assert all(repr(t) in str(err.value) for t in TABLE_NAMES), err.value
+
+
+def test_load_table_missing_file_names_path(spark, tmp_path):
+    """A known table whose parquet file is absent fails at load time
+    with the path it looked for; ``events`` takes its own dtype branch,
+    so both paths are checked."""
+    import re
+
+    import pytest as _pytest
+
+    from ray_mapreduce_spark.sources import load_table
+
+    for name in ("orders", "events"):
+        path = str(tmp_path / f"{name}.parquet")
+        with _pytest.raises(FileNotFoundError, match=re.escape(path)):
+            load_table(spark, str(tmp_path), name)
+
+
 # ---------------------------------------------------------------------------
 # Executed-ADAPTIVE-plan shape (gotchas #9/#14, promoted from the r6
 # A/B measurements to regression tests): static explain always shows
@@ -261,20 +290,7 @@ def _executed_nodes(spark, name, sf_dir) -> list[str]:
     df = all_queries()[name].builder(spark, sf_dir)
     df.collect()  # drive AQE to the final plan
     out: list[str] = []
-
-    def walk(p) -> None:
-        out.append(p.nodeName())
-        cls = p.getClass().getSimpleName()
-        if cls == "AdaptiveSparkPlanExec":
-            walk(p.finalPhysicalPlan())
-            return
-        if cls.endswith("QueryStageExec"):
-            walk(p.plan())
-            return
-        for i in range(p.children().length()):
-            walk(p.children().apply(i))
-
-    walk(df._jdf.queryExecution().executedPlan())
+    walk_plan(df._jdf.queryExecution().executedPlan(), lambda p: out.append(p.nodeName()))
     return out
 
 
@@ -687,22 +703,13 @@ def _executed_single_partition_windows(spark, name, sf_dir):
     df.collect()
     found = []
 
-    def walk(p) -> None:
-        cls = p.getClass().getSimpleName()
-        if cls == "AdaptiveSparkPlanExec":
-            walk(p.finalPhysicalPlan())
-            return
-        if cls.endswith("QueryStageExec"):
-            walk(p.plan())
-            return
+    def visit(p) -> None:
         if p.nodeName() == "Window" and "SinglePartition" in str(
             p.outputPartitioning().toString()
         ):
             found.append(p.toString())
-        for i in range(p.children().length()):
-            walk(p.children().apply(i))
 
-    walk(df._jdf.queryExecution().executedPlan())
+    walk_plan(df._jdf.queryExecution().executedPlan(), visit)
     return found
 
 
@@ -741,22 +748,9 @@ def test_no_fact_proportional_single_partition_window(spark, sf_dir, name):
 _RANK_LIMIT_PUSHDOWN_NAMES = ["similarity_rrf_fusion", "text_bm25_topdocs"]
 
 
-def _walk_executed(p, visit):
-    cls = p.getClass().getSimpleName()
-    if cls == "AdaptiveSparkPlanExec":
-        _walk_executed(p.finalPhysicalPlan(), visit)
-        return
-    if cls.endswith("QueryStageExec"):
-        _walk_executed(p.plan(), visit)
-        return
-    visit(p)
-    for i in range(p.children().length()):
-        _walk_executed(p.children().apply(i), visit)
-
-
 def _subtree_node_names(p):
     names = []
-    _walk_executed(p, lambda n: names.append(n.nodeName()))
+    walk_plan(p, lambda n: names.append(n.nodeName()))
     return names
 
 
@@ -776,7 +770,7 @@ def test_topn_legs_compile_to_take_ordered(spark, sf_dir, name):
         ):
             sp_windows.append(p)
 
-    _walk_executed(df._jdf.queryExecution().executedPlan(), visit)
+    walk_plan(df._jdf.queryExecution().executedPlan(), visit)
     assert "TakeOrderedAndProject" in all_names, (name, all_names)
     for w in sp_windows:
         child_names = []
@@ -810,7 +804,7 @@ def test_rank_windows_run_over_bounded_histograms(spark, sf_dir, name):
     df.collect()
 
     windows = []
-    _walk_executed(
+    walk_plan(
         df._jdf.queryExecution().executedPlan(),
         lambda p: windows.append(p) if p.nodeName() == "Window" else None,
     )

@@ -5,6 +5,7 @@ Usage:
     python tools/audit_sweep.py oracle [SF_DIR] [--changed-only]
     python tools/audit_sweep.py determinism [SF_DIR] [--changed-only]
     python tools/audit_sweep.py plans [SF_DIR] --out FILE [--against FILE]
+    python tools/audit_sweep.py shapes [SF_DIR]
 
 - ``oracle``: compare every oracle-paired query against DuckDB at
   SF_DIR (default sf0.1 — 10x the driver's scale; ties and rounding
@@ -22,6 +23,14 @@ Usage:
   well as the plan digest: an eager ``localCheckpoint`` frame shows
   up in the analyzed plan as a bare ``LogicalRDD`` leaf, which hides
   the code that built it.
+
+- ``shapes``: rewrite the plan-shape ledger ``tests/plan_shapes.json``
+  as ``{"sf_dir": SF_DIR, "queries": {name: shape}}``, with the
+  ``testing.plan_shape`` of EVERY registered query, each built on
+  ``session.get_spark`` with a cleared cache. SF_DIR defaults to the
+  one the ledger already records. ``tests/test_plan_shapes.py``
+  recomputes the ledger at that SF_DIR and fails on any difference,
+  so regenerate it in the change that moves a plan.
 
 Each prints one summary line; non-empty failure lists exit 1.
 
@@ -54,6 +63,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import SparkSession  # noqa: E402
 
 _CACHE_PATH = os.path.join(os.path.dirname(os.path.abspath(__file__)), ".sweep_cache.json")
+_LEDGER_PATH = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tests", "plan_shapes.json"
+)
 
 
 def _plan_hashes(source_overrides: dict | None = None) -> dict:
@@ -308,6 +320,40 @@ def plans_sweep(sf_dir: str, out: str, against: str | None = None) -> int:
     return 1 if bad else 0
 
 
+def query_shapes(spark, sf_dir: str) -> dict:
+    """name -> ``plan_shape`` for every registered query, each built
+    on a cleared cache: Spark substitutes a cached fragment left by an
+    earlier query into the plan, which would change its shape."""
+    from ray_mapreduce_spark.plans import all_queries
+    from ray_mapreduce_spark.testing import plan_shape
+
+    shapes = {}
+    for name, spec in sorted(all_queries().items()):
+        spark.catalog.clearCache()
+        shapes[name] = plan_shape(spec.builder(spark, sf_dir))
+    spark.catalog.clearCache()
+    return shapes
+
+
+def _ledger() -> dict:
+    with open(_LEDGER_PATH) as f:
+        return json.load(f)
+
+
+def shapes_ledger(sf_dir: str) -> int:
+    from ray_mapreduce_spark.session import get_spark
+
+    spark = get_spark("audit-shapes")
+    spark.sparkContext.setLogLevel("ERROR")
+    t0 = time.time()
+    shapes = query_shapes(spark, sf_dir)
+    with open(_LEDGER_PATH, "w") as f:
+        json.dump({"sf_dir": sf_dir, "queries": shapes}, f, indent=1, sort_keys=True)
+        f.write("\n")
+    print(f"shapes @ {sf_dir}: {len(shapes)} queries -> {_LEDGER_PATH}, {time.time()-t0:.0f}s")
+    return 0
+
+
 def recall_sweep(sf_dir: str) -> int:
     """Run the extension quality gates (tests/test_extensions.py —
     recall/exactness contracts for every rows-only LSH/sketch query)
@@ -341,6 +387,8 @@ if __name__ == "__main__":
     out, against = _option(args, "--out"), _option(args, "--against")
     changed_only = "--changed-only" in sys.argv[1:]
     mode = args[0] if args else "oracle"
+    if mode == "shapes":
+        sys.exit(shapes_ledger(args[1] if len(args) > 1 else _ledger()["sf_dir"]))
     sf = args[1] if len(args) > 1 else "/root/testdata/sf0.1"
     if mode == "recall":
         sys.exit(recall_sweep(sf))
