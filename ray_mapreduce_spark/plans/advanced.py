@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.scale import ntile_from_rank, two_pass_cumsum, two_pass_rank
+from ..functions.stats import moment_sums
 from ..sources import load_table
 from .registry import register
 
@@ -1089,14 +1090,7 @@ def events_linreg_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.crossJoin(F.broadcast(a))
         .select("event_type", x.alias("x"), F.col("value").alias("y"))
         .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n"),
-            F.sum("x").alias("sx"),
-            F.sum("y").alias("sy"),
-            F.sum(F.col("x") * F.col("x")).alias("sxx"),
-            F.sum(F.col("y") * F.col("y")).alias("syy"),
-            F.sum(F.col("x") * F.col("y")).alias("sxy"),
-        )
+        .agg(*moment_sums())
     )
     cov = F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")
     varx = F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
@@ -1412,14 +1406,7 @@ def events_value_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     seq = e.select(
         "event_type", F.col("value").alias("x"), F.lead("value").over(w).alias("y")
     ).filter(F.col("y").isNotNull())
-    s = seq.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum("x").alias("sx"),
-        F.sum("y").alias("sy"),
-        F.sum(F.col("x") * F.col("x")).alias("sxx"),
-        F.sum(F.col("y") * F.col("y")).alias("syy"),
-        F.sum(F.col("x") * F.col("y")).alias("sxy"),
-    )
+    s = seq.groupBy("event_type").agg(*moment_sums())
     num = F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")
     den = F.sqrt(F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")) * F.sqrt(
         F.col("n") * F.col("syy") - F.col("sy") * F.col("sy")
@@ -4417,14 +4404,7 @@ def events_cuped_readout(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("asum").cast("double") / (100 * F.col("an"))).alias("x"),
         (F.col("bsum").cast("double") / (100 * F.col("bn"))).alias("y"),
     )
-    s = xy.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum("x").alias("sx"),
-        F.sum("y").alias("sy"),
-        F.sum(F.col("x") * F.col("x")).alias("sxx"),
-        F.sum(F.col("y") * F.col("y")).alias("syy"),
-        F.sum(F.col("x") * F.col("y")).alias("sxy"),
-    )
+    s = xy.groupBy("event_type").agg(*moment_sums())
     cov = F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")
     vx = F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
     vy = F.col("n") * F.col("syy") - F.col("sy") * F.col("sy")

@@ -25,6 +25,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.scale import spread_by as _spread_by
+from ..functions.text import QUALITY_RAW_SQL, lead_chain, quality_raw_col, tokens
 from ..sources import load_table
 from .registry import register
 
@@ -44,12 +46,24 @@ DEFAULT_DF_CAP = 1000
 # DuckDB oracles that re-encode it (dedup_ngram_jaccard /
 # decontaminate_ngram_overlap here, hybrid_neardup_scores in
 # similarity.py): word SHINGLE_K-shingles, pairs kept at jaccard >=
-# JACCARD_THRESHOLD. The oracle SQL interpolates these constants;
-# the [i] || [i+1] || [i+2] shingle construction in the SQL is the
-# structural form of SHINGLE_K=3 — changing K means updating that
-# list-comprehension shape in each oracle as well.
+# JACCARD_THRESHOLD. The Spark side builds shingles with
+# functions/text.py's tokens() + lead_chain(..., SHINGLE_K); every
+# oracle builds them from SHINGLE_LIST_SQL (the per-doc list of
+# space-joined word K-grams, wrapped in list_distinct for a shingle
+# set) and keeps docs passing SHINGLE_MIN_SQL. Both are generated
+# from SHINGLE_K, so changing K is this one edit.
 SHINGLE_K = 3
 JACCARD_THRESHOLD = 0.6
+
+_WORDS_SQL = "string_split(lower(text), ' ')"
+_GRAM_INDEX = ["i"] + [f"i+{j}" for j in range(1, SHINGLE_K)]
+SHINGLE_LIST_SQL = (
+    "[\n"
+    + " || ' ' ||\n".join(f"               {_WORDS_SQL}[{i}]" for i in _GRAM_INDEX)
+    + f"\n               FOR i IN range(1, greatest(len({_WORDS_SQL}) - {SHINGLE_K - 2}, 1))"
+    + "\n             ]"
+)
+SHINGLE_MIN_SQL = f"len({_WORDS_SQL}) >= {SHINGLE_K}"
 
 
 # --------------------------------------------------------------------------
@@ -114,14 +128,9 @@ def dedup_exact_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 _NGRAM_JACCARD_ORACLE = f"""
     WITH shingled AS (
       SELECT doc_id, lang,
-             list_distinct([
-               string_split(lower(text), ' ')[i] || ' ' ||
-               string_split(lower(text), ' ')[i+1] || ' ' ||
-               string_split(lower(text), ' ')[i+2]
-               FOR i IN range(1, greatest(len(string_split(lower(text), ' ')) - 1, 1))
-             ]) AS shingles
+             list_distinct({SHINGLE_LIST_SQL}) AS shingles
       FROM documents
-      WHERE len(string_split(lower(text), ' ')) >= {SHINGLE_K}
+      WHERE {SHINGLE_MIN_SQL}
     ),
     pairs AS (
       SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
@@ -241,14 +250,9 @@ CONTAINMENT_THRESHOLD = 0.7
     oracle=f"""
     WITH shingled AS (
       SELECT doc_id, lang,
-             list_distinct([
-               string_split(lower(text), ' ')[i] || ' ' ||
-               string_split(lower(text), ' ')[i+1] || ' ' ||
-               string_split(lower(text), ' ')[i+2]
-               FOR i IN range(1, greatest(len(string_split(lower(text), ' ')) - 1, 1))
-             ]) AS shingles
+             list_distinct({SHINGLE_LIST_SQL}) AS shingles
       FROM documents
-      WHERE len(string_split(lower(text), ' ')) >= {SHINGLE_K}
+      WHERE {SHINGLE_MIN_SQL}
     ),
     pairs AS (
       SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
@@ -331,16 +335,12 @@ N_BANDS = 8
 ROWS_PER_BAND = N_HASHES // N_BANDS
 
 
-from ..functions.scale import spread as _spread
-from ..functions.scale import spread_by as _spread_by
-
-
 def _shingle_hashes(d: DataFrame) -> DataFrame:
     """(doc_id, lang, s): one row per DISTINCT hashed word-3-shingle.
 
     Construction is fully codegen'd (no higher-order functions, which
     Spark interprets per element — measured several x slower): tokenize
-    -> posexplode -> hash each token once -> window lead x2 -> combine
+    -> posexplode -> hash each token once -> ``lead_chain`` -> combine
     3 consecutive token hashes with xxhash64 -> distinct. Spreads its
     own input BY doc_id (r15; callers must NOT round-robin spread
     first): hash-partitioning on doc_id before the posexplode moves
@@ -354,17 +354,11 @@ def _shingle_hashes(d: DataFrame) -> DataFrame:
     shingle set is ~|S|²/2⁶⁴ ~ 1e-15 (none observed vs the string
     oracle at any test sf)."""
     tok = _spread_by(d, "doc_id").select(
-        "doc_id", "lang", F.posexplode(F.split(F.lower("text"), " ")).alias("pos", "t")
+        "doc_id", "lang", F.posexplode(tokens()).alias("pos", "t")
     )
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    h = tok.select("doc_id", "lang", "pos", F.xxhash64("t").alias("h0"))
-    return (
-        h.withColumn("h1", F.lead("h0", 1).over(w))
-        .withColumn("h2", F.lead("h0", 2).over(w))
-        .filter(F.col("h2").isNotNull())  # <3-token docs emit nothing
-        .select("doc_id", "lang", F.xxhash64("h0", "h1", "h2").alias("s"))
-        .distinct()
-    )
+    h = tok.select("doc_id", "lang", "pos", F.xxhash64("t").alias("h"))
+    grams, cols = lead_chain(h, "h", SHINGLE_K)
+    return grams.select("doc_id", "lang", F.xxhash64(*cols).alias("s")).distinct()
 
 
 def _with_doc_size(sh: DataFrame) -> DataFrame:
@@ -569,7 +563,7 @@ def simhash_pairs(
     exchange — its partial+final aggregation runs with NO exchange of
     its own instead of re-shuffling one row per doc post-explode."""
     d = _spread_by(docs, "doc_id")
-    toks = F.array_distinct(F.split(F.lower("text"), " "))
+    toks = F.array_distinct(tokens())
     tok = d.select("doc_id", F.explode(toks).alias("tok"))
     # Wide expression lists built as SQL strings (one py4j call each):
     # 64 algebraic bit-vote sums, then the 64-way bitwise-OR fingerprint.
@@ -714,15 +708,7 @@ def pipeline_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").select("doc_id", "lang", "text")
 
     # 1. quality filter (same formula as text_quality_score)
-    n_tok = F.size(F.split("text", " "))
-    n_uniq = F.size(F.array_distinct(F.split(F.lower("text"), " ")))
-    n_ch = F.length("text")
-    quality = (
-        0.4 * F.least(n_tok / F.lit(64.0), F.lit(1.0))
-        + 0.4 * (n_uniq.cast("double") / n_tok)
-        + 0.2 * F.least((n_ch.cast("double") / n_tok) / F.lit(8.0), F.lit(1.0))
-        + F.lit(1e-9)  # half-boundary guard, same as text_quality_score
-    )
+    quality = quality_raw_col() + F.lit(1e-9)  # half-boundary guard
     scored = d.withColumn("quality", F.round(quality, 4)).filter(F.col("quality") >= 0.5)
 
     # 2. exact dedup (keep min doc_id per sha256) as an argmin
@@ -880,14 +866,9 @@ def dedup_survivors_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH shingled AS (
       SELECT doc_id,
-             unnest(list_distinct([
-               string_split(lower(text), ' ')[i] || ' ' ||
-               string_split(lower(text), ' ')[i+1] || ' ' ||
-               string_split(lower(text), ' ')[i+2]
-               FOR i IN range(1, greatest(len(string_split(lower(text), ' ')) - 1, 1))
-             ])) AS s
+             unnest(list_distinct({SHINGLE_LIST_SQL})) AS s
       FROM documents
-      WHERE len(string_split(lower(text), ' ')) >= {SHINGLE_K}
+      WHERE {SHINGLE_MIN_SQL}
     ),
     bench AS (
       SELECT DISTINCT s FROM shingled WHERE doc_id % 7 = 0
@@ -946,14 +927,9 @@ def decontaminate_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH RECURSIVE shingled AS (
       SELECT doc_id, lang,
-             list_distinct([
-               string_split(lower(text), ' ')[i] || ' ' ||
-               string_split(lower(text), ' ')[i+1] || ' ' ||
-               string_split(lower(text), ' ')[i+2]
-               FOR i IN range(1, greatest(len(string_split(lower(text), ' ')) - 1, 1))
-             ]) AS shingles
+             list_distinct({SHINGLE_LIST_SQL}) AS shingles
       FROM documents
-      WHERE len(string_split(lower(text), ' ')) >= {SHINGLE_K}
+      WHERE {SHINGLE_MIN_SQL}
     ),
     pairs AS (
       SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
@@ -1055,16 +1031,10 @@ def dedup_repeated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     posexplode rides one exchange — round-robin spread re-exchanged
     the exploded token stream (~doc_len x the rows) for the window."""
     d = _spread_by(load_table(spark, sf_dir, "documents"), "doc_id")
-    tok = d.select(
-        "doc_id", F.posexplode(F.split(F.lower("text"), " ")).alias("pos", "t")
-    )
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    h = tok.select("doc_id", "pos", F.xxhash64("t").alias("h0"))
-    for i in range(1, SPAN_K):
-        h = h.withColumn(f"h{i}", F.lead("h0", i).over(w))
-    spans = h.filter(F.col(f"h{SPAN_K - 1}").isNotNull()).select(
-        "doc_id", F.xxhash64(*[f"h{i}" for i in range(SPAN_K)]).alias("g")
-    )
+    tok = d.select("doc_id", F.posexplode(tokens()).alias("pos", "t"))
+    h = tok.select("doc_id", "pos", F.xxhash64("t").alias("h"))
+    grams, cols = lead_chain(h, "h", SPAN_K)
+    spans = grams.select("doc_id", F.xxhash64(*cols).alias("g"))
     wg = Window.partitionBy("g")
     wgd = Window.partitionBy("g", "doc_id")
     flagged = spans.withColumn("cnt_total", F.count(F.lit(1)).over(wg)).withColumn(
@@ -1081,19 +1051,12 @@ def dedup_repeated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _survivors_quality_oracle() -> str:
-    from .text_analysis import QUALITY_RAW_SQL
-
     return f"""
     WITH RECURSIVE shingled AS (
       SELECT doc_id, lang,
-             list_distinct([
-               string_split(lower(text), ' ')[i] || ' ' ||
-               string_split(lower(text), ' ')[i+1] || ' ' ||
-               string_split(lower(text), ' ')[i+2]
-               FOR i IN range(1, greatest(len(string_split(lower(text), ' ')) - 1, 1))
-             ]) AS shingles
+             list_distinct({SHINGLE_LIST_SQL}) AS shingles
       FROM documents
-      WHERE len(string_split(lower(text), ' ')) >= {SHINGLE_K}
+      WHERE {SHINGLE_MIN_SQL}
     ),
     prs AS (
       SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
@@ -1171,7 +1134,6 @@ def survivors_quality(d: DataFrame) -> DataFrame:
     """Frame-level survivor-selection core over any (doc_id, lang,
     text) frame — see ``dedup_survivors_quality``."""
     from ..operators.clustering import connected_components
-    from .text_analysis import quality_raw_col
 
     clusters = connected_components(ngram_jaccard_pairs(d)).select(
         F.col("node").alias("doc_id"), F.col("comp").alias("cluster")
@@ -1341,9 +1303,7 @@ def dedup_cross_source_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     fingerprints present in both sources, for every source pair
     sharing any."""
     d = load_table(spark, sf_dir, "documents")
-    fp = F.md5(
-        F.concat_ws(" ", F.slice(F.split(F.lower("text"), " "), 1, FP_HEAD_TOKENS))
-    )
+    fp = F.md5(F.concat_ws(" ", F.slice(tokens(), 1, FP_HEAD_TOKENS)))
     h = d.select("source", fp.alias("fp")).distinct()
     a, b = h.alias("a"), h.alias("b")
     return (
@@ -1496,14 +1456,9 @@ def dedup_exact_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH shingled AS (
       SELECT doc_id, lang,
-             list_distinct([
-               string_split(lower(text), ' ')[i] || ' ' ||
-               string_split(lower(text), ' ')[i+1] || ' ' ||
-               string_split(lower(text), ' ')[i+2]
-               FOR i IN range(1, greatest(len(string_split(lower(text), ' ')) - 1, 1))
-             ]) AS shingles
+             list_distinct({SHINGLE_LIST_SQL}) AS shingles
       FROM documents
-      WHERE len(string_split(lower(text), ' ')) >= {SHINGLE_K}
+      WHERE {SHINGLE_MIN_SQL}
     ),
     pairs AS (
       SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
@@ -1567,14 +1522,9 @@ def dedup_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH shingled AS (
       SELECT doc_id,
-             list_distinct([
-               string_split(lower(text), ' ')[i] || ' ' ||
-               string_split(lower(text), ' ')[i+1] || ' ' ||
-               string_split(lower(text), ' ')[i+2]
-               FOR i IN range(1, greatest(len(string_split(lower(text), ' ')) - 1, 1))
-             ]) AS shingles
+             list_distinct({SHINGLE_LIST_SQL}) AS shingles
       FROM documents
-      WHERE len(string_split(lower(text), ' ')) >= {SHINGLE_K}
+      WHERE {SHINGLE_MIN_SQL}
     ),
     s AS (SELECT doc_id, unnest(shingles) AS sh FROM shingled),
     first AS (SELECT sh, min(doc_id) AS first_doc FROM s GROUP BY sh)
@@ -1654,14 +1604,9 @@ def _est_sig_exprs_duckdb() -> str:
     oracle=f"""
     WITH shingled AS (
       SELECT doc_id, lang,
-             list_distinct([
-               string_split(lower(text), ' ')[i] || ' ' ||
-               string_split(lower(text), ' ')[i+1] || ' ' ||
-               string_split(lower(text), ' ')[i+2]
-               FOR i IN range(1, greatest(len(string_split(lower(text), ' ')) - 1, 1))
-             ]) AS shingles
+             list_distinct({SHINGLE_LIST_SQL}) AS shingles
       FROM documents
-      WHERE len(string_split(lower(text), ' ')) >= {SHINGLE_K}
+      WHERE {SHINGLE_MIN_SQL}
     ),
     pairs AS (
       SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
@@ -1739,16 +1684,11 @@ def dedup_minhash_estimate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shingle STRINGS (not xxhash64 longs): the cross-engine hash must
     # see identical text; built with the _shingle_hashes lead-chain
     # but combining token strings, only for candidate docs
-    tok = d.select(
-        "doc_id", F.posexplode(F.split(F.lower("text"), " ")).alias("pos", "t")
-    ).join(cand_ids, "doc_id", "left_semi")
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    sh = (
-        tok.withColumn("t1", F.lead("t", 1).over(w))
-        .withColumn("t2", F.lead("t", 2).over(w))
-        .filter(F.col("t2").isNotNull())
-        .select("doc_id", F.concat_ws(" ", "t", "t1", "t2").alias("g"))
+    tok = d.select("doc_id", F.posexplode(tokens()).alias("pos", "t")).join(
+        cand_ids, "doc_id", "left_semi"
     )
+    grams, cols = lead_chain(tok, "t", SHINGLE_K)
+    sh = grams.select("doc_id", F.concat_ws(" ", *cols).alias("g"))
     sig = sh.groupBy("doc_id").agg(*_est_sig_exprs_spark())
     a = sig.select(
         F.col("doc_id").alias("doc_a"), *[F.col(f"m{i}").alias(f"a{i}") for i in range(EST_SEEDS)]
@@ -1835,16 +1775,11 @@ def substring_span_hits(d: DataFrame) -> DataFrame:
     is doc_id-keyed — round-robin spread re-exchanged the exploded
     token stream."""
     d = _spread_by(d, "doc_id")
-    tok = d.select(
-        "doc_id", F.posexplode(F.split(F.lower("text"), " ")).alias("pos", "t")
-    )
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    h = tok.select("doc_id", "pos", F.xxhash64("t").alias("h0"))
-    for i in range(1, SPAN_K):
-        h = h.withColumn(f"h{i}", F.lead("h0", i).over(w))
+    tok = d.select("doc_id", F.posexplode(tokens()).alias("pos", "t"))
+    h = tok.select("doc_id", "pos", F.xxhash64("t").alias("h"))
+    grams, cols = lead_chain(h, "h", SPAN_K)
     spans = (
-        h.filter(F.col(f"h{SPAN_K - 1}").isNotNull())
-        .select("doc_id", F.xxhash64(*[f"h{i}" for i in range(SPAN_K)]).alias("g"))
+        grams.select("doc_id", F.xxhash64(*cols).alias("g"))
         .distinct()
         .localCheckpoint(eager=True)
     )
@@ -2098,14 +2033,9 @@ def dedup_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH shingled AS (
       SELECT doc_id, lang,
-             list_distinct([
-               string_split(lower(text), ' ')[i] || ' ' ||
-               string_split(lower(text), ' ')[i+1] || ' ' ||
-               string_split(lower(text), ' ')[i+2]
-               FOR i IN range(1, greatest(len(string_split(lower(text), ' ')) - 1, 1))
-             ]) AS shingles
+             list_distinct({SHINGLE_LIST_SQL}) AS shingles
       FROM documents
-      WHERE len(string_split(lower(text), ' ')) >= {SHINGLE_K}
+      WHERE {SHINGLE_MIN_SQL}
     ),
     pairs AS (
       SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
@@ -2320,14 +2250,9 @@ def dedup_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH shingled AS (
       SELECT doc_id, lang,
-             list_distinct([
-               string_split(lower(text), ' ')[i] || ' ' ||
-               string_split(lower(text), ' ')[i+1] || ' ' ||
-               string_split(lower(text), ' ')[i+2]
-               FOR i IN range(1, greatest(len(string_split(lower(text), ' ')) - 1, 1))
-             ]) AS shingles
+             list_distinct({SHINGLE_LIST_SQL}) AS shingles
       FROM documents
-      WHERE len(string_split(lower(text), ' ')) >= {SHINGLE_K}
+      WHERE {SHINGLE_MIN_SQL}
     ),
     prs AS (
       SELECT b.doc_id AS batch_doc, c.doc_id AS corpus_doc,

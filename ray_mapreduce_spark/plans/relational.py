@@ -27,10 +27,6 @@ from ..sources import load_table
 from .registry import register
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # --------------------------------------------------------------------------
 # Q1-style pricing summary: full-scan aggregate with computed measures.
 # Scale: single shuffle on a 4-value grouping key after map-side partial
@@ -57,7 +53,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """,
 )
 def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    l = _t(spark, sf_dir, "lineitem")
+    l = load_table(spark, sf_dir, "lineitem")
     disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return (
         l.filter(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
@@ -95,7 +91,7 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def filter_project_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    l = _t(spark, sf_dir, "lineitem")
+    l = load_table(spark, sf_dir, "lineitem")
     return (
         l.filter(
             (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
@@ -134,8 +130,8 @@ def filter_project_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def join_customer_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     return (
         o.join(c, o.o_custkey == c.c_custkey)
         .groupBy("c_mktsegment")
@@ -178,17 +174,17 @@ def join_customer_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q5_local_supplier_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    r = _t(spark, sf_dir, "region")
-    n = _t(spark, sf_dir, "nation")
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    o = _t(spark, sf_dir, "orders").filter(
+    r = load_table(spark, sf_dir, "region")
+    n = load_table(spark, sf_dir, "nation")
+    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    o = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp"))
     ).select("o_orderkey", "o_custkey")
-    l = _t(spark, sf_dir, "lineitem").select(
+    l = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey", "l_extendedprice", "l_discount"
     )
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
     return (
         l.join(o, l.l_orderkey == o.o_orderkey)  # fact-fact shuffle join
         # customer is fact-proportional: no broadcast hint, AQE decides
@@ -227,8 +223,8 @@ def q5_local_supplier_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def join_left_outer_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer").select("c_custkey")
-    o = _t(spark, sf_dir, "orders").select("o_custkey", "o_orderkey", "o_totalprice")
+    c = load_table(spark, sf_dir, "customer").select("c_custkey")
+    o = load_table(spark, sf_dir, "orders").select("o_custkey", "o_orderkey", "o_totalprice")
     return (
         c.join(o, c.c_custkey == o.o_custkey, "left")
         .groupBy("c_custkey")
@@ -254,8 +250,8 @@ def join_left_outer_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def join_semi_open_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "O")
+    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
+    o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "O")
     return c.join(o, c.c_custkey == o.o_custkey, "left_semi")
 
 
@@ -276,8 +272,8 @@ def join_semi_open_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def join_anti_no_big_order(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 480000.0).select("o_custkey")
+    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
+    o = load_table(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 480000.0).select("o_custkey")
     return c.join(o, c.c_custkey == o.o_custkey, "left_anti")
 
 
@@ -303,7 +299,7 @@ def join_anti_no_big_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def join_range_price_band(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = _t(spark, sf_dir, "part").select("p_partkey", "p_retailprice")
+    p = load_table(spark, sf_dir, "part").select("p_partkey", "p_retailprice")
     bands = spark.createDataFrame(
         [("low", 0.0, 500.0), ("mid", 500.0, 1500.0), ("high", 1500.0, 1e9)],
         "band: string, lo: double, hi: double",
@@ -340,7 +336,7 @@ def join_range_price_band(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def agg_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    l = _t(spark, sf_dir, "lineitem")
+    l = load_table(spark, sf_dir, "lineitem")
     return l.groupBy("l_returnflag").agg(
         F.countDistinct("l_partkey").alias("n_parts"),
         F.countDistinct("l_suppkey").alias("n_supps"),
@@ -356,7 +352,7 @@ def agg_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 def agg_approx_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """approx_count_distinct (HyperLogLog++): the 100 TB-scale path for
     cardinality — no distinct-key shuffle, fixed-size sketch merge."""
-    l = _t(spark, sf_dir, "lineitem")
+    l = load_table(spark, sf_dir, "lineitem")
     return l.groupBy("l_returnflag").agg(
         F.approx_count_distinct("l_partkey", 0.02).alias("n_parts_approx"),
         F.count(F.lit(1)).alias("n_rows"),
@@ -371,7 +367,7 @@ def agg_approx_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem",
 )
 def distinct_flag_status(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _t(spark, sf_dir, "lineitem").select("l_returnflag", "l_linestatus").distinct()
+    return load_table(spark, sf_dir, "lineitem").select("l_returnflag", "l_linestatus").distinct()
 
 
 # --------------------------------------------------------------------------
@@ -391,7 +387,7 @@ def distinct_flag_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def rollup_order_status(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return (
         o.rollup("o_orderstatus", "o_orderpriority")
         .agg(
@@ -423,7 +419,7 @@ def rollup_order_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def cube_flag_status(spark: SparkSession, sf_dir: str) -> DataFrame:
-    l = _t(spark, sf_dir, "lineitem")
+    l = load_table(spark, sf_dir, "lineitem")
     return (
         l.cube("l_returnflag", "l_linestatus")
         .agg(
@@ -453,8 +449,8 @@ def cube_flag_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def set_union_all_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders").select(F.col("o_custkey").alias("k"))
-    c = _t(spark, sf_dir, "customer").select(F.col("c_custkey").alias("k"))
+    o = load_table(spark, sf_dir, "orders").select(F.col("o_custkey").alias("k"))
+    c = load_table(spark, sf_dir, "customer").select(F.col("c_custkey").alias("k"))
     return o.unionAll(c).groupBy("k").agg(F.count(F.lit(1)).alias("n"))
 
 
@@ -469,11 +465,11 @@ def set_union_all_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def set_intersect_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = (
-        _t(spark, sf_dir, "customer")
+        load_table(spark, sf_dir, "customer")
         .filter(F.col("c_acctbal") > 0)
         .select(F.col("c_custkey").alias("k"))
     )
-    o = _t(spark, sf_dir, "orders").select(F.col("o_custkey").alias("k"))
+    o = load_table(spark, sf_dir, "orders").select(F.col("o_custkey").alias("k"))
     return c.intersect(o)
 
 
@@ -488,9 +484,9 @@ def set_intersect_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def set_except_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ordering customers whose account balance is non-positive."""
-    o = _t(spark, sf_dir, "orders").select(F.col("o_custkey").alias("k"))
+    o = load_table(spark, sf_dir, "orders").select(F.col("o_custkey").alias("k"))
     c = (
-        _t(spark, sf_dir, "customer")
+        load_table(spark, sf_dir, "customer")
         .filter(F.col("c_acctbal") > 0)
         .select(F.col("c_custkey").alias("k"))
     )
@@ -522,11 +518,11 @@ def set_except_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING").select("c_custkey")
-    o = _t(spark, sf_dir, "orders").filter(
+    c = load_table(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING").select("c_custkey")
+    o = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderdate") < F.lit("1998-03-15").cast("timestamp")
     ).select("o_orderkey", "o_custkey", "o_orderdate", "o_orderpriority")
-    l = _t(spark, sf_dir, "lineitem").filter(
+    l = load_table(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate") > F.lit("1998-03-15").cast("timestamp")
     ).select("l_orderkey", "l_extendedprice", "l_discount")
     return (
@@ -567,7 +563,7 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    l = _t(spark, sf_dir, "lineitem")
+    l = load_table(spark, sf_dir, "lineitem")
     return (
         l.filter(
             (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
@@ -603,10 +599,10 @@ def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q10_returned_item_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_name", "c_nationkey", "c_acctbal")
-    n = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    l = _t(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R").select(
+    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_name", "c_nationkey", "c_acctbal")
+    n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    l = load_table(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R").select(
         "l_orderkey", "l_extendedprice", "l_discount"
     )
     return (
@@ -650,14 +646,14 @@ def q10_returned_item_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    l = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
+    l = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
     big = (
         l.groupBy("l_orderkey")
         .agg(F.sum("l_quantity").alias("total_qty"))
         .filter(F.col("total_qty") > 250)
     )
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey", "o_totalprice")
-    c = _t(spark, sf_dir, "customer").select("c_custkey")
+    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey", "o_totalprice")
+    c = load_table(spark, sf_dir, "customer").select("c_custkey")
     return (
         big.join(o, big.l_orderkey == o.o_orderkey)
         .join(c, o.o_custkey == c.c_custkey)
@@ -685,7 +681,7 @@ def q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def sort_limit_top100(spark: SparkSession, sf_dir: str) -> DataFrame:
-    l = _t(spark, sf_dir, "lineitem")
+    l = load_table(spark, sf_dir, "lineitem")
     return (
         l.orderBy(F.col("l_extendedprice").desc(), "l_orderkey", "l_linenumber")
         .limit(100)
@@ -717,12 +713,12 @@ def sort_limit_top100(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def join_full_outer_nation_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = (
-        _t(spark, sf_dir, "customer")
+        load_table(spark, sf_dir, "customer")
         .groupBy(F.col("c_nationkey").alias("nk_c"))
         .agg(F.count(F.lit(1)).alias("n_cust"))
     )
     s = (
-        _t(spark, sf_dir, "supplier")
+        load_table(spark, sf_dir, "supplier")
         .groupBy(F.col("s_nationkey").alias("nk_s"))
         .agg(F.count(F.lit(1)).alias("n_supp"))
     )
@@ -760,8 +756,8 @@ def join_salted_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate proves result-identity with the plain join."""
     from ..operators.skew import salted_join
 
-    o = _t(spark, sf_dir, "orders").select("o_custkey", "o_totalprice")
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
+    o = load_table(spark, sf_dir, "orders").select("o_custkey", "o_totalprice")
+    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     j = salted_join(o, c, "o_custkey", "c_custkey", n_salts=16)
     return j.groupBy(F.col("c_mktsegment").alias("mktsegment")).agg(
         F.count(F.lit(1)).alias("n_orders"),
@@ -793,8 +789,8 @@ def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: part broadcasts (dim ≪ fact); both sums partial-aggregate
     map-side so the shuffle carries one row per (month, partition);
     the share ratio is rational → +1e-9 pre-round bias (gotcha #13)."""
-    l = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part").select("p_partkey", "p_type")
+    l = load_table(spark, sf_dir, "lineitem")
+    p = load_table(spark, sf_dir, "part").select("p_partkey", "p_type")
     rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     promo = F.when(F.col("p_type") == "PROMO", rev).otherwise(F.lit(0.0))
     return (
@@ -842,8 +838,8 @@ def q19_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     join with the residual OR as a post-join filter — and the
     IN-set of brands implied by the OR is pushable to the part scan
     (its entry in tests/plan_shapes.json: no cartesian)."""
-    l = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part").select("p_partkey", "p_brand", "p_size")
+    l = load_table(spark, sf_dir, "lineitem")
+    p = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand", "p_size")
     cond = (
         (F.col("p_brand") == "Brand#11")
         & F.col("p_size").between(1, 5)
@@ -916,8 +912,8 @@ def orders_repeat_purchase_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     are INTEGER calendar datediffs (o_orderdate is NTZ — no epoch
     or timezone arithmetic); rates are rationals with the +1e-9
     bias."""
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     od = F.datediff(F.col("o_orderdate").cast("date"), F.lit("1970-01-01").cast("date"))
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     j = (
@@ -973,13 +969,13 @@ def q7_nation_trade_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     so they carry NO hint — AQE broadcasts them at small sf and
     degrades to SMJ past the ceiling (pinned by the fallback test);
     the matrix agg partial-aggregates to ≤ nations² rows."""
-    l = _t(spark, sf_dir, "lineitem").select(
+    l = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey", "l_extendedprice", "l_discount"
     )
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    n = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     cn = n.select(
         F.col("n_nationkey").alias("cn_key"), F.col("n_name").alias("cust_nation")
     )
@@ -1037,14 +1033,14 @@ def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders_repeat_purchase_rate discipline); final agg is ≤5 groups,
     partial-aggregated map-side."""
     o = (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .filter(
             (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
             & (F.col("o_orderdate") < F.lit("1997-01-01").cast("timestamp"))
         )
         .select("o_orderkey", "o_orderdate", "o_orderpriority")
     )
-    l = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
+    l = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
     late = F.datediff(F.to_date("l_shipdate"), F.to_date("o_orderdate")) > 90
     return (
         o.join(l, (o.o_orderkey == l.l_orderkey) & late, "left_semi")
@@ -1084,8 +1080,8 @@ def q13_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-customer count REUSES that partitioning (no second exchange —
     one shuffle total on the fact side); the histogram agg is ≤
     max-orders-per-customer rows, partial-aggregated."""
-    c = _t(spark, sf_dir, "customer").select("c_custkey")
-    o = _t(spark, sf_dir, "orders").select("o_custkey", "o_orderkey", "o_orderpriority")
+    c = load_table(spark, sf_dir, "customer").select("c_custkey")
+    o = load_table(spark, sf_dir, "orders").select("o_custkey", "o_orderkey", "o_orderpriority")
     return (
         c.join(
             o,
@@ -1129,11 +1125,11 @@ def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     the start); +1e-6 pre-round bias on the money sum (magnitude-
     scaled, the q7 rule)."""
     p = (
-        _t(spark, sf_dir, "part")
+        load_table(spark, sf_dir, "part")
         .filter(F.col("p_brand") == "Brand#13")
         .select("p_partkey")
     )
-    l = _t(spark, sf_dir, "lineitem").select(
+    l = load_table(spark, sf_dir, "lineitem").select(
         "l_partkey", "l_quantity", "l_extendedprice"
     )
     pruned = l.join(F.broadcast(p), l.l_partkey == p.p_partkey)
@@ -1185,19 +1181,19 @@ def q22_idle_capital(spark: SparkSession, sf_dir: str) -> DataFrame:
     recent-orders side is date-pruned at the scan THEN reduced to
     distinct custkeys before the LEFT ANTI join; nation broadcasts;
     final agg ≤ nations rows."""
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey", "c_acctbal")
+    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey", "c_acctbal")
     cents = F.round(F.col("c_acctbal") * 100).cast("bigint")
     thresh = (
         c.filter(F.col("c_acctbal") > 0.0)
         .agg(F.avg(cents).alias("t_cents"))
     )
     recent = (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .filter(F.col("o_orderdate") >= F.lit("2000-07-01").cast("timestamp"))
         .select("o_custkey")
         .distinct()
     )
-    n = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     return (
         c.join(F.broadcast(thresh))
         .filter(cents > F.col("t_cents"))
@@ -1256,11 +1252,11 @@ def q2_best_supplier_per_part(spark: SparkSession, sf_dir: str) -> DataFrame:
     AFTER the argmax (100× fewer rows), nation broadcasts; the limit
     rides TakeOrdered on the unique p_partkey."""
     ps = (
-        _t(spark, sf_dir, "lineitem")
+        load_table(spark, sf_dir, "lineitem")
         .select("l_partkey", "l_suppkey")
         .distinct()
     )
-    s = _t(spark, sf_dir, "supplier").select(
+    s = load_table(spark, sf_dir, "supplier").select(
         "s_suppkey", "s_name", "s_acctbal", "s_nationkey"
     )
     w = Window.partitionBy("l_partkey").orderBy(
@@ -1271,8 +1267,8 @@ def q2_best_supplier_per_part(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
     )
-    p = _t(spark, sf_dir, "part").select("p_partkey", "p_name")
-    n = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    p = load_table(spark, sf_dir, "part").select("p_partkey", "p_name")
+    n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     return (
         best.join(p, best.l_partkey == p.p_partkey)
         .join(F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey"))
@@ -1338,18 +1334,18 @@ def q8_national_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     conditional sums per year (≤ years rows). Integer year buckets;
     the share ratio carries +1e-9, the money sum the magnitude-scaled
     +1e-6 (gotcha #3)."""
-    l = _t(spark, sf_dir, "lineitem").select(
+    l = load_table(spark, sf_dir, "lineitem").select(
         "l_partkey", "l_orderkey", "l_suppkey", "l_extendedprice", "l_discount"
     )
     p = (
-        _t(spark, sf_dir, "part")
+        load_table(spark, sf_dir, "part")
         .filter(F.col("p_type") == Q8_PART_TYPE)
         .select("p_partkey")
     )
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey", "o_orderdate")
-    n = _t(spark, sf_dir, "nation")
+    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey", "o_orderdate")
+    n = load_table(spark, sf_dir, "nation")
     r = (
-        _t(spark, sf_dir, "region")
+        load_table(spark, sf_dir, "region")
         .filter(F.col("r_name") == Q8_REGION)
         .select("r_regionkey")
     )
@@ -1357,11 +1353,11 @@ def q8_national_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     cn = n.join(r, n.n_regionkey == r.r_regionkey).select(
         F.col("n_nationkey").alias("cn_key")
     )
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     c_in_region = c.join(F.broadcast(cn), c.c_nationkey == F.col("cn_key")).select(
         "c_custkey"
     )
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
     sn = n.select(
         F.col("n_nationkey").alias("sn_key"), F.col("n_name").alias("supp_nation")
     )
@@ -1430,17 +1426,17 @@ def q16_part_supplier_variety(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct map-side). Every group emits (no LIMIT), so no tiebreak
     discipline is needed."""
     ps = (
-        _t(spark, sf_dir, "lineitem")
+        load_table(spark, sf_dir, "lineitem")
         .select("l_partkey", "l_suppkey")
         .distinct()
     )
     bad = (
-        _t(spark, sf_dir, "supplier")
+        load_table(spark, sf_dir, "supplier")
         .filter(F.col("s_acctbal") < 0)
         .select("s_suppkey")
     )
     p = (
-        _t(spark, sf_dir, "part")
+        load_table(spark, sf_dir, "part")
         .filter(
             (F.col("p_brand") != Q16_EXCL_BRAND)
             & (F.col("p_type") != Q16_EXCL_TYPE)
@@ -1520,11 +1516,11 @@ def q21_late_sole_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     no hint — and the count side is tiny, so AQE broadcasts THAT
     side); nation broadcasts; the top-N rides TakeOrdered with the
     unique s_name tiebreak (gotcha #13)."""
-    l = _t(spark, sf_dir, "lineitem").select(
+    l = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey", "l_shipdate"
     )
     o = (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .filter(F.col("o_orderstatus") == "F")
         .select("o_orderkey", "o_orderdate")
     )
@@ -1545,8 +1541,8 @@ def q21_late_sole_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("l_suppkey")
         .agg(F.count(F.lit(1)).cast("bigint").alias("numwait"))
     )
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name", "s_nationkey")
-    n = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name", "s_nationkey")
+    n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     return (
         q.join(s, q.l_suppkey == s.s_suppkey)
         .join(F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey"))
@@ -1608,18 +1604,18 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     documented escalation. Reference parity: SURVEY §2c relational
     matrix (reference expresses joins only through user reduce fns,
     reference mapreduce.py:75-78)."""
-    l = _t(spark, sf_dir, "lineitem").select(
+    l = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey", "l_suppkey",
         "l_quantity", "l_extendedprice", "l_discount",
     )
     p = (
-        _t(spark, sf_dir, "part")
+        load_table(spark, sf_dir, "part")
         .filter(F.col("p_name").like(f"%{Q9_NAME_TOKEN}%"))
         .select("p_partkey", "p_retailprice")
     )
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    n = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
+    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     eprice_cents = F.round(F.col("l_extendedprice") * 100).cast("bigint")
     disc_pct = F.round((F.lit(1) - F.col("l_discount")) * 100).cast("bigint")
     retail_cents = F.round(F.col("p_retailprice") * 100).cast("bigint")
@@ -1692,11 +1688,11 @@ def q11_important_part_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     tiebreak (gotcha #13). Geographic filters were rejected: at
     sf0.001 only 10 suppliers exist and single nations are routinely
     EMPTY — an acctbal filter is populated at every sf."""
-    l = _t(spark, sf_dir, "lineitem").select(
+    l = load_table(spark, sf_dir, "lineitem").select(
         "l_partkey", "l_suppkey", "l_extendedprice"
     )
     s = (
-        _t(spark, sf_dir, "supplier")
+        load_table(spark, sf_dir, "supplier")
         .filter(F.col("s_acctbal") >= 0)
         .select("s_suppkey")
     )
@@ -1768,8 +1764,8 @@ def q12_ship_class_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     is an exact INTEGER calendar datediff (o_orderdate is NTZ —
     gotcha from orders_repeat_purchase_rate: integer day arithmetic,
     never float quotients near band boundaries)."""
-    l = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
-    o = _t(spark, sf_dir, "orders").select(
+    l = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
+    o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderdate", "o_orderpriority"
     )
     dd = F.datediff(
@@ -1842,7 +1838,7 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     unhinted (fact-proportional) — AQE broadcasts the 1-row matched
     side. Integer-unit sums make the argmax tolerance-free."""
     l = (
-        _t(spark, sf_dir, "lineitem")
+        load_table(spark, sf_dir, "lineitem")
         .filter(
             (F.col("l_shipdate") >= F.lit(Q15_START).cast("timestamp"))
             & (F.col("l_shipdate") < F.lit(Q15_END).cast("timestamp"))
@@ -1854,7 +1850,7 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).cast("bigint")
     r = l.groupBy("l_suppkey").agg(F.sum(u).alias("u"))
     mx = r.agg(F.max("u").alias("mx"))
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
+    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
     return (
         r.join(F.broadcast(mx))
         .filter(F.col("u") == F.col("mx"))
@@ -1920,7 +1916,7 @@ def q20_dominant_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     set). Every output row is unique by s_suppkey; ORDER BY s_name
     is a stable presentation sort (s_name embeds the key)."""
     l = (
-        _t(spark, sf_dir, "lineitem")
+        load_table(spark, sf_dir, "lineitem")
         .filter(
             (F.col("l_shipdate") >= F.lit(Q20_START).cast("timestamp"))
             & (F.col("l_shipdate") < F.lit(Q20_END).cast("timestamp"))
@@ -1928,7 +1924,7 @@ def q20_dominant_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("l_partkey", "l_suppkey", "l_quantity")
     )
     p = (
-        _t(spark, sf_dir, "part")
+        load_table(spark, sf_dir, "part")
         .filter(F.col("p_name").like(f"%{Q20_NAME_TOKEN}%"))
         .select("p_partkey")
     )
@@ -1945,7 +1941,7 @@ def q20_dominant_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("l_suppkey")
         .distinct()
     )
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
+    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
     return (
         d.join(s, d.l_suppkey == s.s_suppkey)
         .select(F.col("s_suppkey").cast("bigint").alias("s_suppkey"), "s_name")
@@ -2116,7 +2112,7 @@ def lineitem_discount_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
     form OLS of quantity on discount points, exact-integer moments.
     Scale shape: ONE partial-aggregated scan of lineitem (6 algebraic
     sums per group); the regression algebra runs on |flags| rows."""
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = load_table(spark, sf_dir, "lineitem").select(
         "l_returnflag",
         F.expr("CAST(round(l_discount * 100) AS BIGINT)").alias("x"),
         F.expr("CAST(l_quantity AS BIGINT)").alias("y"),
@@ -2213,7 +2209,7 @@ def lineitem_returnflag_anova(spark: SparkSession, sf_dir: str) -> DataFrame:
     the fold and algebra run on that |flags|-row frame."""
     from pyspark.sql.window import Window
 
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = load_table(spark, sf_dir, "lineitem").select(
         "l_returnflag", F.expr("CAST(l_quantity AS BIGINT)").alias("q")
     )
     m = li.groupBy("l_returnflag").agg(
@@ -2320,7 +2316,7 @@ def orders_scd2_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     reuse the custkey partitioning; no fact re-scan anywhere."""
     from pyspark.sql.window import Window
 
-    o = _t(spark, sf_dir, "orders").select(
+    o = load_table(spark, sf_dir, "orders").select(
         "o_custkey",
         F.col("o_orderdate").alias("ts"),
         "o_orderkey",
@@ -2405,7 +2401,7 @@ def orders_reactivation(spark: SparkSession, sf_dir: str) -> DataFrame:
     calendar-sized month aggregation."""
     from pyspark.sql.window import Window
 
-    o = _t(spark, sf_dir, "orders").select(
+    o = load_table(spark, sf_dir, "orders").select(
         "o_custkey",
         F.col("o_orderdate").cast("date").alias("d"),
         "o_orderkey",
@@ -2469,7 +2465,7 @@ def lineitem_duplicate_lines_screen(spark: SparkSession, sf_dir: str) -> DataFra
     shape: ONE partial-aggregated scan grouped on (orderkey,
     partkey) — the HAVING filter runs post-aggregation on the
     already-collapsed frame; no join anywhere."""
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey", "l_suppkey",
         F.expr("CAST(l_quantity AS BIGINT)").alias("q"),
     )
@@ -2550,8 +2546,8 @@ def orders_user_similarity_jaccard(spark: SparkSession, sf_dir: str) -> DataFram
     TakeOrderedAndProject."""
     from pyspark.sql.window import Window
 
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
+    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     bp = (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .select(F.col("o_custkey").alias("ck"), F.col("l_partkey").alias("pk"))
@@ -2661,10 +2657,10 @@ def lineitem_supplier_switching(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the relationship frame."""
     from pyspark.sql.window import Window
 
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey", "l_suppkey", "l_linenumber"
     )
-    o = _t(spark, sf_dir, "orders").select(
+    o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderdate"
     )
     b = li.join(o, li.l_orderkey == o.o_orderkey).select(
@@ -2900,7 +2896,7 @@ def orders_twoway_fixed_effects(spark: SparkSession, sf_dir: str) -> DataFrame:
     cannot survive the driver hash)."""
     from pyspark.sql.window import Window
 
-    o = _t(spark, sf_dir, "orders").select(
+    o = load_table(spark, sf_dir, "orders").select(
         "o_custkey",
         (F.year("o_orderdate") * 12 + F.month("o_orderdate"))
         .cast("bigint")
@@ -2912,8 +2908,8 @@ def orders_twoway_fixed_effects(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("x"),
         F.round(F.col("o_totalprice") * 100).cast("bigint").alias("y"),
     )
-    cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    nat = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    nat = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     r = o.join(
         F.broadcast(cust.join(F.broadcast(nat),
                               cust.c_nationkey == nat.n_nationkey)),
@@ -3158,11 +3154,11 @@ def lineitem_theil_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     replay gate pins total = between + weighted-within)."""
     from pyspark.sql.window import Window
 
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = load_table(spark, sf_dir, "lineitem").select(
         "l_suppkey",
         F.round(F.col("l_extendedprice") * 100).cast("bigint").alias("c"),
     )
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
     sup = (
         li.join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
         .groupBy(F.col("s_nationkey").alias("nat"), F.col("l_suppkey").alias("sk"))
@@ -3308,12 +3304,12 @@ def lineitem_newsvendor_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
     0.8-quantile newsvendor stocking level of daily demand per part
     brand (see header; integer order statistics, never an engine
     percentile)."""
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = load_table(spark, sf_dir, "lineitem").select(
         "l_partkey",
         "l_shipdate",
         F.round("l_quantity").cast("bigint").alias("qty"),
     )
-    part = _t(spark, sf_dir, "part").select("p_partkey", "p_brand")
+    part = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
     dd = (
         li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
         .groupBy(F.col("p_brand").alias("brand"),

@@ -27,9 +27,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.text import QUALITY_RAW_SQL, n_words, quality_raw_col, tokens
 from ..sources import load_table
 from .registry import register
-from .text_analysis import QUALITY_RAW_SQL
 
 # Knuth multiplicative hash over the doc key: pure 64-bit arithmetic,
 # bit-identical in Spark and DuckDB (no engine hash functions), ANSI-
@@ -92,17 +92,8 @@ def sample_stratified_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     k rows per class survive regardless of class skew, so a 95%-
     English crawl yields a balanced mixture."""
     d = load_table(spark, sf_dir, "documents")
-    n_tok = F.size(F.split("text", " "))
-    n_uniq = F.size(F.array_distinct(F.split(F.lower("text"), " ")))
-    n_ch = F.length("text")
     # +1e-9 pre-round: exact half-boundary guard (see text_quality_score)
-    quality = F.round(
-        0.4 * F.least(n_tok / F.lit(64.0), F.lit(1.0))
-        + 0.4 * (n_uniq.cast("double") / n_tok)
-        + 0.2 * F.least((n_ch.cast("double") / n_tok) / F.lit(8.0), F.lit(1.0))
-        + F.lit(1e-9),
-        4,
-    )
+    quality = F.round(quality_raw_col() + F.lit(1e-9), 4)
     w = Window.partitionBy("lang").orderBy(F.col("quality").desc(), "doc_id")
     return (
         d.withColumn("quality", quality)
@@ -179,7 +170,7 @@ def pack_sequences_greedy(
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id",
         "lang",
-        F.size(F.split("text", " ")).cast("int").alias("n_tok"),
+        n_words().cast("int").alias("n_tok"),
     )
     if shards <= 1:
         return d.groupBy("lang").applyInPandas(_pack_one_class, _PACK_SCHEMA)
@@ -339,23 +330,14 @@ def pipeline_training_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     keep = (F.col("doc_id") * F.lit(_KNUTH)) % F.lit(_MOD) % 100 < F.col("keep_pct")
     picked = d.join(F.broadcast(rates), "source").filter(keep)
 
-    n_tok_c = F.size(F.split("text", " "))
-    n_uniq = F.size(F.array_distinct(F.split(F.lower("text"), " ")))
-    n_ch = F.length("text")
     # +1e-9 pre-round: exact half-boundary guard (see text_quality_score)
-    quality = F.round(
-        0.4 * F.least(n_tok_c / F.lit(64.0), F.lit(1.0))
-        + 0.4 * (n_uniq.cast("double") / n_tok_c)
-        + 0.2 * F.least((n_ch.cast("double") / n_tok_c) / F.lit(8.0), F.lit(1.0))
-        + F.lit(1e-9),
-        4,
-    )
+    quality = F.round(quality_raw_col() + F.lit(1e-9), 4)
     w_q = Window.partitionBy("lang").orderBy(F.col("quality").desc(), "doc_id")
     capped = (
         picked.withColumn("quality", quality)
         .withColumn("qrn", F.row_number().over(w_q))
         .filter(F.col("qrn") <= _TB_CAP)
-        .select("doc_id", "lang", n_tok_c.cast("int").alias("n_tok"))
+        .select("doc_id", "lang", n_words().cast("int").alias("n_tok"))
     )
     packed = capped.groupBy("lang").applyInPandas(_pack_one_class, _PACK_SCHEMA)
     return packed.groupBy("lang", "bin").agg(
@@ -409,7 +391,7 @@ def chunk_documents_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     positions, so the op is deterministic under any partitioning.
     """
     d = load_table(spark, sf_dir, "documents")
-    toks = F.split(F.lower("text"), " ")
+    toks = tokens()
     t = d.select("doc_id", toks.alias("toks"))
     s = t.select(
         "doc_id",
@@ -685,7 +667,7 @@ def sample_epoch_mixture_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     one sample_temperature_mixture documents."""
     d = load_table(spark, sf_dir, "documents")
     counts = (
-        d.select("source", F.size(F.split(F.lower("text"), " ")).alias("nt"))
+        d.select("source", F.size(tokens()).alias("nt"))
         .groupBy("source")
         .agg(F.sum("nt").cast("bigint").alias("n_tokens"))
         .localCheckpoint(eager=True)  # two consumers: normalizer + plan
@@ -817,8 +799,6 @@ def sample_curriculum_interleave(spark: SparkSession, sf_dir: str) -> DataFrame:
     through one partition) broadcast back; global_pos is arithmetic,
     so the "interleave" costs no global sort — consumers ORDER BY
     global_pos only when they stream the curriculum out."""
-    from .text_analysis import quality_raw_col
-
     d = load_table(spark, sf_dir, "documents")
     langs = d.select("lang").distinct()
     lw = Window.orderBy("lang")

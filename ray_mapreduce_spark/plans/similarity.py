@@ -35,8 +35,9 @@ from pyspark.sql.window import Window
 
 from ..functions.scale import spread as _spread
 from ..functions.scale import spread_by as _spread_by
+from ..functions.text import tokens
 from ..sources import load_table
-from .dedup import JACCARD_THRESHOLD, SHINGLE_K
+from .dedup import JACCARD_THRESHOLD, SHINGLE_LIST_SQL, SHINGLE_MIN_SQL
 from .registry import register
 from .text_analysis import BM25_B as _RRF_B
 from .text_analysis import BM25_K1 as _RRF_K1
@@ -769,20 +770,14 @@ def dedup_semantic_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     "hybrid_neardup_scores",
     tags=("dedup", "similarity", "cross-modal", "join"),
     # The shingle/threshold spec below is dedup.py's — interpolated
-    # from the shared SHINGLE_K / JACCARD_THRESHOLD constants so the
-    # two oracles can't silently diverge (the [i]||[i+1]||[i+2] shape
-    # is structural SHINGLE_K=3; see the constants' comment).
+    # from the shared shingle SQL and JACCARD_THRESHOLD constants so
+    # the two oracles can't silently diverge.
     oracle=f"""
     WITH shingled AS (
       SELECT doc_id, lang,
-             list_distinct([
-               string_split(lower(text), ' ')[i] || ' ' ||
-               string_split(lower(text), ' ')[i+1] || ' ' ||
-               string_split(lower(text), ' ')[i+2]
-               FOR i IN range(1, greatest(len(string_split(lower(text), ' ')) - 1, 1))
-             ]) AS shingles
+             list_distinct({SHINGLE_LIST_SQL}) AS shingles
       FROM documents
-      WHERE len(string_split(lower(text), ' ')) >= {SHINGLE_K}
+      WHERE {SHINGLE_MIN_SQL}
     ),
     tpairs AS (
       SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
@@ -1317,9 +1312,7 @@ def similarity_tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame
     pruning level beyond it is L2AP-style cumulative bounds
     (Anastasiu & Karypis, ICDE'14)."""
     d = _spread(load_table(spark, sf_dir, "documents"))
-    tok = d.select(
-        "doc_id", "lang", F.explode(F.split(F.lower("text"), " ")).alias("t")
-    )
+    tok = d.select("doc_id", "lang", F.explode(tokens()).alias("t"))
     tf = tok.groupBy("doc_id", "lang", "t").agg(
         F.count(F.lit(1)).cast("bigint").alias("tf")
     )
@@ -1913,9 +1906,7 @@ def similarity_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     final rank window touch <= 2*RRF_TOP rows — driver-sized by
     construction, like every serving-side fusion."""
     d = load_table(spark, sf_dir, "documents")
-    tok = d.select(
-        "doc_id", F.explode(F.split(F.lower("text"), " ")).alias("tok")
-    )
+    tok = d.select("doc_id", F.explode(tokens()).alias("tok"))
     tf = tok.groupBy("doc_id", "tok").agg(
         F.count(F.lit(1)).cast("double").alias("tf")
     )
@@ -2223,14 +2214,9 @@ def embedding_diversity_gram(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     shingled AS MATERIALIZED (
       SELECT doc_id, lang,
-             list_distinct([
-               string_split(lower(text), ' ')[i] || ' ' ||
-               string_split(lower(text), ' ')[i+1] || ' ' ||
-               string_split(lower(text), ' ')[i+2]
-               FOR i IN range(1, greatest(len(string_split(lower(text), ' ')) - 1, 1))
-             ]) AS shingles
+             list_distinct({SHINGLE_LIST_SQL}) AS shingles
       FROM d1
-      WHERE len(string_split(lower(text), ' ')) >= {SHINGLE_K}
+      WHERE {SHINGLE_MIN_SQL}
     ),
     jp AS MATERIALIZED (
       SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,

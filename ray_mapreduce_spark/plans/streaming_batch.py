@@ -32,10 +32,6 @@ from ..streaming.windows import (
 from .registry import register
 
 
-def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "events")
-
-
 def _micros(df: DataFrame, *keep: str) -> DataFrame:
     return df.select(
         F.unix_micros("win_start").alias("win_start_us"),
@@ -63,7 +59,7 @@ def stream_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     is one shuffle keyed by (window, event_type) with map-side partial
     counts; in streaming mode watermarking bounds the live state to
     the 2-hour horizon."""
-    return _micros(tumbling_counts(_events(spark, sf_dir)), "event_type", "n")
+    return _micros(tumbling_counts(load_table(spark, sf_dir, "events")), "event_type", "n")
 
 
 @register(
@@ -92,7 +88,7 @@ def stream_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """1-hour windows sliding by 30 minutes: every event lands in
     exactly 2 windows (width/slide). The oracle enumerates the two
     slide-aligned windows per event explicitly."""
-    return _micros(sliding_counts(_events(spark, sf_dir)), "event_type", "n")
+    return _micros(sliding_counts(load_table(spark, sf_dir, "events")), "event_type", "n")
 
 
 @register(
@@ -128,7 +124,7 @@ def stream_session_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session windows (10-min inactivity gap) per user via Spark's
     session_window, oracle-checked against a gaps-and-islands SQL
     rewrite. State per live session only when run as a stream."""
-    out = session_counts(_events(spark, sf_dir))
+    out = session_counts(load_table(spark, sf_dir, "events"))
     return _micros(out, "user_id", "n_events")
 
 
@@ -159,7 +155,7 @@ def stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     time bound is a post-join filter on co-partitioned rows. In
     streaming mode both watermarks bound the join state to the
     2-hour horizon."""
-    e = _events(spark, sf_dir)
+    e = load_table(spark, sf_dir, "events")
     return stream_stream_purchase_click_join(e, e)
 
 
@@ -187,7 +183,7 @@ def stream_dedup_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming execution). Scale shape: ONE shuffle on event_id with
     map-side partial dedup; state in streaming mode is bounded by the
     watermark, state in batch mode by distinct ids per partition."""
-    e = _events(spark, sf_dir).select("event_id", "event_type", "ts", "value")
+    e = load_table(spark, sf_dir, "events").select("event_id", "event_type", "ts", "value")
     doubled = e.union(e)
     return stream_dedup(doubled).select(
         "event_id",

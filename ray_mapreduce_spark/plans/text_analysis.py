@@ -16,7 +16,10 @@ from pyspark.sql.window import Window
 
 from ..functions.scale import spread as _spread
 from ..functions.scale import spread_by as _spread_by
+from ..functions.stats import moment_sums
+from ..functions.text import QUALITY_RAW_SQL, lead_chain, n_words, quality_raw_col, tokens
 from ..sources import load_table
+from .dedup import SHINGLE_K, SHINGLE_LIST_SQL, SHINGLE_MIN_SQL
 from .registry import register
 
 # Tiny per-language marker lists for the heuristic language ID.
@@ -55,11 +58,10 @@ _LANG_MARKERS = {
 )
 def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    toks = F.split("text", " ")
-    uniq = F.array_distinct(F.split(F.lower("text"), " "))
+    uniq = F.array_distinct(tokens())
     t = d.select(
         "lang",
-        F.size(toks).alias("n_tokens"),
+        n_words().alias("n_tokens"),
         F.size(uniq).alias("n_uniq"),
         F.length("text").alias("n_chars_actual"),
     )
@@ -93,40 +95,16 @@ def text_token_count_regex(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.select(
         "doc_id",
         F.size(F.regexp_extract_all("text", F.lit(pat), 0)).alias("n_tokens_bpeish"),
-        F.size(F.split("text", " ")).alias("n_tokens_ws"),
+        n_words().alias("n_tokens_ws"),
     )
 
 
 # --------------------------------------------------------------------------
 # Quality score: deterministic [0,1] combo of length band, lexical
 # diversity, and mean word length — the filter stage of a training-data
-# pipeline. Identical closed-form on both engines. The closed form is
-# shared (QUALITY_RAW_SQL / quality_raw_col) with every consumer that
-# ranks or buckets by quality (quality_calibration_deciles here,
-# dedup_survivors_quality in dedup.py) so the engines can never drift.
-QUALITY_RAW_SQL = """(
-             0.4 * least(len(string_split(text, ' ')) / 64.0, 1.0)
-           + 0.4 * (CAST(len(list_distinct(string_split(lower(text), ' '))) AS DOUBLE)
-                    / len(string_split(text, ' ')))
-           + 0.2 * least((CAST(length(text) AS DOUBLE)
-                          / len(string_split(text, ' '))) / 8.0, 1.0)
-          )"""
-
-
-def quality_raw_col():
-    """Unrounded quality Column over a frame exposing ``text`` —
-    structurally identical to QUALITY_RAW_SQL (same operand order, so
-    both engines build the same doubles)."""
-    n_tok = F.size(F.split("text", " "))
-    n_uniq = F.size(F.array_distinct(F.split(F.lower("text"), " ")))
-    n_ch = F.length("text")
-    return (
-        0.4 * F.least(n_tok / F.lit(64.0), F.lit(1.0))
-        + 0.4 * (n_uniq.cast("double") / n_tok)
-        + 0.2 * F.least((n_ch.cast("double") / n_tok) / F.lit(8.0), F.lit(1.0))
-    )
-
-
+# pipeline. Identical closed-form on both engines (functions/text.py's
+# QUALITY_RAW_SQL / quality_raw_col, shared with every consumer that
+# ranks or buckets by quality).
 @register(
     "text_quality_score",
     bench=True,
@@ -194,7 +172,7 @@ def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
         [(lang, m) for lang, ms in _LANG_MARKERS.items() for m in ms],
         "cand_lang: string, marker: string",
     )
-    toks = d.select("doc_id", F.explode(F.split(F.lower("text"), " ")).alias("tok"))
+    toks = d.select("doc_id", F.explode(tokens()).alias("tok"))
     scores = (
         toks.join(F.broadcast(markers), toks.tok == markers.marker)
         .groupBy("doc_id", "cand_lang")
@@ -232,16 +210,10 @@ def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def text_top_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window
-
     d = load_table(spark, sf_dir, "documents")
-    tok = d.select(F.posexplode(F.split(F.lower("text"), " ")).alias("pos", "t"), "doc_id")
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    bigrams = (
-        tok.withColumn("t2", F.lead("t", 1).over(w))
-        .filter(F.col("t2").isNotNull())
-        .select(F.concat_ws(" ", "t", "t2").alias("bigram"))
-    )
+    tok = d.select(F.posexplode(tokens()).alias("pos", "t"), "doc_id")
+    grams, cols = lead_chain(tok, "t", 2)
+    bigrams = grams.select(F.concat_ws(" ", *cols).alias("bigram"))
     return (
         bigrams.groupBy("bigram")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -322,7 +294,7 @@ def text_quality_ratios(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "lang",
         (punct.cast("double") / n_ch).alias("praw"),
-        F.explode(F.split(F.lower("text"), " ")).alias("tok"),
+        F.explode(tokens()).alias("tok"),
     )
     stop_arr = F.array(*[F.lit(s) for s in _STOPWORDS])
     return (
@@ -338,23 +310,20 @@ def text_quality_ratios(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------------------------------------
 # Intra-document repetition (Gopher-style filter): fraction of word
-# 3-grams that are repeats of an earlier 3-gram in the SAME doc. High
-# values flag boilerplate/spam/generation loops. Computed on the
-# non-distinct shingle explode: count vs countDistinct per doc — both
-# algebraic, one shuffle on doc_id.
+# 3-grams (SHINGLE_K-grams, the dedup shingles) that are repeats of an
+# earlier 3-gram in the SAME doc. High values flag
+# boilerplate/spam/generation loops. Computed on the non-distinct
+# shingle explode: count vs countDistinct per doc — both algebraic,
+# one shuffle on doc_id.
 @register(
     "text_repetition_stats",
     tags=("text", "quality", "repetition"),
-    oracle="""
+    oracle=f"""
     WITH g AS (
       SELECT doc_id, lang,
-             [string_split(lower(text), ' ')[i] || ' ' ||
-              string_split(lower(text), ' ')[i+1] || ' ' ||
-              string_split(lower(text), ' ')[i+2]
-              FOR i IN range(1, greatest(len(string_split(lower(text), ' ')) - 1, 1))
-             ] AS grams
+             {SHINGLE_LIST_SQL} AS grams
       FROM documents
-      WHERE len(string_split(lower(text), ' ')) >= 3
+      WHERE {SHINGLE_MIN_SQL}
     )
     SELECT doc_id, lang,
            CAST(len(grams) AS BIGINT)                AS n_3grams,
@@ -365,19 +334,10 @@ def text_quality_ratios(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def text_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window
-
     d = load_table(spark, sf_dir, "documents")
-    tok = d.select(
-        "doc_id", "lang", F.posexplode(F.split(F.lower("text"), " ")).alias("pos", "t")
-    )
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    grams = (
-        tok.withColumn("t1", F.lead("t", 1).over(w))
-        .withColumn("t2", F.lead("t", 2).over(w))
-        .filter(F.col("t2").isNotNull())
-        .select("doc_id", "lang", F.concat_ws(" ", "t", "t1", "t2").alias("g"))
-    )
+    tok = d.select("doc_id", "lang", F.posexplode(tokens()).alias("pos", "t"))
+    grams, cols = lead_chain(tok, "t", SHINGLE_K)
+    grams = grams.select("doc_id", "lang", F.concat_ws(" ", *cols).alias("g"))
     return grams.groupBy("doc_id", "lang").agg(
         F.count(F.lit(1)).alias("n_3grams"),
         F.countDistinct("g").alias("n_distinct"),
@@ -431,7 +391,7 @@ def text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
     d = load_table(spark, sf_dir, "documents")
-    tok = d.select("doc_id", F.explode(F.split(F.lower("text"), " ")).alias("tok"))
+    tok = d.select("doc_id", F.explode(tokens()).alias("tok"))
     tf = tok.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("tf"))
     n = d.agg(F.count(F.lit(1)).alias("n"))
     scored = (
@@ -494,7 +454,7 @@ def text_zipf_head(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load_table(spark, sf_dir, "documents")
     freq = (
-        d.select(F.explode(F.split(F.lower("text"), " ")).alias("token"))
+        d.select(F.explode(tokens()).alias("token"))
         .filter(F.col("token") != "")
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("freq"))
@@ -619,7 +579,7 @@ def text_bm25_topdocs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
     d = load_table(spark, sf_dir, "documents")
-    tok = d.select("doc_id", F.explode(F.split(F.lower("text"), " ")).alias("tok"))
+    tok = d.select("doc_id", F.explode(tokens()).alias("tok"))
     tf = tok.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).cast("double").alias("tf"))
     # doc length = sum of tf over the doc; df = docs containing tok —
     # both as windows over the tf table: one lineage, no rejoin.
@@ -690,10 +650,8 @@ def text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
     d = load_table(spark, sf_dir, "documents")
-    tok = d.select("doc_id", F.explode(F.split(F.lower("text"), " ")).alias("tok"))
-    tot = d.agg(
-        F.sum(F.size(F.split(F.lower("text"), " "))).cast("double").alias("total")
-    )
+    tok = d.select("doc_id", F.explode(tokens()).alias("tok"))
+    tot = d.agg(F.sum(F.size(tokens())).cast("double").alias("total"))
     ctf = tok.select("doc_id", F.count(F.lit(1)).over(Window.partitionBy("tok")).alias("ctf"))
     return (
         ctf.crossJoin(F.broadcast(tot))
@@ -728,7 +686,7 @@ def unigram_corpus_stats(corpus: DataFrame) -> tuple[DataFrame, DataFrame]:
     no corpus rescan — the stats-reuse test pins exactly that shape by
     scoring two batches against one checkpointed stats pair.
     """
-    ctok = corpus.select(F.explode(F.split(F.lower("text"), " ")).alias("tok"))
+    ctok = corpus.select(F.explode(tokens()).alias("tok"))
     terms = ctok.groupBy("tok").agg(F.count(F.lit(1)).cast("double").alias("ctf"))
     scalars = terms.agg(
         F.sum("ctf").alias("total"), F.count(F.lit(1)).cast("double").alias("vocab")
@@ -747,9 +705,7 @@ def unigram_score_batch(
     stats row is broadcast, and the per-doc mean partial-aggregates
     map-side. OOV tokens (no terms match) take ctf=0 under add-one
     smoothing and are counted in n_oov."""
-    btok = batch.select(
-        "doc_id", F.explode(F.split(F.lower("text"), " ")).alias("tok")
-    )
+    btok = batch.select("doc_id", F.explode(tokens()).alias("tok"))
     scored = btok.join(terms, "tok", "left").crossJoin(F.broadcast(scalars))
     p = (F.coalesce(F.col("ctf"), F.lit(0.0)) + 1) / (
         F.col("total") + F.col("vocab") + 1
@@ -819,7 +775,7 @@ def bm25_corpus_stats(corpus: DataFrame) -> tuple[DataFrame, DataFrame]:
     (terms(tok, df), scalars(n, avgdl)). In production both are
     written once per corpus snapshot (terms bucketed by tok) and
     every batch scores against the stored tables."""
-    tok = corpus.select("doc_id", F.explode(F.split(F.lower("text"), " ")).alias("tok"))
+    tok = corpus.select("doc_id", F.explode(tokens()).alias("tok"))
     tf = tok.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("tf"))
     terms = tf.groupBy("tok").agg(F.count(F.lit(1)).cast("double").alias("df"))
     dl = tf.groupBy("doc_id").agg(F.sum("tf").cast("double").alias("dlen"))
@@ -846,7 +802,7 @@ def bm25_score_batch(
     left join + coalesce(df, 0) keeps external query sets safe."""
     from pyspark.sql.window import Window
 
-    btok = batch.select("doc_id", F.explode(F.split(F.lower("text"), " ")).alias("tok"))
+    btok = batch.select("doc_id", F.explode(tokens()).alias("tok"))
     tf = btok.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).cast("double").alias("tf"))
     tf = tf.withColumn("dlen", F.sum("tf").over(Window.partitionBy("doc_id")))
     matched = (
@@ -919,7 +875,7 @@ def text_bm25_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     terms, scalars = bm25_corpus_stats(corpus)
     qterms = (
         corpus.filter(F.col("doc_id") < BM25_QUERY_DOCS + 1)
-        .select(F.explode(F.split(F.lower("text"), " ")).alias("tok"))
+        .select(F.explode(tokens()).alias("tok"))
         .distinct()
     )
     return bm25_score_batch(batch, terms, scalars, qterms)
@@ -963,7 +919,7 @@ def corpus_composition_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     per = d.groupBy("source", "lang").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-        F.sum(F.size(F.split("text", " "))).cast("bigint").alias("n_tokens"),
+        F.sum(n_words()).cast("bigint").alias("n_tokens"),
         F.sum(F.length("text")).cast("bigint").alias("n_chars"),
     )
     tot = per.agg(F.sum("n_tokens").cast("double").alias("total_tokens"))
@@ -1044,9 +1000,7 @@ def text_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket->weight join of the exported table; everything else keeps
     its shape."""
     d = _spread_by(load_table(spark, sf_dir, "documents"), "doc_id")
-    tok = d.select(
-        "doc_id", "lang", F.explode(F.split(F.lower("text"), " ")).alias("t")
-    )
+    tok = d.select("doc_id", "lang", F.explode(tokens()).alias("t"))
     bucket = F.conv(F.substring(F.sha2(F.col("t"), 256), 1, 6), 16, 10).cast(
         "bigint"
     ) % CLF_HASH_DIM
@@ -1144,9 +1098,7 @@ def bigram_pmi(
     ``text_bigram_pmi`` for the plan rationale."""
     from pyspark.sql.window import Window
 
-    tok = _spread_by(d, "doc_id").select(
-        "doc_id", F.posexplode(F.split(F.lower("text"), " ")).alias("pos", "t")
-    )
+    tok = _spread_by(d, "doc_id").select("doc_id", F.posexplode(tokens()).alias("pos", "t"))
     w = Window.partitionBy("doc_id").orderBy("pos")
     adj = tok.select("t", F.lead("t", 1).over(w).alias("t2"))
     bc = (
@@ -1310,9 +1262,7 @@ def bigram_logprob_frame(d: DataFrame) -> DataFrame:
     from pyspark import StorageLevel
     from pyspark.sql.window import Window
 
-    tok = d.select(
-        "doc_id", F.posexplode(F.split(F.lower("text"), " ")).alias("pos", "t")
-    )
+    tok = d.select("doc_id", F.posexplode(tokens()).alias("pos", "t"))
     w = Window.partitionBy("doc_id").orderBy("pos")
     adjd = tok.select(
         "doc_id", "t", F.lead("t", 1).over(w).alias("t2")
@@ -1394,9 +1344,7 @@ def text_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     Both stages map-side combine; no windows, no holistic aggs, so
     the plan is embarrassingly parallel at any corpus size."""
     d = _spread_by(load_table(spark, sf_dir, "documents"), "doc_id")
-    tok = d.select(
-        "doc_id", "lang", F.explode(F.split(F.lower("text"), " ")).alias("t")
-    )
+    tok = d.select("doc_id", "lang", F.explode(tokens()).alias("t"))
     tc = tok.groupBy("doc_id", "lang", "t").agg(F.count(F.lit(1)).alias("c"))
     s = tc.groupBy("doc_id", "lang").agg(
         F.sum("c").cast("bigint").alias("n_tokens"),
@@ -1474,7 +1422,7 @@ def corpus_source_kl(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial-aggregates. Token text appears only in the first groupBy
     key; every later stage moves counts."""
     d = _spread(load_table(spark, sf_dir, "documents"))
-    tok = d.select("source", F.explode(F.split(F.lower("text"), " ")).alias("t"))
+    tok = d.select("source", F.explode(tokens()).alias("t"))
     c = tok.groupBy("source", "t").agg(F.count(F.lit(1)).cast("bigint").alias("c_st"))
     from pyspark.sql.window import Window as _W
 
@@ -1530,7 +1478,7 @@ def text_heavy_hitters_mg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(token, n_occurrences, share_pct) for every token with
     frequency > n/MG_K (share > 1%)."""
     tok = _spread(load_table(spark, sf_dir, "documents")).select(
-        F.explode(F.split(F.lower("text"), " ")).alias("token")
+        F.explode(tokens()).alias("token")
     )
     return heavy_hitters_mg(tok, MG_K)
 
@@ -1629,7 +1577,7 @@ def text_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window as _W
 
     d = _spread(load_table(spark, sf_dir, "documents"))
-    tok = d.select("lang", F.explode(F.split(F.lower("text"), " ")).alias("t"))
+    tok = d.select("lang", F.explode(tokens()).alias("t"))
     c = tok.groupBy("lang", "t").agg(F.count(F.lit(1)).cast("bigint").alias("c"))
     order = [F.col("c").desc(), F.col("t")]
     r = (
@@ -1711,9 +1659,7 @@ def text_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     token stream never shuffles for it; per-doc then per-lang folds
     partial-aggregate. The rate is rational → +1e-9 bias."""
     d = _spread_by(load_table(spark, sf_dir, "documents"), "doc_id")
-    tok = d.select(
-        "doc_id", "lang", F.explode(F.split(F.lower("text"), " ")).alias("t")
-    )
+    tok = d.select("doc_id", "lang", F.explode(tokens()).alias("t"))
     vocab = (
         tok.groupBy("t")
         .agg(F.count(F.lit(1)).alias("c"))
@@ -1780,14 +1726,7 @@ def text_quality_length_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
         quality_raw_col().alias("x"),
         F.log(F.col("n_chars").cast("double")).alias("y"),
     )
-    s = q.groupBy("lang").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum("x").alias("sx"),
-        F.sum("y").alias("sy"),
-        F.sum(F.col("x") * F.col("x")).alias("sxx"),
-        F.sum(F.col("y") * F.col("y")).alias("syy"),
-        F.sum(F.col("x") * F.col("y")).alias("sxy"),
-    )
+    s = q.groupBy("lang").agg(*moment_sums())
     num = F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")
     den = F.sqrt(F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")) * F.sqrt(
         F.col("n") * F.col("syy") - F.col("sy") * F.col("sy")
@@ -1840,7 +1779,7 @@ def text_truncation_loss(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact integers, only the final rate is rational (+1e-9 pre-round
     bias, gotcha #13)."""
     d = load_table(spark, sf_dir, "documents")
-    n_tok = F.size(F.split("text", " ")).cast("bigint")
+    n_tok = n_words().cast("bigint")
     lost = F.greatest(n_tok - F.lit(TRUNCATION_MAX_TOKENS), F.lit(0).cast("bigint"))
     return (
         d.select("source", n_tok.alias("n_tok"), lost.alias("lost"))
@@ -1906,7 +1845,7 @@ def text_length_weighted_quantiles(spark: SparkSession, sf_dir: str) -> DataFram
     grouped-frame justification); thresholds are exact integer
     inequalities, immune to rounding and summation order."""
     d = load_table(spark, sf_dir, "documents").select(
-        F.size(F.split("text", " ")).cast("bigint").alias("L")
+        n_words().cast("bigint").alias("L")
     )
     per = d.groupBy("L").agg(
         F.count(F.lit(1)).cast("bigint").alias("docs"),
@@ -2007,7 +1946,7 @@ def text_distinctive_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     into the sort)."""
     d = load_table(spark, sf_dir, "documents")
     st = (
-        d.select("source", F.explode(F.split(F.lower("text"), " ")).alias("t"))
+        d.select("source", F.explode(tokens()).alias("t"))
         .groupBy("source", "t")
         .agg(F.count(F.lit(1)).cast("bigint").alias("c_st"))
         .localCheckpoint(eager=True)
@@ -2100,9 +2039,7 @@ def text_gopher_filters(spark: SparkSession, sf_dir: str) -> DataFrame:
     (text_quality_score) grade survivors; this op is the cheap
     hard-rule pass in front of them."""
     d = load_table(spark, sf_dir, "documents")
-    tok = d.select(
-        "doc_id", F.explode(F.split(F.lower("text"), " ")).alias("t")
-    )
+    tok = d.select("doc_id", F.explode(tokens()).alias("t"))
     c = tok.groupBy("doc_id", "t").agg(F.count(F.lit(1)).alias("c"))
     m = c.groupBy("doc_id").agg(
         F.sum("c").cast("bigint").alias("n_tok"),
@@ -2174,7 +2111,7 @@ def text_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     per = d.select(
         "lang",
         F.octet_length("text").cast("bigint").alias("n_bytes"),
-        F.size(F.split("text", " ")).cast("bigint").alias("n_ws"),
+        n_words().cast("bigint").alias("n_ws"),
         F.size(F.regexp_extract_all("text", F.lit(pat), 0))
         .cast("bigint")
         .alias("n_bpeish"),
@@ -2269,9 +2206,7 @@ def text_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         [(lang, m) for lang, ms in _LANG_MARKERS.items() for m in ms],
         "cand_lang: string, marker: string",
     )
-    toks = d.select(
-        "doc_id", F.explode(F.split(F.lower("text"), " ")).alias("tok")
-    )
+    toks = d.select("doc_id", F.explode(tokens()).alias("tok"))
     scores = (
         toks.join(F.broadcast(markers), toks.tok == markers.marker)
         .groupBy("doc_id", "cand_lang")
@@ -2478,7 +2413,7 @@ def text_hapax_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     (source, token) frame on its own partitioning prefix."""
     d = load_table(spark, sf_dir, "documents")
     c = (
-        d.select("source", F.explode(F.split(F.lower("text"), " ")).alias("tok"))
+        d.select("source", F.explode(tokens()).alias("tok"))
         .groupBy("source", "tok")
         .agg(F.count(F.lit(1)).alias("n"))
     )
@@ -2574,7 +2509,7 @@ def text_code_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     scored = d.select(
         "source",
-        F.size(F.split("text", " ")).cast("bigint").alias("n_tokens"),
+        n_words().cast("bigint").alias("n_tokens"),
         n_punct.cast("bigint").alias("n_punct"),
         n_kw.cast("bigint").alias("n_kw"),
     ).select(
@@ -2655,7 +2590,7 @@ def text_quality_retention_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the corpus."""
     d = load_table(spark, sf_dir, "documents").select(
         F.round(quality_raw_col() + F.lit(1e-9), 4).alias("q"),
-        F.size(F.split("text", " ")).cast("bigint").alias("ntok"),
+        n_words().cast("bigint").alias("ntok"),
     )
     b = d.agg(
         F.expr(
@@ -2798,9 +2733,7 @@ def text_naive_bayes_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     scores."""
     from pyspark.sql.window import Window
 
-    d = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "lang", F.split(F.lower("text"), " ").alias("t")
-    )
+    d = load_table(spark, sf_dir, "documents").select("doc_id", "lang", tokens().alias("t"))
     train_tok = (
         d.filter(F.pmod("doc_id", F.lit(2)) == 0)
         .select("lang", F.explode("t").alias("tok"))
@@ -2951,7 +2884,7 @@ def pipeline_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lang",
         "source",
         F.sha2(F.col("text"), 256).alias("h"),
-        F.size(F.split("text", " ")).alias("ntok"),
+        n_words().alias("ntok"),
         F.round(quality_raw_col() + F.lit(1e-9), 4).alias("q"),
     )
     dup = (
@@ -3045,9 +2978,7 @@ def text_token_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side combine); the top-N rides TakeOrderedAndProject. No
     windows, no self-joins."""
     d = _spread_by(load_table(spark, sf_dir, "documents"), "doc_id")
-    tok = d.select(
-        "doc_id", F.explode(F.split(F.lower("text"), " ")).alias("t")
-    )
+    tok = d.select("doc_id", F.explode(tokens()).alias("t"))
     a = tok.groupBy("t").agg(
         F.count(F.lit(1)).cast("bigint").alias("cf"),
         F.countDistinct("doc_id").cast("bigint").alias("df"),
@@ -3263,7 +3194,7 @@ def text_source_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark import StorageLevel
 
     d = _spread(load_table(spark, sf_dir, "documents"))
-    tok = d.select("source", F.explode(F.split(F.lower("text"), " ")).alias("t"))
+    tok = d.select("source", F.explode(tokens()).alias("t"))
     c = tok.groupBy("source", "t").agg(
         F.count(F.lit(1)).cast("bigint").alias("c_st")
     )
@@ -3525,7 +3456,7 @@ def text_good_turing_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     Simpson repeat-rate per language (see header)."""
     d = load_table(spark, sf_dir, "documents")
     c = (
-        d.select("lang", F.explode(F.split(F.lower("text"), " ")).alias("t"))
+        d.select("lang", F.explode(tokens()).alias("t"))
         .groupBy("lang", "t")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
     )
@@ -3649,7 +3580,7 @@ def text_keyword_rake(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     tok = _spread_by(d, "doc_id").select(
         "doc_id",
-        F.posexplode(F.split(F.lower("text"), " ")).alias("pos", "tok"),
+        F.posexplode(tokens()).alias("pos", "tok"),
     )
     is_stop = F.col("tok").isin(*RAKE_STOPWORDS) | (F.col("tok") == "")
     w_pos = (
@@ -3806,9 +3737,7 @@ def text_burrows_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     (see header; z-scores clear denominators into exact integers, the
     pair fold runs over a <= K-row frame)."""
     d = _spread(load_table(spark, sf_dir, "documents"))
-    tok = d.select(
-        "source", F.explode(F.split(F.lower("text"), " ")).alias("t")
-    )
+    tok = d.select("source", F.explode(tokens()).alias("t"))
     stc = tok.groupBy("source", "t").agg(
         F.count(F.lit(1)).cast("bigint").alias("c")
     )
@@ -3955,7 +3884,7 @@ def text_yule_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     the token-frequency spectrum per language (see header; exact
     integer spectrum sums, one identical division)."""
     d = _spread(load_table(spark, sf_dir, "documents"))
-    tok = d.select("lang", F.explode(F.split(F.lower("text"), " ")).alias("t"))
+    tok = d.select("lang", F.explode(tokens()).alias("t"))
     c = tok.groupBy("lang", "t").agg(F.count(F.lit(1)).cast("bigint").alias("c"))
     s = c.groupBy("lang").agg(
         F.sum("c").cast("bigint").alias("s1"),
@@ -4059,7 +3988,7 @@ def text_ttr_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok = d.select(
         "lang",
         "doc_id",
-        F.posexplode(F.split(F.lower("text"), " ")).alias("pos", "t"),
+        F.posexplode(tokens()).alias("pos", "t"),
     )
     ranked = two_pass_rank(
         tok, ["doc_id", "pos"], "gpos", total_col="n_tok", group_cols=["lang"]
@@ -4151,7 +4080,7 @@ def text_freq_spectrum(spark: SparkSession, sf_dir: str) -> DataFrame:
     language with hapax/dis shares (see header; exact integers, two
     single divisions)."""
     d = _spread(load_table(spark, sf_dir, "documents"))
-    tok = d.select("lang", F.explode(F.split(F.lower("text"), " ")).alias("t"))
+    tok = d.select("lang", F.explode(tokens()).alias("t"))
     c = tok.groupBy("lang", "t").agg(F.count(F.lit(1)).cast("bigint").alias("c"))
     aggs = [
         F.sum("c").cast("bigint").alias("n_tokens"),

@@ -16,10 +16,6 @@ from ..sources import load_table
 from .registry import register
 
 
-def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "events")
-
-
 # Multi-granularity rollup: day totals AND (day, hour) details from
 # ONE scan via GROUPING SETS — the continuous-aggregate shape; at
 # scale the coarse level shares the fine level's partial aggregation
@@ -41,7 +37,7 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def timeseries_rollup_hierarchy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _events(spark, sf_dir).select(
+    e = load_table(spark, sf_dir, "events").select(
         F.date_trunc("day", "ts").alias("day"),
         F.date_trunc("hour", "ts").alias("hour"),
         "value",
@@ -77,7 +73,7 @@ def timeseries_rollup_hierarchy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def timeseries_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _events(spark, sf_dir)
+    e = load_table(spark, sf_dir, "events")
     # argmin/argmax key: fixed-width zero-padded (micros, event_id)
     # string — lexicographic order == numeric order, and a scalar key
     # is portable across engines (struct keys aren't).
@@ -128,7 +124,7 @@ def timeseries_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def timeseries_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _events(spark, sf_dir)
+    e = load_table(spark, sf_dir, "events")
     hour = F.date_trunc("hour", "ts")
     bounds = e.groupBy("event_type").agg(
         F.min(hour).alias("h0"), F.max(hour).alias("h1")
@@ -199,7 +195,7 @@ def timeseries_twap(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: ONE shuffle on event_type shared by the lead window
     and the aggregate (the agg reuses the window's partitioning);
     map-side partial agg on integer sums."""
-    e = _events(spark, sf_dir).select(
+    e = load_table(spark, sf_dir, "events").select(
         "event_type",
         F.expr("CAST(round(value * 10000) AS BIGINT)").alias("vq"),
         F.unix_micros("ts").alias("us"),
@@ -290,7 +286,7 @@ def timeseries_acf_lags(spark: SparkSession, sf_dir: str) -> DataFrame:
     possible, gotcha #9; ADVICE r9) — then the lag joins and the
     Pearson folds run on the tiny daily frame (days x 7 rows) with
     the 7-row lag spine broadcast."""
-    e = _events(spark, sf_dir)
+    e = load_table(spark, sf_dir, "events")
     d = e.groupBy(F.expr("unix_micros(ts) div 86400000000").alias("day")).agg(
         F.count(F.lit(1)).cast("bigint").alias("cnt"),
         F.round(
@@ -392,7 +388,7 @@ def timeseries_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     type-keyed exchange past the first aggregation."""
     from pyspark.sql.window import Window
 
-    e = _events(spark, sf_dir)
+    e = load_table(spark, sf_dir, "events")
     d = e.groupBy(
         "event_type",
         F.expr("unix_micros(ts) div 86400000000").alias("day"),
@@ -478,7 +474,7 @@ def timeseries_metric_correlations(spark: SparkSession, sf_dir: str) -> DataFram
     correctly rounded; signed-zero guard on r. Scale shape: one
     per-day partial aggregation of the fact (partial-distinct for
     users), a 1-row moment fold, and a 3-row literal explode."""
-    e = _events(spark, sf_dir)
+    e = load_table(spark, sf_dir, "events")
     d = e.groupBy(F.expr("unix_micros(ts) div 86400000000").alias("day")).agg(
         F.count(F.lit(1)).cast("bigint").alias("cnt"),
         F.countDistinct("user_id").cast("bigint").alias("du"),

@@ -56,6 +56,42 @@ def _read_parquet(spark: SparkSession, sf_dir: str, filename: str) -> DataFrame:
     return spark.read.schema(schema).parquet(path)
 
 
+def events_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``events.parquet`` with ``ts`` as stored: bigint for
+    TIMESTAMP(NANOS) (Spark's vectorized reader rejects that physical
+    type, so it is read as long under a legacy, runtime-settable conf
+    that is harmless for micros files), timestamp_ntz for
+    TIMESTAMP(MICROS). Its schema is also the explicit schema of the
+    events file stream (streaming/windows.py::events_stream)."""
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    return _read_parquet(spark, sf_dir, "events.parquet")
+
+
+def events_ts(df: DataFrame) -> DataFrame:
+    """Rebuild ``ts`` of an ``events_raw``-schema frame (batch or
+    streaming) as a session-TZ (UTC) timestamp, so every downstream
+    plan sees one stable type across data generations. Nanos: ``ts
+    div 1000`` stays in integer arithmetic — nanos since epoch (~8e17)
+    overflow a double's 53-bit mantissa, so a float division would
+    corrupt timestamps. Micros: cast the TIMESTAMP_NTZ."""
+    from pyspark.sql import functions as F
+
+    ts_type = dict(df.dtypes)["ts"]
+    if ts_type == "bigint":  # TIMESTAMP(NANOS) read as long
+        return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    if ts_type not in ("timestamp", "timestamp_ntz"):
+        # Fail loudly on an unexpected physical type from a future
+        # testdata regeneration (e.g. string / INT96) instead of
+        # silently coercing garbage — the dtype HAS changed between
+        # rounds before (nanos -> micros).
+        raise TypeError(
+            f"events.ts read as unexpected dtype {ts_type!r}; "
+            "expected bigint (nanos-as-long), timestamp, or timestamp_ntz "
+            "— inspect pq.read_schema and extend events_ts deliberately"
+        )
+    return df.withColumn("ts", F.col("ts").cast("timestamp"))
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one test table. Column pruning + filter pushdown reach the
     scan automatically because callers compose DataFrame ops on the
@@ -64,37 +100,12 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ``events.ts`` has shipped as BOTH parquet TIMESTAMP(NANOS) (rounds
     1-4) and TIMESTAMP(MICROS) (round 5 regeneration), so the loader
     branches on what the scan actually produces rather than assuming a
-    generation. Nanos: Spark's vectorized reader rejects the physical
-    type, so we read nanos as long (legacy conf, runtime-settable) and
-    rebuild a micros timestamp. ``ts div 1000`` stays in integer
-    arithmetic — nanos since epoch (~8e17) overflow a double's 53-bit
-    mantissa, so a float division here would corrupt timestamps.
-    Micros: arrives as TIMESTAMP_NTZ; cast to the session-TZ (UTC)
-    TimestampType so every downstream plan sees one stable type across
-    data generations.
+    generation (``events_raw`` + ``events_ts``).
     """
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
     if name == "events":
-        # Harmless when the file is micros — the conf only affects NANOS.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = _read_parquet(spark, sf_dir, "events.parquet")
-        from pyspark.sql import functions as F
-
-        ts_type = dict(df.dtypes)["ts"]
-        if ts_type == "bigint":  # TIMESTAMP(NANOS) read as long
-            return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        if ts_type not in ("timestamp", "timestamp_ntz"):
-            # Fail loudly on an unexpected physical type from a future
-            # testdata regeneration (e.g. string / INT96) instead of
-            # silently coercing garbage — the dtype HAS changed between
-            # rounds before (nanos -> micros).
-            raise TypeError(
-                f"events.ts read as unexpected dtype {ts_type!r}; "
-                "expected bigint (nanos-as-long), timestamp, or timestamp_ntz "
-                "— inspect pq.read_schema and extend load_table deliberately"
-            )
-        return df.withColumn("ts", F.col("ts").cast("timestamp"))
+        return events_ts(events_raw(spark, sf_dir))
     return _read_parquet(spark, sf_dir, f"{name}.parquet")
 
 

@@ -17,75 +17,26 @@ from typing import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-# Explicit schema (streaming sources require one). The ts physical
-# type has shipped as BOTH TIMESTAMP(NANOS) (rounds 1-4: read as long
-# via legacy conf, rebuilt as micros) and TIMESTAMP(MICROS) (round 5
-# regeneration) — ``_events_raw_schema`` picks per data generation by
-# probing the parquet footer, same dual-generation handling as the
-# batch path in sources/tables.py.
-EVENTS_RAW_SCHEMA = StructType(
-    [
-        StructField("event_id", LongType()),
-        StructField("ts", LongType()),
-        StructField("user_id", LongType()),
-        StructField("event_type", StringType()),
-        StructField("value", DoubleType()),
-        StructField("props", StringType()),
-    ]
-)
-
-
-def _events_ts_is_nanos(spark: SparkSession, sf_dir: str) -> bool:
-    """One batch-read of the footer schema (no data scan): nanos files
-    surface ts as bigint under the legacy conf, micros as a timestamp."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    import os
-
-    probe = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    ts_type = dict(probe.dtypes)["ts"]
-    if ts_type not in ("bigint", "timestamp", "timestamp_ntz"):
-        raise TypeError(
-            f"events.ts read as unexpected dtype {ts_type!r}; "
-            "extend the dual-generation handling deliberately (gotcha #1)"
-        )
-    return ts_type == "bigint"
+from ..sources.tables import events_raw, events_ts
 
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events as a file stream (one-file directory glob). The driver
     data is static, so tests run with trigger(availableNow=True) —
-    the stream processes the backlog and stops."""
-    if _events_ts_is_nanos(spark, sf_dir):
-        raw = (
-            spark.readStream.schema(EVENTS_RAW_SCHEMA)
-            .format("parquet")
-            .option("pathGlobFilter", "events.parquet")  # dir holds all tables
-            .load(sf_dir)
-        )
-        return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    from pyspark.sql.types import TimestampNTZType
-
-    schema = StructType(
-        [
-            f if f.name != "ts" else StructField("ts", TimestampNTZType())
-            for f in EVENTS_RAW_SCHEMA.fields
-        ]
-    )
+    the stream processes the backlog and stops. A streaming source
+    needs an explicit schema: it is the batch loader's (cached) raw
+    schema, and ``ts`` gets the batch loader's rebuild and dtype
+    guard, so both paths handle every events.ts generation alike
+    (gotcha #1)."""
     raw = (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(events_raw(spark, sf_dir).schema)
         .format("parquet")
-        .option("pathGlobFilter", "events.parquet")
+        .option("pathGlobFilter", "events.parquet")  # dir holds all tables
         .load(sf_dir)
     )
-    return raw.withColumn("ts", F.col("ts").cast("timestamp"))
+    return events_ts(raw)
 
 
 def tumbling_counts(events: DataFrame, width: str = "1 hour", watermark: str = "2 hours") -> DataFrame:

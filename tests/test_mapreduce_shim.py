@@ -468,3 +468,49 @@ def test_shim_survives_task_retries_and_worker_crashes(tmp_path):
     assert f"CLEAN {expected}" in lines
     assert "raise_on_first_attempt True" in lines
     assert "exit_on_first_attempt True" in lines
+
+
+# --- one hot key ------------------------------------------------------------
+
+_HOT_KEY_SCRIPT = '''
+import resource, sys, time
+sys.path.insert(0, sys.argv[1])
+from ray_mapreduce_spark.mapreduce import MapReduceBulk
+from ray_mapreduce_spark.session import get_spark
+
+N = 2_000_000
+
+def map_fcn(x):
+    yield ("hot", x)
+
+def reduce_fcn(k, values):
+    peak_kb = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss  # KiB on Linux
+    return (k, len(values), sum(values), peak_kb)
+
+spark = get_spark("shim-hot-key", cpus=4, extra_conf={"spark.master": "local[4,3]"})
+spark.sparkContext.setLogLevel("OFF")
+t0 = time.time()
+out = MapReduceBulk(range(N), map_fcn, reduce_fcn, 4, 4, max_chunk_size=100_000, spark=spark)
+print("WALL", round(time.time() - t0, 2))
+print("RESULT", [r[:3] for r in out])
+print("PEAK_RSS_MB", round(out[0][3] / 1024))
+spark.stop()
+'''
+
+
+def test_shim_single_hot_key_two_million_values(tmp_path):
+    """Every one of 2,000,000 records maps to ONE key: the holistic
+    reduce receives the whole 2M-value list in one Python worker and
+    must still return the right count and sum on ``local[4,3]``. Prints
+    the wall time and the reduce worker's peak RSS (MIGRATION.md
+    records them as the shim's measured hot-key ceiling)."""
+    script = tmp_path / "hot_key.py"
+    script.write_text(_HOT_KEY_SCRIPT)
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run(
+        [sys.executable, str(script), repo], capture_output=True, text=True, timeout=600
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    n = 2_000_000
+    assert f"RESULT {[('hot', n, n * (n - 1) // 2)]}" in proc.stdout.splitlines()
+    print(*[l for l in proc.stdout.splitlines() if l.startswith(("WALL", "PEAK_RSS_MB"))])

@@ -217,6 +217,39 @@ def test_events_stream_ts_guard_rejects_unknown_dtype(spark, tmp_path):
         events_stream(spark, str(tmp_path))
 
 
+def test_events_nanos_ts_batch_equals_stream(spark, tmp_path):
+    """An events.parquet written as TIMESTAMP(NANOS) — the older data
+    generation, which the shipped testdata no longer exercises — loads
+    with the same ``ts`` through ``load_table`` and through
+    ``events_stream``: nanos read as long, rebuilt in integer
+    arithmetic (sub-microsecond digits truncate) to a UTC timestamp."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    nanos = [1_704_067_200_123_456_789, 1_704_070_800_000_000_999, 1_704_074_400_000_000_000]
+    t = pa.table(
+        {
+            "event_id": pa.array([1, 2, 3], pa.int64()),
+            "ts": pa.array(nanos, pa.timestamp("ns")),
+            "user_id": pa.array([7, 7, 8], pa.int64()),
+            "event_type": pa.array(["view", "click", "view"], pa.string()),
+            "value": pa.array([1.0, 2.0, 3.0], pa.float64()),
+            "props": pa.array(["{}", "{}", "{}"], pa.string()),
+        }
+    )
+    path = tmp_path / "events.parquet"
+    pq.write_table(t, str(path), version="2.6")
+    assert pq.read_schema(str(path)).field("ts").type == pa.timestamp("ns")
+
+    batch = load_table(spark, str(tmp_path), "events")
+    stream = events_stream(spark, str(tmp_path))
+    assert dict(batch.dtypes)["ts"] == dict(stream.dtypes)["ts"] == "timestamp"
+    cols = ["event_id", F.unix_micros("ts").alias("us")]
+    want = [(i + 1, n // 1000) for i, n in enumerate(nanos)]
+    assert _sorted(batch.select(*cols).collect()) == want
+    assert _sorted(_run_stream(spark, stream.select(*cols), "t_nanos", "append")) == want
+
+
 def test_sessionize_gap_stream_equals_batch(spark, sf_dir):
     """The r7 batch sessionizer (`events_sessionize_gap`, lag +
     running-sum windows) and the Structured Streaming twin

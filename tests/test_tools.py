@@ -30,17 +30,15 @@ def test_helper_edit_changes_every_cache_key():
 
 
 def test_sibling_plans_import_is_transitive():
-    """dedup imports QUALITY_RAW_SQL from text_analysis, and
-    graph -> similarity -> dedup: a text_analysis edit must
-    invalidate dedup AND graph queries, while a module with no
-    import path to it (windows) keeps its key."""
+    """text_analysis imports the shingle SQL from dedup, and
+    graph -> similarity -> dedup: a dedup edit must invalidate
+    text_analysis AND graph queries, while a module with no import
+    path to it (windows) keeps its key."""
     base = _plan_hashes()
     edited = _plan_hashes(
-        source_overrides={
-            "plans/text_analysis.py": "from .registry import register\n"
-        }
+        source_overrides={"plans/dedup.py": "from .registry import register\n"}
     )
-    assert base["dedup_survivors_quality"] != edited["dedup_survivors_quality"]
+    assert base["text_repetition_stats"] != edited["text_repetition_stats"]
     assert base["graph_pagerank_neardup"] != edited["graph_pagerank_neardup"]
     assert base["window_running_and_lag"] == edited["window_running_and_lag"]
 

@@ -75,8 +75,8 @@ def _plan_hashes(source_overrides: dict | None = None) -> dict:
 
     r9 (VERDICT r8 #4): the r8 key hashed only the builder module +
     oracle, blind to sources//operators//functions//streaming/ helper
-    edits AND to cross-plans-module helpers (dedup pulls
-    QUALITY_RAW_SQL from text_analysis; graph->similarity->dedup).
+    edits AND to cross-plans-module helpers (text_analysis pulls
+    the shingle SQL from dedup; graph->similarity->dedup).
     Now a shared digest over all non-plans modules is mixed into
     every key and `from .X import` sibling edges are followed
     transitively, so a helper edit invalidates its dependents and
