@@ -2,8 +2,8 @@
 and corpus-statistics query: one tokenizer, one word count and one
 k-gram alignment over a ``documents``-shaped frame.
 
-The DuckDB oracles' counterpart (the word-shingle list expression)
-lives next to ``SHINGLE_K`` in ``plans/dedup.py``.
+The DuckDB oracles' tokenizer is ``TOKENS_SQL``; their word-shingle
+list expression lives next to ``SHINGLE_K`` in ``plans/dedup.py``.
 """
 
 from __future__ import annotations
@@ -16,8 +16,12 @@ from pyspark.sql.window import Window
 def tokens() -> Column:
     """``text`` lowercased and split on a single space — the token
     array every text query starts from, and the Spark twin of the
-    oracles' ``string_split(lower(text), ' ')``."""
+    oracles' ``TOKENS_SQL``."""
     return F.split(F.lower("text"), " ")
+
+
+# The same token array in DuckDB SQL; every oracle interpolates it.
+TOKENS_SQL = "string_split(lower(text), ' ')"
 
 
 def n_words() -> Column:
@@ -29,9 +33,9 @@ def n_words() -> Column:
 # Quality score closed form, one definition per engine: length band,
 # lexical diversity and mean word length. Every query that ranks or
 # buckets by quality uses this pair, so the engines can never drift.
-QUALITY_RAW_SQL = """(
+QUALITY_RAW_SQL = f"""(
              0.4 * least(len(string_split(text, ' ')) / 64.0, 1.0)
-           + 0.4 * (CAST(len(list_distinct(string_split(lower(text), ' '))) AS DOUBLE)
+           + 0.4 * (CAST(len(list_distinct({TOKENS_SQL})) AS DOUBLE)
                     / len(string_split(text, ' ')))
            + 0.2 * least((CAST(length(text) AS DOUBLE)
                           / len(string_split(text, ' '))) / 8.0, 1.0)

@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.scale import spread_by as _spread_by
-from ..functions.text import QUALITY_RAW_SQL, lead_chain, quality_raw_col, tokens
+from ..functions.text import QUALITY_RAW_SQL, TOKENS_SQL, lead_chain, quality_raw_col, tokens
 from ..sources import load_table
 from .registry import register
 
@@ -55,15 +55,14 @@ DEFAULT_DF_CAP = 1000
 SHINGLE_K = 3
 JACCARD_THRESHOLD = 0.6
 
-_WORDS_SQL = "string_split(lower(text), ' ')"
 _GRAM_INDEX = ["i"] + [f"i+{j}" for j in range(1, SHINGLE_K)]
 SHINGLE_LIST_SQL = (
     "[\n"
-    + " || ' ' ||\n".join(f"               {_WORDS_SQL}[{i}]" for i in _GRAM_INDEX)
-    + f"\n               FOR i IN range(1, greatest(len({_WORDS_SQL}) - {SHINGLE_K - 2}, 1))"
+    + " || ' ' ||\n".join(f"               {TOKENS_SQL}[{i}]" for i in _GRAM_INDEX)
+    + f"\n               FOR i IN range(1, greatest(len({TOKENS_SQL}) - {SHINGLE_K - 2}, 1))"
     + "\n             ]"
 )
-SHINGLE_MIN_SQL = f"len({_WORDS_SQL}) >= {SHINGLE_K}"
+SHINGLE_MIN_SQL = f"len({TOKENS_SQL}) >= {SHINGLE_K}"
 
 
 # --------------------------------------------------------------------------
@@ -986,7 +985,7 @@ SPAN_K = 8
     tags=("dedup", "spans", "substring", "window"),
     oracle=f"""
     WITH t AS (
-      SELECT doc_id, string_split(lower(text), ' ') AS toks FROM documents
+      SELECT doc_id, {TOKENS_SQL} AS toks FROM documents
     ),
     s AS (
       SELECT doc_id,
@@ -1288,7 +1287,7 @@ FP_HEAD_TOKENS = 8
     oracle=f"""
     WITH h AS (
       SELECT DISTINCT source,
-             md5(array_to_string(string_split(lower(text), ' ')[1:{FP_HEAD_TOKENS}],
+             md5(array_to_string({TOKENS_SQL}[1:{FP_HEAD_TOKENS}],
                                  ' ')) AS fp
       FROM documents
     )
@@ -1724,7 +1723,7 @@ def dedup_minhash_estimate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("dedup", "decontamination", "spans", "substring"),
     oracle=f"""
     WITH t AS (
-      SELECT doc_id, string_split(lower(text), ' ') AS toks FROM documents
+      SELECT doc_id, {TOKENS_SQL} AS toks FROM documents
     ),
     s AS (
       SELECT DISTINCT doc_id,

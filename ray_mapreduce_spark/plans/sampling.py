@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.text import QUALITY_RAW_SQL, n_words, quality_raw_col, tokens
+from ..functions.text import QUALITY_RAW_SQL, TOKENS_SQL, n_words, quality_raw_col, tokens
 from ..sources import load_table
 from .registry import register
 
@@ -61,12 +61,12 @@ def sample_hash_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "sample_stratified_capped",
     tags=("sampling", "stratified", "window"),
-    oracle="""
+    oracle=f"""
     SELECT doc_id, lang, quality
     FROM (
       SELECT doc_id, lang,
              round(0.4 * least(len(string_split(text, ' ')) / 64.0, 1.0)
-                 + 0.4 * (len(list_distinct(string_split(lower(text), ' ')))
+                 + 0.4 * (len(list_distinct({TOKENS_SQL}))
                           / CAST(len(string_split(text, ' ')) AS DOUBLE))
                  + 0.2 * least((CAST(length(text) AS DOUBLE)
                                 / len(string_split(text, ' '))) / 8.0, 1.0)
@@ -74,7 +74,7 @@ def sample_hash_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame:
              row_number() OVER (
                PARTITION BY lang
                ORDER BY round(0.4 * least(len(string_split(text, ' ')) / 64.0, 1.0)
-                 + 0.4 * (len(list_distinct(string_split(lower(text), ' ')))
+                 + 0.4 * (len(list_distinct({TOKENS_SQL}))
                           / CAST(len(string_split(text, ' ')) AS DOUBLE))
                  + 0.2 * least((CAST(length(text) AS DOUBLE)
                                 / len(string_split(text, ' '))) / 8.0, 1.0)
@@ -362,7 +362,7 @@ CHUNK_STRIDE = 56  # 8-token overlap
     tags=("text", "chunking", "explode"),
     oracle=f"""
     WITH t AS (
-      SELECT doc_id, string_split(lower(text), ' ') AS toks FROM documents
+      SELECT doc_id, {TOKENS_SQL} AS toks FROM documents
     ),
     s AS (
       SELECT doc_id, toks,
@@ -627,7 +627,7 @@ EPOCH_CAP = 4
     oracle=f"""
     WITH counts AS (
       SELECT source,
-             CAST(sum(len(string_split(lower(text), ' '))) AS BIGINT) AS n_tokens
+             CAST(sum(len({TOKENS_SQL})) AS BIGINT) AS n_tokens
       FROM documents GROUP BY source
     ),
     z AS (

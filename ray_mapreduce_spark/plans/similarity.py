@@ -35,7 +35,7 @@ from pyspark.sql.window import Window
 
 from ..functions.scale import spread as _spread
 from ..functions.scale import spread_by as _spread_by
-from ..functions.text import tokens
+from ..functions.text import TOKENS_SQL, tokens
 from ..sources import load_table
 from .dedup import JACCARD_THRESHOLD, SHINGLE_LIST_SQL, SHINGLE_MIN_SQL
 from .registry import register
@@ -1243,7 +1243,7 @@ TFIDF_COS_THRESHOLD = 0.9
     tags=("similarity", "tfidf", "cosine", "sparse", "dedup", "prefix-filter"),
     oracle=f"""
     WITH tok AS (
-      SELECT doc_id, lang, unnest(string_split(lower(text), ' ')) AS t
+      SELECT doc_id, lang, unnest({TOKENS_SQL}) AS t
       FROM documents
     ),
     tf AS (
@@ -1825,7 +1825,7 @@ RRF_SCALE = 10**12  # 1/(k+rank) in exact integer units: SCALE div (k+rank)
 
 _RRF_ORACLE = f"""
     WITH tok AS (
-      SELECT doc_id, unnest(string_split(lower(text), ' ')) AS tok FROM documents
+      SELECT doc_id, unnest({TOKENS_SQL}) AS tok FROM documents
     ),
     dl AS (SELECT doc_id, CAST(count(*) AS DOUBLE) AS dlen FROM tok GROUP BY doc_id),
     stats AS (SELECT CAST(count(*) AS DOUBLE) AS n, avg(dlen) AS avgdl FROM dl),

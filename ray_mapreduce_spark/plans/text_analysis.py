@@ -17,7 +17,7 @@ from pyspark.sql.window import Window
 from ..functions.scale import spread as _spread
 from ..functions.scale import spread_by as _spread_by
 from ..functions.stats import moment_sums
-from ..functions.text import QUALITY_RAW_SQL, lead_chain, n_words, quality_raw_col, tokens
+from ..functions.text import QUALITY_RAW_SQL, TOKENS_SQL, lead_chain, n_words, quality_raw_col, tokens
 from ..sources import load_table
 from .dedup import SHINGLE_K, SHINGLE_LIST_SQL, SHINGLE_MIN_SQL
 from .registry import register
@@ -39,11 +39,11 @@ _LANG_MARKERS = {
     "text_token_stats",
     bench=True,
     tags=("text", "tokens", "aggregate"),
-    oracle="""
+    oracle=f"""
     WITH t AS (
       SELECT lang,
              len(string_split(text, ' '))                    AS n_tokens,
-             len(list_distinct(string_split(lower(text), ' '))) AS n_uniq,
+             len(list_distinct({TOKENS_SQL})) AS n_uniq,
              length(text)                                    AS n_chars_actual
       FROM documents
     )
@@ -132,7 +132,7 @@ def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "text_lang_id",
     tags=("text", "lang-id"),
-    oracle="""
+    oracle=f"""
     WITH markers AS (
       SELECT * FROM (VALUES
         ('en','the'),('en','and'),('en','of'),
@@ -143,7 +143,7 @@ def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
       ) AS m(cand_lang, marker)
     ),
     toks AS (
-      SELECT doc_id, unnest(string_split(lower(text), ' ')) AS tok FROM documents
+      SELECT doc_id, unnest({TOKENS_SQL}) AS tok FROM documents
     ),
     scores AS (
       SELECT t.doc_id, m.cand_lang, count(*) AS hits
@@ -194,9 +194,9 @@ def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "text_top_bigrams",
     tags=("text", "ngram", "topk"),
-    oracle="""
+    oracle=f"""
     WITH t AS (
-      SELECT string_split(lower(text), ' ') AS toks FROM documents
+      SELECT {TOKENS_SQL} AS toks FROM documents
     ),
     b AS (
       SELECT unnest([toks[i] || ' ' || toks[i+1] FOR i IN range(1, len(toks))]) AS bigram
@@ -268,7 +268,7 @@ _STOPWORDS = (
     oracle=f"""
     WITH t AS (
       SELECT doc_id, lang,
-             string_split(lower(text), ' ') AS toks,
+             {TOKENS_SQL} AS toks,
              length(text) AS n_ch,
              length(regexp_replace(text, '[^.,;:!?''"()-]', '', 'g')) AS n_punct
       FROM documents
@@ -357,9 +357,9 @@ def text_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "text_tfidf_top_terms",
     tags=("text", "tfidf", "window"),
-    oracle="""
+    oracle=f"""
     WITH tok AS (
-      SELECT doc_id, unnest(string_split(lower(text), ' ')) AS tok FROM documents
+      SELECT doc_id, unnest({TOKENS_SQL}) AS tok FROM documents
     ),
     tf AS (SELECT doc_id, tok, count(*) AS tf FROM tok GROUP BY 1, 2),
     df AS (SELECT tok, count(*) AS df FROM tf GROUP BY 1),
@@ -420,9 +420,9 @@ def text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "text_zipf_head",
     tags=("text", "tokens", "topk"),
-    oracle="""
+    oracle=f"""
     WITH tok AS (
-      SELECT unnest(string_split(lower(text), ' ')) AS token FROM documents
+      SELECT unnest({TOKENS_SQL}) AS token FROM documents
     ),
     freq AS (
       SELECT token, count(*) AS freq
@@ -527,7 +527,7 @@ BM25_TOP_N = 50
     tags=("text", "bm25", "retrieval", "window"),
     oracle=f"""
     WITH tok AS (
-      SELECT doc_id, unnest(string_split(lower(text), ' ')) AS tok FROM documents
+      SELECT doc_id, unnest({TOKENS_SQL}) AS tok FROM documents
     ),
     dl AS (SELECT doc_id, CAST(count(*) AS DOUBLE) AS dlen FROM tok GROUP BY doc_id),
     stats AS (
@@ -620,12 +620,12 @@ def text_bm25_topdocs(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "text_unigram_logprob",
     tags=("text", "quality", "perplexity", "window"),
-    oracle="""
+    oracle=f"""
     WITH tok AS (
-      SELECT doc_id, unnest(string_split(lower(text), ' ')) AS tok FROM documents
+      SELECT doc_id, unnest({TOKENS_SQL}) AS tok FROM documents
     ),
     tot AS (
-      SELECT CAST(sum(len(string_split(lower(text), ' '))) AS DOUBLE) AS total
+      SELECT CAST(sum(len({TOKENS_SQL})) AS DOUBLE) AS total
       FROM documents
     ),
     ctf AS (
@@ -722,7 +722,7 @@ def unigram_score_batch(
     tags=("text", "quality", "perplexity", "incremental"),
     oracle=f"""
     WITH ctok AS (
-      SELECT unnest(string_split(lower(text), ' ')) AS tok
+      SELECT unnest({TOKENS_SQL}) AS tok
       FROM documents WHERE doc_id % {UNIGRAM_SPLIT_MOD} <> 0
     ),
     terms AS (
@@ -734,7 +734,7 @@ def unigram_score_batch(
       FROM terms
     ),
     btok AS (
-      SELECT doc_id, unnest(string_split(lower(text), ' ')) AS tok
+      SELECT doc_id, unnest({TOKENS_SQL}) AS tok
       FROM documents WHERE doc_id % {UNIGRAM_SPLIT_MOD} = 0
     )
     SELECT b.doc_id,
@@ -827,7 +827,7 @@ def bm25_score_batch(
     tags=("text", "bm25", "retrieval", "incremental"),
     oracle=f"""
     WITH ctok AS (
-      SELECT doc_id, unnest(string_split(lower(text), ' ')) AS tok
+      SELECT doc_id, unnest({TOKENS_SQL}) AS tok
       FROM documents WHERE doc_id % {UNIGRAM_SPLIT_MOD} <> 0
     ),
     ctf AS (SELECT doc_id, tok, count(*) AS tf FROM ctok GROUP BY doc_id, tok),
@@ -840,7 +840,7 @@ def bm25_score_batch(
       SELECT DISTINCT tok FROM ctok WHERE doc_id < {BM25_QUERY_DOCS + 1}
     ),
     btok AS (
-      SELECT doc_id, unnest(string_split(lower(text), ' ')) AS tok
+      SELECT doc_id, unnest({TOKENS_SQL}) AS tok
       FROM documents WHERE doc_id % {UNIGRAM_SPLIT_MOD} = 0
     ),
     btf AS (
@@ -954,7 +954,7 @@ _CLF_MOD = 4294967296  # 2^32
     tags=("text", "quality", "classifier", "hash-features"),
     oracle=f"""
     WITH tok AS (
-      SELECT doc_id, lang, unnest(string_split(lower(text), ' ')) AS t
+      SELECT doc_id, lang, unnest({TOKENS_SQL}) AS t
       FROM documents
     ),
     w AS (
@@ -1036,7 +1036,7 @@ PMI_TOP_N = 50
     tags=("text", "pmi", "collocations", "window"),
     oracle=f"""
     WITH t AS (
-      SELECT string_split(lower(text), ' ') AS toks FROM documents
+      SELECT {TOKENS_SQL} AS toks FROM documents
     ),
     uni AS (
       SELECT t AS tok, count(*) AS c
@@ -1207,14 +1207,14 @@ def quality_calibration_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "text_bigram_logprob",
     tags=("text", "quality", "perplexity", "bigram", "window"),
-    oracle="""
+    oracle=f"""
     WITH t AS (
-      SELECT doc_id, string_split(lower(text), ' ') AS toks FROM documents
+      SELECT doc_id, {TOKENS_SQL} AS toks FROM documents
     ),
     adj AS (
       SELECT doc_id, p.w1 AS w1, p.w2 AS w2 FROM (
         SELECT doc_id,
-               unnest([{'w1': toks[i], 'w2': toks[i+1]}
+               unnest([{{'w1': toks[i], 'w2': toks[i+1]}}
                        FOR i IN range(1, len(toks))]) AS p
         FROM t
       )
@@ -1308,9 +1308,9 @@ def bigram_logprob_frame(d: DataFrame) -> DataFrame:
 @register(
     "text_token_entropy",
     tags=("text", "entropy", "quality"),
-    oracle="""
+    oracle=f"""
     WITH tok AS (
-      SELECT doc_id, lang, unnest(string_split(lower(text), ' ')) AS t
+      SELECT doc_id, lang, unnest({TOKENS_SQL}) AS t
       FROM documents
     ),
     tc AS (
@@ -1380,9 +1380,9 @@ def text_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "corpus_source_kl",
     tags=("text", "kl", "composition", "drift"),
-    oracle="""
+    oracle=f"""
     WITH tok AS (
-      SELECT source, unnest(string_split(lower(text), ' ')) AS t FROM documents
+      SELECT source, unnest({TOKENS_SQL}) AS t FROM documents
     ),
     c AS (
       SELECT source, t, CAST(count(*) AS BIGINT) AS c_st
@@ -1464,7 +1464,7 @@ MG_K = 100
     tags=("text", "sketch", "heavy-hitters", "misra-gries", "pandas-udf"),
     oracle=f"""
     WITH tok AS (
-      SELECT unnest(string_split(lower(text), ' ')) AS token FROM documents
+      SELECT unnest({TOKENS_SQL}) AS token FROM documents
     ),
     tot AS (SELECT CAST(count(*) AS BIGINT) AS n FROM tok)
     SELECT token, CAST(count(*) AS BIGINT) AS n_occurrences,
@@ -1537,9 +1537,9 @@ def heavy_hitters_mg(tok: DataFrame, k: int) -> DataFrame:
 @register(
     "text_vocab_coverage",
     tags=("text", "vocab", "coverage", "zipf"),
-    oracle="""
+    oracle=f"""
     WITH tok AS (
-      SELECT lang, unnest(string_split(lower(text), ' ')) AS t FROM documents
+      SELECT lang, unnest({TOKENS_SQL}) AS t FROM documents
     ),
     c AS (
       SELECT lang, t, CAST(count(*) AS BIGINT) AS c
@@ -1623,7 +1623,7 @@ OOV_VOCAB_K = 1000
     tags=("text", "vocab", "oov", "coverage"),
     oracle=f"""
     WITH tok AS (
-      SELECT doc_id, lang, unnest(string_split(lower(text), ' ')) AS t
+      SELECT doc_id, lang, unnest({TOKENS_SQL}) AS t
       FROM documents
     ),
     vocab AS (
@@ -1895,7 +1895,7 @@ LOGODDS_TOP_N = 5
     tags=("documents", "log-odds", "comparative", "topk"),
     oracle=f"""
     WITH tok AS (
-      SELECT source, unnest(string_split(lower(text), ' ')) AS t
+      SELECT source, unnest({TOKENS_SQL}) AS t
       FROM documents
     ),
     st AS (
@@ -2002,7 +2002,7 @@ GOPHER_MIN_TOKENS = 30
     tags=("text", "quality", "filter-rules"),
     oracle=f"""
     WITH tok AS (
-      SELECT doc_id, unnest(string_split(lower(text), ' ')) AS t
+      SELECT doc_id, unnest({TOKENS_SQL}) AS t
       FROM documents
     ),
     c AS (SELECT doc_id, t, count(*) AS c FROM tok GROUP BY doc_id, t),
@@ -2162,7 +2162,7 @@ _MARKER_VALUES_SQL = ",".join(
       SELECT * FROM (VALUES {_MARKER_VALUES_SQL}) AS m(cand_lang, marker)
     ),
     toks AS (
-      SELECT doc_id, unnest(string_split(lower(text), ' ')) AS tok FROM documents
+      SELECT doc_id, unnest({TOKENS_SQL}) AS tok FROM documents
     ),
     scores AS (
       SELECT t.doc_id, m.cand_lang, count(*) AS hits
@@ -2389,9 +2389,9 @@ def text_charclass_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "text_hapax_ratio",
     tags=("text", "vocabulary", "diagnostics"),
-    oracle="""
+    oracle=f"""
     WITH t AS (
-      SELECT source, unnest(string_split(lower(text), ' ')) AS tok
+      SELECT source, unnest({TOKENS_SQL}) AS tok
       FROM documents
     ),
     c AS (SELECT source, tok, count(*) AS n FROM t GROUP BY 1, 2)
@@ -2654,7 +2654,7 @@ NB_SCALE = 1_000_000
     tags=("text", "classifier", "naive-bayes", "train-eval"),
     oracle=f"""
     WITH d AS (
-      SELECT doc_id, lang, string_split(lower(text), ' ') AS t
+      SELECT doc_id, lang, {TOKENS_SQL} AS t
       FROM documents
     ),
     train_tok AS (
@@ -2952,7 +2952,7 @@ BURSTINESS_TOP_N = 100
     tags=("text", "burstiness", "vocabulary", "topk"),
     oracle=f"""
     WITH tok AS (
-      SELECT doc_id, unnest(string_split(lower(text), ' ')) AS t
+      SELECT doc_id, unnest({TOKENS_SQL}) AS t
       FROM documents
     ),
     a AS (
@@ -3124,9 +3124,9 @@ def corpus_lang_source_independence(spark: SparkSession, sf_dir: str) -> DataFra
 @register(
     "text_source_js_divergence",
     tags=("text", "jsd", "composition", "drift"),
-    oracle="""
+    oracle=f"""
     WITH tok AS (
-      SELECT source, unnest(string_split(lower(text), ' ')) AS t FROM documents
+      SELECT source, unnest({TOKENS_SQL}) AS t FROM documents
     ),
     c AS (
       SELECT source, t, CAST(count(*) AS BIGINT) AS c_st
@@ -3419,9 +3419,9 @@ def text_quality_length_spearman(
 @register(
     "text_good_turing_coverage",
     tags=("text", "coverage", "good-turing", "diversity", "aggregate"),
-    oracle="""
+    oracle=f"""
     WITH tok AS (
-      SELECT lang, unnest(string_split(lower(text), ' ')) AS t
+      SELECT lang, unnest({TOKENS_SQL}) AS t
       FROM documents
     ),
     c AS (
@@ -3531,7 +3531,7 @@ _RAKE_STOP_SQL = ", ".join(f"'{w}'" for w in RAKE_STOPWORDS)
     tags=("text", "keywords", "rake", "window"),
     oracle=f"""
     WITH t AS (
-      SELECT doc_id, string_split(lower(text), ' ') AS toks FROM documents
+      SELECT doc_id, {TOKENS_SQL} AS toks FROM documents
     ),
     tok AS (
       SELECT doc_id, u.pos AS pos, u.tok AS tok FROM (
@@ -3671,7 +3671,7 @@ BURROWS_TOP_K = 40
     oracle=f"""
     WITH stc AS (
       SELECT source, t, CAST(count(*) AS BIGINT) AS c FROM (
-        SELECT source, unnest(string_split(lower(text), ' ')) AS t
+        SELECT source, unnest({TOKENS_SQL}) AS t
         FROM documents
       ) GROUP BY 1, 2
     ),
@@ -3857,9 +3857,9 @@ def text_burrows_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "text_yule_k",
     tags=("text", "vocabulary", "richness", "yule"),
-    oracle="""
+    oracle=f"""
     WITH tok AS (
-      SELECT lang, unnest(string_split(lower(text), ' ')) AS t
+      SELECT lang, unnest({TOKENS_SQL}) AS t
       FROM documents
     ),
     c AS (
@@ -3937,8 +3937,8 @@ _TTR_BUDGET_LIST = ", ".join(str(b) for b in TTR_BUDGETS)
 # carries (lang, budget, types_at_budget).
 _TTR_CURVE_CTES = f"""tok AS (
       SELECT lang, doc_id,
-             unnest(string_split(lower(text), ' ')) AS t,
-             generate_subscripts(string_split(lower(text), ' '), 1) AS pos
+             unnest({TOKENS_SQL}) AS t,
+             generate_subscripts({TOKENS_SQL}, 1) AS pos
       FROM documents
     ),
     r AS (
@@ -4048,9 +4048,9 @@ def text_ttr_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "text_freq_spectrum",
     tags=("text", "vocabulary", "spectrum", "hapax"),
-    oracle="""
+    oracle=f"""
     WITH tok AS (
-      SELECT lang, unnest(string_split(lower(text), ' ')) AS t
+      SELECT lang, unnest({TOKENS_SQL}) AS t
       FROM documents
     ),
     c AS (

@@ -169,6 +169,18 @@ def storage_bytes(spark: SparkSession) -> tuple[int, int]:
     return mem, disk
 
 
+def codegen_compiles(spark: SparkSession) -> tuple[int, float]:
+    """(count, seconds) of Janino class compilations since the JVM
+    started. The count is ``CodegenMetrics.METRIC_COMPILATION_TIME``'s
+    histogram count; the seconds are ``CodeGenerator.compileTime``, an
+    exact nanosecond sum. Take the difference of two calls to count one
+    pass; a cache hit compiles nothing."""
+    jvm = spark.sparkContext._jvm
+    count = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
+    nanos = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime()
+    return count, nanos / 1e9
+
+
 def release_caches(spark: SparkSession) -> None:
     """Drop every persisted DataFrame fragment (the deliberately
     long-lived `_persisted_corpus` / shingle / band caches included).

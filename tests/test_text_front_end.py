@@ -1,6 +1,7 @@
 """The text front end is defined once: ``functions/text.py`` holds the
-Spark tokenizer, word count and k-gram lead chain, and
-``plans/dedup.py`` generates the DuckDB shingle list from SHINGLE_K.
+Spark tokenizer, word count and k-gram lead chain and the DuckDB
+tokenizer ``TOKENS_SQL``, and ``plans/dedup.py`` generates the DuckDB
+shingle list from SHINGLE_K.
 A guard keeps inline copies from coming back; a parity test pins the
 two engines' shingles to each other."""
 
@@ -15,15 +16,17 @@ _PKG = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
 _SINGLE_DEFINITIONS = {
     re.compile(r"F\.split\(F\.lower\("): "functions/text.py",
     re.compile(r"F\.size\(F\.split\(\"text\", \" \"\)\)"): "functions/text.py",
+    re.compile(r"string_split\(lower\(text\), ' '\)"): "functions/text.py",
     re.compile(r"string_split\(lower\(text\), ' '\)\[i\] \|\|"): None,
 }
 
 
 def test_text_front_end_defined_once():
-    """The inline tokenizer, the inline word count and the DuckDB
-    ``string_split(lower(text), ' ')[i] ||`` shingle comprehension may
-    not appear anywhere in the package but their one definition (the
-    shingle comprehension has none: it is generated from SHINGLE_K)."""
+    """The inline tokenizer, the inline word count, the bare DuckDB
+    tokenizer ``string_split(lower(text), ' ')`` and its
+    ``[i] ||`` shingle comprehension may not appear anywhere in the
+    package but their one definition (the shingle comprehension has
+    none: it is generated from SHINGLE_K)."""
     hits = []
     for root, _, files in os.walk(_PKG):
         for name in sorted(files):
@@ -38,7 +41,8 @@ def test_text_front_end_defined_once():
                             hits.append(f"ray_mapreduce_spark/{rel}:{lineno}: {line.strip()}")
     assert not hits, (
         "inline copy of the text front end; call functions/text.py's tokens() / "
-        "n_words() or use plans/dedup.py's SHINGLE_LIST_SQL / SHINGLE_MIN_SQL:\n"
+        "n_words() or interpolate its TOKENS_SQL or plans/dedup.py's "
+        "SHINGLE_LIST_SQL / SHINGLE_MIN_SQL:\n"
         + "\n".join(hits)
     )
 
