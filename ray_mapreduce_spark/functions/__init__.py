@@ -4,7 +4,7 @@ Kept intentionally small: a kernel that one plan owns lives next to
 that plan (plans/similarity.py has the dot/norm kernels, plans/dedup.py
 the minhash/simhash columns). Helpers that several plan modules call
 land here: ``scale`` (partition spreading, two-pass global rank and
-running sum), ``stats`` (the six-sum moment fold) and ``text`` (the
+running sum), ``stats`` (the six-sum moment fold), ``text`` (the
 text front end — tokenizer, word count, k-gram lead chain and the
-quality closed form).
+quality closed form) and ``pairs`` (the blocked candidate-pair core).
 """

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.pairs import canonical_pairs, cap_blocks, jaccard_verify, saturation_guard
 from ..functions.scale import spread_by as _spread_by
 from ..functions.text import QUALITY_RAW_SQL, TOKENS_SQL, lead_chain, quality_raw_col, tokens
 from ..sources import load_table
@@ -63,6 +64,21 @@ SHINGLE_LIST_SQL = (
     + "\n             ]"
 )
 SHINGLE_MIN_SQL = f"len({TOKENS_SQL}) >= {SHINGLE_K}"
+# The oracles' shingle set, the CTE of every same-lang doc's set, and
+# the pair select over it: each same-lang pair once, with its
+# intersection and set sizes.
+SHINGLE_SET_SQL = f"list_distinct({SHINGLE_LIST_SQL}) AS shingles"
+SHINGLED_CTE_SQL = f"""shingled AS (
+      SELECT doc_id, lang,
+             {SHINGLE_SET_SQL}
+      FROM documents
+      WHERE {SHINGLE_MIN_SQL}
+    )"""
+SHINGLE_PAIRS_SQL = """SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+             len(list_intersect(a.shingles, b.shingles)) AS n_common,
+             len(a.shingles) AS n_a, len(b.shingles) AS n_b
+      FROM shingled a JOIN shingled b
+        ON a.lang = b.lang AND a.doc_id < b.doc_id"""
 
 
 # --------------------------------------------------------------------------
@@ -125,18 +141,9 @@ def dedup_exact_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # two independent Spark plans (inverted index w/ df cap vs AllPairs
 # prefix filtering), ONE ground truth — the oracles cannot drift.
 _NGRAM_JACCARD_ORACLE = f"""
-    WITH shingled AS (
-      SELECT doc_id, lang,
-             list_distinct({SHINGLE_LIST_SQL}) AS shingles
-      FROM documents
-      WHERE {SHINGLE_MIN_SQL}
-    ),
+    WITH {SHINGLED_CTE_SQL},
     pairs AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-             len(list_intersect(a.shingles, b.shingles)) AS n_common,
-             len(a.shingles) AS n_a, len(b.shingles) AS n_b
-      FROM shingled a JOIN shingled b
-        ON a.lang = b.lang AND a.doc_id < b.doc_id
+      {SHINGLE_PAIRS_SQL}
     )
     SELECT doc_a, doc_b,
            round(CAST(n_common AS DOUBLE) / (n_a + n_b - n_common), 4) AS jaccard
@@ -191,23 +198,10 @@ def _ngram_common_counts(d: DataFrame, df_cap: int = DEFAULT_DF_CAP) -> DataFram
     join — ReusedExchange appears in the final adaptive plan). Also
     leaves the data partitioned by (s, lang), exactly the join's
     distribution, so the join adds no exchange of its own."""
-    ex = _with_doc_size(_shingle_hashes(d))
     # df >= 2 pre-filter: singleton shingles cannot appear in any pair.
-    wdf = Window.partitionBy("s", "lang")
-    ex = (
-        ex.withColumn("df", F.count(F.lit(1)).over(wdf))
-        .filter((F.col("df") >= 2) & (F.col("df") <= df_cap))
-        .drop("df")
-    )
-    a = ex.alias("a")
-    b = ex.alias("b")
+    ex = cap_blocks(_with_doc_size(_shingle_hashes(d)), ["s", "lang"], df_cap)
     return (
-        a.join(
-            b,
-            (F.col("a.s") == F.col("b.s"))
-            & (F.col("a.lang") == F.col("b.lang"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
+        canonical_pairs(ex, ["s", "lang"], "doc_id")
         .groupBy(
             F.col("a.doc_id").alias("doc_a"),
             F.col("b.doc_id").alias("doc_b"),
@@ -223,15 +217,7 @@ def ngram_jaccard_pairs(d: DataFrame, df_cap: int = DEFAULT_DF_CAP) -> DataFrame
     text) frame — see ``dedup_ngram_jaccard`` for the rationale.
     Spreads its input (the shingle stage is narrow; see minhash_pairs).
     Plan shape notes live on ``_ngram_common_counts``."""
-    common = _ngram_common_counts(d, df_cap=df_cap)
-    jac = F.col("n_common").cast("double") / (
-        F.col("n_a") + F.col("n_b") - F.col("n_common")
-    )
-    return (
-        common.withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
-        .select("doc_a", "doc_b", F.round("jaccard", 4).alias("jaccard"))
-    )
+    return jaccard_verify(_ngram_common_counts(d, df_cap=df_cap), JACCARD_THRESHOLD)
 
 
 # --------------------------------------------------------------------------
@@ -247,18 +233,9 @@ CONTAINMENT_THRESHOLD = 0.7
     "dedup_containment_pairs",
     tags=("dedup", "ngram", "containment"),
     oracle=f"""
-    WITH shingled AS (
-      SELECT doc_id, lang,
-             list_distinct({SHINGLE_LIST_SQL}) AS shingles
-      FROM documents
-      WHERE {SHINGLE_MIN_SQL}
-    ),
+    WITH {SHINGLED_CTE_SQL},
     pairs AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-             len(list_intersect(a.shingles, b.shingles)) AS n_common,
-             len(a.shingles) AS n_a, len(b.shingles) AS n_b
-      FROM shingled a JOIN shingled b
-        ON a.lang = b.lang AND a.doc_id < b.doc_id
+      {SHINGLE_PAIRS_SQL}
     )
     SELECT doc_a, doc_b,
            round(CAST(n_common AS DOUBLE) / n_a + 1e-9, 4) AS contain_ab,
@@ -432,25 +409,11 @@ def minhash_pairs(docs: DataFrame, bucket_cap: int = DEFAULT_DF_CAP) -> DataFram
     bands = sigs.selectExpr(
         "doc_id", f"posexplode(array({band_exprs})) AS (band_no, band_hash)"
     )
-    # Bucket-size guard: a bucket with k docs emits k² candidate rows;
-    # cap kills degenerate boilerplate buckets (see DEFAULT_DF_CAP).
-    # Window count instead of agg+join: ONE shuffle on the bucket key,
-    # and the self-join below reuses that partitioning.
-    wb = Window.partitionBy("band_no", "band_hash")
-    bands = (
-        bands.withColumn("bsz", F.count(F.lit(1)).over(wb))
-        .filter((F.col("bsz") >= 2) & (F.col("bsz") <= bucket_cap))
-        .drop("bsz")
-    )
-    a = bands.alias("a")
-    b = bands.alias("b")
+    # Bucket-size cap: a bucket with k docs emits k² candidate rows;
+    # it kills degenerate boilerplate buckets (see DEFAULT_DF_CAP).
+    band = ["band_no", "band_hash"]
     candidates = (
-        a.join(
-            b,
-            (F.col("a.band_no") == F.col("b.band_no"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
+        canonical_pairs(cap_blocks(bands, band, bucket_cap), band, "doc_id")
         .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .dropDuplicates(["doc_a", "doc_b"])
         # two consumers below (id semi-join + payload rejoin), again
@@ -484,12 +447,7 @@ def minhash_pairs(docs: DataFrame, bucket_cap: int = DEFAULT_DF_CAP) -> DataFram
         )
     )
     n_common = F.size(F.array_intersect("sh_a", "sh_b"))
-    jac = n_common.cast("double") / (F.size("sh_a") + F.size("sh_b") - n_common)
-    return (
-        pairs.withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
-        .select("doc_a", "doc_b", F.round("jaccard", 4).alias("jaccard"))
-    )
+    return jaccard_verify(pairs, JACCARD_THRESHOLD, [n_common, F.size("sh_a"), F.size("sh_b")])
 
 
 @register(
@@ -586,59 +544,30 @@ def simhash_pairs(
     banded = sh.selectExpr(
         "doc_id", "simhash", f"posexplode(array({band_vals})) AS (band_no, band_val)"
     )
-    # Same bucket-size guard as the LSH path: a 16-bit band value
-    # shared by k docs emits k² candidate rows.
-    wb = Window.partitionBy("band_no", "band_val")
-    banded = banded.withColumn("bsz", F.count(F.lit(1)).over(wb))
-    # Lazy persist: the saturation scalar below and BOTH self-join
-    # sides consume this frame. The broadcast build for the guard
-    # scalar runs before the join stage is submitted
-    # (dependency-ordered, gotcha #9), so the first consumer fills the
-    # cache and the fingerprint lineage executes once.
-    from pyspark import StorageLevel
-
-    banded = banded.persist(StorageLevel.MEMORY_AND_DISK)
-    # Candidate volume implied by the bucket populations: each row in
-    # a bucket of size k contributes (k-1)/2 pairs, so the row-level
-    # sum equals sum-over-buckets of k(k-1)/2 — computed BEFORE the
-    # cap filter so systematic saturation can't hide behind dropped
-    # buckets.
-    sat = banded.agg(
-        (F.sum(F.col("bsz") - 1) / 2).alias("cand_pairs"),
-        (F.count(F.lit(1)) / 4).cast("double").alias("n_docs"),
+    # Same bucket-size cap as the LSH path: a 16-bit band value shared
+    # by k docs emits k² candidate rows. Lazy persist: the saturation
+    # scalar and BOTH self-join sides consume the sized frame. The
+    # broadcast build for the guard scalar runs before the join stage
+    # is submitted (dependency-ordered, gotcha #9), so the first
+    # consumer fills the cache and the fingerprint lineage executes
+    # once.
+    band = ["band_no", "band_val"]
+    banded = saturation_guard(
+        banded,
+        band,
+        max_candidates_per_doc,
+        "simhash 16-bit bands are saturated: ",
+        " distinct-fingerprint candidate pairs for ",
+        f" docs exceeds {max_candidates_per_doc} per doc",
+        " — widen the band prefix / add bands, exact-dedup "
+        "first, or shard the corpus (SCALING.md: ~1e5 docs "
+        "per blocked population saturates 16-bit bands)",
+        rows_per_doc=4,
+        persist=True,
+        cap=bucket_cap,
     )
-    guard = F.when(
-        F.col("cand_pairs") > max_candidates_per_doc * F.col("n_docs"),
-        F.raise_error(
-            F.concat(
-                F.lit("simhash 16-bit bands are saturated: "),
-                F.col("cand_pairs").cast("string"),
-                F.lit(" distinct-fingerprint candidate pairs for "),
-                F.col("n_docs").cast("string"),
-                F.lit(f" docs exceeds {max_candidates_per_doc} per doc"),
-                F.lit(
-                    " — widen the band prefix / add bands, exact-dedup "
-                    "first, or shard the corpus (SCALING.md: ~1e5 docs "
-                    "per blocked population saturates 16-bit bands)"
-                ),
-            )
-        ),
-    ).otherwise(F.lit(True))
-    banded = (
-        banded.crossJoin(F.broadcast(sat))
-        .filter(guard)
-        .filter((F.col("bsz") >= 2) & (F.col("bsz") <= bucket_cap))
-        .drop("bsz", "cand_pairs", "n_docs")
-    )
-    a = banded.alias("a")
-    b = banded.alias("b")
     cand = (
-        a.join(
-            b,
-            (F.col("a.band_no") == F.col("b.band_no"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
+        canonical_pairs(banded, band, "doc_id")
         .select(
             F.col("a.doc_id").alias("doc_a"),
             F.col("b.doc_id").alias("doc_b"),
@@ -924,12 +853,7 @@ def decontaminate_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dedup_clusters_exact",
     tags=("dedup", "clustering", "iterative"),
     oracle=f"""
-    WITH RECURSIVE shingled AS (
-      SELECT doc_id, lang,
-             list_distinct({SHINGLE_LIST_SQL}) AS shingles
-      FROM documents
-      WHERE {SHINGLE_MIN_SQL}
-    ),
+    WITH RECURSIVE {SHINGLED_CTE_SQL},
     pairs AS (
       SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
       FROM shingled a JOIN shingled b
@@ -1051,12 +975,7 @@ def dedup_repeated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _survivors_quality_oracle() -> str:
     return f"""
-    WITH RECURSIVE shingled AS (
-      SELECT doc_id, lang,
-             list_distinct({SHINGLE_LIST_SQL}) AS shingles
-      FROM documents
-      WHERE {SHINGLE_MIN_SQL}
-    ),
+    WITH RECURSIVE {SHINGLED_CTE_SQL},
     prs AS (
       SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
       FROM shingled a JOIN shingled b
@@ -1233,14 +1152,8 @@ def jaccard_prefixfilter_pairs(d: DataFrame) -> DataFrame:
         .select("doc_id", "lang", "s", "n")
         .localCheckpoint(eager=True)
     )
-    a, b = pref.alias("a"), pref.alias("b")
     cand = (
-        a.join(
-            b,
-            (F.col("a.s") == F.col("b.s"))
-            & (F.col("a.lang") == F.col("b.lang"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
+        canonical_pairs(pref, ["s", "lang"], "doc_id")
         .select(
             F.col("a.doc_id").alias("doc_a"),
             F.col("b.doc_id").alias("doc_b"),
@@ -1257,14 +1170,7 @@ def jaccard_prefixfilter_pairs(d: DataFrame) -> DataFrame:
         .groupBy("doc_a", "doc_b", "n_a", "n_b")
         .agg(F.count(F.lit(1)).alias("n_common"))
     )
-    jac = F.col("n_common").cast("double") / (
-        F.col("n_a") + F.col("n_b") - F.col("n_common")
-    )
-    return (
-        common.withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
-        .select("doc_a", "doc_b", F.round("jaccard", 4).alias("jaccard"))
-    )
+    return jaccard_verify(common, JACCARD_THRESHOLD)
 
 
 # --------------------------------------------------------------------------
@@ -1304,13 +1210,8 @@ def dedup_cross_source_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     fp = F.md5(F.concat_ws(" ", F.slice(tokens(), 1, FP_HEAD_TOKENS)))
     h = d.select("source", fp.alias("fp")).distinct()
-    a, b = h.alias("a"), h.alias("b")
     return (
-        a.join(
-            b,
-            (F.col("a.fp") == F.col("b.fp"))
-            & (F.col("a.source") < F.col("b.source")),
-        )
+        canonical_pairs(h, ["fp"], "source")
         .groupBy(
             F.col("a.source").alias("source_a"), F.col("b.source").alias("source_b")
         )
@@ -1453,12 +1354,7 @@ def dedup_exact_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dedup_rate_by_source",
     tags=("dedup", "ngram", "source", "diagnostics"),
     oracle=f"""
-    WITH shingled AS (
-      SELECT doc_id, lang,
-             list_distinct({SHINGLE_LIST_SQL}) AS shingles
-      FROM documents
-      WHERE {SHINGLE_MIN_SQL}
-    ),
+    WITH {SHINGLED_CTE_SQL},
     pairs AS (
       SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
       FROM shingled a JOIN shingled b
@@ -1521,7 +1417,7 @@ def dedup_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH shingled AS (
       SELECT doc_id,
-             list_distinct({SHINGLE_LIST_SQL}) AS shingles
+             {SHINGLE_SET_SQL}
       FROM documents
       WHERE {SHINGLE_MIN_SQL}
     ),
@@ -1601,18 +1497,9 @@ def _est_sig_exprs_duckdb() -> str:
     "dedup_minhash_estimate_pairs",
     tags=("dedup", "minhash", "estimator", "jaccard"),
     oracle=f"""
-    WITH shingled AS (
-      SELECT doc_id, lang,
-             list_distinct({SHINGLE_LIST_SQL}) AS shingles
-      FROM documents
-      WHERE {SHINGLE_MIN_SQL}
-    ),
+    WITH {SHINGLED_CTE_SQL},
     pairs AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-             len(list_intersect(a.shingles, b.shingles)) AS n_common,
-             len(a.shingles) AS n_a, len(b.shingles) AS n_b
-      FROM shingled a JOIN shingled b
-        ON a.lang = b.lang AND a.doc_id < b.doc_id
+      {SHINGLE_PAIRS_SQL}
       WHERE CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE)
             / (len(a.shingles) + len(b.shingles)
                - len(list_intersect(a.shingles, b.shingles)))
@@ -1665,15 +1552,7 @@ def dedup_minhash_estimate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # doc_id-keyed lead window. One doc-keyed exchange now serves both.
     d = _spread_by(load_table(spark, sf_dir, "documents"), "doc_id")
     common = _ngram_common_counts(d)
-    jac = F.col("n_common").cast("double") / (
-        F.col("n_a") + F.col("n_b") - F.col("n_common")
-    )
-    pairs = (
-        common.withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= EST_MIN_JACCARD)
-        .select("doc_a", "doc_b", F.round("jaccard", 4).alias("jaccard"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    pairs = jaccard_verify(common, EST_MIN_JACCARD).persist(StorageLevel.MEMORY_AND_DISK)
     # No distinct: right side of a left-semi join is
     # duplicate-insensitive (see minhash_pairs) — skip the exchange.
     cand_ids = pairs.select(
@@ -1833,50 +1712,24 @@ def edit_distance_pairs(d: DataFrame) -> DataFrame:
     (> EDIT_MAX_CANDIDATES_PER_DOC implied candidate pairs per doc)
     — computed BEFORE the self-join so a flood can never hide in a
     silently-huge join."""
-    d = d.withColumn("blk", F.substring("t", 1, EDIT_BLOCK_CHARS))
-    # Block sizes via a window over the join key itself: the exchange
-    # this inserts is hashpartitioning(blk) — the join's own
-    # distribution, so the identical self-join sides still reuse one
-    # exchange and the data lands pre-partitioned for the join.
-    d = d.withColumn(
-        "bsz", F.count(F.lit(1)).over(Window.partitionBy("blk"))
+    d = saturation_guard(
+        d.withColumn("blk", F.substring("t", 1, EDIT_BLOCK_CHARS)),
+        ["blk"],
+        EDIT_MAX_CANDIDATES_PER_DOC,
+        "edit-distance prefix blocks are saturated: ",
+        " candidate pairs for ",
+        f" docs exceeds {EDIT_MAX_CANDIDATES_PER_DOC} per doc"
+        " — a template-headed corpus shares one "
+        f"{EDIT_BLOCK_CHARS}-char prefix; lengthen the block"
+        " prefix, strip boilerplate heads first, or use the"
+        " shingle-based paths (minhash/ngram jaccard)",
     )
-    sat = d.agg(
-        (F.sum(F.col("bsz") - 1) / 2).alias("cand_pairs"),
-        F.count(F.lit(1)).cast("double").alias("n_docs"),
-    )
-    guard = F.when(
-        F.col("cand_pairs") > EDIT_MAX_CANDIDATES_PER_DOC * F.col("n_docs"),
-        F.raise_error(
-            F.concat(
-                F.lit("edit-distance prefix blocks are saturated: "),
-                F.col("cand_pairs").cast("string"),
-                F.lit(" candidate pairs for "),
-                F.col("n_docs").cast("string"),
-                F.lit(
-                    f" docs exceeds {EDIT_MAX_CANDIDATES_PER_DOC} per doc"
-                    " — a template-headed corpus shares one "
-                    f"{EDIT_BLOCK_CHARS}-char prefix; lengthen the block"
-                    " prefix, strip boilerplate heads first, or use the"
-                    " shingle-based paths (minhash/ngram jaccard)"
-                ),
-            )
-        ),
-    ).otherwise(F.lit(True))
-    d = d.crossJoin(F.broadcast(sat)).filter(guard).drop(
-        "cand_pairs", "n_docs", "bsz"
-    )
-    a, b = d.alias("a"), d.alias("b")
     head = lambda side: F.substring(F.col(f"{side}.t"), 1, EDIT_HEAD_CHARS)  # noqa: E731
     m = F.greatest(
         F.least(F.octet_length("a.t"), F.lit(EDIT_HEAD_CHARS)),
         F.least(F.octet_length("b.t"), F.lit(EDIT_HEAD_CHARS)),
     )
-    p = a.join(
-        b,
-        (F.col("a.blk") == F.col("b.blk"))
-        & (F.col("a.doc_id") < F.col("b.doc_id")),
-    ).select(
+    p = canonical_pairs(d, ["blk"], "doc_id").select(
         F.col("a.doc_id").alias("doc_a"),
         F.col("b.doc_id").alias("doc_b"),
         F.levenshtein(head("a"), head("b")).cast("bigint").alias("dist"),
@@ -2030,12 +1883,7 @@ def dedup_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dedup_threshold_curve",
     tags=("dedup", "ngram", "jaccard", "diagnostics"),
     oracle=f"""
-    WITH shingled AS (
-      SELECT doc_id, lang,
-             list_distinct({SHINGLE_LIST_SQL}) AS shingles
-      FROM documents
-      WHERE {SHINGLE_MIN_SQL}
-    ),
+    WITH {SHINGLED_CTE_SQL},
     pairs AS (
       SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
              len(list_intersect(a.shingles, b.shingles)) AS n_common,
@@ -2247,12 +2095,7 @@ def dedup_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dedup_incremental_neardup",
     tags=("dedup", "incremental", "ngram", "jaccard"),
     oracle=f"""
-    WITH shingled AS (
-      SELECT doc_id, lang,
-             list_distinct({SHINGLE_LIST_SQL}) AS shingles
-      FROM documents
-      WHERE {SHINGLE_MIN_SQL}
-    ),
+    WITH {SHINGLED_CTE_SQL},
     prs AS (
       SELECT b.doc_id AS batch_doc, c.doc_id AS corpus_doc,
              round(CAST(len(list_intersect(b.shingles, c.shingles)) AS DOUBLE)

@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.pairs import canonical_pairs
 from ..sources import load_table
 from .registry import register
 from .similarity import _cos, _with_vec
@@ -70,16 +71,9 @@ def _pair_edges(v: DataFrame, threshold: float = EDGE_COS_THRESHOLD) -> DataFram
     """Canonical (src < dst) near-dup edges from a _with_vec frame.
     Self-join of one identical subtree — AQE runtime exchange-reuse
     computes the projection once (gotcha #14, self-join case)."""
-    a = v.alias("a")
-    b = v.alias("b")
-    cos = _cos("a.vec", "b.vec")
     return (
-        a.join(
-            b,
-            (F.col("a.label") == F.col("b.label"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .withColumn("cos", cos)
+        canonical_pairs(v, ["label"], "vec_id")
+        .withColumn("cos", _cos("a.vec", "b.vec"))
         .filter(F.col("cos") >= threshold)
         .select(F.col("a.vec_id").alias("src"), F.col("b.vec_id").alias("dst"))
     )

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.pairs import canonical_pairs, cap_blocks
 from ..sources import load_table
 from .registry import register
 
@@ -2544,8 +2545,6 @@ def orders_user_similarity_jaccard(spark: SparkSession, sf_dir: str) -> DataFram
     subtrees (runtime ReusedExchange, the ngram rule); fan-out is
     capped at CF_DF_CAP^2 per part; the top-N rides
     TakeOrderedAndProject."""
-    from pyspark.sql.window import Window
-
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     bp = (
@@ -2553,22 +2552,10 @@ def orders_user_similarity_jaccard(spark: SparkSession, sf_dir: str) -> DataFram
         .select(F.col("o_custkey").alias("ck"), F.col("l_partkey").alias("pk"))
         .distinct()
     )
-    wdf = Window.partitionBy("pk")
-    b = (
-        bp.withColumn("c", F.count(F.lit(1)).over(wdf))
-        .filter((F.col("c") >= 2) & (F.col("c") <= CF_DF_CAP))
-        .drop("c")
-    )
-    wsz = Window.partitionBy("ck")
-    bn = b.withColumn("n", F.count(F.lit(1)).over(wsz))
-    a2 = bn.alias("a")
-    b2 = bn.alias("b")
+    b = cap_blocks(bp, ["pk"], CF_DF_CAP)
+    bn = b.withColumn("n", F.count(F.lit(1)).over(Window.partitionBy("ck")))
     common = (
-        a2.join(
-            b2,
-            (F.col("a.pk") == F.col("b.pk"))
-            & (F.col("a.ck") < F.col("b.ck")),
-        )
+        canonical_pairs(bn, ["pk"], "ck")
         .groupBy(
             F.col("a.ck").alias("cust_a"),
             F.col("b.ck").alias("cust_b"),

@@ -33,11 +33,13 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.pairs import canonical_pairs, cap_blocks
 from ..functions.scale import spread as _spread
 from ..functions.scale import spread_by as _spread_by
 from ..functions.text import TOKENS_SQL, tokens
 from ..sources import load_table
-from .dedup import JACCARD_THRESHOLD, SHINGLE_LIST_SQL, SHINGLE_MIN_SQL
+from .dedup import DEFAULT_DF_CAP, JACCARD_THRESHOLD, SHINGLE_MIN_SQL, SHINGLE_PAIRS_SQL
+from .dedup import SHINGLE_SET_SQL, SHINGLED_CTE_SQL
 from .registry import register
 from .text_analysis import BM25_B as _RRF_B
 from .text_analysis import BM25_K1 as _RRF_K1
@@ -173,12 +175,9 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     within-label cosine distribution (max ~0.51), so the result is
     non-empty at every sf; a real near-dup pipeline would use ~0.95+."""
     v = _with_vec(load_table(spark, sf_dir, "embeddings"))
-    a = v.alias("a")
-    b = v.alias("b")
-    cos = _cos("a.vec", "b.vec")
     return (
-        a.join(b, (F.col("a.label") == F.col("b.label")) & (F.col("a.vec_id") < F.col("b.vec_id")))
-        .withColumn("cos", cos)
+        canonical_pairs(v, ["label"], "vec_id")
+        .withColumn("cos", _cos("a.vec", "b.vec"))
         .filter(F.col("cos") >= 0.35)
         .select(
             F.col("a.vec_id").alias("id_a"),
@@ -299,22 +298,10 @@ def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = _with_vec(load_table(spark, sf_dir, "embeddings"))
     banded = _banded_vectors(v)
     # bucket-size cap (same skew guard as the minhash band join)
-    wb = Window.partitionBy("table_no", "bucket")
-    keys = (
-        banded.select("vec_id", "table_no", "bucket")
-        .withColumn("bsz", F.count(F.lit(1)).over(wb))
-        .filter((F.col("bsz") >= 2) & (F.col("bsz") <= 1000))
-        .drop("bsz")
-    )
-    a = keys.alias("a")
-    b = keys.alias("b")
+    bucket = ["table_no", "bucket"]
+    keys = cap_blocks(banded.select("vec_id", *bucket), bucket, DEFAULT_DF_CAP)
     cand = (
-        a.join(
-            b,
-            (F.col("a.table_no") == F.col("b.table_no"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
+        canonical_pairs(keys, bucket, "vec_id")
         .select(F.col("a.vec_id").alias("id_a"), F.col("b.vec_id").alias("id_b"))
         .dropDuplicates(["id_a", "id_b"])
     )
@@ -739,16 +726,9 @@ def dedup_semantic_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     double both engines build identically."""
     v = _persisted_corpus(spark, sf_dir)
     assigned = _lloyd_assign(v, K_MEANS_K, K_MEANS_ITERS).localCheckpoint(eager=True)
-    a = assigned.alias("a")
-    b = assigned.alias("b")
-    cos = _cos("a.vec", "b.vec")
     return (
-        a.join(
-            b,
-            (F.col("a.cluster") == F.col("b.cluster"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .withColumn("cos", cos)
+        canonical_pairs(assigned, ["cluster"], "vec_id")
+        .withColumn("cos", _cos("a.vec", "b.vec"))
         .filter(F.col("cos") >= SEMANTIC_COS_THRESHOLD)
         .select(
             F.col("a.vec_id").alias("id_a"),
@@ -773,18 +753,9 @@ def dedup_semantic_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     # from the shared shingle SQL and JACCARD_THRESHOLD constants so
     # the two oracles can't silently diverge.
     oracle=f"""
-    WITH shingled AS (
-      SELECT doc_id, lang,
-             list_distinct({SHINGLE_LIST_SQL}) AS shingles
-      FROM documents
-      WHERE {SHINGLE_MIN_SQL}
-    ),
+    WITH {SHINGLED_CTE_SQL},
     tpairs AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-             len(list_intersect(a.shingles, b.shingles)) AS n_common,
-             len(a.shingles) AS n_a, len(b.shingles) AS n_b
-      FROM shingled a JOIN shingled b
-        ON a.lang = b.lang AND a.doc_id < b.doc_id
+      {SHINGLE_PAIRS_SQL}
     ),
     jp AS (
       SELECT doc_a, doc_b,
@@ -1348,14 +1319,8 @@ def similarity_tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame
         .filter(F.col("tail") >= tau2)
         .select("doc_id", "lang", "t")
     )
-    a, b = pref.alias("a"), u.alias("b")
     cand = (
-        a.join(
-            b,
-            (F.col("a.lang") == F.col("b.lang"))
-            & (F.col("a.t") == F.col("b.t"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
+        canonical_pairs(pref, ["lang", "t"], "doc_id", u)
         .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .dropDuplicates(["doc_a", "doc_b"])
     )
@@ -2214,16 +2179,12 @@ def embedding_diversity_gram(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     shingled AS MATERIALIZED (
       SELECT doc_id, lang,
-             list_distinct({SHINGLE_LIST_SQL}) AS shingles
+             {SHINGLE_SET_SQL}
       FROM d1
       WHERE {SHINGLE_MIN_SQL}
     ),
     jp AS MATERIALIZED (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-             len(list_intersect(a.shingles, b.shingles)) AS n_common,
-             len(a.shingles) AS n_a, len(b.shingles) AS n_b
-      FROM shingled a JOIN shingled b
-        ON a.lang = b.lang AND a.doc_id < b.doc_id
+      {SHINGLE_PAIRS_SQL}
     ),
     rm2 AS MATERIALIZED (
       SELECT DISTINCT doc_b AS doc_id FROM jp
@@ -2293,16 +2254,9 @@ def dedup_funnel_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     v2 = _with_vec(load_table(spark, sf_dir, "embeddings")).join(
         s2.select(F.col("doc_id").alias("vec_id")), "vec_id", "left_semi"
     )
-    a = v2.alias("a")
-    b = v2.alias("b")
-    cos = _cos("a.vec", "b.vec")
     rm3 = (
-        a.join(
-            b,
-            (F.col("a.label") == F.col("b.label"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .filter(cos >= 0.35)
+        canonical_pairs(v2, ["label"], "vec_id")
+        .filter(_cos("a.vec", "b.vec") >= 0.35)
         .select(F.col("b.vec_id").alias("doc_id"))
         .distinct()
     )

@@ -378,6 +378,36 @@ def test_simhash_saturation_guard_passes_diverse_corpus(spark):
     assert isinstance(rows, list)
 
 
+def test_candidate_pair_core_contract(spark):
+    """functions/pairs.py on ten hand-built rows, cap 3: block x holds
+    exactly the cap (kept), y one row (dropped: nothing to pair), z
+    cap + 1 (dropped), and w repeats the x pair (1, 2), which comes out
+    once per shared block — deduplication is the caller's job. The
+    blocks imply C(3,2) + 0 + C(4,2) + C(2,2) = 10 candidate pairs for
+    10 rows, so the guard passes at a limit of 1.0 per doc and raises
+    just below it."""
+    from collections import Counter
+
+    from ray_mapreduce_spark.functions.pairs import canonical_pairs, cap_blocks, saturation_guard
+
+    rows = [(1, "x"), (2, "x"), (3, "x"), (4, "y"), (5, "z"), (6, "z"), (7, "z"), (8, "z"),
+            (1, "w"), (2, "w")]
+    df = spark.createDataFrame(rows, "id: long, k: string")
+    capped = cap_blocks(df, ["k"], 3)
+    assert sorted(capped.collect()) == sorted(r for r in df.collect() if r["k"] in ("x", "w"))
+    pairs = canonical_pairs(capped, ["k"], "id").select("a.id", "b.id").collect()
+    assert Counter(tuple(r) for r in pairs) == {(1, 2): 2, (1, 3): 1, (2, 3): 1}
+
+    message = ["blocks are saturated: ", " candidate pairs for ", " docs"]
+    guarded = saturation_guard(df, ["k"], 1.0, *message)
+    assert guarded.columns == df.columns
+    assert sorted(guarded.collect()) == sorted(df.collect())
+    capped_guarded = saturation_guard(df, ["k"], 1.0, *message, cap=3)
+    assert sorted(capped_guarded.collect()) == sorted(capped.collect())
+    with pytest.raises(Exception, match="saturated: 10.0 candidate pairs for 10.0 docs"):
+        saturation_guard(df, ["k"], 0.99, *message).collect()
+
+
 def test_ivf_kmeans_topk_agreement_and_recall(spark, sf_dir):
     """Trained-cell IVF: cosines must agree with brute force on
     overlapping pairs, every query answered, and recall@5 vs brute

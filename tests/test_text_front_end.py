@@ -1,7 +1,9 @@
-"""The text front end is defined once: ``functions/text.py`` holds the
-Spark tokenizer, word count and k-gram lead chain and the DuckDB
-tokenizer ``TOKENS_SQL``, and ``plans/dedup.py`` generates the DuckDB
-shingle list from SHINGLE_K.
+"""The text front end and the candidate-pair core are defined once:
+``functions/text.py`` holds the Spark tokenizer, word count and k-gram
+lead chain and the DuckDB tokenizer ``TOKENS_SQL``; ``plans/dedup.py``
+generates the DuckDB shingle list from SHINGLE_K and spells the
+oracles' shingle set once; ``functions/pairs.py`` holds the canonical
+``a.id < b.id`` self-join every near-dup pair generator calls.
 A guard keeps inline copies from coming back; a parity test pins the
 two engines' shingles to each other."""
 
@@ -18,15 +20,19 @@ _SINGLE_DEFINITIONS = {
     re.compile(r"F\.size\(F\.split\(\"text\", \" \"\)\)"): "functions/text.py",
     re.compile(r"string_split\(lower\(text\), ' '\)"): "functions/text.py",
     re.compile(r"string_split\(lower\(text\), ' '\)\[i\] \|\|"): None,
+    re.compile(r"F\.col\(\"a\.\w+\"\) < F\.col\(\"b\.\w+\"\)"): "functions/pairs.py",
+    re.compile(r"list_distinct\(\{SHINGLE_LIST_SQL\}\) AS shingles"): "plans/dedup.py",
 }
 
 
 def test_text_front_end_defined_once():
-    """The inline tokenizer, the inline word count, the bare DuckDB
-    tokenizer ``string_split(lower(text), ' ')`` and its
-    ``[i] ||`` shingle comprehension may not appear anywhere in the
-    package but their one definition (the shingle comprehension has
-    none: it is generated from SHINGLE_K)."""
+    """None of these may appear anywhere in the package but their one
+    definition: the inline tokenizer, the inline word count, the bare
+    DuckDB tokenizer ``string_split(lower(text), ' ')`` and its
+    ``[i] ||`` shingle comprehension (which has no home: it is
+    generated from SHINGLE_K), the canonical-order predicate
+    ``F.col("a.<id>") < F.col("b.<id>")`` and the oracles' shingle set
+    ``list_distinct({SHINGLE_LIST_SQL}) AS shingles``."""
     hits = []
     for root, _, files in os.walk(_PKG):
         for name in sorted(files):
@@ -38,12 +44,15 @@ def test_text_front_end_defined_once():
                 for lineno, line in enumerate(f, 1):
                     for pattern, home in _SINGLE_DEFINITIONS.items():
                         if pattern.search(line) and rel != home:
-                            hits.append(f"ray_mapreduce_spark/{rel}:{lineno}: {line.strip()}")
+                            hits.append(
+                                f"ray_mapreduce_spark/{rel}:{lineno}: {line.strip()}"
+                                f"  (defined in {home or 'generated code'})"
+                            )
     assert not hits, (
-        "inline copy of the text front end; call functions/text.py's tokens() / "
-        "n_words() or interpolate its TOKENS_SQL or plans/dedup.py's "
-        "SHINGLE_LIST_SQL / SHINGLE_MIN_SQL:\n"
-        + "\n".join(hits)
+        "inline copy of a shared definition; call functions/text.py's tokens() / "
+        "n_words() or functions/pairs.py's canonical_pairs(), or interpolate "
+        "TOKENS_SQL or plans/dedup.py's SHINGLE_LIST_SQL / SHINGLE_SET_SQL / "
+        "SHINGLED_CTE_SQL:\n" + "\n".join(hits)
     )
 
 

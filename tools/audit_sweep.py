@@ -4,6 +4,7 @@
 Usage:
     python tools/audit_sweep.py oracle [SF_DIR] [--changed-only]
     python tools/audit_sweep.py determinism [SF_DIR] [--changed-only]
+    python tools/audit_sweep.py recall [SF_DIR]
     python tools/audit_sweep.py plans [SF_DIR] --out FILE [--against FILE]
     python tools/audit_sweep.py shapes [SF_DIR]
 
@@ -13,6 +14,9 @@ Usage:
 - ``determinism``: run EVERY registered query twice with different
   shuffle-partition settings and require identical sorted results
   (catches min_by-style ties, unordered limits, partition-id leaks).
+- ``recall``: run the extension quality gates
+  (``tests/test_extensions.py``: recall and exactness contracts of the
+  rows-only LSH/sketch queries) at SF_DIR instead of the test default.
 
 - ``plans``: for EVERY registered query record three sha256 digests
   — the oracle text, the analyzed logical plan with expression ids
