@@ -6,5 +6,7 @@ the minhash/simhash columns). Helpers that several plan modules call
 land here: ``scale`` (partition spreading, two-pass global rank and
 running sum), ``stats`` (the six-sum moment fold), ``text`` (the
 text front end — tokenizer, word count, k-gram lead chain and the
-quality closed form) and ``pairs`` (the blocked candidate-pair core).
+quality closed form), ``pairs`` (the blocked candidate-pair core) and
+``grain`` (the UTC day, integer cents and Knuth hash split, each with
+its DuckDB twin for the oracles).
 """

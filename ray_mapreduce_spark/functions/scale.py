@@ -50,7 +50,7 @@ def _two_pass_base(df: DataFrame, sort_cols: list[Column | str]):
     draw different boundaries and the _pid->offset mapping would
     silently corrupt the global order (gotcha #9: concurrent sibling
     branches miss a lazy cache). Materialize exactly once via eager
-    localCheckpoint. Template: plans/windows.py::window_distribution.
+    localCheckpoint.
 
     Exchange count: the pattern costs TWO full-frame exchanges, not
     one — the range exchange here plus a hashpartitioning(_pid[,

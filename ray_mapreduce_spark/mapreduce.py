@@ -50,6 +50,7 @@ from typing import Any
 from pyspark.sql import SparkSession
 
 from .session import get_spark
+from .sources.text import read_manifest
 
 MapFcn = Callable[[Any], Iterable[tuple[Any, Any]]]
 ReduceFcn = Callable[[Any, list], Any]
@@ -263,15 +264,13 @@ def MapReduceWithMultipleFiles(
     Spark reads the listed paths executor-side (data-local); only the
     tiny index transits the driver — same as the reference, minus the
     filename round-robin (Spark schedules splits with locality).
-    Paths are passed as a LIST to ``spark.read.text`` (never joined
-    with a delimiter), so paths containing commas or glob
+    ``sources.text.read_manifest`` parses the index and passes the
+    paths as a LIST, so paths containing commas or glob
     metacharacters read correctly, matching the reference's
     arbitrary-path handling."""
     spark = spark or get_spark()
-    with open(index_filename) as fh:
-        paths = [line.strip() for line in fh if line.strip()]
     min_parts = max(int(num_mappers), 1)
-    rdd = spark.read.text(paths).rdd.map(lambda row: row[0])
+    rdd = read_manifest(spark, index_filename).rdd.map(lambda row: row[0])
     if rdd.getNumPartitions() < min_parts:
         rdd = rdd.repartition(min_parts)  # output order is unspecified (invariant 4)
     return _run(rdd, map_fcn, reduce_fcn, num_reducers, strict_keys, combiner)

@@ -9,7 +9,7 @@ from __future__ import annotations
 
 import importlib
 
-from .registry import QuerySpec, all_queries, get, register  # noqa: F401
+from .registry import QuerySpec, all_queries, register  # noqa: F401
 
 _QUERY_MODULES = (
     "relational",

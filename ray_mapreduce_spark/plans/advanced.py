@@ -9,10 +9,11 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.grain import CENTS_SQL, DAY_SQL, KNUTH, MOD_2_32, cents, knuth_bucket, utc_day
 from ..functions.scale import ntile_from_rank, two_pass_cumsum, two_pass_rank
 from ..functions.stats import moment_sums
 from ..sources import load_table
@@ -854,8 +855,6 @@ def events_key_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the N surviving rows only. Ratios are single divisions of
     identical (long, double) operands with the +1e-9 half-boundary
     guard (counts/totals are rationals)."""
-    from pyspark.sql.window import Window as W
-
     e = load_table(spark, sf_dir, "events")
     # per-key counts feed two differently-aggregated siblings (the
     # scalar and the ranking) — the no-reuse shape; the frame is tiny
@@ -874,7 +873,7 @@ def events_key_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.desc("cnt"), "user_id")
         .limit(SKEW_TOP_N)
     )
-    rk = F.row_number().over(W.orderBy(F.desc("cnt"), "user_id"))
+    rk = F.row_number().over(Window.orderBy(F.desc("cnt"), "user_id"))
     return top.select(
         rk.alias("rk"),
         "user_id",
@@ -1488,7 +1487,7 @@ WAU_WINDOW_DAYS = 7
     oracle=f"""
     WITH du AS (
       SELECT DISTINCT
-             epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day,
+             {DAY_SQL} AS day,
              user_id
       FROM events
     ),
@@ -1514,7 +1513,7 @@ def events_wau_rolling(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
     du = (
         e.select(
-            F.expr("unix_micros(ts) div 86400000000").alias("day"), "user_id"
+            utc_day().alias("day"), "user_id"
         )
         .distinct()
     )
@@ -1752,10 +1751,10 @@ def events_user_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "events_cusum_changepoint",
     tags=("events", "changepoint", "cusum", "window"),
-    oracle="""
+    oracle=f"""
     WITH daily AS (
       SELECT event_type,
-             CAST(epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS BIGINT) AS day,
+             CAST({DAY_SQL} AS BIGINT) AS day,
              round(avg(value) + 1e-9, 6) AS m
       FROM events GROUP BY 1, 2
     ),
@@ -1797,7 +1796,7 @@ def events_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = (
         e.select(
             "event_type",
-            F.expr("unix_micros(ts) div 86400000000").alias("day"),
+            utc_day().alias("day"),
             "value",
         )
         .groupBy("event_type", "day")
@@ -2131,7 +2130,7 @@ BOT_MIN_EVENTS = 50
     oracle=f"""
     WITH g AS (
       SELECT user_id, event_type,
-             epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day,
+             {DAY_SQL} AS day,
              (epoch_us(CAST(ts AS TIMESTAMP))
               - lag(epoch_us(CAST(ts AS TIMESTAMP))) OVER (
                   PARTITION BY user_id ORDER BY ts, event_id
@@ -2424,8 +2423,6 @@ def orders_open_backlog_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 # supplier_reliability_wilson: the counts are exact integers and the
 # z formula is the IDENTICAL IEEE op tree on both engines, so z is
 # bit-identical pre-round.
-AB_KNUTH = 2654435761
-AB_MOD = 4294967296  # 2^32
 # "converted" = a heavy purchaser (>= this many purchase events):
 # every user makes SOME purchase at this event density, so the naive
 # any-purchase conversion saturates at rate 1.0 and the pooled-z
@@ -2439,7 +2436,7 @@ AB_CONV_MIN_PURCHASES = 14
     oracle=f"""
     WITH u AS (
       SELECT user_id,
-             CAST((user_id * {AB_KNUTH}) % {AB_MOD} % 2 AS BIGINT) AS variant,
+             CAST((user_id * {KNUTH}) % {MOD_2_32} % 2 AS BIGINT) AS variant,
              CASE WHEN sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
                        >= {AB_CONV_MIN_PURCHASES} THEN 1 ELSE 0 END
                AS converted
@@ -2496,7 +2493,7 @@ def events_ab_test_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("converted")
         )
         .select(
-            ((F.col("user_id") * F.lit(AB_KNUTH)) % F.lit(AB_MOD) % 2)
+            knuth_bucket("user_id", 2)
             .cast("bigint")
             .alias("variant"),
             "converted",
@@ -2548,7 +2545,7 @@ FORECAST_LAG_DAYS = 7
     oracle=f"""
     WITH daily AS (
       SELECT event_type,
-             CAST(epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS BIGINT) AS day,
+             CAST({DAY_SQL} AS BIGINT) AS day,
              CAST(count(*) AS BIGINT) AS n
       FROM events GROUP BY 1, 2
     ),
@@ -2589,7 +2586,7 @@ def events_seasonal_forecast_smape(spark: SparkSession, sf_dir: str) -> DataFram
     daily = (
         e.select(
             "event_type",
-            F.expr("unix_micros(ts) div 86400000000").alias("day"),
+            utc_day().alias("day"),
         )
         .groupBy("event_type", "day")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
@@ -2654,11 +2651,11 @@ def events_seasonal_forecast_smape(spark: SparkSession, sf_dir: str) -> DataFram
 @register(
     "events_attribution_linear",
     tags=("events", "attribution", "window", "aggregate"),
-    oracle="""
+    oracle=f"""
     WITH e AS (
       SELECT user_id, event_type, event_id,
              epoch_us(CAST(ts AS TIMESTAMP)) AS us,
-             CAST(round(value * 100) AS BIGINT) * 10000 AS vu_u
+             {CENTS_SQL} * 10000 AS vu_u
       FROM events WHERE event_type IN ('view', 'click', 'purchase')
     ),
     g AS (
@@ -2715,7 +2712,7 @@ def events_attribution_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "event_id",
         F.unix_micros("ts").alias("us"),
-        (F.round(F.col("value") * 100).cast("bigint") * 10000).alias("vu_u"),
+        (cents() * 10000).alias("vu_u"),
     )
     w = (
         Window.partitionBy("user_id")
@@ -2778,9 +2775,9 @@ def _ewma_oracle() -> str:
     return f"""
     WITH daily AS (
       SELECT event_type,
-             CAST(epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS BIGINT)
+             CAST({DAY_SQL} AS BIGINT)
                AS day,
-             CAST(round((1000.0 * sum(CAST(round(value * 100) AS BIGINT)))
+             CAST(round((1000.0 * sum({CENTS_SQL}))
                         / (100 * count(*)) + 1e-3) AS BIGINT) AS mu_m
       FROM events GROUP BY 1, 2
     ),
@@ -2837,8 +2834,8 @@ def events_ewma_volatility(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = (
         e.select(
             "event_type",
-            F.expr("unix_micros(ts) div 86400000000").alias("day"),
-            F.round(F.col("value") * 100).cast("bigint").alias("cents"),
+            utc_day().alias("day"),
+            cents().alias("cents"),
         )
         .groupBy("event_type", "day")
         .agg(
@@ -3102,8 +3099,8 @@ PSI_BUCKET_CENTS = 1_000  # value buckets 10.00 wide, in exact cents
     oracle=f"""
     WITH e AS (
       SELECT event_type,
-             epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day,
-             CAST(round(value * 100) AS BIGINT) // {PSI_BUCKET_CENTS} AS bucket
+             {DAY_SQL} AS day,
+             {CENTS_SQL} // {PSI_BUCKET_CENTS} AS bucket
       FROM events
     ),
     mid AS (
@@ -3152,9 +3149,9 @@ def events_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan-speed with map-side combine."""
     e = load_table(spark, sf_dir, "events").select(
         "event_type",
-        F.expr("unix_micros(ts) div 86400000000").alias("day"),
+        utc_day().alias("day"),
         F.expr(
-            f"CAST(round(value * 100) AS BIGINT) div {PSI_BUCKET_CENTS}"
+            f"{CENTS_SQL} div {PSI_BUCKET_CENTS}"
         ).alias("bucket"),
     )
     mid = e.agg(
@@ -3472,10 +3469,10 @@ def supplier_brand_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "events_dau_wau_stickiness",
     tags=("events", "engagement", "aggregate"),
-    oracle="""
+    oracle=f"""
     WITH e AS (
       SELECT user_id,
-             epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day
+             {DAY_SQL} AS day
       FROM events
     ),
     dau AS (
@@ -3507,7 +3504,7 @@ def events_dau_wau_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the sketches row) without changing the shape."""
     e = load_table(spark, sf_dir, "events").select(
         "user_id",
-        F.expr("unix_micros(ts) div 86400000000").alias("day"),
+        utc_day().alias("day"),
     ).withColumn("wk", F.expr("day div 7"))
     dau = e.groupBy("wk", "day").agg(
         F.countDistinct("user_id").alias("dau")
@@ -3707,11 +3704,11 @@ def events_gap_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "events_attribution_ushape",
     tags=("events", "attribution", "window", "aggregate"),
-    oracle="""
+    oracle=f"""
     WITH e AS (
       SELECT user_id, event_type, event_id,
              epoch_us(CAST(ts AS TIMESTAMP)) AS us,
-             CAST(round(value * 100) AS BIGINT) * 10000 AS vu_u
+             {CENTS_SQL} * 10000 AS vu_u
       FROM events WHERE event_type IN ('view', 'click', 'purchase')
     ),
     g AS (
@@ -3772,7 +3769,7 @@ def events_attribution_ushape(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "event_id",
         F.unix_micros("ts").alias("us"),
-        (F.round(F.col("value") * 100).cast("bigint") * 10000).alias("vu_u"),
+        (cents() * 10000).alias("vu_u"),
     )
     w = (
         Window.partitionBy("user_id")
@@ -4103,10 +4100,10 @@ def orders_abc_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "events_overdispersion",
     tags=("events", "dispersion", "aggregate"),
-    oracle="""
+    oracle=f"""
     WITH d AS (
       SELECT event_type,
-             epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day,
+             {DAY_SQL} AS day,
              count(*) AS n
       FROM events GROUP BY 1, 2
     ),
@@ -4134,7 +4131,7 @@ def events_overdispersion(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial-agg shuffle, then a |types|-row moment fold; nothing
     downstream of the first exchange scales with the fact."""
     e = load_table(spark, sf_dir, "events").select(
-        "event_type", F.expr("unix_micros(ts) div 86400000000").alias("day")
+        "event_type", utc_day().alias("day")
     )
     d = e.groupBy("event_type", "day").agg(F.count(F.lit(1)).alias("n"))
     m = d.groupBy("event_type").agg(
@@ -4245,10 +4242,10 @@ def events_user_entropy_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "events_daily_peaks",
     tags=("events", "peaks", "window", "timeseries"),
-    oracle="""
+    oracle=f"""
     WITH d AS (
       SELECT event_type,
-             epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day,
+             {DAY_SQL} AS day,
              CAST(count(*) AS BIGINT) AS n
       FROM events GROUP BY 1, 2
     ),
@@ -4279,7 +4276,7 @@ def events_daily_peaks(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape: one (type, day) partial-agg shuffle; the lag/lead window
     runs on the bounded day frame sharing one sort."""
     e = load_table(spark, sf_dir, "events").select(
-        "event_type", F.expr("unix_micros(ts) div 86400000000").alias("day")
+        "event_type", utc_day().alias("day")
     )
     d = e.groupBy("event_type", "day").agg(
         F.count(F.lit(1)).cast("bigint").alias("n")
@@ -4326,11 +4323,11 @@ def events_daily_peaks(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "events_cuped_readout",
     tags=("events", "abtest", "cuped", "aggregate"),
-    oracle="""
+    oracle=f"""
     WITH e AS (
       SELECT event_type, user_id,
-             epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day,
-             CAST(round(value * 100) AS BIGINT) AS vc
+             {DAY_SQL} AS day,
+             {CENTS_SQL} AS vc
       FROM events
     ),
     mid AS (SELECT (min(day) + max(day) + 1) // 2 AS mid FROM e),
@@ -4377,8 +4374,8 @@ def events_cuped_readout(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events").select(
         "event_type",
         "user_id",
-        F.expr("unix_micros(ts) div 86400000000").alias("day"),
-        F.expr("CAST(round(value * 100) AS BIGINT)").alias("vc"),
+        utc_day().alias("day"),
+        cents().alias("vc"),
     )
     mid = e.agg(F.expr("(min(day) + max(day) + 1) div 2").alias("mid"))
     u = (
@@ -4496,9 +4493,9 @@ def events_tukey_fences(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "events_pettitt_changepoint",
     tags=("events", "changepoint", "rank", "self-join"),
-    oracle="""
+    oracle=f"""
     WITH d AS (
-      SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day,
+      SELECT {DAY_SQL} AS day,
              CAST(count(*) AS BIGINT) AS cnt
       FROM events GROUP BY 1
     ),
@@ -4532,7 +4529,7 @@ def events_pettitt_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     decade) — broadcast both sides, never the fact."""
     e = load_table(spark, sf_dir, "events")
     d = (
-        e.groupBy(F.expr("unix_micros(ts) div 86400000000").alias("day"))
+        e.groupBy(utc_day().alias("day"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
         .localCheckpoint(eager=True)
     )
@@ -4683,12 +4680,12 @@ def privacy_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "events_did_readout",
     tags=("events", "abtest", "did", "aggregate"),
-    oracle="""
+    oracle=f"""
     WITH e AS (
       SELECT event_type,
-             (user_id * 2654435761) % 4294967296 % 2 AS treat,
-             epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day,
-             CAST(round(value * 100) AS BIGINT) AS vc
+             (user_id * {KNUTH}) % {MOD_2_32} % 2 AS treat,
+             {DAY_SQL} AS day,
+             {CENTS_SQL} AS vc
       FROM events
     ),
     mid AS (SELECT (min(day) + max(day) + 1) // 2 AS mid FROM e),
@@ -4743,11 +4740,11 @@ def events_did_readout(spark: SparkSession, sf_dir: str) -> DataFrame:
     2x2 algebra runs on |types| rows."""
     e = load_table(spark, sf_dir, "events").select(
         "event_type",
-        ((F.col("user_id") * F.lit(2654435761)) % F.lit(4294967296) % 2).alias(
+        knuth_bucket("user_id", 2).alias(
             "treat"
         ),
-        F.expr("unix_micros(ts) div 86400000000").alias("day"),
-        F.expr("CAST(round(value * 100) AS BIGINT)").alias("vc"),
+        utc_day().alias("day"),
+        cents().alias("vc"),
     )
     mid = e.agg(F.expr("(min(day) + max(day) + 1) div 2").alias("mid"))
     cells = (
@@ -4816,10 +4813,10 @@ def events_did_readout(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "events_ks_two_sample",
     tags=("events", "ks-test", "distribution", "window"),
-    oracle="""
+    oracle=f"""
     WITH e AS (
       SELECT event_type, value,
-             epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day
+             {DAY_SQL} AS day
       FROM events
     ),
     mid AS (SELECT (min(day) + max(day) + 1) // 2 AS mid FROM e),
@@ -4868,7 +4865,7 @@ def events_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events").select(
         "event_type",
         "value",
-        F.expr("unix_micros(ts) div 86400000000").alias("day"),
+        utc_day().alias("day"),
     )
     mid = e.agg(F.expr("(min(day) + max(day) + 1) div 2").alias("mid"))
     v = (
@@ -5006,7 +5003,7 @@ QTE_DECILES = [round(0.1 * k, 1) for k in range(1, 10)]
     oracle=f"""
     WITH e AS (
       SELECT event_type, value,
-             (user_id * 2654435761) % 4294967296 % 2 AS treat
+             (user_id * {KNUTH}) % {MOD_2_32} % 2 AS treat
       FROM events
     ),
     g AS (
@@ -5040,7 +5037,7 @@ def events_quantile_treatment_effect(spark: SparkSession, sf_dir: str) -> DataFr
     e = load_table(spark, sf_dir, "events").select(
         "event_type",
         "value",
-        ((F.col("user_id") * F.lit(2654435761)) % F.lit(4294967296) % 2).alias(
+        knuth_bucket("user_id", 2).alias(
             "treat"
         ),
     )
@@ -5093,9 +5090,9 @@ def events_quantile_treatment_effect(spark: SparkSession, sf_dir: str) -> DataFr
 @register(
     "events_weekday_hour_heatmap",
     tags=("events", "calendar", "aggregate"),
-    oracle="""
+    oracle=f"""
     WITH e AS (
-      SELECT (epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 + 3) % 7 AS dow,
+      SELECT ({DAY_SQL} + 3) % 7 AS dow,
              (epoch_us(CAST(ts AS TIMESTAMP)) // 3600000000) % 24 AS hour
       FROM events
     ),
@@ -5118,7 +5115,7 @@ def events_weekday_hour_heatmap(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation of the fact to <=168 rows; the share windows run on
     that bounded grid (the grouped-frame-global-window rule)."""
     e = load_table(spark, sf_dir, "events").select(
-        F.expr("(unix_micros(ts) div 86400000000 + 3) % 7").alias("dow"),
+        ((utc_day() + 3) % 7).alias("dow"),
         F.expr("(unix_micros(ts) div 3600000000) % 24").alias("hour"),
     )
     g = e.groupBy("dow", "hour").agg(
@@ -5149,10 +5146,10 @@ def events_weekday_hour_heatmap(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "events_user_growth_curve",
     tags=("events", "growth", "window", "aggregate"),
-    oracle="""
+    oracle=f"""
     WITH e AS (
       SELECT user_id,
-             epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day
+             {DAY_SQL} AS day
       FROM events
     ),
     act AS (
@@ -5185,7 +5182,7 @@ def events_user_growth_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     the join + running window run — the cumulative never touches the
     fact."""
     e = load_table(spark, sf_dir, "events").select(
-        "user_id", F.expr("unix_micros(ts) div 86400000000").alias("day")
+        "user_id", utc_day().alias("day")
     )
     act = e.groupBy("day").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_events"),
@@ -5451,10 +5448,10 @@ def events_slo_burn_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "events_lifecycle_stages",
     tags=("events", "growth", "lifecycle", "window"),
-    oracle="""
+    oracle=f"""
     WITH ud AS (
       SELECT DISTINCT user_id,
-             epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day
+             {DAY_SQL} AS day
       FROM events
     ),
     c AS (
@@ -5499,7 +5496,7 @@ def events_lifecycle_stages(spark: SparkSession, sf_dir: str) -> DataFrame:
     fire; verified on the executed plan, gotcha #9/#14); final aggs
     land on calendar frames."""
     e = load_table(spark, sf_dir, "events").select(
-        "user_id", F.expr("unix_micros(ts) div 86400000000").alias("day")
+        "user_id", utc_day().alias("day")
     )
     # The distinct (user, day) frame feeds THREE consumers (the stage
     # window and both churn anti-join sides) whose keys differ (the
@@ -5706,9 +5703,9 @@ def events_interarrival_histogram(spark: SparkSession, sf_dir: str) -> DataFrame
 @register(
     "events_seasonal_decompose",
     tags=("events", "timeseries", "seasonality", "window"),
-    oracle="""
+    oracle=f"""
     WITH d AS (
-      SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day,
+      SELECT {DAY_SQL} AS day,
              CAST(count(*) AS BIGINT) AS n
       FROM events GROUP BY 1
     ),
@@ -5748,7 +5745,7 @@ def events_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     window never grows with the corpus); two tiny aggs after."""
     e = load_table(spark, sf_dir, "events")
     d = e.groupBy(
-        F.expr("unix_micros(ts) div 86400000000").alias("day")
+        utc_day().alias("day")
     ).agg(F.count(F.lit(1)).cast("bigint").alias("n"))
     wspec = Window.orderBy("day").rowsBetween(-3, 3)
     w = d.select(
@@ -5798,9 +5795,9 @@ POWER_MDE_REL = 0.05
     WITH m AS (
       SELECT event_type,
              CAST(count(*) AS BIGINT) AS n_events,
-             CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS s1,
-             CAST(sum(CAST(round(value * 100) AS BIGINT)
-                      * CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS s2
+             CAST(sum({CENTS_SQL}) AS BIGINT) AS s1,
+             CAST(sum({CENTS_SQL}
+                      * {CENTS_SQL}) AS BIGINT) AS s2
       FROM events GROUP BY 1
     )
     SELECT event_type, n_events,
@@ -5847,11 +5844,11 @@ def events_power_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     guard. Scale shape: ONE partial-aggregated fact collapse to
     |types| rows; all design arithmetic runs on that tiny frame."""
     e = load_table(spark, sf_dir, "events").select("event_type", "value")
-    cents = F.round(F.col("value") * 100).cast("bigint")
+    c = cents()
     m = e.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_events"),
-        F.sum(cents).cast("bigint").alias("s1"),
-        F.sum(cents * cents).cast("bigint").alias("s2"),
+        F.sum(c).cast("bigint").alias("s1"),
+        F.sum(c * c).cast("bigint").alias("s2"),
     )
     mean = F.col("s1").cast("double") / F.col("n_events") / 100
     var = (
@@ -6085,8 +6082,8 @@ def events_markov_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH r AS (
       SELECT event_type,
-             CAST(user_id * {AB_KNUTH} % {AB_MOD} % 2 AS BIGINT) AS variant,
-             CAST(round(value * 100) AS BIGINT) AS cents
+             CAST(user_id * {KNUTH} % {MOD_2_32} % 2 AS BIGINT) AS variant,
+             {CENTS_SQL} AS cents
       FROM events
     ),
     h AS (
@@ -6144,10 +6141,10 @@ def events_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
     (SURVEY.md §2d events/analytics family)."""
     e = load_table(spark, sf_dir, "events").select(
         "event_type",
-        ((F.col("user_id") * F.lit(AB_KNUTH)) % F.lit(AB_MOD) % 2)
+        knuth_bucket("user_id", 2)
         .cast("bigint")
         .alias("variant"),
-        F.round(F.col("value") * 100).cast("bigint").alias("cents"),
+        cents().alias("cents"),
     )
     h = e.groupBy("event_type", "cents").agg(
         F.count(F.lit(1)).cast("bigint").alias("cnt"),
@@ -6239,7 +6236,7 @@ DP_GAUSS_CONST = 5.298802526850474  # sqrt(2*ln(1.25/1e-6)), python math
     WITH m AS (
       SELECT event_type,
              CAST(count(*) AS BIGINT) AS n_events,
-             CAST(max(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
+             CAST(max({CENTS_SQL}) AS BIGINT)
                AS max_cents
       FROM events GROUP BY 1
     )
@@ -6272,7 +6269,7 @@ def privacy_dp_noise_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     data, no windows)."""
     m = load_table(spark, sf_dir, "events").groupBy("event_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_events"),
-        F.max(F.round(F.col("value") * 100).cast("bigint")).alias(
+        F.max(cents()).alias(
             "max_cents"
         ),
     )
@@ -6482,9 +6479,9 @@ def events_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("events", "stats", "experiment", "stratified", "window"),
     oracle=f"""
     WITH r AS (
-      SELECT CAST(epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000
+      SELECT CAST({DAY_SQL}
                   AS BIGINT) AS day,
-             CAST(user_id * {AB_KNUTH} % {AB_MOD} % 2 AS BIGINT) AS arm,
+             CAST(user_id * {KNUTH} % {MOD_2_32} % 2 AS BIGINT) AS arm,
              CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS succ
       FROM events
     ),
@@ -6528,8 +6525,8 @@ def events_cmh_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     cmh_chi2, rate_arm1, rate_arm0): day-stratified CMH chi-square of
     purchase rate between the hash arms (see header)."""
     e = load_table(spark, sf_dir, "events").select(
-        F.expr("unix_micros(ts) div 86400000000").alias("day"),
-        ((F.col("user_id") * F.lit(AB_KNUTH)) % F.lit(AB_MOD) % 2)
+        utc_day().alias("day"),
+        knuth_bucket("user_id", 2)
         .cast("bigint")
         .alias("arm"),
         F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias(
@@ -6596,6 +6593,52 @@ def events_cmh_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
+# The dyadic-EWMA prologue shared by events_ewma_residuals and
+# events_double_ewma_holt: the fact collapsed to daily cent volume per
+# event type, the per-type day index i, and the guarded power-of-two
+# weight (see the events_ewma_residuals header).
+_EWMA_STEPS_SQL = f"""daily AS (
+      SELECT event_type,
+             CAST({DAY_SQL}
+                  AS BIGINT) AS day,
+             CAST(sum({CENTS_SQL}) AS BIGINT) AS x
+      FROM events GROUP BY 1, 2
+    ),
+    idx AS (
+      SELECT event_type, day, x,
+             CAST(row_number() OVER (
+               PARTITION BY event_type ORDER BY day) AS BIGINT) AS i
+      FROM daily
+    )"""
+# 2^i as an exact double: integer shiftleft, never libm pow.
+_EWMA_DIV_SQL = "CAST(shiftleft(CAST(1 AS BIGINT), CAST(i AS INT)) AS DOUBLE)"
+
+
+def _ewma_steps(spark: SparkSession, sf_dir: str, query: str) -> tuple[DataFrame, Column]:
+    """The ``(event_type, day, x, i)`` frame (x = the day's cent sum,
+    i = the 1-based day index per type) and the step weight Column:
+    2 at i = 1, else 2^(i-1), raising past the 62-step double-span
+    bound with an error that names ``query``."""
+    e = load_table(spark, sf_dir, "events").select(
+        "event_type", utc_day().alias("day"), cents().alias("cents")
+    )
+    daily = e.groupBy("event_type", "day").agg(
+        F.sum("cents").cast("bigint").alias("x")
+    )
+    w_day = Window.partitionBy("event_type").orderBy("day")
+    idx = daily.withColumn("i", F.row_number().over(w_day).cast("bigint"))
+    shift_w = F.expr(
+        "CASE WHEN i > 62 THEN raise_error("
+        f"'{query}: series longer than 62 steps — "
+        "chunk by re-basing (SCALING.md)') "
+        "WHEN i = 1 THEN CAST(shiftleft(CAST(1 AS BIGINT), 1) AS DOUBLE) "
+        "ELSE CAST(shiftleft(CAST(1 AS BIGINT), CAST(i - 1 AS INT)) "
+        "AS DOUBLE) END"
+    )
+    return idx, shift_w
+
+
+# --------------------------------------------------------------------------
 # TOLERANCE-FREE exponential smoothing: per event type, the EWMA of
 # the daily cent volume with alpha = 1/2, plus each day's residual
 # against yesterday's smoothed level — the anomaly baseline a metrics
@@ -6625,20 +6668,8 @@ def events_cmh_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "events_ewma_residuals",
     tags=("events", "timeseries", "ewma", "anomaly", "window"),
-    oracle="""
-    WITH daily AS (
-      SELECT event_type,
-             CAST(epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000
-                  AS BIGINT) AS day,
-             CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS x
-      FROM events GROUP BY 1, 2
-    ),
-    idx AS (
-      SELECT event_type, day, x,
-             CAST(row_number() OVER (
-               PARTITION BY event_type ORDER BY day) AS BIGINT) AS i
-      FROM daily
-    ),
+    oracle=f"""
+    WITH {_EWMA_STEPS_SQL},
     w AS (
       SELECT event_type, day, x, i,
              sum(CAST(x AS DOUBLE)
@@ -6666,46 +6697,17 @@ def events_ewma_residuals(spark: SparkSession, sf_dir: str) -> DataFrame:
     alpha=1/2 EWMA of daily volume and the residual vs yesterday's
     level, bit-exact cross-engine via power-of-two weights (see
     header)."""
-    e = load_table(spark, sf_dir, "events").select(
-        "event_type",
-        F.expr("unix_micros(ts) div 86400000000").alias("day"),
-        F.round(F.col("value") * 100).cast("bigint").alias("cents"),
-    )
-    daily = e.groupBy("event_type", "day").agg(
-        F.sum("cents").cast("bigint").alias("x")
-    )
-    w_day = Window.partitionBy("event_type").orderBy("day")
-    idx = daily.withColumn(
-        "i", F.row_number().over(w_day).cast("bigint")
-    )
-    # Guarded exact power-of-two weight: integer shiftleft (never
-    # libm pow), raising loudly past the 62-step double-span bound.
-    shift_w = (
-        "CASE WHEN i > 62 THEN raise_error("
-        "'events_ewma_residuals: series longer than 62 steps — "
-        "chunk by re-basing (SCALING.md)') "
-        "WHEN i = 1 THEN CAST(shiftleft(CAST(1 AS BIGINT), 1) AS DOUBLE) "
-        "ELSE CAST(shiftleft(CAST(1 AS BIGINT), CAST(i - 1 AS INT)) "
-        "AS DOUBLE) END"
-    )
+    idx, shift_w = _ewma_steps(spark, sf_dir, "events_ewma_residuals")
     w = idx.withColumn(
         "wt",
-        F.sum(F.col("x").cast("double") * F.expr(shift_w)).over(
+        F.sum(F.col("x").cast("double") * shift_w).over(
             Window.partitionBy("event_type").orderBy("i")
         ),
     )
     s = w.select(
-        "event_type",
-        "day",
-        "x",
-        (
-            F.col("wt")
-            / F.expr(
-                "CAST(shiftleft(CAST(1 AS BIGINT), CAST(i AS INT)) "
-                "AS DOUBLE)"
-            )
-        ).alias("ewma"),
+        "event_type", "day", "x", (F.col("wt") / F.expr(_EWMA_DIV_SQL)).alias("ewma")
     )
+    w_day = Window.partitionBy("event_type").orderBy("day")
     return s.select(
         "event_type",
         "day",
@@ -6720,6 +6722,88 @@ def events_ewma_residuals(spark: SparkSession, sf_dir: str) -> DataFrame:
             + F.lit(0.0)
         ).alias("residual_value"),
     )
+
+
+# --------------------------------------------------------------------------
+# The two-arm moment kernel shared by events_winsorized_ab and
+# events_benjamini_hochberg: the fact collapsed once to the
+# (type, cents, arm) value histogram over the Knuth-hash A/B arms,
+# then exact per-arm integer moments of a value column over it
+# (decimal(38,0) in Spark, HUGEINT in DuckDB) and one Welch z tree.
+_ARM_HIST_SQL = f"""h AS (
+      SELECT event_type,
+             {CENTS_SQL} AS cents,
+             CAST(user_id * {KNUTH} % {MOD_2_32} % 2 AS BIGINT) AS arm,
+             CAST(count(*) AS BIGINT) AS cnt
+      FROM events GROUP BY 1, 2, 3
+    )"""
+
+
+def _arm_sums_sql(v: str) -> str:
+    """The oracles' per-arm count and moment sums of value column ``v``
+    over the histogram: n0, n1, s10, s11, s20, s21."""
+    return f"""CAST(sum(CASE WHEN arm = 0 THEN cnt ELSE 0 END) AS BIGINT)
+               AS n0,
+             CAST(sum(CASE WHEN arm = 1 THEN cnt ELSE 0 END) AS BIGINT)
+               AS n1,
+             sum(CASE WHEN arm = 0 THEN CAST(cnt AS HUGEINT) * {v}
+                      ELSE 0 END) AS s10,
+             sum(CASE WHEN arm = 1 THEN CAST(cnt AS HUGEINT) * {v}
+                      ELSE 0 END) AS s11,
+             sum(CASE WHEN arm = 0 THEN CAST(cnt AS HUGEINT) * {v} * {v}
+                      ELSE 0 END) AS s20,
+             sum(CASE WHEN arm = 1 THEN CAST(cnt AS HUGEINT) * {v} * {v}
+                      ELSE 0 END) AS s21"""
+
+
+def _arm_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``(event_type, cents, arm, cnt)``: the Spark twin of
+    ``_ARM_HIST_SQL``."""
+    e = load_table(spark, sf_dir, "events").select(
+        "event_type",
+        cents().alias("cents"),
+        knuth_bucket("user_id", 2).cast("bigint").alias("arm"),
+    )
+    return e.groupBy("event_type", "cents", "arm").agg(
+        F.count(F.lit(1)).cast("bigint").alias("cnt")
+    )
+
+
+def _arm_sums(v: str) -> list[Column]:
+    """The Spark twin of ``_arm_sums_sql(v)``: aggregate Columns n0,
+    n1, s10, s11, s20, s21 (s_pa = sum of cnt * v^p over arm a)."""
+    dec = "decimal(38,0)"
+    out = [
+        F.sum(F.when(F.col("arm") == a, F.col("cnt")).otherwise(0))
+        .cast("bigint")
+        .alias(f"n{a}")
+        for a in (0, 1)
+    ]
+    for p in (1, 2):
+        for a in (0, 1):
+            term = F.col("cnt").cast(dec) * F.col(v)
+            if p == 2:
+                term = term * F.col(v)
+            out.append(
+                F.sum(
+                    F.when(F.col("arm") == a, term).otherwise(F.lit(0).cast(dec))
+                ).alias(f"s{p}{a}")
+            )
+    return out
+
+
+def _arm_welch() -> tuple[Column, Column, Column]:
+    """Per-arm means m0, m1 and the Welch z of m1 - m0 over the
+    ``_arm_sums`` columns; nullif guards an empty arm and a
+    zero-variance type."""
+    n0 = F.nullif(F.col("n0"), F.lit(0))
+    n1 = F.nullif(F.col("n1"), F.lit(0))
+    m0 = F.col("s10").cast("double") / n0
+    m1 = F.col("s11").cast("double") / n1
+    v0 = F.greatest(F.col("s20").cast("double") / n0 - m0 * m0, F.lit(0.0))
+    v1 = F.greatest(F.col("s21").cast("double") / n1 - m1 * m1, F.lit(0.0))
+    z = (m1 - m0) / F.nullif(F.sqrt(v1 / n1 + v0 / n0), F.lit(0.0))
+    return m0, m1, z
 
 
 # --------------------------------------------------------------------------
@@ -6748,13 +6832,7 @@ def events_ewma_residuals(spark: SparkSession, sf_dir: str) -> DataFrame:
     "events_winsorized_ab",
     tags=("events", "stats", "experiment", "robust", "aggregate"),
     oracle=f"""
-    WITH h AS (
-      SELECT event_type,
-             CAST(round(value * 100) AS BIGINT) AS cents,
-             CAST(user_id * {AB_KNUTH} % {AB_MOD} % 2 AS BIGINT) AS arm,
-             CAST(count(*) AS BIGINT) AS cnt
-      FROM events GROUP BY 1, 2, 3
-    ),
+    WITH {_ARM_HIST_SQL},
     k AS (
       SELECT event_type, cents, arm, cnt,
              CAST(sum(cnt) OVER (
@@ -6781,18 +6859,7 @@ def events_ewma_residuals(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT event_type,
              CAST(min(lo) AS BIGINT) AS lo_cents,
              CAST(min(hi) AS BIGINT) AS hi_cents,
-             CAST(sum(CASE WHEN arm = 0 THEN cnt ELSE 0 END) AS BIGINT)
-               AS n0,
-             CAST(sum(CASE WHEN arm = 1 THEN cnt ELSE 0 END) AS BIGINT)
-               AS n1,
-             sum(CASE WHEN arm = 0 THEN CAST(cnt AS HUGEINT) * wv
-                      ELSE 0 END) AS s10,
-             sum(CASE WHEN arm = 1 THEN CAST(cnt AS HUGEINT) * wv
-                      ELSE 0 END) AS s11,
-             sum(CASE WHEN arm = 0 THEN CAST(cnt AS HUGEINT) * wv * wv
-                      ELSE 0 END) AS s20,
-             sum(CASE WHEN arm = 1 THEN CAST(cnt AS HUGEINT) * wv * wv
-                      ELSE 0 END) AS s21
+             {_arm_sums_sql('wv')}
       FROM w GROUP BY 1
     )
     SELECT event_type, lo_cents, hi_cents, n0, n1,
@@ -6819,16 +6886,7 @@ def events_winsorized_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(event_type, lo_cents, hi_cents, n0, n1, wmean0, wmean1, z):
     pooled-percentile winsorized two-sample z between the hash arms
     (see header)."""
-    e = load_table(spark, sf_dir, "events").select(
-        "event_type",
-        F.round(F.col("value") * 100).cast("bigint").alias("cents"),
-        ((F.col("user_id") * F.lit(AB_KNUTH)) % F.lit(AB_MOD) % 2)
-        .cast("bigint")
-        .alias("arm"),
-    )
-    h = e.groupBy("event_type", "cents", "arm").agg(
-        F.count(F.lit(1)).cast("bigint").alias("cnt")
-    )
+    h = _arm_histogram(spark, sf_dir)
     w_cum = (
         Window.partitionBy("event_type")
         .orderBy("cents")
@@ -6865,51 +6923,14 @@ def events_winsorized_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("hi"),
     )
     wv = F.greatest(F.col("lo"), F.least(F.col("hi"), F.col("cents")))
-    dec = "decimal(38,0)"
     a = b.select("event_type", "arm", "cnt", "lo", "hi", wv.alias("wv")).groupBy(
         "event_type"
     ).agg(
         F.min("lo").cast("bigint").alias("lo_cents"),
         F.min("hi").cast("bigint").alias("hi_cents"),
-        F.sum(F.when(F.col("arm") == 0, F.col("cnt")).otherwise(0))
-        .cast("bigint")
-        .alias("n0"),
-        F.sum(F.when(F.col("arm") == 1, F.col("cnt")).otherwise(0))
-        .cast("bigint")
-        .alias("n1"),
-        F.sum(
-            F.when(
-                F.col("arm") == 0, F.col("cnt").cast(dec) * F.col("wv")
-            ).otherwise(F.lit(0).cast(dec))
-        ).alias("s10"),
-        F.sum(
-            F.when(
-                F.col("arm") == 1, F.col("cnt").cast(dec) * F.col("wv")
-            ).otherwise(F.lit(0).cast(dec))
-        ).alias("s11"),
-        F.sum(
-            F.when(
-                F.col("arm") == 0,
-                F.col("cnt").cast(dec) * F.col("wv") * F.col("wv"),
-            ).otherwise(F.lit(0).cast(dec))
-        ).alias("s20"),
-        F.sum(
-            F.when(
-                F.col("arm") == 1,
-                F.col("cnt").cast(dec) * F.col("wv") * F.col("wv"),
-            ).otherwise(F.lit(0).cast(dec))
-        ).alias("s21"),
+        *_arm_sums("wv"),
     )
-    n0 = F.nullif(F.col("n0"), F.lit(0))
-    n1 = F.nullif(F.col("n1"), F.lit(0))
-    m0 = F.col("s10").cast("double") / n0
-    m1 = F.col("s11").cast("double") / n1
-    v0 = F.greatest(
-        F.col("s20").cast("double") / n0 - m0 * m0, F.lit(0.0)
-    )
-    v1 = F.greatest(
-        F.col("s21").cast("double") / n1 - m1 * m1, F.lit(0.0)
-    )
+    m0, m1, z = _arm_welch()
     return a.select(
         "event_type",
         "lo_cents",
@@ -6918,15 +6939,7 @@ def events_winsorized_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n1",
         F.round(m0 / 100 + F.lit(1e-9), 6).alias("wmean0"),
         F.round(m1 / 100 + F.lit(1e-9), 6).alias("wmean1"),
-        (
-            F.round(
-                (m1 - m0)
-                / F.nullif(F.sqrt(v1 / n1 + v0 / n0), F.lit(0.0))
-                + F.lit(1e-9),
-                4,
-            )
-            + F.lit(0.0)
-        ).alias("z"),
+        (F.round(z + F.lit(1e-9), 4) + F.lit(0.0)).alias("z"),
     )
 
 
@@ -6946,9 +6959,7 @@ def events_winsorized_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
 # all BIT-identical cross-engine before the display round. Same
 # 62-step in-plan guard (|s1| <= max|x| by convexity, so the second
 # pass needs no wider bound); same chunked re-basing continuation for
-# unbounded horizons (SCALING.md). The daily collapse is duplicated
-# from events_ewma_residuals rather than shared so this addition
-# cannot drift a driver-green plan.
+# unbounded horizons (SCALING.md).
 #
 # Scale shape: ONE partial-aggregated fact collapse to the bounded
 # (type, day) frame; the index and both smoothing cum-sums share one
@@ -6956,20 +6967,8 @@ def events_winsorized_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "events_double_ewma_holt",
     tags=("events", "timeseries", "ewma", "holt", "trend", "window"),
-    oracle="""
-    WITH daily AS (
-      SELECT event_type,
-             CAST(epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000
-                  AS BIGINT) AS day,
-             CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS x
-      FROM events GROUP BY 1, 2
-    ),
-    idx AS (
-      SELECT event_type, day, x,
-             CAST(row_number() OVER (
-               PARTITION BY event_type ORDER BY day) AS BIGINT) AS i
-      FROM daily
-    ),
+    oracle=f"""
+    WITH {_EWMA_STEPS_SQL},
     w1 AS (
       -- the i > 62 guard mirrors the Spark plan's raise_error
       -- (ADVICE r13): past 62 steps the 1::BIGINT << i shift would
@@ -7020,39 +7019,19 @@ def events_double_ewma_holt(spark: SparkSession, sf_dir: str) -> DataFrame:
     forecast_value): Brown double exponential smoothing of daily cent
     volume with alpha = 1/2 — level 2*s1-s2, trend s1-s2, one-step
     forecast l+b, bit-exact cross-engine (see header)."""
-    e = load_table(spark, sf_dir, "events").select(
-        "event_type",
-        F.expr("unix_micros(ts) div 86400000000").alias("day"),
-        F.round(F.col("value") * 100).cast("bigint").alias("cents"),
-    )
-    daily = e.groupBy("event_type", "day").agg(
-        F.sum("cents").cast("bigint").alias("x")
-    )
-    w_day = Window.partitionBy("event_type").orderBy("day")
-    idx = daily.withColumn("i", F.row_number().over(w_day).cast("bigint"))
-    shift_w = (
-        "CASE WHEN i > 62 THEN raise_error("
-        "'events_double_ewma_holt: series longer than 62 steps — "
-        "chunk by re-basing (SCALING.md)') "
-        "WHEN i = 1 THEN CAST(shiftleft(CAST(1 AS BIGINT), 1) AS DOUBLE) "
-        "ELSE CAST(shiftleft(CAST(1 AS BIGINT), CAST(i - 1 AS INT)) "
-        "AS DOUBLE) END"
-    )
-    div_i = "CAST(shiftleft(CAST(1 AS BIGINT), CAST(i AS INT)) AS DOUBLE)"
+    idx, shift_w = _ewma_steps(spark, sf_dir, "events_double_ewma_holt")
     w_i = Window.partitionBy("event_type").orderBy("i")
     w1 = idx.withColumn(
-        "wt", F.sum(F.col("x").cast("double") * F.expr(shift_w)).over(w_i)
+        "wt", F.sum(F.col("x").cast("double") * shift_w).over(w_i)
     )
     s1f = w1.select(
         "event_type", "day", "x", "i",
-        (F.col("wt") / F.expr(div_i)).alias("s1"),
+        (F.col("wt") / F.expr(_EWMA_DIV_SQL)).alias("s1"),
     )
-    w2 = s1f.withColumn(
-        "vt", F.sum(F.col("s1") * F.expr(shift_w)).over(w_i)
-    )
+    w2 = s1f.withColumn("vt", F.sum(F.col("s1") * shift_w).over(w_i))
     s2f = w2.select(
         "event_type", "day", "x", "s1",
-        (F.col("vt") / F.expr(div_i)).alias("s2"),
+        (F.col("vt") / F.expr(_EWMA_DIV_SQL)).alias("s2"),
     )
     return s2f.select(
         "event_type",
@@ -7126,27 +7105,10 @@ def _bh_p_sql(az: str) -> str:
     "events_benjamini_hochberg",
     tags=("events", "stats", "experiment", "fdr", "window"),
     oracle=f"""
-    WITH h AS (
-      SELECT event_type,
-             CAST(round(value * 100) AS BIGINT) AS cents,
-             CAST(user_id * {AB_KNUTH} % {AB_MOD} % 2 AS BIGINT) AS arm,
-             CAST(count(*) AS BIGINT) AS cnt
-      FROM events GROUP BY 1, 2, 3
-    ),
+    WITH {_ARM_HIST_SQL},
     a AS (
       SELECT event_type,
-             CAST(sum(CASE WHEN arm = 0 THEN cnt ELSE 0 END) AS BIGINT)
-               AS n0,
-             CAST(sum(CASE WHEN arm = 1 THEN cnt ELSE 0 END) AS BIGINT)
-               AS n1,
-             sum(CASE WHEN arm = 0 THEN CAST(cnt AS HUGEINT) * cents
-                      ELSE 0 END) AS s10,
-             sum(CASE WHEN arm = 1 THEN CAST(cnt AS HUGEINT) * cents
-                      ELSE 0 END) AS s11,
-             sum(CASE WHEN arm = 0 THEN CAST(cnt AS HUGEINT) * cents * cents
-                      ELSE 0 END) AS s20,
-             sum(CASE WHEN arm = 1 THEN CAST(cnt AS HUGEINT) * cents * cents
-                      ELSE 0 END) AS s21
+             {_arm_sums_sql('cents')}
       FROM h GROUP BY 1
     ),
     z AS (
@@ -7200,61 +7162,10 @@ def events_benjamini_hochberg(spark: SparkSession, sf_dir: str) -> DataFrame:
     rejected): per-type Welch z between the hash arms with the
     Benjamini-Hochberg FDR step-up across the type family (see
     header). On A/A hash-split halves nothing should reject."""
-    e = load_table(spark, sf_dir, "events").select(
-        "event_type",
-        F.round(F.col("value") * 100).cast("bigint").alias("cents"),
-        ((F.col("user_id") * F.lit(AB_KNUTH)) % F.lit(AB_MOD) % 2)
-        .cast("bigint")
-        .alias("arm"),
-    )
-    h = e.groupBy("event_type", "cents", "arm").agg(
-        F.count(F.lit(1)).cast("bigint").alias("cnt")
-    )
-    dec = "decimal(38,0)"
-    a = h.groupBy("event_type").agg(
-        F.sum(F.when(F.col("arm") == 0, F.col("cnt")).otherwise(0))
-        .cast("bigint")
-        .alias("n0"),
-        F.sum(F.when(F.col("arm") == 1, F.col("cnt")).otherwise(0))
-        .cast("bigint")
-        .alias("n1"),
-        F.sum(
-            F.when(
-                F.col("arm") == 0, F.col("cnt").cast(dec) * F.col("cents")
-            ).otherwise(F.lit(0).cast(dec))
-        ).alias("s10"),
-        F.sum(
-            F.when(
-                F.col("arm") == 1, F.col("cnt").cast(dec) * F.col("cents")
-            ).otherwise(F.lit(0).cast(dec))
-        ).alias("s11"),
-        F.sum(
-            F.when(
-                F.col("arm") == 0,
-                F.col("cnt").cast(dec) * F.col("cents") * F.col("cents"),
-            ).otherwise(F.lit(0).cast(dec))
-        ).alias("s20"),
-        F.sum(
-            F.when(
-                F.col("arm") == 1,
-                F.col("cnt").cast(dec) * F.col("cents") * F.col("cents"),
-            ).otherwise(F.lit(0).cast(dec))
-        ).alias("s21"),
-    )
-    n0 = F.nullif(F.col("n0"), F.lit(0))
-    n1 = F.nullif(F.col("n1"), F.lit(0))
-    m0 = F.col("s10").cast("double") / n0
-    m1 = F.col("s11").cast("double") / n1
-    v0 = F.greatest(F.col("s20").cast("double") / n0 - m0 * m0, F.lit(0.0))
-    v1 = F.greatest(F.col("s21").cast("double") / n1 - m1 * m1, F.lit(0.0))
+    a = _arm_histogram(spark, sf_dir).groupBy("event_type").agg(*_arm_sums("cents"))
+    _, _, zv = _arm_welch()
     z = a.select(
-        "event_type",
-        "n0",
-        "n1",
-        F.coalesce(
-            (m1 - m0) / F.nullif(F.sqrt(v1 / n1 + v0 / n0), F.lit(0.0)),
-            F.lit(0.0),
-        ).alias("zv"),
+        "event_type", "n0", "n1", F.coalesce(zv, F.lit(0.0)).alias("zv")
     )
     p = z.select(
         "event_type", "n0", "n1", "zv", F.abs(F.col("zv")).alias("az")
@@ -7491,21 +7402,21 @@ def orders_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("events", "stats", "experiment", "cuped", "aggregate"),
     oracle=f"""
     WITH b AS (
-      SELECT (min(epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000)
-              + max(epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000)
+      SELECT (min({DAY_SQL})
+              + max({DAY_SQL})
               + 1) // 2 AS mid
       FROM events
     ),
     u AS (
       SELECT user_id,
-             CAST(user_id * {AB_KNUTH} % {AB_MOD} % 2 AS BIGINT) AS arm,
+             CAST(user_id * {KNUTH} % {MOD_2_32} % 2 AS BIGINT) AS arm,
              CAST(sum(CASE WHEN epoch_us(CAST(ts AS TIMESTAMP))
                                 // 86400000000 < mid
-                           THEN CAST(round(value * 100) AS BIGINT)
+                           THEN {CENTS_SQL}
                            ELSE 0 END) AS BIGINT) AS pre,
              CAST(sum(CASE WHEN epoch_us(CAST(ts AS TIMESTAMP))
                                 // 86400000000 >= mid
-                           THEN CAST(round(value * 100) AS BIGINT)
+                           THEN {CENTS_SQL}
                            ELSE 0 END) AS BIGINT) AS post
       FROM events CROSS JOIN b GROUP BY 1, 2
     ),
@@ -7603,8 +7514,8 @@ def events_cuped_adjusted_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
     share of outcome variance the covariate removes (see header)."""
     e = load_table(spark, sf_dir, "events").select(
         "user_id",
-        F.expr("unix_micros(ts) div 86400000000").alias("day"),
-        F.round(F.col("value") * 100).cast("bigint").alias("cents"),
+        utc_day().alias("day"),
+        cents().alias("cents"),
     )
     b = e.agg(
         F.expr("(min(day) + max(day) + 1) div 2").alias("mid")
@@ -7624,7 +7535,7 @@ def events_cuped_adjusted_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("post"),
         )
         .select(
-            ((F.col("user_id") * F.lit(AB_KNUTH)) % F.lit(AB_MOD) % 2)
+            knuth_bucket("user_id", 2)
             .cast("bigint")
             .alias("arm"),
             "pre",
@@ -7768,7 +7679,7 @@ _SPRT_B = math.log(SPRT_BETA / (1.0 - SPRT_ALPHA))
     oracle=f"""
     WITH e AS (
       SELECT event_type,
-             CAST(epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000
+             CAST({DAY_SQL}
                   AS BIGINT) AS day
       FROM events
     ),
@@ -7821,7 +7732,7 @@ def events_sprt_readout(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundaries and log terms are shared Python literals, the walk is
     bit-identical cross-engine)."""
     e = load_table(spark, sf_dir, "events").select(
-        "event_type", F.expr("unix_micros(ts) div 86400000000").alias("day")
+        "event_type", utc_day().alias("day")
     )
     td = e.groupBy("event_type", "day").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_t")
@@ -7936,7 +7847,7 @@ PH_LAMBDA = 10.0
     oracle=f"""
     WITH daily AS (
       SELECT event_type,
-             CAST(epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000
+             CAST({DAY_SQL}
                   AS BIGINT) AS day,
              round(avg(value) + 1e-9, 6) AS x
       FROM events GROUP BY 1, 2
@@ -7981,7 +7892,7 @@ def events_page_hinkley_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-identical cross-engine)."""
     e = load_table(spark, sf_dir, "events").select(
         "event_type",
-        F.expr("unix_micros(ts) div 86400000000").alias("day"),
+        utc_day().alias("day"),
         "value",
     )
     daily = e.groupBy("event_type", "day").agg(

@@ -21,10 +21,12 @@ Five dedup families, each with the scale rationale that matters at
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.grain import KNUTH, MOD_2_32, knuth_bucket
 from ..functions.pairs import canonical_pairs, cap_blocks, jaccard_verify, saturation_guard
 from ..functions.scale import spread_by as _spread_by
 from ..functions.text import QUALITY_RAW_SQL, TOKENS_SQL, lead_chain, quality_raw_col, tokens
@@ -390,8 +392,6 @@ def minhash_pairs(docs: DataFrame, bucket_cap: int = DEFAULT_DF_CAP) -> DataFram
     it inherits the input partitioning — an upstream AQE-coalesced or
     single-split frame would serialize the per-token hashing onto one
     or two cores (CLAUDE.md gotcha #6)."""
-    from pyspark import StorageLevel
-
     sh = _shingle_hashes(docs).persist(StorageLevel.MEMORY_AND_DISK)
     sigs = _signatures_from_shingles(sh)
 
@@ -657,7 +657,6 @@ def pipeline_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     # consumes comps <- pairs <- the LSH stage), so a lazy persist
     # computes the quality+window lineage exactly once without the
     # eager checkpoint's write-barrier job (see minhash_pairs).
-    from pyspark import StorageLevel
 
     exact = exact.persist(StorageLevel.MEMORY_AND_DISK)
 
@@ -1135,8 +1134,6 @@ def jaccard_prefixfilter_pairs(d: DataFrame) -> DataFrame:
     global order. Scale: candidate volume is Σ_s df_prefix(s)² over
     rare shingles only; no cap, no dropped evidence, and the verify
     join moves |candidates|·|S| hashed longs, never text."""
-    from pyspark import StorageLevel
-
     num, den = _T_FRAC.numerator, _T_FRAC.denominator
     ex = _with_doc_size(_shingle_hashes(d)).persist(
         StorageLevel.MEMORY_AND_DISK
@@ -1542,8 +1539,6 @@ def dedup_minhash_estimate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the final join also needs) — lazy persist per gotcha #9.
     est_jaccard = n_match/16 values are exact binary fractions
     (k·2⁻⁴), so the 4dp round is boundary-free on both engines."""
-    from pyspark import StorageLevel
-
     # Spread BY doc_id (r16, ADVICE r15): _shingle_hashes spreads its
     # own input by doc_id, so a round-robin spread here was a pure
     # extra exchange stacked under it (back-to-back RoundRobin ->
@@ -1805,9 +1800,7 @@ def dedup_edit_distance_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # pair set (shared quadratic oracle). Output is the full
 # split-pair x pair-count matrix; off-diagonal rows ARE the leak.
 def _split_expr(col: str):
-    from .sampling import _KNUTH, _MOD
-
-    bucket = (F.col(col) * F.lit(_KNUTH)) % F.lit(_MOD) % 100
+    bucket = knuth_bucket(col, 100)
     return (
         F.when(bucket < 90, F.lit("train"))
         .when(bucket < 95, F.lit("val"))
@@ -1816,11 +1809,9 @@ def _split_expr(col: str):
 
 
 def _split_case_sql(col: str) -> str:
-    from .sampling import _KNUTH, _MOD
-
     return (
-        f"CASE WHEN ({col} * {_KNUTH}) % {_MOD} % 100 < 90 THEN 'train'"
-        f" WHEN ({col} * {_KNUTH}) % {_MOD} % 100 < 95 THEN 'val'"
+        f"CASE WHEN ({col} * {KNUTH}) % {MOD_2_32} % 100 < 90 THEN 'train'"
+        f" WHEN ({col} * {KNUTH}) % {MOD_2_32} % 100 < 95 THEN 'val'"
         f" ELSE 'test' END"
     )
 
@@ -1992,8 +1983,6 @@ def dedup_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     m ~ 10 bits/key (here 2^22 fixed for the test corpus) and built
     incrementally per ingest; the batch side never shuffles except
     for its own in-batch digest window."""
-    from pyspark import StorageLevel
-
     m_bits = 1 << 22
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", F.sha2(F.col("text"), 256).alias("h")

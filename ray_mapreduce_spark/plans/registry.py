@@ -28,7 +28,6 @@ class QuerySpec:
     oracle: str | None  # DuckDB SQL, or None -> driver does rows-only check
     tags: tuple[str, ...] = field(default_factory=tuple)
     bench: bool = False  # include in bench.py headline set
-    doc: str = ""
 
 
 _REGISTRY: dict[str, QuerySpec] = {}
@@ -39,16 +38,13 @@ def register(
     oracle: str | None = None,
     tags: tuple[str, ...] = (),
     bench: bool = False,
-    doc: str = "",
 ) -> Callable[[Builder], Builder]:
     """Decorator: register a query builder under ``name``."""
 
     def deco(fn: Builder) -> Builder:
         if name in _REGISTRY:
             raise ValueError(f"duplicate query name {name!r}")
-        _REGISTRY[name] = QuerySpec(
-            name=name, builder=fn, oracle=oracle, tags=tags, bench=bench, doc=doc or (fn.__doc__ or "")
-        )
+        _REGISTRY[name] = QuerySpec(name=name, builder=fn, oracle=oracle, tags=tags, bench=bench)
         return fn
 
     return deco
@@ -164,7 +160,3 @@ def all_queries() -> dict[str, QuerySpec]:
         if name not in ordered:
             ordered[name] = spec
     return ordered
-
-
-def get(name: str) -> QuerySpec:
-    return all_queries()[name]

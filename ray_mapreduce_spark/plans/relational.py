@@ -2208,8 +2208,6 @@ def lineitem_returnflag_anova(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the discount-elasticity note); the plan shape is unchanged.
     Scale shape: ONE partial-aggregated fact scan to |flags| rows;
     the fold and algebra run on that |flags|-row frame."""
-    from pyspark.sql.window import Window
-
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_returnflag", F.expr("CAST(l_quantity AS BIGINT)").alias("q")
     )
@@ -2315,8 +2313,6 @@ def orders_scd2_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: ONE hash(custkey) exchange — lag and the running
     run_id share the sort, the run aggregation and the lead() window
     reuse the custkey partitioning; no fact re-scan anywhere."""
-    from pyspark.sql.window import Window
-
     o = load_table(spark, sf_dir, "orders").select(
         "o_custkey",
         F.col("o_orderdate").alias("ts"),
@@ -2400,8 +2396,6 @@ def orders_reactivation(spark: SparkSession, sf_dir: str) -> DataFrame:
     ordering; share is one division of exact integers. Scale shape:
     one custkey-keyed window sort (the SCD2 exchange), then a
     calendar-sized month aggregation."""
-    from pyspark.sql.window import Window
-
     o = load_table(spark, sf_dir, "orders").select(
         "o_custkey",
         F.col("o_orderdate").cast("date").alias("d"),
@@ -2642,8 +2636,6 @@ def lineitem_supplier_switching(spark: SparkSession, sf_dir: str) -> DataFrame:
     (custkey, partkey) window sort whose aggregation reuses the same
     partitioning (clustering-subset rule), then a part-keyed rollup
     of the relationship frame."""
-    from pyspark.sql.window import Window
-
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey", "l_suppkey", "l_linenumber"
     )
@@ -2881,8 +2873,6 @@ def orders_twoway_fixed_effects(spark: SparkSession, sf_dir: str) -> DataFrame:
     demeaning df only — subtract 1 more for the regression's residual
     df; the raw within-sums are deliberately NOT emitted — they
     cannot survive the driver hash)."""
-    from pyspark.sql.window import Window
-
     o = load_table(spark, sf_dir, "orders").select(
         "o_custkey",
         (F.year("o_orderdate") * 12 + F.month("o_orderdate"))
@@ -3139,8 +3129,6 @@ def lineitem_theil_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     theil_within): Theil T revenue inequality across suppliers with
     the exact within/between-nation decomposition (see header; the
     replay gate pins total = between + weighted-within)."""
-    from pyspark.sql.window import Window
-
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_suppkey",
         F.round(F.col("l_extendedprice") * 100).cast("bigint").alias("c"),

@@ -27,15 +27,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.grain import KNUTH, MOD_2_32, knuth_bucket
 from ..functions.text import QUALITY_RAW_SQL, TOKENS_SQL, n_words, quality_raw_col, tokens
 from ..sources import load_table
 from .registry import register
 
-# Knuth multiplicative hash over the doc key: pure 64-bit arithmetic,
-# bit-identical in Spark and DuckDB (no engine hash functions), ANSI-
-# safe for doc_id < 2^31 (documented; salt+fold first at larger ids).
-_KNUTH = 2654435761
-_MOD = 4294967296  # 2^32
+# Knuth multiplicative hash over the doc key (functions/grain.py): pure
+# 64-bit arithmetic, bit-identical in Spark and DuckDB (no engine hash
+# functions), ANSI-safe for doc_id < 2^31 (documented; salt+fold first
+# at larger ids).
 
 
 @register(
@@ -44,7 +44,7 @@ _MOD = 4294967296  # 2^32
     oracle=f"""
     SELECT doc_id, lang
     FROM documents
-    WHERE (doc_id * {_KNUTH}) % {_MOD} % 10 = 0
+    WHERE (doc_id * {KNUTH}) % {MOD_2_32} % 10 = 0
     """,
 )
 def sample_hash_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -54,7 +54,7 @@ def sample_hash_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame:
     previously-selected doc. A narrow filter: reaches the scan, no
     shuffle, no RNG state."""
     d = load_table(spark, sf_dir, "documents")
-    keep = (F.col("doc_id") * F.lit(_KNUTH)) % F.lit(_MOD) % 10 == 0
+    keep = knuth_bucket("doc_id", 10) == 0
     return d.filter(keep).select("doc_id", "lang")
 
 
@@ -206,7 +206,7 @@ def pack_sequences_greedy(
     )
     SELECT d.doc_id, d.source
     FROM documents d JOIN rates r ON d.source = r.source
-    WHERE (d.doc_id * {_KNUTH}) % {_MOD} % 100 < r.keep_pct
+    WHERE (d.doc_id * {KNUTH}) % {MOD_2_32} % 100 < r.keep_pct
     """,
 )
 def sample_weighted_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -236,7 +236,7 @@ def sample_weighted_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).otherwise(F.lit(20)).alias("keep_pct"),
         )
     )
-    keep = (F.col("doc_id") * F.lit(_KNUTH)) % F.lit(_MOD) % 100 < F.col("keep_pct")
+    keep = knuth_bucket("doc_id", 100) < F.col("keep_pct")
     return d.join(F.broadcast(rates), "source").filter(keep).select("doc_id", "source")
 
 
@@ -269,7 +269,7 @@ _TB_CAP = 50
                                 / len(string_split(d.text, ' '))) / 8.0, 1.0)
                  + 1e-9, 4) AS quality
       FROM documents d JOIN rates r ON d.source = r.source
-      WHERE (d.doc_id * {_KNUTH}) % {_MOD} % 100 < r.keep_pct
+      WHERE (d.doc_id * {KNUTH}) % {MOD_2_32} % 100 < r.keep_pct
     ),
     capped AS (
       SELECT doc_id, lang,
@@ -327,7 +327,7 @@ def pipeline_training_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).otherwise(F.lit(20)).alias("keep_pct"),
         )
     )
-    keep = (F.col("doc_id") * F.lit(_KNUTH)) % F.lit(_MOD) % 100 < F.col("keep_pct")
+    keep = knuth_bucket("doc_id", 100) < F.col("keep_pct")
     picked = d.join(F.broadcast(rates), "source").filter(keep)
 
     # +1e-9 pre-round: exact half-boundary guard (see text_quality_score)
@@ -421,8 +421,8 @@ def chunk_documents_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH s AS (
       SELECT doc_id, lang,
-             CASE WHEN (doc_id * {_KNUTH}) % {_MOD} % 100 < 90 THEN 'train'
-                  WHEN (doc_id * {_KNUTH}) % {_MOD} % 100 < 95 THEN 'val'
+             CASE WHEN (doc_id * {KNUTH}) % {MOD_2_32} % 100 < 90 THEN 'train'
+                  WHEN (doc_id * {KNUTH}) % {MOD_2_32} % 100 < 95 THEN 'val'
                   ELSE 'test' END AS split
       FROM documents
     )
@@ -443,7 +443,7 @@ def sample_split_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     zero-shuffle map, and reruns on appended corpora only add rows
     (existing docs never switch split)."""
     d = load_table(spark, sf_dir, "documents")
-    bucket = (F.col("doc_id") * F.lit(_KNUTH)) % F.lit(_MOD) % 100
+    bucket = knuth_bucket("doc_id", 100)
     split = (
         F.when(bucket < 90, F.lit("train"))
         .when(bucket < 95, F.lit("val"))
@@ -557,7 +557,7 @@ _TEMP_RES = 1_000_000  # hash-bucket resolution for the keep compare
     )
     SELECT d.doc_id, d.lang
     FROM documents d JOIN thr t ON t.lang = d.lang
-    WHERE (d.doc_id * {_KNUTH}) % {_MOD} % {_TEMP_RES} < t.keep_thr
+    WHERE (d.doc_id * {KNUTH}) % {MOD_2_32} % {_TEMP_RES} < t.keep_thr
     """,
 )
 def sample_temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -602,9 +602,7 @@ def sample_temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("keep_thr"),
     )
-    keep = (F.col("doc_id") * F.lit(_KNUTH)) % F.lit(_MOD) % F.lit(
-        _TEMP_RES
-    ) < F.col("keep_thr")
+    keep = knuth_bucket("doc_id", F.lit(_TEMP_RES)) < F.col("keep_thr")
     return d.join(F.broadcast(thr), "lang").filter(keep).select("doc_id", "lang")
 
 
@@ -968,8 +966,6 @@ def sample_balanced_langs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (per-lang top-n_min could also ride WindowGroupLimit if n_min
     were a literal; it is data-dependent, so the rank filter follows
     the broadcast), aggregation on the kept frame."""
-    from pyspark.sql.window import Window
-
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id",
         "lang",
@@ -1057,8 +1053,6 @@ def sample_neyman_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     float-under-integer representation of exact multiples).
     Scale shape: ONE partial-aggregated fact collapse to |langs|
     rows; the share total is a window over that tiny frame."""
-    from pyspark.sql.window import Window as _W
-
     d = load_table(spark, sf_dir, "documents")
     m = d.groupBy("lang").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_h"),
@@ -1076,7 +1070,7 @@ def sample_neyman_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_h",
         F.round(F.col("n_h") * F.sqrt(var), 6).alias("w_h"),
     )
-    wtot = F.sum("w_h").over(_W.partitionBy())
+    wtot = F.sum("w_h").over(Window.partitionBy())
     # Degenerate all-zero-variance corpus guard (ADVICE r10): wtot=0
     # would make every share 0/0 = NaN on both engines; define the
     # share as 0.0 there instead (identical CASE on the oracle side).

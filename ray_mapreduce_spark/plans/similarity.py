@@ -29,6 +29,7 @@ Scale design:
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -649,8 +650,6 @@ def _persisted_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     cache lazily, so the builder can't drop it before the driver's
     action. Long sweep sessions rely on LRU block eviction (bounded:
     one projected corpus per persisting query, MEMORY_AND_DISK)."""
-    from pyspark import StorageLevel
-
     return (
         _with_vec(load_table(spark, sf_dir, "embeddings"))
         .select("vec_id", "vec")
@@ -2824,8 +2823,6 @@ def similarity_centroid_classifier(spark: SparkSession, sf_dir: str) -> DataFram
     the centroid_by_bucket shape) and BROADCASTS; the test side joins
     on pos and folds to one distance row per (vec, label) in the same
     aggregation — no pairwise vec x vec work anywhere."""
-    from pyspark.sql.window import Window
-
     v = _with_vec(load_table(spark, sf_dir, "embeddings"))
     train = (
         v.filter(F.pmod("vec_id", F.lit(2)) == 0)

@@ -10,10 +10,12 @@ from __future__ import annotations
 
 import math
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.grain import KNUTH, MOD_2_32, knuth_bucket
 from ..functions.scale import spread as _spread
 from ..functions.scale import spread_by as _spread_by
 from ..functions.stats import moment_sums
@@ -165,8 +167,6 @@ def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window
-
     d = load_table(spark, sf_dir, "documents")
     markers = spark.createDataFrame(
         [(lang, m) for lang, ms in _LANG_MARKERS.items() for m in ms],
@@ -388,8 +388,6 @@ def text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     repeated-scan audit). One window on tok = one lineage, one
     shuffle; only the corpus-size scalar touches documents again (a
     count-star metadata scan)."""
-    from pyspark.sql.window import Window
-
     d = load_table(spark, sf_dir, "documents")
     tok = d.select("doc_id", F.explode(tokens()).alias("tok"))
     tf = tok.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("tf"))
@@ -450,8 +448,6 @@ def text_zipf_head(spark: SparkSession, sf_dir: str) -> DataFrame:
     (per-partition top-30, a 30·P-row gather), so no global sort and
     no single-task window over the full vocabulary. The rank/rel_freq
     windows run AFTER the limit, over exactly 30 rows."""
-    from pyspark.sql.window import Window
-
     d = load_table(spark, sf_dir, "documents")
     freq = (
         d.select(F.explode(tokens()).alias("token"))
@@ -576,8 +572,6 @@ def text_bm25_topdocs(spark: SparkSession, sf_dir: str) -> DataFrame:
     tiebreak so cross-engine double arithmetic cannot flip
     neighboring ranks (same discipline as text_tfidf_top_terms).
     """
-    from pyspark.sql.window import Window
-
     d = load_table(spark, sf_dir, "documents")
     tok = d.select("doc_id", F.explode(tokens()).alias("tok"))
     tf = tok.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).cast("double").alias("tf"))
@@ -647,8 +641,6 @@ def text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     duplicate, and never a single-partition global window), broadcast
     onto the scored rows; the per-doc mean partial-aggregates
     map-side."""
-    from pyspark.sql.window import Window
-
     d = load_table(spark, sf_dir, "documents")
     tok = d.select("doc_id", F.explode(tokens()).alias("tok"))
     tot = d.agg(F.sum(F.size(tokens())).cast("double").alias("total"))
@@ -800,8 +792,6 @@ def bm25_score_batch(
     per-doc score partial-aggregates map-side. OOV query terms (no
     df row) can't occur — qterms is derived from the corpus — but a
     left join + coalesce(df, 0) keeps external query sets safe."""
-    from pyspark.sql.window import Window
-
     btok = batch.select("doc_id", F.explode(tokens()).alias("tok"))
     tf = btok.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).cast("double").alias("tf"))
     tf = tf.withColumn("dlen", F.sum("tf").over(Window.partitionBy("doc_id")))
@@ -945,8 +935,6 @@ def corpus_composition_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 # SHAPE (hash trick, integer feature accumulation, sigmoid margin) is
 # the real operator and is identical to serving a real .bin model.
 CLF_HASH_DIM = 4096
-_CLF_KNUTH = 2654435761  # same Knuth multiplier as plans/sampling.py
-_CLF_MOD = 4294967296  # 2^32
 
 
 @register(
@@ -966,7 +954,7 @@ _CLF_MOD = 4294967296  # 2^32
     s AS (
       SELECT doc_id, lang,
              count(*) AS n_tokens,
-             CAST(sum((bucket * {_CLF_KNUTH}) % {_CLF_MOD} % 2001 - 1000)
+             CAST(sum((bucket * {KNUTH}) % {MOD_2_32} % 2001 - 1000)
                   AS BIGINT) AS raw
       FROM w GROUP BY doc_id, lang
     )
@@ -1004,7 +992,7 @@ def text_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket = F.conv(F.substring(F.sha2(F.col("t"), 256), 1, 6), 16, 10).cast(
         "bigint"
     ) % CLF_HASH_DIM
-    weight = (bucket * F.lit(_CLF_KNUTH)) % F.lit(_CLF_MOD) % 2001 - 1000
+    weight = knuth_bucket(bucket, 2001) - 1000
     s = tok.select("doc_id", "lang", weight.alias("w")).groupBy(
         "doc_id", "lang"
     ).agg(
@@ -1096,8 +1084,6 @@ def bigram_pmi(
 ) -> DataFrame:
     """Frame-level PMI core over any (doc_id, text) frame — see
     ``text_bigram_pmi`` for the plan rationale."""
-    from pyspark.sql.window import Window
-
     tok = _spread_by(d, "doc_id").select("doc_id", F.posexplode(tokens()).alias("pos", "t"))
     w = Window.partitionBy("doc_id").orderBy("pos")
     adj = tok.select("t", F.lead("t", 1).over(w).alias("t2"))
@@ -1259,9 +1245,6 @@ def text_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
 def bigram_logprob_frame(d: DataFrame) -> DataFrame:
     """Frame-level bigram-LM scoring core over any (doc_id, text)
     frame — see ``text_bigram_logprob``."""
-    from pyspark import StorageLevel
-    from pyspark.sql.window import Window
-
     tok = d.select("doc_id", F.posexplode(tokens()).alias("pos", "t"))
     w = Window.partitionBy("doc_id").orderBy("pos")
     adjd = tok.select(
@@ -1424,10 +1407,9 @@ def corpus_source_kl(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _spread(load_table(spark, sf_dir, "documents"))
     tok = d.select("source", F.explode(tokens()).alias("t"))
     c = tok.groupBy("source", "t").agg(F.count(F.lit(1)).cast("bigint").alias("c_st"))
-    from pyspark.sql.window import Window as _W
 
-    c = c.withColumn("n_s", F.sum("c_st").over(_W.partitionBy("source"))).withColumn(
-        "c_t", F.sum("c_st").over(_W.partitionBy("t"))
+    c = c.withColumn("n_s", F.sum("c_st").over(Window.partitionBy("source"))).withColumn(
+        "c_t", F.sum("c_st").over(Window.partitionBy("t"))
     )
     tot = c.groupBy().agg(F.sum("c_st").alias("nn"))
     term = (F.col("c_st").cast("double") / F.col("n_s")) * F.log(
@@ -1574,23 +1556,21 @@ def text_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     it is a per-language vocab-sized sort (millions of rows at crawl
     scale, not corpus-sized), the same shape as quality decile
     calibration."""
-    from pyspark.sql.window import Window as _W
-
     d = _spread(load_table(spark, sf_dir, "documents"))
     tok = d.select("lang", F.explode(tokens()).alias("t"))
     c = tok.groupBy("lang", "t").agg(F.count(F.lit(1)).cast("bigint").alias("c"))
     order = [F.col("c").desc(), F.col("t")]
     r = (
-        c.withColumn("rk", F.row_number().over(_W.partitionBy("lang").orderBy(*order)))
+        c.withColumn("rk", F.row_number().over(Window.partitionBy("lang").orderBy(*order)))
         .withColumn(
             "cum",
             F.sum("c").over(
-                _W.partitionBy("lang")
+                Window.partitionBy("lang")
                 .orderBy(*order)
-                .rowsBetween(_W.unboundedPreceding, _W.currentRow)
+                .rowsBetween(Window.unboundedPreceding, Window.currentRow)
             ),
         )
-        .withColumn("nl", F.sum("c").over(_W.partitionBy("lang")))
+        .withColumn("nl", F.sum("c").over(Window.partitionBy("lang")))
     )
     return r.groupBy("lang").agg(
         F.min("nl").cast("bigint").alias("n_tokens"),
@@ -2731,8 +2711,6 @@ def text_naive_bayes_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     before collapsing in the same aggregation; priors/vocab are
     broadcast scalars. Determinism: header note — all-integer
     scores."""
-    from pyspark.sql.window import Window
-
     d = load_table(spark, sf_dir, "documents").select("doc_id", "lang", tokens().alias("t"))
     train_tok = (
         d.filter(F.pmod("doc_id", F.lit(2)) == 0)
@@ -3191,17 +3169,14 @@ def text_source_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows, never O(corpus); the JSD fold partial-aggregates per pair;
     the spine and its non-equi pair frame are O(|sources|) /
     O(|sources|^2) broadcast-size."""
-    from pyspark import StorageLevel
-
     d = _spread(load_table(spark, sf_dir, "documents"))
     tok = d.select("source", F.explode(tokens()).alias("t"))
     c = tok.groupBy("source", "t").agg(
         F.count(F.lit(1)).cast("bigint").alias("c_st")
     )
-    from pyspark.sql.window import Window as _W
 
     s = c.withColumn(
-        "n_s", F.sum("c_st").over(_W.partitionBy("source"))
+        "n_s", F.sum("c_st").over(Window.partitionBy("source"))
     ).persist(StorageLevel.MEMORY_AND_DISK)
     a = s.select(
         F.col("source").alias("source_a"),

@@ -11,7 +11,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
+from ..functions.grain import CENTS_SQL, DAY_SQL, cents, utc_day
 from ..sources import load_table
 from .registry import register
 
@@ -201,7 +203,6 @@ def timeseries_twap(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.unix_micros("ts").alias("us"),
         "event_id",
     )
-    from pyspark.sql.window import Window
 
     w = Window.partitionBy("event_type").orderBy("us", "event_id")
     iv = (
@@ -237,11 +238,11 @@ def timeseries_twap(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "timeseries_acf_lags",
     tags=("timeseries", "autocorrelation", "aggregate"),
-    oracle="""
+    oracle=f"""
     WITH d AS (
-      SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day,
+      SELECT {DAY_SQL} AS day,
              CAST(count(*) AS BIGINT) AS cnt,
-             round(CAST(CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
+             round(CAST(CAST(sum({CENTS_SQL}) AS BIGINT)
                         AS DOUBLE) / (100.0 * count(*)), 6) AS meanv
       FROM events GROUP BY 1
     ),
@@ -287,10 +288,10 @@ def timeseries_acf_lags(spark: SparkSession, sf_dir: str) -> DataFrame:
     Pearson folds run on the tiny daily frame (days x 7 rows) with
     the 7-row lag spine broadcast."""
     e = load_table(spark, sf_dir, "events")
-    d = e.groupBy(F.expr("unix_micros(ts) div 86400000000").alias("day")).agg(
+    d = e.groupBy(utc_day().alias("day")).agg(
         F.count(F.lit(1)).cast("bigint").alias("cnt"),
         F.round(
-            F.sum(F.expr("CAST(round(value * 100) AS BIGINT)")).cast("double")
+            F.sum(cents()).cast("double")
             / (F.lit(100.0) * F.count(F.lit(1))),
             6,
         ).alias("meanv"),
@@ -360,11 +361,11 @@ def timeseries_acf_lags(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "timeseries_rolling_median",
     tags=("timeseries", "window", "percentile", "robust"),
-    oracle="""
+    oracle=f"""
     WITH d AS (
       SELECT event_type,
-             epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day,
-             round(CAST(CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
+             {DAY_SQL} AS day,
+             round(CAST(CAST(sum({CENTS_SQL}) AS BIGINT)
                         AS DOUBLE) / (100.0 * count(*)), 6) AS meanv
       FROM events GROUP BY 1, 2
     )
@@ -386,15 +387,13 @@ def timeseries_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     the fact partial-aggregates to one row per (type, day); the
     rolling window runs on that tiny calendar-sized frame — one
     type-keyed exchange past the first aggregation."""
-    from pyspark.sql.window import Window
-
     e = load_table(spark, sf_dir, "events")
     d = e.groupBy(
         "event_type",
-        F.expr("unix_micros(ts) div 86400000000").alias("day"),
+        utc_day().alias("day"),
     ).agg(
         F.round(
-            F.sum(F.expr("CAST(round(value * 100) AS BIGINT)")).cast("double")
+            F.sum(cents()).cast("double")
             / (F.lit(100.0) * F.count(F.lit(1))),
             6,
         ).alias("meanv")
@@ -425,12 +424,12 @@ def timeseries_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "timeseries_metric_correlations",
     tags=("timeseries", "correlation", "aggregate"),
-    oracle="""
+    oracle=f"""
     WITH d AS (
-      SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day,
+      SELECT {DAY_SQL} AS day,
              CAST(count(*) AS BIGINT) AS cnt,
              CAST(count(DISTINCT user_id) AS BIGINT) AS du,
-             round(CAST(CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
+             round(CAST(CAST(sum({CENTS_SQL}) AS BIGINT)
                         AS DOUBLE) / (100.0 * count(*)), 6) AS meanv
       FROM events GROUP BY 1
     ),
@@ -475,11 +474,11 @@ def timeseries_metric_correlations(spark: SparkSession, sf_dir: str) -> DataFram
     per-day partial aggregation of the fact (partial-distinct for
     users), a 1-row moment fold, and a 3-row literal explode."""
     e = load_table(spark, sf_dir, "events")
-    d = e.groupBy(F.expr("unix_micros(ts) div 86400000000").alias("day")).agg(
+    d = e.groupBy(utc_day().alias("day")).agg(
         F.count(F.lit(1)).cast("bigint").alias("cnt"),
         F.countDistinct("user_id").cast("bigint").alias("du"),
         F.round(
-            F.sum(F.expr("CAST(round(value * 100) AS BIGINT)")).cast("double")
+            F.sum(cents()).cast("double")
             / (F.lit(100.0) * F.count(F.lit(1))),
             6,
         ).alias("meanv"),

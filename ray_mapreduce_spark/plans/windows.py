@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.scale import ntile_from_rank, two_pass_rank
 from ..sources import load_table
 from .registry import register
 
@@ -124,64 +125,22 @@ def window_running_and_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
 def window_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """percent_rank / cume_dist / ntile over a GLOBAL ordering, the
     scale-safe way: a ``Window.orderBy(...)`` with no partition clause
-    funnels every row through one task, so this plan computes the
-    global rank in two passes instead —
-
-    1. ``repartitionByRange`` on the sort key (range partition i holds
-       strictly smaller keys than i+1), rank locally per partition;
-    2. per-partition row counts -> running offsets (a window over ONE
-       ROW PER PARTITION — a few hundred rows at any scale, the only
-       intentionally-tiny global window here); global rank = local
-       rank + partition offset.
-
-    percent_rank/cume_dist/ntile then derive from the global rank and
-    the broadcast total. The sort key (c_acctbal, c_custkey) is unique,
-    so rank == row_number and cume_dist == rank/n exactly."""
+    funnels every row through one task, so the global rank and the
+    total come from ``functions/scale.py::two_pass_rank`` (range
+    partition, local rank, per-partition offsets) and the ntile from
+    ``ntile_from_rank``. The sort key (c_acctbal, c_custkey) is
+    unique, so rank == row_number and cume_dist == rank/n exactly."""
     c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_acctbal")
-    parts = c.sparkSession.sparkContext.defaultParallelism
-    ranged = c.repartitionByRange(parts, "c_acctbal", "c_custkey").withColumn(
-        "_pid", F.spark_partition_id()
-    )
-    w_local = Window.partitionBy("_pid").orderBy("c_acctbal", "c_custkey")
-    local = ranged.withColumn("_lrn", F.row_number().over(w_local))
-    # ``local`` feeds TWO branches (counts/offsets and the ranked join).
-    # Correctness — not just cost — requires both branches to see the
-    # SAME range partitioning: RangePartitioner samples its bounds with
-    # an RDD-id-derived seed, so two independent executions of the
-    # exchange could draw different partition boundaries and the
-    # _pid->offset mapping would silently corrupt the global ranks
-    # (gotcha #9: concurrent branches miss a lazy cache; ReusedExchange
-    # usually dedupes but AQE re-planning can break it). Materialize
-    # exactly once.
-    local = local.localCheckpoint(eager=True)
-
-    counts = local.groupBy("_pid").agg(F.count(F.lit(1)).alias("_n"))
-    w_off = Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = counts.select(
-        "_pid",
-        F.coalesce(F.sum("_n").over(w_off), F.lit(0)).alias("_off"),
-        F.sum("_n").over(Window.partitionBy()).alias("_total"),
-    )
-
-    ranked = local.join(F.broadcast(offsets), "_pid").withColumn(
-        "_rn", F.col("_lrn") + F.col("_off")
-    )
-    n = F.col("_total")
-    rn = F.col("_rn")
+    ranked = two_pass_rank(c, ["c_acctbal", "c_custkey"], "rn", total_col="n")
+    n = F.col("n")
+    rn = F.col("rn")
     pr = F.when(n > 1, (rn - 1).cast("double") / (n - 1)).otherwise(F.lit(0.0))
     cd = rn.cast("double") / n
-    # SQL ntile(4): first (n % 4) buckets get floor(n/4)+1 rows.
-    sz = (n / 4).cast("long")
-    r = n % 4
-    big = r * (sz + 1)
-    quartile = F.when(
-        rn <= big, F.floor((rn - 1) / (sz + 1)) + 1
-    ).otherwise(r + F.floor((rn - big - 1) / sz) + 1)
     return ranked.select(
         "c_custkey",
         F.round(pr, 6).alias("pr"),
         F.round(cd, 6).alias("cd"),
-        quartile.cast("int").alias("quartile"),
+        ntile_from_rank(rn, n, 4).alias("quartile"),
     )
 
 

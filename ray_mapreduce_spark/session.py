@@ -84,7 +84,13 @@ import socket
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# Local cores: the CPUs this process may run on (all cores where the
+# platform has no affinity call, e.g. macOS) unless SPARK_GRAFT_CPUS
+# overrides it for a deployment.
+DEFAULT_CPUS = int(
+    os.environ.get("SPARK_GRAFT_CPUS")
+    or (len(os.sched_getaffinity(0)) if hasattr(os, "sched_getaffinity") else os.cpu_count())
+)
 CODEGEN_CACHE_ENTRIES = 1000
 _PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 

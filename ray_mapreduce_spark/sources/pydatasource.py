@@ -34,6 +34,8 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
+from .text import manifest_paths
+
 
 class _FilePartition(InputPartition):
     def __init__(self, path: str):
@@ -50,9 +52,7 @@ class ManifestTextReader(DataSourceReader):
         # Driver reads ONLY the index (one path per line) — record
         # bytes never pass through the driver (the reference's
         # acknowledged bottleneck, reference mapreduce.py:25-26).
-        with open(self.index) as fh:
-            paths = [line.strip() for line in fh if line.strip()]
-        return [_FilePartition(p) for p in paths]
+        return [_FilePartition(p) for p in manifest_paths(self.index)]
 
     def read(self, partition):
         # Runs on an executor; opens its own file, exactly like the

@@ -124,14 +124,21 @@ def read_csv_with_rejects(
     return good, rejects
 
 
+def manifest_paths(index_path: str) -> list[str]:
+    """The paths an index file lists: one per line, surrounding
+    whitespace stripped, blank lines skipped."""
+    with open(index_path) as fh:
+        return [line.strip() for line in fh if line.strip()]
+
+
 def read_manifest(spark: SparkSession, index_path: str) -> DataFrame:
     """Reference ``MapReduceWithMultipleFiles`` source (reference
     mapreduce.py:176-187): an index file lists one path per line; read
     all listed files. The driver reads only the (tiny) index; record
-    bytes stay executor-side."""
-    with open(index_path) as fh:
-        paths = [line.strip() for line in fh if line.strip()]
-    return spark.read.text(paths)
+    bytes stay executor-side. Paths go to ``spark.read.text`` as a
+    list (never joined with a delimiter), so commas and glob
+    metacharacters in a path are read verbatim."""
+    return spark.read.text(manifest_paths(index_path))
 
 
 def read_jsonl(

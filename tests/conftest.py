@@ -23,7 +23,7 @@ ORACLE_SF_DIR = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("ray_mapreduce_spark-tests", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "8")))
+    s = get_spark("ray_mapreduce_spark-tests")
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()

@@ -1763,10 +1763,10 @@ def test_split_leakage_consistent_with_pairs(spark, sf_dir):
     n_pairs sums to the dedup_ngram_jaccard pair count, split labels
     are canonical (split_a <= split_b), and recomputing each pair's
     splits in Python from the shared hash reproduces the matrix."""
-    from ray_mapreduce_spark.plans.sampling import _KNUTH, _MOD
+    from ray_mapreduce_spark.functions.grain import KNUTH, MOD_2_32
 
     def split_of(doc_id):
-        b = (doc_id * _KNUTH) % _MOD % 100
+        b = (doc_id * KNUTH) % MOD_2_32 % 100
         return "train" if b < 90 else ("val" if b < 95 else "test")
 
     rows = _rows(spark, sf_dir, "dedup_split_leakage")
@@ -2733,8 +2733,9 @@ def test_returnflag_anova_numpy_replay(spark, sf_dir):
         groups.setdefault(r["l_returnflag"], []).append(float(r["l_quantity"]))
     k, n = len(groups), len(li)
     grand = sum(sum(g) for g in groups.values()) / n
-    ssb = sum(len(g) * (np.mean(g) - grand) ** 2 for g in groups.values())
-    ssw = sum(sum((x - np.mean(g)) ** 2 for x in g) for g in groups.values())
+    means = {f: np.mean(g) for f, g in groups.items()}
+    ssb = sum(len(g) * (means[f] - grand) ** 2 for f, g in groups.items())
+    ssw = sum(sum((x - means[f]) ** 2 for x in g) for f, g in groups.items())
     f = (ssb / (k - 1)) / (ssw / (n - k))
     assert got["k"] == k and got["n"] == n
     assert abs(got["ss_between"] - ssb) < max(1e-3, 1e-9 * abs(ssb))
@@ -3757,9 +3758,8 @@ def test_late_r11_additions_semantics(spark, sf_dir):
     import duckdb as _dd
 
     from ray_mapreduce_spark.plans import all_queries
+    from ray_mapreduce_spark.functions.grain import KNUTH, MOD_2_32
     from ray_mapreduce_spark.plans.advanced import (
-        AB_KNUTH,
-        AB_MOD,
         DP_EPSILONS,
         DP_GAUSS_CONST,
     )
@@ -3778,7 +3778,7 @@ def test_late_r11_additions_semantics(spark, sf_dir):
     ).fetchall()
     by_type: dict[str, list[tuple[int, int]]] = {}
     for t, uid, cents in rows:
-        by_type.setdefault(t, []).append((uid * AB_KNUTH % AB_MOD % 2, cents))
+        by_type.setdefault(t, []).append((uid * KNUTH % MOD_2_32 % 2, cents))
     for t, arms in by_type.items():
         vals = sorted(c for _, c in arms)
         # tie-averaged rank per distinct value (1-based)
@@ -3893,7 +3893,7 @@ def test_r12_additions_semantics(spark, sf_dir):
     import duckdb as _dd
 
     from ray_mapreduce_spark.plans import all_queries
-    from ray_mapreduce_spark.plans.advanced import AB_KNUTH, AB_MOD
+    from ray_mapreduce_spark.functions.grain import KNUTH, MOD_2_32
 
     q = all_queries()
 
@@ -3946,7 +3946,7 @@ def test_r12_additions_semantics(spark, sf_dir):
     got = cmh[0]
     rows = _dd.sql(
         "SELECT epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000, "
-        f"user_id * {AB_KNUTH} % {AB_MOD} % 2, "
+        f"user_id * {KNUTH} % {MOD_2_32} % 2, "
         "CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END "
         f"FROM '{sf_dir}/events.parquet'"
     ).fetchall()
@@ -4046,7 +4046,7 @@ def test_r12_additions_semantics(spark, sf_dir):
     }
     rows = _dd.sql(
         "SELECT event_type, CAST(round(value*100) AS BIGINT), "
-        f"user_id * {AB_KNUTH} % {AB_MOD} % 2 "
+        f"user_id * {KNUTH} % {MOD_2_32} % 2 "
         f"FROM '{sf_dir}/events.parquet'"
     ).fetchall()
     vals: dict[str, list[tuple[int, int]]] = {}
@@ -4156,9 +4156,8 @@ def test_r13_additions_semantics(spark, sf_dir):
     import duckdb as _dd
 
     from ray_mapreduce_spark.plans import all_queries
+    from ray_mapreduce_spark.functions.grain import KNUTH, MOD_2_32
     from ray_mapreduce_spark.plans.advanced import (
-        AB_KNUTH,
-        AB_MOD,
         BH_ALPHA_INV,
         _BH_B,
         _BH_INV_SQRT_2PI,
@@ -4214,7 +4213,7 @@ def test_r13_additions_semantics(spark, sf_dir):
     }
     rows = _dd.sql(
         "SELECT event_type, CAST(round(value*100) AS BIGINT), "
-        f"user_id * {AB_KNUTH} % {AB_MOD} % 2 "
+        f"user_id * {KNUTH} % {MOD_2_32} % 2 "
         f"FROM '{sf_dir}/events.parquet'"
     ).fetchall()
     vals: dict[str, list[tuple[int, int]]] = {}
@@ -4362,12 +4361,12 @@ def test_benjamini_hochberg_rejects_planted_effect(spark, tmp_path):
     import pyarrow.parquet as pq
 
     from ray_mapreduce_spark.plans import all_queries
-    from ray_mapreduce_spark.plans.advanced import AB_KNUTH, AB_MOD
+    from ray_mapreduce_spark.functions.grain import KNUTH, MOD_2_32
 
     rows = []
     eid = 0
     for uid in range(1, 201):
-        arm = uid * AB_KNUTH % AB_MOD % 2
+        arm = uid * KNUTH % MOD_2_32 % 2
         for j in range(3):
             eid += 1
             rows.append((eid, uid, "boost", 10.0 + 90.0 * arm + 0.01 * (eid % 7)))
@@ -4412,9 +4411,8 @@ def test_late_r13_additions_semantics(spark, sf_dir):
     import duckdb as _dd
 
     from ray_mapreduce_spark.plans import all_queries
+    from ray_mapreduce_spark.functions.grain import KNUTH, MOD_2_32
     from ray_mapreduce_spark.plans.advanced import (
-        AB_KNUTH,
-        AB_MOD,
         ASSOC_MIN_BOTH,
         ASSOC_TOP_N,
     )
@@ -4475,7 +4473,7 @@ def test_late_r13_additions_semantics(spark, sf_dir):
     theta = cov / vpre
     arms = {0: [], 1: []}
     for u in pp:
-        arms[u * AB_KNUTH % AB_MOD % 2].append(u)
+        arms[u * KNUTH % MOD_2_32 % 2].append(u)
     adj, var = {}, {}
     for a, us in arms.items():
         ys = [post[u] - theta * (pre[u] - mpre) for u in us]
@@ -5616,3 +5614,65 @@ def test_intrinsic_dim_manifold_fixture(spark, tmp_path):
     deg = got[2]
     assert deg["n_points"] == 3 and deg["n_used"] == 0, dict(deg.asDict())
     assert deg["sum_lnmu_micro"] == 0 and deg["id_hat"] is None
+
+
+def _write_daily_events(d, n_days):
+    """One ``view`` event a day for ``n_days`` days as
+    ``d/events.parquet``; returns its path."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    day0 = datetime.datetime(2024, 1, 1, 12)
+    t = pa.table(
+        {
+            "event_id": pa.array(range(n_days), pa.int64()),
+            "ts": pa.array(
+                [day0 + datetime.timedelta(days=i) for i in range(n_days)],
+                pa.timestamp("us"),
+            ),
+            "user_id": pa.array([7] * n_days, pa.int64()),
+            "event_type": pa.array(["view"] * n_days, pa.string()),
+            "value": pa.array([1.25 + i for i in range(n_days)], pa.float64()),
+            "props": pa.array(["{}"] * n_days, pa.string()),
+        }
+    )
+    d.mkdir()
+    path = d / "events.parquet"
+    pq.write_table(t, str(path))
+    return path
+
+
+@pytest.mark.parametrize(
+    "name, duckdb_error",
+    [
+        ("events_ewma_residuals", "Overflow in left shift"),
+        ("events_double_ewma_holt", "series longer than 62 steps"),
+    ],
+)
+def test_dyadic_ewma_guard_past_62_steps(spark, tmp_path, name, duckdb_error):
+    """A 63-day series passes the dyadic EWMA's 62-step bound (the
+    power-of-two weights span 2^i in a bigint): the Spark builder
+    raises an error naming its own query, and the DuckDB oracle
+    raises too instead of returning wrapped rows — holt through its
+    ``error()`` guard, residuals on the ``1::BIGINT << 63`` shift.
+    62 days still run on both engines."""
+    import duckdb
+
+    spec = all_queries()[name]
+    for n_days in (62, 63):
+        path = _write_daily_events(tmp_path / f"d{n_days}", n_days)
+        con = duckdb.connect()
+        try:
+            con.execute(f"CREATE VIEW events AS SELECT * FROM read_parquet('{path}')")
+            if n_days == 62:
+                assert len(spec.builder(spark, str(path.parent)).collect()) == 62
+                assert len(con.execute(spec.oracle).fetchall()) == 62
+                continue
+            with pytest.raises(Exception, match=f"{name}: series longer than 62 steps"):
+                spec.builder(spark, str(path.parent)).collect()
+            with pytest.raises(duckdb.Error, match=duckdb_error):
+                con.execute(spec.oracle).fetchall()
+        finally:
+            con.close()

@@ -112,6 +112,14 @@ def test_multiple_files(spark, int_files, tmp_path):
     by_key = {k: (n, s) for k, n, s in out}
     assert sum(n for n, _ in by_key.values()) == 2000
 
+    # Blank lines are skipped and surrounding spaces stripped.
+    spaced = tmp_path / "index_spaced"
+    spaced.write_text(f"\n  {without_header}  \n\n\t{without_header}\n   \n")
+    again = MapReduceWithMultipleFiles(
+        str(spaced), map_fcn, reduce_count_sum, 2, 3, spark=spark
+    )
+    assert sorted(again) == sorted(out)
+
 
 def test_gzip_file_input(spark, tmp_path):
     """Compressed-file parity: the reference reads .gz transparently

@@ -9,9 +9,8 @@ from __future__ import annotations
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
+from ray_mapreduce_spark.functions.grain import KNUTH, MOD_2_32
 from ray_mapreduce_spark.plans.sampling import (
-    _KNUTH,
-    _MOD,
     PACK_CAPACITY,
     _pack_one_class,
 )
@@ -61,8 +60,8 @@ def test_pack_fold_matches_spec(n_toks):
 def test_hash_sample_stable_under_permutation(ids):
     """The sampler's keep-set depends only on the key, never on order
     or grouping — the property that makes corpus builds reproducible."""
-    keep = {i for i in ids if (i * _KNUTH) % _MOD % 10 == 0}
-    assert keep == {i for i in sorted(ids) if (i * _KNUTH) % _MOD % 10 == 0}
+    keep = {i for i in ids if (i * KNUTH) % MOD_2_32 % 10 == 0}
+    assert keep == {i for i in sorted(ids) if (i * KNUTH) % MOD_2_32 % 10 == 0}
     assert keep <= ids
 
 
@@ -114,11 +113,10 @@ def test_mixture_monotone_under_rate_increase(spark, sf_dir):
     property that makes incremental corpus rebuilds append-only."""
     from pyspark.sql import functions as F
 
-    from ray_mapreduce_spark.plans.sampling import _KNUTH, _MOD
     from ray_mapreduce_spark.sources import load_table
 
     d = load_table(spark, sf_dir, "documents")
-    h = (F.col("doc_id") * F.lit(_KNUTH)) % F.lit(_MOD) % 100
+    h = (F.col("doc_id") * F.lit(KNUTH)) % F.lit(MOD_2_32) % 100
     low = {r["doc_id"] for r in d.filter(h < 20).select("doc_id").collect()}
     high = {r["doc_id"] for r in d.filter(h < 35).select("doc_id").collect()}
     assert low <= high

@@ -1,9 +1,11 @@
-"""The text front end and the candidate-pair core are defined once:
-``functions/text.py`` holds the Spark tokenizer, word count and k-gram
-lead chain and the DuckDB tokenizer ``TOKENS_SQL``; ``plans/dedup.py``
-generates the DuckDB shingle list from SHINGLE_K and spells the
-oracles' shingle set once; ``functions/pairs.py`` holds the canonical
-``a.id < b.id`` self-join every near-dup pair generator calls.
+"""The text front end, the candidate-pair core and the events grains
+are defined once: ``functions/text.py`` holds the Spark tokenizer,
+word count and k-gram lead chain and the DuckDB tokenizer
+``TOKENS_SQL``; ``plans/dedup.py`` generates the DuckDB shingle list
+from SHINGLE_K and spells the oracles' shingle set once;
+``functions/pairs.py`` holds the canonical ``a.id < b.id`` self-join
+every near-dup pair generator calls; ``functions/grain.py`` holds the
+UTC day, integer cents and the Knuth hash split for both engines.
 A guard keeps inline copies from coming back; a parity test pins the
 two engines' shingles to each other."""
 
@@ -22,6 +24,11 @@ _SINGLE_DEFINITIONS = {
     re.compile(r"string_split\(lower\(text\), ' '\)\[i\] \|\|"): None,
     re.compile(r"F\.col\(\"a\.\w+\"\) < F\.col\(\"b\.\w+\"\)"): "functions/pairs.py",
     re.compile(r"list_distinct\(\{SHINGLE_LIST_SQL\}\) AS shingles"): "plans/dedup.py",
+    re.compile(r"unix_micros\(ts\) div 86400000000"): "functions/grain.py",
+    re.compile(r"epoch_us\(CAST\(ts AS TIMESTAMP\)\) // 86400000000"): "functions/grain.py",
+    re.compile(r"F\.round\(F\.col\(\"value\"\) \* 100\)"): "functions/grain.py",
+    re.compile(r"round\(value \* 100\)"): "functions/grain.py",
+    re.compile(r"2654435761"): "functions/grain.py",
 }
 
 
@@ -31,8 +38,12 @@ def test_text_front_end_defined_once():
     DuckDB tokenizer ``string_split(lower(text), ' ')`` and its
     ``[i] ||`` shingle comprehension (which has no home: it is
     generated from SHINGLE_K), the canonical-order predicate
-    ``F.col("a.<id>") < F.col("b.<id>")`` and the oracles' shingle set
-    ``list_distinct({SHINGLE_LIST_SQL}) AS shingles``."""
+    ``F.col("a.<id>") < F.col("b.<id>")``, the oracles' shingle set
+    ``list_distinct({SHINGLE_LIST_SQL}) AS shingles``, the UTC day
+    (Spark ``unix_micros(ts) div 86400000000``, DuckDB
+    ``epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000``), the cents of
+    ``value`` (``round(value * 100)`` in either spelling) and the
+    Knuth multiplier ``2654435761``."""
     hits = []
     for root, _, files in os.walk(_PKG):
         for name in sorted(files):
@@ -50,9 +61,10 @@ def test_text_front_end_defined_once():
                             )
     assert not hits, (
         "inline copy of a shared definition; call functions/text.py's tokens() / "
-        "n_words() or functions/pairs.py's canonical_pairs(), or interpolate "
-        "TOKENS_SQL or plans/dedup.py's SHINGLE_LIST_SQL / SHINGLE_SET_SQL / "
-        "SHINGLED_CTE_SQL:\n" + "\n".join(hits)
+        "n_words(), functions/pairs.py's canonical_pairs() or functions/grain.py's "
+        "utc_day() / cents() / knuth_bucket(), or interpolate TOKENS_SQL, "
+        "DAY_SQL, CENTS_SQL, KNUTH / MOD_2_32 or plans/dedup.py's SHINGLE_LIST_SQL / "
+        "SHINGLE_SET_SQL / SHINGLED_CTE_SQL:\n" + "\n".join(hits)
     )
 
 

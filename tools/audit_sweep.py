@@ -366,7 +366,7 @@ def recall_sweep(sf_dir: str) -> int:
     what keeps the rows-only queries honest (VERDICT r5 #5)."""
     import subprocess
 
-    env = dict(os.environ, SPARK_GRAFT_TEST_SF_DIR=sf_dir, SPARK_GRAFT_CPUS="32")
+    env = dict(os.environ, SPARK_GRAFT_TEST_SF_DIR=sf_dir)
     t0 = time.time()
     rc = subprocess.call(
         [sys.executable, "-m", "pytest", "tests/test_extensions.py", "-q"],
