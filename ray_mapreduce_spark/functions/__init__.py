@@ -3,8 +3,9 @@
 Kept intentionally small: a kernel that one plan owns lives next to
 that plan (plans/similarity.py has the dot/norm kernels, plans/dedup.py
 the minhash/simhash columns). Helpers that several plan modules call
-land here: ``scale`` (partition spreading, two-pass global rank and
-running sum), ``stats`` (the six-sum moment fold), ``text`` (the
+land here: ``scale`` (partition spreading and ``two_pass_cumsum``,
+the one two-pass scan kernel behind every global running sum and,
+over ``F.lit(1)``, every global rank), ``stats`` (the six-sum moment fold), ``text`` (the
 text front end — tokenizer, word count, k-gram lead chain and the
 quality closed form), ``pairs`` (the blocked candidate-pair core) and
 ``grain`` (the UTC day, integer cents and Knuth hash split, each with

@@ -32,18 +32,38 @@ def spread_by(df: DataFrame, *cols: str) -> DataFrame:
     return df.repartition(df.sparkSession.sparkContext.defaultParallelism, *cols)
 
 
-def _two_pass_base(df: DataFrame, sort_cols: list[Column | str]):
-    """Shared first pass of the scale-safe global rank / running sum:
+_SCRATCH = ("_pid", "_lcs", "_off", "_ps", "_total")
 
-    1. ``repartitionByRange`` on the sort key (range partition i holds
-       strictly smaller keys than i+1), then number/sum locally per
-       partition;
-    2. one row PER PARTITION of counts/sums -> exclusive running
-       offsets (a window over a few hundred rows at any scale — the
-       only intentionally-tiny single-partition window in the
-       pattern); global value = local value + partition offset.
 
-    The locally-ranked frame feeds TWO branches (offsets and the
+def two_pass_cumsum(
+    df: DataFrame,
+    sort_cols: list[Column | str],
+    value: Column | str,
+    out_col: str,
+    total_col: str | None = None,
+    group_cols: list[str] | None = None,
+) -> DataFrame:
+    """Running ``sum(value) OVER ([PARTITION BY group_cols] ORDER BY
+    sort_cols ROWS UNBOUNDED PRECEDING)`` without a single-partition
+    (or one-group-one-partition) sort. ``group_cols + sort_cols`` MUST
+    be a unique key. A row number is the running sum of ``F.lit(1)``.
+    Adds ``out_col`` and optionally ``total_col`` (the group's sum).
+
+    1. ``repartitionByRange`` on (group, sort) (range partition i
+       holds strictly smaller keys than i+1, and each group spans
+       contiguous partitions), then a running sum per (partition,
+       group);
+    2. one row PER (partition, group) of sums -> exclusive running
+       offsets (a window over a few hundred rows at any scale while
+       |groups| stays far below the data — the only intentionally-
+       tiny single-partition window in the pattern); global value =
+       local value + partition offset.
+
+    The per-partition offsets are exact integer/decimal sums — use
+    integer-typed values so the offset split cannot reorder a float
+    summation.
+
+    The locally-summed frame feeds TWO branches (offsets and the
     final join). Correctness — not just cost — requires both to see
     the SAME range partitioning: RangePartitioner samples its bounds
     with an RDD-id-derived seed, so two independent executions could
@@ -53,100 +73,50 @@ def _two_pass_base(df: DataFrame, sort_cols: list[Column | str]):
     localCheckpoint.
 
     Exchange count: the pattern costs TWO full-frame exchanges, not
-    one — the range exchange here plus a hashpartitioning(_pid[,
-    groups]) exchange for the local window (RangePartitioning does
-    not satisfy the window's ClusteredDistribution, so Spark
-    re-shuffles on _pid). That is the known cost of expressing
-    per-partition rank declaratively; it still beats the
-    single-partition global sort it replaces, whose ONE "exchange"
-    serializes the whole fact table through one task."""
+    one — the range exchange plus a hashpartitioning(_pid[, groups])
+    exchange for the local window (RangePartitioning does not satisfy
+    the window's ClusteredDistribution, so Spark re-shuffles on _pid).
+    That is the known cost of expressing a per-partition scan
+    declaratively; it still beats the single-partition global sort it
+    replaces, whose ONE "exchange" serializes the whole fact table
+    through one task.
+
+    Raises ValueError when ``out_col``, ``total_col`` or a column of
+    ``df`` is one of the scratch names the kernel adds and drops."""
+    for name in (out_col, total_col, *df.columns):
+        if name in _SCRATCH:
+            raise ValueError(f"two_pass_cumsum: column {name!r} is a scratch name")
+    groups = list(group_cols or [])
     parts = df.sparkSession.sparkContext.defaultParallelism
-    ranged = df.repartitionByRange(parts, *sort_cols).withColumn(
+    ranged = df.repartitionByRange(parts, *groups, *sort_cols).withColumn(
         "_pid", F.spark_partition_id()
     )
-    return ranged
-
-
-def two_pass_rank(
-    df: DataFrame,
-    sort_cols: list[Column | str],
-    rank_col: str,
-    total_col: str | None = None,
-    group_cols: list[str] | None = None,
-) -> DataFrame:
-    """``row_number() OVER ([PARTITION BY group_cols] ORDER BY
-    sort_cols)`` without a single-partition (or one-group-one-
-    partition) sort (see ``_two_pass_base``). ``group_cols +
-    sort_cols`` MUST be a unique key or the rank is
-    partition-nondeterministic. With ``group_cols``, the range
-    partitioning is on (group, sort) so each group spans contiguous
-    partitions and the offsets frame holds one row per (partition,
-    group) — broadcast-sized while |groups| stays far below the data
-    (languages, sources, event types). Adds ``rank_col`` (bigint,
-    1-based within group) and optionally ``total_col`` (bigint group
-    row count); all scratch columns are dropped."""
-    groups = list(group_cols or [])
-    ranged = _two_pass_base(df, [*groups, *sort_cols])
-    w_local = Window.partitionBy("_pid", *groups).orderBy(*sort_cols)
-    local = ranged.withColumn("_lrn", F.row_number().over(w_local))
+    w_local = (
+        Window.partitionBy("_pid", *groups)
+        .orderBy(*sort_cols)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    local = ranged.withColumn("_lcs", F.sum(value).over(w_local))
     local = local.localCheckpoint(eager=True)
 
-    counts = local.groupBy("_pid", *groups).agg(F.count(F.lit(1)).alias("_n"))
+    psums = local.groupBy("_pid", *groups).agg(F.sum(value).alias("_ps"))
     w_off = (
         Window.partitionBy(*groups)
         .orderBy("_pid")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
-    offsets = counts.select(
-        "_pid",
-        *groups,
-        F.coalesce(F.sum("_n").over(w_off), F.lit(0)).alias("_off"),
-        F.sum("_n").over(Window.partitionBy(*groups)).alias("_total"),
-    )
-    out = local.join(F.broadcast(offsets), ["_pid", *groups]).withColumn(
-        rank_col, (F.col("_lrn") + F.col("_off")).cast("bigint")
-    )
-    if total_col is not None:
-        out = out.withColumn(total_col, F.col("_total").cast("bigint"))
-    return out.drop("_pid", "_lrn", "_off", "_n", "_total")
-
-
-def two_pass_cumsum(
-    df: DataFrame,
-    sort_cols: list[Column | str],
-    value_col: str,
-    out_col: str,
-    total_col: str | None = None,
-) -> DataFrame:
-    """Global running ``sum(value_col) OVER (ORDER BY sort_cols ROWS
-    UNBOUNDED PRECEDING)`` without a single-partition sort (see
-    ``_two_pass_base``). ``sort_cols`` MUST be a unique key. The
-    per-partition offsets are exact integer/decimal sums of
-    ``value_col`` — use integer-typed values so the offset split
-    cannot reorder a float summation. Adds ``out_col`` and optionally
-    ``total_col`` (grand total) to ``df``."""
-    ranged = _two_pass_base(df, sort_cols)
-    w_local = (
-        Window.partitionBy("_pid")
-        .orderBy(*sort_cols)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    local = ranged.withColumn("_lcs", F.sum(value_col).over(w_local))
-    local = local.localCheckpoint(eager=True)
-
-    psums = local.groupBy("_pid").agg(F.sum(value_col).alias("_ps"))
-    w_off = Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
     offsets = psums.select(
         "_pid",
+        *groups,
         F.coalesce(F.sum("_ps").over(w_off), F.lit(0)).alias("_off"),
-        F.sum("_ps").over(Window.partitionBy()).alias("_total"),
+        F.sum("_ps").over(Window.partitionBy(*groups)).alias("_total"),
     )
-    out = local.join(F.broadcast(offsets), "_pid").withColumn(
+    out = local.join(F.broadcast(offsets), ["_pid", *groups]).withColumn(
         out_col, F.col("_lcs") + F.col("_off")
     )
     if total_col is not None:
         out = out.withColumn(total_col, F.col("_total"))
-    return out.drop("_pid", "_lcs", "_off", "_ps", "_total")
+    return out.drop(*_SCRATCH)
 
 
 def ntile_from_rank(rank: Column, total: Column, k: int) -> Column:

@@ -43,6 +43,7 @@ influence partition counts.
 
 from __future__ import annotations
 
+import itertools
 import math
 from collections.abc import Callable, Iterable
 from typing import Any
@@ -50,7 +51,7 @@ from typing import Any
 from pyspark.sql import SparkSession
 
 from .session import get_spark
-from .sources.text import read_manifest
+from .sources.text import read_manifest, read_text_lines
 
 MapFcn = Callable[[Any], Iterable[tuple[Any, Any]]]
 ReduceFcn = Callable[[Any, list], Any]
@@ -172,8 +173,6 @@ def MapReduceBulk(
         # full buffer slices into whole chunks, and union preserves
         # buffer order. An input that fits in the first buffer is
         # just a list and takes the list path below.
-        import itertools
-
         if dataset_size is not None:
             chunk_size = _chunk_size(dataset_size, num_mappers, max_chunk_size)
         else:
@@ -237,8 +236,6 @@ def MapReduceWithOneFileInput(
     spark = spark or get_spark()
     min_parts = max(int(num_mappers), 1)
     if ignore_first_line:
-        from .sources.text import read_text_lines
-
         rdd = read_text_lines(spark, filename, ignore_first_line=True).rdd.map(
             lambda row: row[0]
         )

@@ -14,10 +14,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.grain import CENTS_SQL, DAY_SQL, KNUTH, MOD_2_32, cents, knuth_bucket, utc_day
-from ..functions.scale import ntile_from_rank, two_pass_cumsum, two_pass_rank
+from ..functions.scale import ntile_from_rank, two_pass_cumsum
 from ..functions.stats import moment_sums
 from ..sources import load_table
 from .registry import register
+from .relational import join_full_outer_nation_counts
 
 
 # --------------------------------------------------------------------------
@@ -311,8 +312,6 @@ def grouping_sets_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def unpivot_nation_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .relational import join_full_outer_nation_counts
-
     wide = join_full_outer_nation_counts(spark, sf_dir)
     return wide.unpivot(
         ids=["nationkey"],
@@ -1113,11 +1112,7 @@ def events_linreg_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
 # events feed a sequential model). Ordering inside each user uses the
 # unique (ts, event_id) composite, so lead() is tie-deterministic and
 # partition-invariant on both engines.
-@register(
-    "events_markov_transitions",
-    tags=("events", "markov", "sequence", "window"),
-    oracle="""
-    WITH seq AS (
+_TRANSITIONS_SQL = """seq AS (
       SELECT user_id, event_type,
              lead(event_type) OVER (
                PARTITION BY user_id ORDER BY ts, event_id
@@ -1129,7 +1124,30 @@ def events_linreg_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
              CAST(count(*) AS BIGINT) AS n_trans
       FROM seq WHERE next_type IS NOT NULL
       GROUP BY event_type, next_type
-    )
+    )"""
+
+
+def _transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``(from_type, to_type, n_trans)``: the Spark twin of
+    ``_TRANSITIONS_SQL``. One shuffle on user_id for the lead()
+    window (the sessionize exchange — at crawl scale, pre-bucketing
+    events by user makes it free), then the transition groupBy
+    collapses the stream to |types|² rows."""
+    e = load_table(spark, sf_dir, "events")
+    wseq = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    seq = e.select(
+        "event_type", F.lead("event_type").over(wseq).alias("next_type")
+    ).filter(F.col("next_type").isNotNull())
+    return seq.groupBy(
+        F.col("event_type").alias("from_type"), F.col("next_type").alias("to_type")
+    ).agg(F.count(F.lit(1)).cast("bigint").alias("n_trans"))
+
+
+@register(
+    "events_markov_transitions",
+    tags=("events", "markov", "sequence", "window"),
+    oracle=f"""
+    WITH {_TRANSITIONS_SQL}
     SELECT from_type, to_type, n_trans,
            round(CAST(n_trans AS DOUBLE)
                  / sum(n_trans) OVER (PARTITION BY from_type) + 1e-9, 4) AS prob
@@ -1140,20 +1158,10 @@ def events_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(from_type, to_type, n_trans, prob): within-user transition
     counts and row-normalized probabilities.
 
-    Scale shape: one shuffle on user_id for the lead() window (the
-    sessionize exchange — at crawl scale, pre-bucketing events by
-    user makes it free), then the transition groupBy collapses the
-    stream to |types|² rows, and the row-normalizing window runs on
-    that tiny matrix. The probability is rational → +1e-9 pre-round
-    bias (gotcha #13)."""
-    e = load_table(spark, sf_dir, "events")
-    wseq = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    seq = e.select(
-        "event_type", F.lead("event_type").over(wseq).alias("next_type")
-    ).filter(F.col("next_type").isNotNull())
-    t = seq.groupBy(
-        F.col("event_type").alias("from_type"), F.col("next_type").alias("to_type")
-    ).agg(F.count(F.lit(1)).cast("bigint").alias("n_trans"))
+    Scale shape: _transitions, then the row-normalizing window runs
+    on that tiny matrix. The probability is rational → +1e-9
+    pre-round bias (gotcha #13)."""
+    t = _transitions(spark, sf_dir)
     wrow = Window.partitionBy("from_type")
     return t.select(
         "from_type",
@@ -1204,7 +1212,7 @@ def orders_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(r_score, f_score, m_score, n_customers, total_monetary) per
     RFM cell. Scale note: each quintile score is a two-pass global
     rank (range partition + broadcast offsets,
-    functions/scale.py::two_pass_rank) over the CUSTOMER aggregate
+    functions/scale.py::two_pass_cumsum) over the CUSTOMER aggregate
     with the exact ntile formula derived from (rank, total) — three
     range exchanges of the dim-sized frame, never a single-partition
     sort (VERDICT r9 #2; each ORDER BY carries the unique c_custkey
@@ -1222,7 +1230,7 @@ def orders_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("f_score", [F.col("freq").desc(), F.col("o_custkey")]),
         ("m_score", [F.col("monetary").desc(), F.col("o_custkey")]),
     ):
-        s = two_pass_rank(s, keys, rank_col="_rn", total_col="_tot")
+        s = two_pass_cumsum(s, keys, F.lit(1), "_rn", total_col="_tot")
         s = s.withColumn(
             score, ntile_from_rank(F.col("_rn"), F.col("_tot"), 5)
         ).drop("_rn", "_tot")
@@ -1447,15 +1455,15 @@ def orders_pareto_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(decile, n_customers, revenue, revenue_share) by customer
     revenue decile. Scale: customer aggregate first; decile
     membership is a two-pass global rank (range partition +
-    broadcast offsets, functions/scale.py::two_pass_rank) + the
+    broadcast offsets, functions/scale.py::two_pass_cumsum) + the
     exact ntile formula — never a single-partition sort (VERDICT r9
     #2). Total revenue is a window over the 10-ROW decile frame (the
     customer aggregate is scanned exactly once, post-checkpoint);
     money sums carry the magnitude-scaled +1e-6 bias (gotcha #3)."""
     o = load_table(spark, sf_dir, "orders")
     m = o.groupBy("o_custkey").agg(F.sum("o_totalprice").alias("monetary"))
-    t = two_pass_rank(
-        m, [F.col("monetary").desc(), F.col("o_custkey")], "_rn", total_col="_tot"
+    t = two_pass_cumsum(
+        m, [F.col("monetary").desc(), F.col("o_custkey")], F.lit(1), "_rn", total_col="_tot"
     ).withColumn("decile", ntile_from_rank(F.col("_rn"), F.col("_tot"), 10))
     g = t.groupBy(F.col("decile").cast("bigint").alias("decile")).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_customers"),
@@ -1579,6 +1587,60 @@ def events_top_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
+# Order-part co-occurrence, shared by the basket and the association
+# rules: the distinct (order, part) frame `op`, per-part order counts
+# `cnt` (n_with), the order total `tot` (n_orders) and the unordered
+# part pairs `pairs` (pa < pb, n_both) from the orderkey self-join.
+_PART_PAIRS_SQL = """op AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
+    cnt AS (
+      SELECT l_partkey, CAST(count(*) AS BIGINT) AS n_with
+      FROM op GROUP BY l_partkey
+    ),
+    tot AS (
+      SELECT CAST(count(DISTINCT l_orderkey) AS BIGINT) AS n_orders FROM op
+    ),
+    pairs AS (
+      SELECT a.l_partkey AS pa, b.l_partkey AS pb,
+             CAST(count(*) AS BIGINT) AS n_both
+      FROM op a JOIN op b
+        ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
+      GROUP BY a.l_partkey, b.l_partkey
+    )"""
+
+
+def _order_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The distinct ``(l_orderkey, l_partkey)`` frame ``op``."""
+    return (
+        load_table(spark, sf_dir, "lineitem")
+        .select("l_orderkey", "l_partkey")
+        .distinct()
+    )
+
+
+def _part_pairs(op: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
+    """The Spark twin of ``_PART_PAIRS_SQL`` over ``op``: ``pairs``
+    (pa, pb, n_both), the per-part counts twice as ``ca`` (ka, na)
+    and ``cb`` (kb, nb) for the two pair ends, and ``tot``
+    (n_orders)."""
+    a = op.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pa"))
+    b = op.select(F.col("l_orderkey").alias("ok2"), F.col("l_partkey").alias("pb"))
+    pairs = (
+        a.join(b, (a.ok == b.ok2) & (a.pa < b.pb))
+        .groupBy("pa", "pb")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("n_both"))
+    )
+    cnt = op.groupBy("l_partkey").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_with")
+    )
+    tot = op.agg(
+        F.countDistinct("l_orderkey").cast("bigint").alias("n_orders")
+    )
+    ca = cnt.select(F.col("l_partkey").alias("ka"), F.col("n_with").alias("na"))
+    cb = cnt.select(F.col("l_partkey").alias("kb"), F.col("n_with").alias("nb"))
+    return pairs, ca, cb, tot
+
+
+# --------------------------------------------------------------------------
 # Market-basket co-occurrence: which part pairs ship together in one
 # order, with lift against independence — the classic association
 # mining primitive, and the repo's bounded pair-explosion exercise:
@@ -1591,27 +1653,13 @@ BASKET_TOP_N = 50
     "orders_market_basket_pairs",
     tags=("orders", "lineitem", "self-join", "association", "topk"),
     oracle=f"""
-    WITH op AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-    cnt AS (
-      SELECT l_partkey, CAST(count(*) AS BIGINT) AS n_orders_with
-      FROM op GROUP BY l_partkey
-    ),
-    tot AS (
-      SELECT CAST(count(DISTINCT l_orderkey) AS BIGINT) AS n_orders FROM op
-    ),
-    pairs AS (
-      SELECT a.l_partkey AS part_a, b.l_partkey AS part_b,
-             CAST(count(*) AS BIGINT) AS n_both
-      FROM op a JOIN op b
-        ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-      GROUP BY a.l_partkey, b.l_partkey
-    )
-    SELECT part_a, part_b, n_both,
+    WITH {_PART_PAIRS_SQL}
+    SELECT pa AS part_a, pb AS part_b, n_both,
            round(CAST(n_both AS DOUBLE) * t.n_orders
-                 / (ca.n_orders_with * cb.n_orders_with) + 1e-9, 4) AS lift
+                 / (ca.n_with * cb.n_with) + 1e-9, 4) AS lift
     FROM pairs
-    JOIN cnt ca ON ca.l_partkey = part_a
-    JOIN cnt cb ON cb.l_partkey = part_b
+    JOIN cnt ca ON ca.l_partkey = pa
+    JOIN cnt cb ON cb.l_partkey = pb
     CROSS JOIN tot t
     ORDER BY n_both DESC, part_a, part_b
     LIMIT {BASKET_TOP_N}
@@ -1626,37 +1674,14 @@ def orders_market_basket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the per-part counts join is equi (AQE broadcasts it at small sf),
     n_orders is a 1-row broadcast scalar, and the top-N rides
     TakeOrdered. Lift is a ratio of exact integers (+1e-9 bias)."""
-    op = (
-        load_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .distinct()
-    )
-    a = op.select(
-        F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("part_a")
-    )
-    b = op.select(
-        F.col("l_orderkey").alias("ok2"), F.col("l_partkey").alias("part_b")
-    )
-    pairs = (
-        a.join(b, (a.ok == b.ok2) & (a.part_a < b.part_b))
-        .groupBy("part_a", "part_b")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_both"))
-    )
-    cnt = op.groupBy("l_partkey").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_orders_with")
-    )
-    tot = op.agg(
-        F.countDistinct("l_orderkey").cast("bigint").alias("n_orders")
-    )
-    ca = cnt.select(F.col("l_partkey").alias("ka"), F.col("n_orders_with").alias("na"))
-    cb = cnt.select(F.col("l_partkey").alias("kb"), F.col("n_orders_with").alias("nb"))
+    pairs, ca, cb, tot = _part_pairs(_order_parts(spark, sf_dir))
     return (
-        pairs.join(ca, pairs.part_a == ca.ka)
-        .join(cb, pairs.part_b == cb.kb)
+        pairs.join(ca, pairs.pa == ca.ka)
+        .join(cb, pairs.pb == cb.kb)
         .join(F.broadcast(tot))
         .select(
-            "part_a",
-            "part_b",
+            F.col("pa").alias("part_a"),
+            F.col("pb").alias("part_b"),
             "n_both",
             F.round(
                 F.col("n_both").cast("double")
@@ -1911,7 +1936,7 @@ def events_user_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the corpus collapses to one row per user first
     (partial-aggregated); the global rank over THAT fact-proportional
     aggregate uses the two-pass range-partition + broadcast-offsets
-    pattern (functions/scale.py::two_pass_rank — never a
+    pattern (functions/scale.py::two_pass_cumsum — never a
     single-partition sort; VERDICT r9 #2). The rank-weighted sum is
     exact integer arithmetic (~1e12 ≪ 2^53); only the final ratio is
     floating (+1e-9 bias, `+ 0.0` for the perfectly-uniform gini=0
@@ -1919,7 +1944,7 @@ def events_user_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     u = load_table(spark, sf_dir, "events").groupBy("user_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("n")
     )
-    r = two_pass_rank(u, ["n", "user_id"], rank_col="i").select("n", "i")
+    r = two_pass_cumsum(u, ["n", "user_id"], F.lit(1), "i").select("n", "i")
     cnt = F.count(F.lit(1))
     tot = F.sum("n")
     return r.agg(
@@ -2324,21 +2349,12 @@ def supplier_reliability_wilson(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Open-order backlog over time (interval stabbing): how many orders
-# were simultaneously "open" (placed but not yet fully shipped) on
-# each day the count changes. The classic delta-encoding plan: +1 at
-# the open date, -1 the day after the close date, then a running sum
-# over the per-day deltas — counting overlapping intervals without
-# ever joining intervals to a calendar spine. Close = the order's
-# LAST lineitem shipdate (backdated ships clamp to the order date —
-# the q12 delay-band finding). Orders with no lineitems (they exist
-# at sf0.1 — the q13 finding) never close and are excluded by the
-# inner join.
-@register(
-    "orders_open_backlog_daily",
-    tags=("orders", "lineitem", "interval", "window", "running-sum"),
-    oracle="""
-    WITH close AS (
+# Each order's open/close interval and its +1/-1 change days. Close =
+# the order's LAST lineitem shipdate (backdated ships clamp to the
+# order date — the q12 delay-band finding). Orders with no lineitems
+# (they exist at sf0.1 — the q13 finding) never close and are
+# excluded by the inner join.
+_ORDER_DELTAS_SQL = """close AS (
       SELECT l.l_orderkey,
              greatest(max(CAST(l.l_shipdate AS DATE)),
                       min(CAST(o.o_orderdate AS DATE))) AS close_d,
@@ -2351,7 +2367,58 @@ def supplier_reliability_wilson(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT open_d AS day, 1 AS d FROM close
       UNION ALL
       SELECT close_d + INTERVAL 1 DAY AS day, -1 AS d FROM close
-    ),
+    )"""
+
+
+def _order_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``(l_orderkey, close_d, open_d)``: the Spark twin of the
+    ``close`` CTE of ``_ORDER_DELTAS_SQL``. One fact shuffle (the
+    per-order agg; orders joins on the same key so AQE
+    co-partitions)."""
+    l = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
+    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
+    return (
+        l.join(o, l.l_orderkey == o.o_orderkey)
+        .groupBy("l_orderkey")
+        .agg(
+            F.greatest(
+                F.max(F.col("l_shipdate").cast("date")),
+                F.min(F.col("o_orderdate").cast("date")),
+            ).alias("close_d"),
+            F.min(F.col("o_orderdate").cast("date")).alias("open_d"),
+        )
+    )
+
+
+def _order_deltas(close: DataFrame) -> DataFrame:
+    """``(day, d)``: +1 on each order's open day and -1 the day after
+    its close — the Spark twin of the ``delta`` CTE of
+    ``_ORDER_DELTAS_SQL``. Doubles only the aggregated order frame."""
+    return close.select(
+        F.explode(
+            F.array(
+                F.struct(F.col("open_d").alias("day"), F.lit(1).alias("d")),
+                F.struct(
+                    F.date_add(F.col("close_d"), 1).alias("day"),
+                    F.lit(-1).alias("d"),
+                ),
+            )
+        ).alias("x")
+    ).select("x.day", "x.d")
+
+
+# --------------------------------------------------------------------------
+# Open-order backlog over time (interval stabbing): how many orders
+# were simultaneously "open" (placed but not yet fully shipped) on
+# each day the count changes. The classic delta-encoding plan: +1 at
+# the open date, -1 the day after the close date, then a running sum
+# over the per-day deltas — counting overlapping intervals without
+# ever joining intervals to a calendar spine (_ORDER_DELTAS_SQL).
+@register(
+    "orders_open_backlog_daily",
+    tags=("orders", "lineitem", "interval", "window", "running-sum"),
+    oracle=f"""
+    WITH {_ORDER_DELTAS_SQL},
     daily AS (
       SELECT CAST(day AS DATE) AS day,
              CAST(sum(CASE WHEN d = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_opened,
@@ -2378,30 +2445,7 @@ def orders_open_backlog_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference parity: interval counting is the canonical
     reduce-by-key + scan composition (reference mapreduce.py:75-78
     expresses only the reduce half)."""
-    l = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
-    close = (
-        l.join(o, l.l_orderkey == o.o_orderkey)
-        .groupBy("l_orderkey")
-        .agg(
-            F.greatest(
-                F.max(F.col("l_shipdate").cast("date")),
-                F.min(F.col("o_orderdate").cast("date")),
-            ).alias("close_d"),
-            F.min(F.col("o_orderdate").cast("date")).alias("open_d"),
-        )
-    )
-    delta = close.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("open_d").alias("day"), F.lit(1).alias("d")),
-                F.struct(
-                    F.date_add(F.col("close_d"), 1).alias("day"),
-                    F.lit(-1).alias("d"),
-                ),
-            )
-        ).alias("x")
-    ).select("x.day", "x.d")
+    delta = _order_deltas(_order_spans(spark, sf_dir))
     daily = delta.groupBy("day").agg(
         F.sum(F.when(F.col("d") == 1, 1).otherwise(0)).cast("bigint").alias("n_opened"),
         F.sum(F.when(F.col("d") == -1, 1).otherwise(0)).cast("bigint").alias("n_closed"),
@@ -2642,17 +2686,14 @@ def events_seasonal_forecast_smape(spark: SparkSession, sf_dir: str) -> DataFram
 
 
 # --------------------------------------------------------------------------
-# Linear multi-touch attribution: each purchase's value is split
-# equally across the view/click touches since the user's previous
-# purchase — the classic marketing-credit model, and the inverse of
-# last-click (asof_join_last_click gives 100% to the final touch;
-# this spreads it). Touch grouping = reverse running purchase count,
-# so a touch belongs to the NEXT purchase after it.
-@register(
-    "events_attribution_linear",
-    tags=("events", "attribution", "window", "aggregate"),
-    oracle=f"""
-    WITH e AS (
+# The touch groups of the attribution queries: view/click/purchase
+# events with purchase value in integer MICRO-units (cents * 10000),
+# and grp = the reverse running purchase count over the unique
+# (us DESC, event_id DESC) order, so a touch belongs to the NEXT
+# purchase after it. Trailing touches with no later purchase
+# (grp = 0) are dropped by the Spark form; the SQL twin keeps them
+# for the consumer's `grp >= 1` filter.
+_TOUCH_GROUPS_SQL = f"""e AS (
       SELECT user_id, event_type, event_id,
              epoch_us(CAST(ts AS TIMESTAMP)) AS us,
              {CENTS_SQL} * 10000 AS vu_u
@@ -2663,7 +2704,46 @@ def events_seasonal_forecast_smape(spark: SparkSession, sf_dir: str) -> DataFram
         OVER (PARTITION BY user_id ORDER BY us DESC, event_id DESC
               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS grp
       FROM e
-    ),
+    )"""
+
+
+def _touch_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``(user_id, event_type, event_id, us, vu_u, grp)`` for grp >= 1:
+    the Spark twin of ``_TOUCH_GROUPS_SQL``."""
+    e = load_table(spark, sf_dir, "events")
+    e2 = e.filter(
+        F.col("event_type").isin("view", "click", "purchase")
+    ).select(
+        "user_id",
+        "event_type",
+        "event_id",
+        F.unix_micros("ts").alias("us"),
+        (cents() * 10000).alias("vu_u"),
+    )
+    w = (
+        Window.partitionBy("user_id")
+        .orderBy(F.col("us").desc(), F.col("event_id").desc())
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    return e2.withColumn(
+        "grp",
+        F.sum(F.when(F.col("event_type") == "purchase", 1).otherwise(0))
+        .over(w)
+        .cast("bigint"),
+    ).filter(F.col("grp") >= 1)
+
+
+# --------------------------------------------------------------------------
+# Linear multi-touch attribution: each purchase's value is split
+# equally across the view/click touches since the user's previous
+# purchase — the classic marketing-credit model, and the inverse of
+# last-click (asof_join_last_click gives 100% to the final touch;
+# this spreads it). Touches are grouped by _touch_groups.
+@register(
+    "events_attribution_linear",
+    tags=("events", "attribution", "window", "aggregate"),
+    oracle=f"""
+    WITH {_TOUCH_GROUPS_SQL},
     ga AS (
       SELECT user_id, grp,
              max(CASE WHEN event_type = 'purchase' THEN vu_u END) AS vu,
@@ -2696,35 +2776,14 @@ def events_attribution_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     positives) and every aggregate is an order-free integer sum —
     the one float division happens at output (+1e-9, positive).
     Group id = reverse running purchase count over the unique
-    (us DESC, event_id DESC) order: touches before a purchase (and
-    after the previous one) share its count. Scale shape: one
+    (us DESC, event_id DESC) order (_touch_groups). Scale shape: one
     user-keyed window sort, one (user, grp) partial agg on the SAME
     partitioning (no second exchange), then a 2-row unpivot of one
     global agg — per-type sums come off the grouped frame, so touch
     rows are never joined back. Trailing touches with no subsequent
     purchase (grp = 0) and touchless purchases earn/get nothing, on
     both engines by the same predicates."""
-    e = load_table(spark, sf_dir, "events")
-    e2 = e.filter(
-        F.col("event_type").isin("view", "click", "purchase")
-    ).select(
-        "user_id",
-        "event_type",
-        "event_id",
-        F.unix_micros("ts").alias("us"),
-        (cents() * 10000).alias("vu_u"),
-    )
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy(F.col("us").desc(), F.col("event_id").desc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    g = e2.withColumn(
-        "grp",
-        F.sum(F.when(F.col("event_type") == "purchase", 1).otherwise(0))
-        .over(w)
-        .cast("bigint"),
-    ).filter(F.col("grp") >= 1)
+    g = _touch_groups(spark, sf_dir)
     ga = g.groupBy("user_id", "grp").agg(
         F.max(F.when(F.col("event_type") == "purchase", F.col("vu_u"))).alias("vu"),
         F.sum(F.when(F.col("event_type") == "view", 1).otherwise(0))
@@ -3705,18 +3764,7 @@ def events_gap_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
     "events_attribution_ushape",
     tags=("events", "attribution", "window", "aggregate"),
     oracle=f"""
-    WITH e AS (
-      SELECT user_id, event_type, event_id,
-             epoch_us(CAST(ts AS TIMESTAMP)) AS us,
-             {CENTS_SQL} * 10000 AS vu_u
-      FROM events WHERE event_type IN ('view', 'click', 'purchase')
-    ),
-    g AS (
-      SELECT *, CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-        OVER (PARTITION BY user_id ORDER BY us DESC, event_id DESC
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS grp
-      FROM e
-    ),
+    WITH {_TOUCH_GROUPS_SQL},
     ga AS (
       SELECT user_id, grp,
              max(CASE WHEN event_type = 'purchase' THEN vu_u END) AS vu,
@@ -3755,33 +3803,13 @@ def events_attribution_ushape(spark: SparkSession, sf_dir: str) -> DataFrame:
     role. Determinism: purchase value in integer micro-units, role
     credits are integer floor-divides and exact remainders, every
     aggregate an order-free integer sum; the one float division is
-    at output. Shares the reverse-running-purchase-count group id
-    (and its determinism argument) with events_attribution_linear —
-    the two builders differ only past the (user, grp) aggregate.
+    at output. Shares _touch_groups (and its determinism argument)
+    with events_attribution_linear — the two builders differ only
+    past the (user, grp) aggregate.
     Scale shape: one user-keyed window sort, one (user, grp) partial
     agg on the same partitioning, then a 3-row unpivot of one global
     agg."""
-    e = load_table(spark, sf_dir, "events")
-    e2 = e.filter(
-        F.col("event_type").isin("view", "click", "purchase")
-    ).select(
-        "user_id",
-        "event_type",
-        "event_id",
-        F.unix_micros("ts").alias("us"),
-        (cents() * 10000).alias("vu_u"),
-    )
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy(F.col("us").desc(), F.col("event_id").desc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    g = e2.withColumn(
-        "grp",
-        F.sum(F.when(F.col("event_type") == "purchase", 1).otherwise(0))
-        .over(w)
-        .cast("bigint"),
-    ).filter(F.col("grp") >= 1)
+    g = _touch_groups(spark, sf_dir)
     ga = g.groupBy("user_id", "grp").agg(
         F.max(F.when(F.col("event_type") == "purchase", F.col("vu_u"))).alias(
             "vu"
@@ -5977,25 +6005,13 @@ def lineitem_price_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "events_markov_entropy_rate",
     tags=("events", "markov", "entropy", "sequence", "window"),
-    oracle="""
-    WITH seq AS (
-      SELECT user_id, event_type,
-             lead(event_type) OVER (
-               PARTITION BY user_id ORDER BY ts, event_id
-             ) AS next_type
-      FROM events
-    ),
-    t AS (
-      SELECT event_type AS from_type, next_type AS to_type,
-             CAST(count(*) AS BIGINT) AS c
-      FROM seq WHERE next_type IS NOT NULL
-      GROUP BY 1, 2
-    ),
+    oracle=f"""
+    WITH {_TRANSITIONS_SQL},
     s AS (
       SELECT from_type,
-             CAST(sum(c) AS BIGINT) AS n_out,
+             CAST(sum(n_trans) AS BIGINT) AS n_out,
              CAST(count(*) AS BIGINT) AS n_next_types,
-             sum(CAST(c AS DOUBLE) * ln(CAST(c AS DOUBLE))) AS sclnc
+             sum(CAST(n_trans AS DOUBLE) * ln(CAST(n_trans AS DOUBLE))) AS sclnc
       FROM t GROUP BY 1
     ),
     tot AS (SELECT CAST(sum(n_out) AS BIGINT) AS nn FROM s)
@@ -6021,24 +6037,13 @@ def events_markov_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     trick) — the one order-divergent sum is divided by n_out, which
     shrinks ulp divergence ~n·ulp(sum)/n far below the +1e-9 bias;
     near-zero entropies get +0.0 (signed-zero rule). Scale shape:
-    one user-keyed window exchange (shared with the sessionize
-    family), transition groupBy collapses to |types|^2 rows, the
-    rest runs on that tiny frame with a broadcast scalar total."""
-    e = load_table(spark, sf_dir, "events")
-    wseq = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    seq = e.select(
-        "event_type", F.lead("event_type").over(wseq).alias("next_type")
-    ).filter(F.col("next_type").isNotNull())
-    t = seq.groupBy(
-        F.col("event_type").alias("from_type"),
-        F.col("next_type").alias("to_type"),
-    ).agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-    s = t.groupBy("from_type").agg(
-        F.sum("c").cast("bigint").alias("n_out"),
+    _transitions, then the rest runs on that tiny frame with a
+    broadcast scalar total."""
+    c = F.col("n_trans").cast("double")
+    s = _transitions(spark, sf_dir).groupBy("from_type").agg(
+        F.sum("n_trans").cast("bigint").alias("n_out"),
         F.count(F.lit(1)).cast("bigint").alias("n_next_types"),
-        F.sum(F.col("c").cast("double") * F.log(F.col("c").cast("double"))).alias(
-            "sclnc"
-        ),
+        F.sum(c * F.log(c)).alias("sclnc"),
     )
     tot = s.agg(F.sum("n_out").cast("bigint").alias("nn"))
     h = F.log(F.col("n_out").cast("double")) - F.col("sclnc") / F.col("n_out")
@@ -6756,6 +6761,22 @@ def _arm_sums_sql(v: str) -> str:
                       ELSE 0 END) AS s21"""
 
 
+# The oracles' Welch z of m1 - m0 over the _arm_sums_sql columns —
+# the SQL twin of _arm_welch's z.
+_ARM_WELCH_Z_SQL = """(CAST(s11 AS DOUBLE) / nullif(n1, 0)
+                - CAST(s10 AS DOUBLE) / nullif(n0, 0))
+               / nullif(sqrt(
+                   greatest(CAST(s21 AS DOUBLE) / nullif(n1, 0)
+                            - (CAST(s11 AS DOUBLE) / nullif(n1, 0))
+                              * (CAST(s11 AS DOUBLE) / nullif(n1, 0)),
+                            0.0) / nullif(n1, 0)
+                   + greatest(CAST(s20 AS DOUBLE) / nullif(n0, 0)
+                              - (CAST(s10 AS DOUBLE) / nullif(n0, 0))
+                                * (CAST(s10 AS DOUBLE) / nullif(n0, 0)),
+                              0.0) / nullif(n0, 0)
+                 ), 0.0)"""
+
+
 def _arm_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``(event_type, cents, arm, cnt)``: the Spark twin of
     ``_ARM_HIST_SQL``."""
@@ -6867,18 +6888,7 @@ def _arm_welch() -> tuple[Column, Column, Column]:
              AS wmean0,
            round(CAST(s11 AS DOUBLE) / nullif(n1, 0) / 100 + 1e-9, 6)
              AS wmean1,
-           round((CAST(s11 AS DOUBLE) / nullif(n1, 0)
-                  - CAST(s10 AS DOUBLE) / nullif(n0, 0))
-                 / nullif(sqrt(
-                     greatest(CAST(s21 AS DOUBLE) / nullif(n1, 0)
-                              - (CAST(s11 AS DOUBLE) / nullif(n1, 0))
-                                * (CAST(s11 AS DOUBLE) / nullif(n1, 0)),
-                              0.0) / nullif(n1, 0)
-                     + greatest(CAST(s20 AS DOUBLE) / nullif(n0, 0)
-                                - (CAST(s10 AS DOUBLE) / nullif(n0, 0))
-                                  * (CAST(s10 AS DOUBLE) / nullif(n0, 0)),
-                                0.0) / nullif(n0, 0)
-                   ), 0.0) + 1e-9, 4) + 0.0 AS z
+           round({_ARM_WELCH_Z_SQL} + 1e-9, 4) + 0.0 AS z
     FROM a
     """,
 )
@@ -7114,18 +7124,7 @@ def _bh_p_sql(az: str) -> str:
     z AS (
       SELECT event_type, n0, n1,
              coalesce(
-               (CAST(s11 AS DOUBLE) / nullif(n1, 0)
-                - CAST(s10 AS DOUBLE) / nullif(n0, 0))
-               / nullif(sqrt(
-                   greatest(CAST(s21 AS DOUBLE) / nullif(n1, 0)
-                            - (CAST(s11 AS DOUBLE) / nullif(n1, 0))
-                              * (CAST(s11 AS DOUBLE) / nullif(n1, 0)),
-                            0.0) / nullif(n1, 0)
-                   + greatest(CAST(s20 AS DOUBLE) / nullif(n0, 0)
-                              - (CAST(s10 AS DOUBLE) / nullif(n0, 0))
-                                * (CAST(s10 AS DOUBLE) / nullif(n0, 0)),
-                              0.0) / nullif(n0, 0)
-                 ), 0.0), 0.0) AS zv
+               {_ARM_WELCH_Z_SQL}, 0.0) AS zv
       FROM a
     ),
     p AS (
@@ -7247,21 +7246,7 @@ ASSOC_TOP_N = 50
     "orders_association_rules",
     tags=("orders", "lineitem", "association", "rules", "topk"),
     oracle=f"""
-    WITH op AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-    cnt AS (
-      SELECT l_partkey, CAST(count(*) AS BIGINT) AS n_with
-      FROM op GROUP BY l_partkey
-    ),
-    tot AS (
-      SELECT CAST(count(DISTINCT l_orderkey) AS BIGINT) AS n_orders FROM op
-    ),
-    pairs AS (
-      SELECT a.l_partkey AS pa, b.l_partkey AS pb,
-             CAST(count(*) AS BIGINT) AS n_both
-      FROM op a JOIN op b
-        ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-      GROUP BY a.l_partkey, b.l_partkey
-    ),
+    WITH {_PART_PAIRS_SQL},
     rules AS (
       SELECT pa AS antecedent, pb AS consequent, n_both FROM pairs
       UNION ALL
@@ -7295,25 +7280,14 @@ def orders_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange; both rule directions explode from the single pair
     aggregate; the per-part count joins are equi (broadcast at small
     sf); top-N rides TakeOrdered."""
-    op = (
-        load_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .distinct()
-    )
     # `op` feeds FOUR consumers: the a/b self-join plus the cnt
     # (groupBy partkey) and tot (countDistinct) branches — the latter
     # two are differently-shaped siblings that never exchange-reuse
     # (gotcha #14), so without this the scan+distinct lineage executes
     # up to four times (ADVICE r13). One eager checkpoint (gotcha #9);
     # the self-join of the checkpointed frame still runtime-reuses.
-    op = op.localCheckpoint(eager=True)
-    a = op.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pa"))
-    b = op.select(F.col("l_orderkey").alias("ok2"), F.col("l_partkey").alias("pb"))
-    pairs = (
-        a.join(b, (a.ok == b.ok2) & (a.pa < b.pb))
-        .groupBy("pa", "pb")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_both"))
-    )
+    op = _order_parts(spark, sf_dir).localCheckpoint(eager=True)
+    pairs, ca, cb, tot = _part_pairs(op)
     rules = pairs.select(
         F.explode(
             F.array(
@@ -7330,14 +7304,6 @@ def orders_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("r")
     ).select("r.antecedent", "r.consequent", "r.n_both")
-    cnt = op.groupBy("l_partkey").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_with")
-    )
-    tot = op.agg(
-        F.countDistinct("l_orderkey").cast("bigint").alias("n_orders")
-    )
-    ca = cnt.select(F.col("l_partkey").alias("ka"), F.col("n_with").alias("na"))
-    cb = cnt.select(F.col("l_partkey").alias("kb"), F.col("n_with").alias("nb"))
     return (
         rules.filter(F.col("n_both") >= ASSOC_MIN_BOTH)
         .join(ca, F.col("antecedent") == F.col("ka"))
@@ -7959,16 +7925,8 @@ def events_page_hinkley_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "orders_queue_little_law",
     tags=("orders", "lineitem", "queue", "interval", "stats", "window"),
-    oracle="""
-    WITH close AS (
-      SELECT l.l_orderkey,
-             greatest(max(CAST(l.l_shipdate AS DATE)),
-                      min(CAST(o.o_orderdate AS DATE))) AS close_d,
-             min(CAST(o.o_orderdate AS DATE)) AS open_d
-      FROM lineitem l
-      JOIN orders o ON o.o_orderkey = l.l_orderkey
-      GROUP BY l.l_orderkey
-    ),
+    oracle=f"""
+    WITH {_ORDER_DELTAS_SQL},
     direct AS (
       SELECT CAST(count(*) AS BIGINT) AS n_orders,
              CAST(sum(date_diff('day', open_d, close_d) + 1) AS BIGINT)
@@ -7976,11 +7934,6 @@ def events_page_hinkley_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
              CAST(date_diff('day', min(open_d), max(close_d)) + 1 AS BIGINT)
                AS n_days
       FROM close
-    ),
-    delta AS (
-      SELECT open_d AS day, 1 AS d FROM close
-      UNION ALL
-      SELECT close_d + INTERVAL 1 DAY AS day, -1 AS d FROM close
     ),
     daily AS (
       SELECT CAST(day AS DATE) AS day, CAST(sum(d) AS BIGINT) AS delta
@@ -8021,23 +7974,10 @@ def orders_queue_little_law(spark: SparkSession, sf_dir: str) -> DataFrame:
     the concurrent-open count (exact-integer equality, hashed), plus
     arrival rate, mean time-in-system and time-average backlog as
     single divisions of exact integers (see header)."""
-    l = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
-    close = (
-        l.join(o, l.l_orderkey == o.o_orderkey)
-        .groupBy("l_orderkey")
-        .agg(
-            F.greatest(
-                F.max(F.col("l_shipdate").cast("date")),
-                F.min(F.col("o_orderdate").cast("date")),
-            ).alias("close_d"),
-            F.min(F.col("o_orderdate").cast("date")).alias("open_d"),
-        )
-        # gotcha #9: direct agg + delta explode are sibling consumers
-        # under the final join — lazy persist could be missed
-        # concurrently; eager checkpoint the aggregated frame.
-        .localCheckpoint(eager=True)
-    )
+    # gotcha #9: direct agg + delta explode are sibling consumers
+    # under the final join — lazy persist could be missed
+    # concurrently; eager checkpoint the aggregated frame.
+    close = _order_spans(spark, sf_dir).localCheckpoint(eager=True)
     direct = close.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_orders"),
         F.sum(F.datediff("close_d", "open_d") + F.lit(1))
@@ -8047,17 +7987,9 @@ def orders_queue_little_law(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("n_days"),
     )
-    delta = close.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("open_d").alias("day"), F.lit(1).alias("d")),
-                F.struct(
-                    F.date_add("close_d", 1).alias("day"), F.lit(-1).alias("d")
-                ),
-            )
-        ).alias("x")
-    ).select("x.day", "x.d")
-    daily = delta.groupBy("day").agg(F.sum("d").cast("bigint").alias("delta"))
+    daily = _order_deltas(close).groupBy("day").agg(
+        F.sum("d").cast("bigint").alias("delta")
+    )
     wrun = Window.orderBy("day").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )

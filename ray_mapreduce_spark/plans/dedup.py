@@ -30,6 +30,7 @@ from ..functions.grain import KNUTH, MOD_2_32, knuth_bucket
 from ..functions.pairs import canonical_pairs, cap_blocks, jaccard_verify, saturation_guard
 from ..functions.scale import spread_by as _spread_by
 from ..functions.text import QUALITY_RAW_SQL, TOKENS_SQL, lead_chain, quality_raw_col, tokens
+from ..operators.clustering import connected_components, dedup_cluster_survivors
 from ..sources import load_table
 from .registry import register
 
@@ -81,6 +82,15 @@ SHINGLE_PAIRS_SQL = """SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
              len(a.shingles) AS n_a, len(b.shingles) AS n_b
       FROM shingled a JOIN shingled b
         ON a.lang = b.lang AND a.doc_id < b.doc_id"""
+
+
+def _jaccard_at_least_sql(thr: float) -> str:
+    """The oracles' twin of functions/pairs.py::jaccard_verify: the
+    WHERE predicate keeping a SHINGLE_PAIRS_SQL pair whose shingle-set
+    Jaccard is at least ``thr``."""
+    return f"""CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE)
+            / (len(a.shingles) + len(b.shingles)
+               - len(list_intersect(a.shingles, b.shingles))) >= {thr}"""
 
 
 # --------------------------------------------------------------------------
@@ -603,8 +613,6 @@ def dedup_clusters(
     re-running the LSH pipeline — connected_components eagerly
     checkpoints its edge list, so whichever frame arrives here
     executes its lineage exactly once either way."""
-    from ..operators.clustering import dedup_cluster_survivors
-
     d = load_table(spark, sf_dir, "documents")
     if pairs is None:
         pairs = dedup_minhash_pairs(spark, sf_dir)
@@ -625,8 +633,6 @@ def dedup_clusters(
     tags=("dedup", "pipeline", "text", "clustering"),
 )
 def pipeline_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.clustering import connected_components
-
     # Project to the needed columns up front: every later stage
     # (quality, sha2 window, checkpoint, LSH) then moves
     # doc_id/lang/text only, never unused payload columns. No spread
@@ -703,18 +709,32 @@ def pipeline_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 # EXISTING corpus without ever re-processing the corpus itself.
 # Here the "batch" is doc_id % 5 == 0 (sf-proportional stand-in for
 # today's crawl); the rest is the standing corpus.
-@register(
-    "dedup_incremental_merge",
-    tags=("dedup", "exact", "incremental", "anti-join"),
-    oracle="""
-    WITH batch AS (
+_BATCH_CORPUS_SQL = """batch AS (
       SELECT doc_id, lang, sha256(text) AS h
       FROM documents WHERE doc_id % 5 = 0
     ),
     corpus AS (
       SELECT DISTINCT sha256(text) AS h
       FROM documents WHERE doc_id % 5 <> 0
-    ),
+    )"""
+
+
+def _batch_and_corpus(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """The batch docs ``(doc_id, lang, h)`` and the standing corpus's
+    distinct digests ``(h)``, h = sha256 of the text: the Spark twin
+    of ``_BATCH_CORPUS_SQL``."""
+    d = load_table(spark, sf_dir, "documents").select(
+        "doc_id", "lang", F.sha2(F.col("text"), 256).alias("h")
+    )
+    batch = d.filter(F.pmod("doc_id", F.lit(5)) == 0)
+    return batch, d.filter(F.pmod("doc_id", F.lit(5)) != 0).select("h").distinct()
+
+
+@register(
+    "dedup_incremental_merge",
+    tags=("dedup", "exact", "incremental", "anti-join"),
+    oracle=f"""
+    WITH {_BATCH_CORPUS_SQL},
     fresh AS (
       SELECT b.doc_id, b.lang, b.h
       FROM batch b ANTI JOIN corpus c ON b.h = c.h
@@ -740,11 +760,7 @@ def dedup_incremental_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows. Nothing re-reads or re-hashes the standing corpus text
     beyond the digest projection; with a digest table maintained at
     ingest, each increment costs O(|batch|) + a digest-key join."""
-    d = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "lang", F.sha2(F.col("text"), 256).alias("h")
-    )
-    batch = d.filter(F.pmod("doc_id", F.lit(5)) == 0)
-    corpus_hashes = d.filter(F.pmod("doc_id", F.lit(5)) != 0).select("h").distinct()
+    batch, corpus_hashes = _batch_and_corpus(spark, sf_dir)
     fresh = batch.join(corpus_hashes, "h", "left_anti")
     w = Window.partitionBy("h").orderBy("doc_id")
     return (
@@ -854,12 +870,8 @@ def decontaminate_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH RECURSIVE {SHINGLED_CTE_SQL},
     pairs AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM shingled a JOIN shingled b
-        ON a.lang = b.lang AND a.doc_id < b.doc_id
-      WHERE CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE)
-            / (len(a.shingles) + len(b.shingles)
-               - len(list_intersect(a.shingles, b.shingles))) >= {JACCARD_THRESHOLD}
+      {SHINGLE_PAIRS_SQL}
+      WHERE {_jaccard_at_least_sql(JACCARD_THRESHOLD)}
     ),
     edges AS (
       SELECT doc_a AS u, doc_b AS v FROM pairs
@@ -884,8 +896,6 @@ def dedup_clusters_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the deterministic inverted-index pair source so the result
     is engine-independent and hash-verified against DuckDB's
     recursive closure."""
-    from ..operators.clustering import connected_components
-
     pairs = ngram_jaccard_pairs(load_table(spark, sf_dir, "documents"))
     return connected_components(pairs).select(
         F.col("node").alias("doc_id"), F.col("comp").alias("cluster")
@@ -976,12 +986,8 @@ def _survivors_quality_oracle() -> str:
     return f"""
     WITH RECURSIVE {SHINGLED_CTE_SQL},
     prs AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM shingled a JOIN shingled b
-        ON a.lang = b.lang AND a.doc_id < b.doc_id
-      WHERE CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE)
-            / (len(a.shingles) + len(b.shingles)
-               - len(list_intersect(a.shingles, b.shingles))) >= {JACCARD_THRESHOLD}
+      {SHINGLE_PAIRS_SQL}
+      WHERE {_jaccard_at_least_sql(JACCARD_THRESHOLD)}
     ),
     edges AS (
       SELECT doc_a AS u, doc_b AS v FROM prs
@@ -1050,8 +1056,6 @@ def dedup_survivors_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 def survivors_quality(d: DataFrame) -> DataFrame:
     """Frame-level survivor-selection core over any (doc_id, lang,
     text) frame — see ``dedup_survivors_quality``."""
-    from ..operators.clustering import connected_components
-
     clusters = connected_components(ngram_jaccard_pairs(d)).select(
         F.col("node").alias("doc_id"), F.col("comp").alias("cluster")
     )
@@ -1353,13 +1357,8 @@ def dedup_exact_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH {SHINGLED_CTE_SQL},
     pairs AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM shingled a JOIN shingled b
-        ON a.lang = b.lang AND a.doc_id < b.doc_id
-      WHERE CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE)
-            / (len(a.shingles) + len(b.shingles)
-               - len(list_intersect(a.shingles, b.shingles)))
-            >= {JACCARD_THRESHOLD}
+      {SHINGLE_PAIRS_SQL}
+      WHERE {_jaccard_at_least_sql(JACCARD_THRESHOLD)}
     ),
     involved AS (
       SELECT doc_a AS doc_id FROM pairs
@@ -1497,10 +1496,7 @@ def _est_sig_exprs_duckdb() -> str:
     WITH {SHINGLED_CTE_SQL},
     pairs AS (
       {SHINGLE_PAIRS_SQL}
-      WHERE CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE)
-            / (len(a.shingles) + len(b.shingles)
-               - len(list_intersect(a.shingles, b.shingles)))
-            >= {EST_MIN_JACCARD}
+      WHERE {_jaccard_at_least_sql(EST_MIN_JACCARD)}
     ),
     sh AS (SELECT doc_id, unnest(shingles) AS sh FROM shingled),
     sig AS (
@@ -1944,15 +1940,8 @@ def dedup_threshold_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_bloom_prefilter",
     tags=("dedup", "bloom", "incremental", "broadcast"),
-    oracle="""
-    WITH batch AS (
-      SELECT doc_id, lang, sha256(text) AS h
-      FROM documents WHERE doc_id % 5 = 0
-    ),
-    corpus AS (
-      SELECT DISTINCT sha256(text) AS h
-      FROM documents WHERE doc_id % 5 <> 0
-    ),
+    oracle=f"""
+    WITH {_BATCH_CORPUS_SQL},
     flagged AS (
       SELECT b.doc_id, b.lang, b.h,
              EXISTS (SELECT 1 FROM corpus c WHERE c.h = b.h) AS in_corpus,
@@ -1984,16 +1973,8 @@ def dedup_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     incrementally per ingest; the batch side never shuffles except
     for its own in-batch digest window."""
     m_bits = 1 << 22
-    d = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "lang", F.sha2(F.col("text"), 256).alias("h")
-    )
-    batch = d.filter(F.pmod("doc_id", F.lit(5)) == 0)
-    corpus = (
-        d.filter(F.pmod("doc_id", F.lit(5)) != 0)
-        .select("h")
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    batch, corpus = _batch_and_corpus(spark, sf_dir)
+    corpus = corpus.persist(StorageLevel.MEMORY_AND_DISK)
 
     probes = F.array(*[F.lit(i) for i in range(4)])
 

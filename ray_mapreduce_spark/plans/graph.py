@@ -183,12 +183,9 @@ def pagerank_from_edges(
     )
 
 
-@register(
-    "graph_triangle_count",
-    tags=("graph", "triangles", "dedup-signal"),
-    oracle=f"""
-    WITH {_PR_EDGE_SQL.strip()},
-    tri AS (
+# Per-node triangle counts cnt(vec_id, t) over the canonical prs
+# edges: the SQL twin of triangle_counts.
+_TRIANGLES_SQL = """tri AS (
       SELECT a.src AS x, a.dst AS y, b.dst AS z
       FROM prs a
       JOIN prs b ON b.src = a.dst
@@ -199,7 +196,15 @@ def pagerank_from_edges(
       UNION ALL SELECT y FROM tri
       UNION ALL SELECT z FROM tri
     ),
-    cnt AS (SELECT vec_id, count(*) AS t FROM member GROUP BY vec_id)
+    cnt AS (SELECT vec_id, count(*) AS t FROM member GROUP BY vec_id)"""
+
+
+@register(
+    "graph_triangle_count",
+    tags=("graph", "triangles", "dedup-signal"),
+    oracle=f"""
+    WITH {_PR_EDGE_SQL.strip()},
+    {_TRIANGLES_SQL}
     SELECT v.vec_id, CAST(coalesce(c.t, 0) AS BIGINT) AS n_triangles
     FROM v LEFT JOIN cnt c ON v.vec_id = c.vec_id
     """,
@@ -348,18 +353,7 @@ def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH {_PR_EDGE_SQL.strip()},
     edges AS (SELECT src, dst FROM prs UNION ALL SELECT dst AS src, src AS dst FROM prs),
     deg AS (SELECT src AS vec_id, count(*) AS deg FROM edges GROUP BY src),
-    tri AS (
-      SELECT a.src AS x, a.dst AS y, b.dst AS z
-      FROM prs a
-      JOIN prs b ON b.src = a.dst
-      JOIN prs c ON c.src = a.src AND c.dst = b.dst
-    ),
-    member AS (
-      SELECT x AS vec_id FROM tri
-      UNION ALL SELECT y FROM tri
-      UNION ALL SELECT z FROM tri
-    ),
-    cnt AS (SELECT vec_id, count(*) AS t FROM member GROUP BY vec_id)
+    {_TRIANGLES_SQL}
     SELECT v.vec_id,
            CAST(coalesce(d.deg, 0) AS BIGINT) AS degree,
            CAST(coalesce(c.t, 0) AS BIGINT) AS n_triangles,

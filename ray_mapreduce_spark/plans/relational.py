@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.pairs import canonical_pairs, cap_blocks
+from ..operators.skew import salted_join
 from ..sources import load_table
 from .registry import register
 
@@ -755,8 +756,6 @@ def join_salted_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     is too big to broadcast and a power-law fact key (one customer
     placing a huge share of orders) would pin a single reducer; the
     aggregate proves result-identity with the plain join."""
-    from ..operators.skew import salted_join
-
     o = load_table(spark, sf_dir, "orders").select("o_custkey", "o_totalprice")
     c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     j = salted_join(o, c, "o_custkey", "c_custkey", n_salts=16)

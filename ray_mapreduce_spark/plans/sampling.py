@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.grain import KNUTH, MOD_2_32, knuth_bucket
+from ..functions.scale import two_pass_cumsum
 from ..functions.text import QUALITY_RAW_SQL, TOKENS_SQL, n_words, quality_raw_col, tokens
 from ..sources import load_table
 from .registry import register
@@ -106,6 +107,20 @@ def sample_stratified_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
 PACK_CAPACITY = 2048
 
 _PACK_SCHEMA = "doc_id long, lang string, n_tok int, bin int"
+# The oracles' replay of _pack_one_class: a recursive CTE over
+# t(doc_id, lang, n_tok, rn = doc_id order within lang).
+_PACKED_SQL = f"""packed AS (
+      SELECT doc_id, lang, n_tok, rn, 0 AS bin, n_tok AS fill
+      FROM t WHERE rn = 1
+      UNION ALL
+      SELECT t.doc_id, t.lang, t.n_tok, t.rn,
+             CASE WHEN p.fill + t.n_tok <= {PACK_CAPACITY}
+                  THEN p.bin ELSE p.bin + 1 END,
+             CASE WHEN p.fill + t.n_tok <= {PACK_CAPACITY}
+                  THEN p.fill + t.n_tok ELSE t.n_tok END
+      FROM packed p
+      JOIN t ON t.lang = p.lang AND t.rn = p.rn + 1
+    )"""
 
 
 def _pack_one_class(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -136,18 +151,7 @@ def _pack_one_class(pdf: pd.DataFrame) -> pd.DataFrame:
              row_number() OVER (PARTITION BY lang ORDER BY doc_id) AS rn
       FROM documents
     ),
-    packed AS (
-      SELECT doc_id, lang, n_tok, rn, 0 AS bin, n_tok AS fill
-      FROM t WHERE rn = 1
-      UNION ALL
-      SELECT t.doc_id, t.lang, t.n_tok, t.rn,
-             CASE WHEN p.fill + t.n_tok <= {PACK_CAPACITY}
-                  THEN p.bin ELSE p.bin + 1 END,
-             CASE WHEN p.fill + t.n_tok <= {PACK_CAPACITY}
-                  THEN p.fill + t.n_tok ELSE t.n_tok END
-      FROM packed p
-      JOIN t ON t.lang = p.lang AND t.rn = p.rn + 1
-    )
+    {_PACKED_SQL}
     SELECT doc_id, lang, n_tok, bin FROM packed
     """,
 )
@@ -195,15 +199,39 @@ def pack_sequences_greedy(
 # the same deterministic arithmetic hash as sample_hash_deterministic
 # so the mixture is reproducible and incremental-rebuild-stable.
 # Rates here: even-numbered sources keep 80%, odd keep 20%.
+_RATES_SQL = """rates AS (
+      SELECT source, CASE WHEN CAST(substr(source, 4) AS INT) % 2 = 0
+                          THEN 80 ELSE 20 END AS keep_pct
+      FROM (SELECT DISTINCT source FROM documents)
+    )"""
+
+
+def _mixture(d: DataFrame) -> DataFrame:
+    """The docs of ``d`` the mixture keeps: ``d`` joined to the
+    broadcast rate table (the Spark twin of ``_RATES_SQL``), filtered
+    by the Knuth hash bucket against the source's keep percentage."""
+    # Deriving the rate table from DISTINCT source is testdata
+    # convenience (a column-pruned scan); a real deployment passes the
+    # mixing recipe as a literal/config table — zero corpus scans.
+    rates = (
+        d.select("source")
+        .distinct()
+        .select(
+            "source",
+            F.when(
+                F.substring("source", 4, 10).cast("int") % 2 == 0, F.lit(80)
+            ).otherwise(F.lit(20)).alias("keep_pct"),
+        )
+    )
+    keep = knuth_bucket("doc_id", 100) < F.col("keep_pct")
+    return d.join(F.broadcast(rates), "source").filter(keep)
+
+
 @register(
     "sample_weighted_mixture",
     tags=("sampling", "mixture", "deterministic"),
     oracle=f"""
-    WITH rates AS (
-      SELECT source, CASE WHEN CAST(substr(source, 4) AS INT) % 2 = 0
-                          THEN 80 ELSE 20 END AS keep_pct
-      FROM (SELECT DISTINCT source FROM documents)
-    )
+    WITH {_RATES_SQL}
     SELECT d.doc_id, d.source
     FROM documents d JOIN rates r ON d.source = r.source
     WHERE (d.doc_id * {KNUTH}) % {MOD_2_32} % 100 < r.keep_pct
@@ -222,22 +250,7 @@ def sample_weighted_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     domain's rate from 20 to 30 keeps every previously-selected doc
     (hash mod 100 < 20 implies < 30) — incremental corpus rebuilds
     only ADD documents."""
-    d = load_table(spark, sf_dir, "documents")
-    # Deriving the rate table from DISTINCT source is testdata
-    # convenience (a column-pruned scan); a real deployment passes the
-    # mixing recipe as a literal/config table — zero corpus scans.
-    rates = (
-        d.select("source")
-        .distinct()
-        .select(
-            "source",
-            F.when(
-                F.substring("source", 4, 10).cast("int") % 2 == 0, F.lit(80)
-            ).otherwise(F.lit(20)).alias("keep_pct"),
-        )
-    )
-    keep = knuth_bucket("doc_id", 100) < F.col("keep_pct")
-    return d.join(F.broadcast(rates), "source").filter(keep).select("doc_id", "source")
+    return _mixture(load_table(spark, sf_dir, "documents")).select("doc_id", "source")
 
 
 # --------------------------------------------------------------------------
@@ -255,11 +268,7 @@ _TB_CAP = 50
     "pipeline_training_batch",
     tags=("sampling", "packing", "pipeline", "mixture"),
     oracle=f"""
-    WITH RECURSIVE rates AS (
-      SELECT source, CASE WHEN CAST(substr(source, 4) AS INT) % 2 = 0
-                          THEN 80 ELSE 20 END AS keep_pct
-      FROM (SELECT DISTINCT source FROM documents)
-    ),
+    WITH RECURSIVE {_RATES_SQL},
     picked AS (
       SELECT d.doc_id, d.lang, d.text,
              round(0.4 * least(len(string_split(d.text, ' ')) / 64.0, 1.0)
@@ -284,18 +293,7 @@ _TB_CAP = 50
              row_number() OVER (PARTITION BY lang ORDER BY doc_id) AS rn
       FROM capped WHERE qrn <= {_TB_CAP}
     ),
-    packed AS (
-      SELECT doc_id, lang, n_tok, rn, 0 AS bin, n_tok AS fill
-      FROM t WHERE rn = 1
-      UNION ALL
-      SELECT t.doc_id, t.lang, t.n_tok, t.rn,
-             CASE WHEN p.fill + t.n_tok <= {PACK_CAPACITY}
-                  THEN p.bin ELSE p.bin + 1 END,
-             CASE WHEN p.fill + t.n_tok <= {PACK_CAPACITY}
-                  THEN p.fill + t.n_tok ELSE t.n_tok END
-      FROM packed p
-      JOIN t ON t.lang = p.lang AND t.rn = p.rn + 1
-    )
+    {_PACKED_SQL}
     SELECT lang, bin,
            count(*)                   AS n_docs,
            CAST(sum(n_tok) AS BIGINT) AS total_tok
@@ -316,19 +314,7 @@ def pipeline_training_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial-aggregated. Nothing in the composition adds a shuffle
     beyond what the standalone stages pay, and the packing stage only
     ever sees cap x |langs| rows."""
-    d = load_table(spark, sf_dir, "documents")
-    rates = (
-        d.select("source")
-        .distinct()
-        .select(
-            "source",
-            F.when(
-                F.substring("source", 4, 10).cast("int") % 2 == 0, F.lit(80)
-            ).otherwise(F.lit(20)).alias("keep_pct"),
-        )
-    )
-    keep = knuth_bucket("doc_id", 100) < F.col("keep_pct")
-    picked = d.join(F.broadcast(rates), "source").filter(keep)
+    picked = _mixture(load_table(spark, sf_dir, "documents"))
 
     # +1e-9 pre-round: exact half-boundary guard (see text_quality_score)
     quality = F.round(quality_raw_col() + F.lit(1e-9), 4)
@@ -870,9 +856,7 @@ def sample_recency_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: 1-row max-ts broadcast; acceptance is a scan-speed
     row-local predicate (the sampler itself needs NO shuffle at all —
     this readout adds one bounded (type, week) aggregation)."""
-    from ..sources import load_table as _lt
-
-    e = _lt(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     mx = e.agg(F.max(F.expr("unix_micros(ts)")).alias("mx_us"))
     x = e.crossJoin(F.broadcast(mx)).select(
         "event_type",
@@ -1243,8 +1227,6 @@ def sample_pps_systematic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(o_orderkey, weight_cents, n_hits, expected_hits): the PPS_N
     systematic probability-proportional-to-size sample of orders by
     cent value (see header)."""
-    from ..functions.scale import two_pass_cumsum
-
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
         F.round(F.col("o_totalprice") * 100).cast("bigint").alias("wc"),

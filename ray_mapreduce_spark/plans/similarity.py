@@ -40,7 +40,7 @@ from ..functions.scale import spread_by as _spread_by
 from ..functions.text import TOKENS_SQL, tokens
 from ..sources import load_table
 from .dedup import DEFAULT_DF_CAP, JACCARD_THRESHOLD, SHINGLE_MIN_SQL, SHINGLE_PAIRS_SQL
-from .dedup import SHINGLE_SET_SQL, SHINGLED_CTE_SQL
+from .dedup import SHINGLE_SET_SQL, SHINGLED_CTE_SQL, ngram_jaccard_pairs
 from .registry import register
 from .text_analysis import BM25_B as _RRF_B
 from .text_analysis import BM25_K1 as _RRF_K1
@@ -779,8 +779,6 @@ def hybrid_neardup_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     vector self-join. The embedding projection is referenced twice
     (a/b side); identical subtrees, runtime exchange-reuse per
     gotcha #14."""
-    from .dedup import ngram_jaccard_pairs
-
     pairs = ngram_jaccard_pairs(load_table(spark, sf_dir, "documents"))
     v = _with_vec(load_table(spark, sf_dir, "embeddings")).select("vec_id", "vec")
     cos = _cos("va", "vb")
@@ -1009,6 +1007,32 @@ def _pq_lut(assigned: DataFrame, cent: DataFrame) -> DataFrame:
     )
 
 
+def _pq_adc(assigned: DataFrame, cent: DataFrame) -> DataFrame:
+    """``(query_id, neighbor_id, adci)``: every query's integer ADC
+    sum to every other corpus vector over the broadcast ``_pq_lut``,
+    partial-aggregated per (query, vector)."""
+    return (
+        assigned.select("vec_id", "m", "cluster")
+        .join(F.broadcast(_pq_lut(assigned, cent)), ["m", "cluster"])
+        .filter(F.col("vec_id") != F.col("query_id"))
+        .groupBy("query_id", "vec_id")
+        .agg(F.sum("d2i").alias("adci"))
+        .select("query_id", F.col("vec_id").alias("neighbor_id"), "adci")
+    )
+
+
+def _rerank_sides(v: DataFrame) -> tuple[DataFrame, DataFrame, Column]:
+    """The exact rerank's query side ``(query_id, qvec)`` (the first
+    N_QUERIES vectors), its corpus side ``(neighbor_id, nvec)`` and
+    the squared L2 of a joined pair."""
+    qv = v.filter(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("query_id"), F.col("vec").alias("qvec")
+    )
+    nv = v.select(F.col("vec_id").alias("neighbor_id"), F.col("vec").alias("nvec"))
+    d2 = _dot("nvec", "nvec") - 2 * _dot("qvec", "nvec") + _dot("qvec", "qvec")
+    return qv, nv, d2
+
+
 @register(
     "similarity_pq_codes",
     tags=("similarity", "pq", "quantization", "iterative", "kmeans"),
@@ -1060,18 +1084,10 @@ def similarity_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate rows per query."""
     v = _persisted_corpus(spark, sf_dir)
     assigned, cent = _pq_codebook(v)
-    lut = _pq_lut(assigned, cent)
-    adc = (
-        assigned.select("vec_id", "m", "cluster")
-        .join(F.broadcast(lut), ["m", "cluster"])
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .groupBy("query_id", "vec_id")
-        .agg(F.sum("d2i").alias("adci"))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), "adci")
-    )
     w = Window.partitionBy("query_id").orderBy("adci", "neighbor_id")
     return (
-        adc.withColumn("rk", F.row_number().over(w))
+        _pq_adc(assigned, cent)
+        .withColumn("rk", F.row_number().over(w))
         .filter(F.col("rk") <= TOP_K)
         .select(
             "query_id",
@@ -1153,30 +1169,18 @@ def similarity_pq_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     point-lookup join (vec_id-bucketed table), not a scan."""
     v = _persisted_corpus(spark, sf_dir)
     assigned, cent = _pq_codebook(v)
-    lut = _pq_lut(assigned, cent)
     wshort = Window.partitionBy("query_id").orderBy("adci", "neighbor_id")
     short = (
-        assigned.select("vec_id", "m", "cluster")
-        .join(F.broadcast(lut), ["m", "cluster"])
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .groupBy("query_id", "vec_id")
-        .agg(F.sum("d2i").alias("adci"))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), "adci")
+        _pq_adc(assigned, cent)
         .withColumn("rn", F.row_number().over(wshort))
         .filter(F.col("rn") <= PQ_SHORTLIST)
         .select("query_id", "neighbor_id")
     )
-    qv = v.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("vec").alias("qvec")
-    )
-    nv = v.select(F.col("vec_id").alias("neighbor_id"), F.col("vec").alias("nvec"))
-    d2 = (
-        _dot("nvec", "nvec") - 2 * _dot("qvec", "nvec") + _dot("qvec", "qvec")
-    ).alias("d2")
+    qv, nv, d2 = _rerank_sides(v)
     rer = (
         F.broadcast(short.join(F.broadcast(qv), "query_id"))
         .join(nv, "neighbor_id")
-        .select("query_id", "neighbor_id", d2)
+        .select("query_id", "neighbor_id", d2.alias("d2"))
     )
     w = Window.partitionBy("query_id").orderBy("d2", "neighbor_id")
     return (
@@ -2233,8 +2237,6 @@ def dedup_funnel_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     CC-collapse pipeline (pipeline_clean_corpus) is the
     cluster-exact sibling; this report trades transitive collapse
     for SQL-checkable counts."""
-    from .dedup import ngram_jaccard_pairs
-
     d = load_table(spark, sf_dir, "documents").select("doc_id", "lang", "text")
     w_exact = Window.partitionBy(F.sha2(F.col("text"), 256)).orderBy("doc_id")
     s1 = (
@@ -2463,10 +2465,8 @@ def similarity_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus_cells = _ranked_cells(corpus, ivf_cent, "cvec_n", 1).select(
         "neighbor_id", "cell"
     )
-    queries = v.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("vec").alias("qvec")
-    )
-    query_cells = _ranked_cells(queries, ivf_cent, "qvec", N_PROBE).select(
+    qv, nv, d2 = _rerank_sides(v)
+    query_cells = _ranked_cells(qv, ivf_cent, "qvec", N_PROBE).select(
         "query_id", "cell"
     )
     cand = (
@@ -2492,13 +2492,6 @@ def similarity_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("query_id", "neighbor_id")
     )
 
-    qv = v.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("vec").alias("qvec")
-    )
-    nv = v.select(F.col("vec_id").alias("neighbor_id"), F.col("vec").alias("nvec"))
-    d2 = (
-        _dot("nvec", "nvec") - 2 * _dot("qvec", "nvec") + _dot("qvec", "qvec")
-    )
     wr = Window.partitionBy("query_id").orderBy("l2", "neighbor_id")
     return (
         F.broadcast(short)

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.grain import KNUTH, MOD_2_32, knuth_bucket
+from ..functions.scale import ntile_from_rank, two_pass_cumsum
 from ..functions.scale import spread as _spread
 from ..functions.scale import spread_by as _spread_by
 from ..functions.stats import moment_sums
@@ -34,6 +35,49 @@ _LANG_MARKERS = {
     "es": ("el", "y", "de"),
     "zh": ("de", "le", "shi"),
 }
+_MARKER_VALUES_SQL = ",".join(
+    f"('{lang}','{m}')" for lang, ms in sorted(_LANG_MARKERS.items()) for m in ms
+)
+# Per-doc marker-language argmax: tokens x the marker table, hits per
+# (doc, language), best = the (hits DESC, cand_lang) first row per doc.
+_LANG_BEST_SQL = f"""markers AS (
+      SELECT * FROM (VALUES {_MARKER_VALUES_SQL}) AS m(cand_lang, marker)
+    ),
+    toks AS (
+      SELECT doc_id, unnest({TOKENS_SQL}) AS tok FROM documents
+    ),
+    scores AS (
+      SELECT t.doc_id, m.cand_lang, count(*) AS hits
+      FROM toks t JOIN markers m ON t.tok = m.marker
+      GROUP BY t.doc_id, m.cand_lang
+    ),
+    best AS (
+      SELECT doc_id, cand_lang, hits FROM (
+        SELECT doc_id, cand_lang, hits,
+               row_number() OVER (
+                 PARTITION BY doc_id ORDER BY hits DESC, cand_lang
+               ) AS rn
+        FROM scores
+      ) WHERE rn = 1
+    )"""
+
+
+def _lang_best(d: DataFrame) -> DataFrame:
+    """``(doc_id, cand_lang, hits, rn)`` with rn = 1 for every doc with
+    a marker hit: the Spark twin of ``_LANG_BEST_SQL``, scored against
+    a broadcast marker table."""
+    markers = d.sparkSession.createDataFrame(
+        [(lang, m) for lang, ms in _LANG_MARKERS.items() for m in ms],
+        "cand_lang: string, marker: string",
+    )
+    toks = d.select("doc_id", F.explode(tokens()).alias("tok"))
+    scores = (
+        toks.join(F.broadcast(markers), toks.tok == markers.marker)
+        .groupBy("doc_id", "cand_lang")
+        .agg(F.count(F.lit(1)).alias("hits"))
+    )
+    w = Window.partitionBy("doc_id").orderBy(F.col("hits").desc(), "cand_lang")
+    return scores.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") == 1)
 
 
 # --------------------------------------------------------------------------
@@ -135,51 +179,17 @@ def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     "text_lang_id",
     tags=("text", "lang-id"),
     oracle=f"""
-    WITH markers AS (
-      SELECT * FROM (VALUES
-        ('en','the'),('en','and'),('en','of'),
-        ('de','der'),('de','und'),('de','die'),
-        ('fr','le'),('fr','et'),('fr','la'),
-        ('es','el'),('es','y'),('es','de'),
-        ('zh','de'),('zh','le'),('zh','shi')
-      ) AS m(cand_lang, marker)
-    ),
-    toks AS (
-      SELECT doc_id, unnest({TOKENS_SQL}) AS tok FROM documents
-    ),
-    scores AS (
-      SELECT t.doc_id, m.cand_lang, count(*) AS hits
-      FROM toks t JOIN markers m ON t.tok = m.marker
-      GROUP BY t.doc_id, m.cand_lang
-    ),
-    best AS (
-      SELECT doc_id, cand_lang, hits,
-             row_number() OVER (
-               PARTITION BY doc_id ORDER BY hits DESC, cand_lang
-             ) AS rn
-      FROM scores
-    )
+    WITH {_LANG_BEST_SQL}
     SELECT d.doc_id,
            coalesce(b.cand_lang, 'unknown') AS predicted_lang,
            coalesce(b.hits, 0)              AS marker_hits
     FROM documents d
-    LEFT JOIN (SELECT * FROM best WHERE rn = 1) b ON d.doc_id = b.doc_id
+    LEFT JOIN best b ON d.doc_id = b.doc_id
     """,
 )
 def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    markers = spark.createDataFrame(
-        [(lang, m) for lang, ms in _LANG_MARKERS.items() for m in ms],
-        "cand_lang: string, marker: string",
-    )
-    toks = d.select("doc_id", F.explode(tokens()).alias("tok"))
-    scores = (
-        toks.join(F.broadcast(markers), toks.tok == markers.marker)
-        .groupBy("doc_id", "cand_lang")
-        .agg(F.count(F.lit(1)).alias("hits"))
-    )
-    w = Window.partitionBy("doc_id").orderBy(F.col("hits").desc(), "cand_lang")
-    best = scores.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") == 1)
+    best = _lang_best(d)
     return d.select("doc_id").join(best, "doc_id", "left").select(
         "doc_id",
         F.coalesce("cand_lang", F.lit("unknown")).alias("predicted_lang"),
@@ -1161,19 +1171,17 @@ def quality_calibration_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale note (VERDICT r9 #4): a plain per-lang ntile puts one
     LANGUAGE on one sort partition — parallel across langs but
     unbounded within one. This plan instead uses the GROUPED
-    two-pass rank (functions/scale.py::two_pass_rank with
-    group_cols=[lang]): range-partition on (lang, qr, doc_id) so a
+    two-pass rank (functions/scale.py::two_pass_cumsum of F.lit(1)
+    with group_cols=[lang]): range-partition on (lang, qr, doc_id) so a
     big language spans many contiguous partitions, then per-(pid,
     lang) counts -> broadcast per-lang offsets; the exact ntile
     derives from (rank-in-lang, lang total) — engine-identical to
     the oracle's ntile, with no single-partition or one-lang
     sort anywhere in the executed plan."""
-    from ..functions.scale import ntile_from_rank, two_pass_rank
-
     d = load_table(spark, sf_dir, "documents")
     q = d.select("doc_id", "lang", quality_raw_col().alias("qr"))
-    ranked = two_pass_rank(
-        q, ["qr", "doc_id"], "_rn", total_col="_tot", group_cols=["lang"]
+    ranked = two_pass_cumsum(
+        q, ["qr", "doc_id"], F.lit(1), "_rn", total_col="_tot", group_cols=["lang"]
     )
     deciled = ranked.withColumn(
         "decile", ntile_from_rank(F.col("_rn"), F.col("_tot"), 10)
@@ -2126,38 +2134,14 @@ def text_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
 # cheap classifier to route documents; off-diagonal mass shows
 # exactly which language pairs the marker set confuses (by
 # construction here: 'de'/'le' markers are deliberately ambiguous
-# with zh). The marker table is generated FROM _LANG_MARKERS on both
-# sides, so the classifier under eval and the eval itself cannot
-# drift.
-_MARKER_VALUES_SQL = ",".join(
-    f"('{lang}','{m}')" for lang, ms in sorted(_LANG_MARKERS.items()) for m in ms
-)
-
-
+# with zh). The argmax is text_lang_id's own (_lang_best /
+# _LANG_BEST_SQL), so the classifier under eval and the eval itself
+# cannot drift.
 @register(
     "text_langid_confusion",
     tags=("text", "lang-id", "eval", "confusion"),
     oracle=f"""
-    WITH markers AS (
-      SELECT * FROM (VALUES {_MARKER_VALUES_SQL}) AS m(cand_lang, marker)
-    ),
-    toks AS (
-      SELECT doc_id, unnest({TOKENS_SQL}) AS tok FROM documents
-    ),
-    scores AS (
-      SELECT t.doc_id, m.cand_lang, count(*) AS hits
-      FROM toks t JOIN markers m ON t.tok = m.marker
-      GROUP BY t.doc_id, m.cand_lang
-    ),
-    best AS (
-      SELECT doc_id, cand_lang FROM (
-        SELECT doc_id, cand_lang,
-               row_number() OVER (
-                 PARTITION BY doc_id ORDER BY hits DESC, cand_lang
-               ) AS rn
-        FROM scores
-      ) WHERE rn = 1
-    ),
+    WITH {_LANG_BEST_SQL},
     cm AS (
       SELECT d.lang AS true_lang,
              coalesce(b.cand_lang, 'unknown') AS predicted_lang,
@@ -2182,22 +2166,7 @@ def text_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     argmax, then a bounded (langs x langs) matrix agg — the eval
     costs one tokenize pass, same as the classifier itself."""
     d = load_table(spark, sf_dir, "documents")
-    markers = spark.createDataFrame(
-        [(lang, m) for lang, ms in _LANG_MARKERS.items() for m in ms],
-        "cand_lang: string, marker: string",
-    )
-    toks = d.select("doc_id", F.explode(tokens()).alias("tok"))
-    scores = (
-        toks.join(F.broadcast(markers), toks.tok == markers.marker)
-        .groupBy("doc_id", "cand_lang")
-        .agg(F.count(F.lit(1)).alias("hits"))
-    )
-    w = Window.partitionBy("doc_id").orderBy(F.col("hits").desc(), "cand_lang")
-    best = (
-        scores.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("doc_id", "cand_lang")
-    )
+    best = _lang_best(d).select("doc_id", "cand_lang")
     cm = (
         d.select("doc_id", F.col("lang").alias("true_lang"))
         .join(best, "doc_id", "left")
@@ -3898,7 +3867,7 @@ def text_yule_k(spark: SparkSession, sf_dir: str) -> DataFrame:
 # literals (the Benford rule).
 #
 # Scale shape: the ONLY fact-proportional ordered op is the grouped
-# two-pass rank (functions/scale.py::two_pass_rank with
+# two-pass rank (functions/scale.py::two_pass_cumsum of F.lit(1) with
 # group_cols=[lang] — range-partition on (lang, doc_id, pos), no
 # one-lang-one-partition sort); first-occurrence collapses to the
 # vocab-bounded (lang, type) frame; the budget spine is a bounded
@@ -3957,16 +3926,14 @@ def text_ttr_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     growth at fixed token budgets per language over the canonical
     (doc_id, pos) token order (see header; budgets beyond a
     language's token count are not emitted)."""
-    from ..functions.scale import two_pass_rank
-
     d = _spread(load_table(spark, sf_dir, "documents"))
     tok = d.select(
         "lang",
         "doc_id",
         F.posexplode(tokens()).alias("pos", "t"),
     )
-    ranked = two_pass_rank(
-        tok, ["doc_id", "pos"], "gpos", total_col="n_tok", group_cols=["lang"]
+    ranked = two_pass_cumsum(
+        tok, ["doc_id", "pos"], F.lit(1), "gpos", total_col="n_tok", group_cols=["lang"]
     )
     fp = ranked.groupBy("lang", "t").agg(
         F.min("gpos").alias("first_pos"), F.max("n_tok").alias("n_tok")

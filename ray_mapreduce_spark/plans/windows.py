@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.scale import ntile_from_rank, two_pass_rank
+from ..functions.scale import ntile_from_rank, two_pass_cumsum
 from ..sources import load_table
 from .registry import register
 
@@ -126,12 +126,13 @@ def window_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """percent_rank / cume_dist / ntile over a GLOBAL ordering, the
     scale-safe way: a ``Window.orderBy(...)`` with no partition clause
     funnels every row through one task, so the global rank and the
-    total come from ``functions/scale.py::two_pass_rank`` (range
-    partition, local rank, per-partition offsets) and the ntile from
+    total come from ``functions/scale.py::two_pass_cumsum`` over
+    ``F.lit(1)`` (range partition, local running count, per-partition
+    offsets) and the ntile from
     ``ntile_from_rank``. The sort key (c_acctbal, c_custkey) is
     unique, so rank == row_number and cume_dist == rank/n exactly."""
     c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_acctbal")
-    ranked = two_pass_rank(c, ["c_acctbal", "c_custkey"], "rn", total_col="n")
+    ranked = two_pass_cumsum(c, ["c_acctbal", "c_custkey"], F.lit(1), "rn", total_col="n")
     n = F.col("n")
     rn = F.col("rn")
     pr = F.when(n > 1, (rn - 1).cast("double") / (n - 1)).otherwise(F.lit(0.0))

@@ -1,11 +1,10 @@
 from .binary import binary_files_to_features, read_binary_files
-from .tables import TABLE_NAMES, load_table, load_tables
+from .tables import TABLE_NAMES, load_table
 from .text import read_csv, read_jsonl, read_manifest, read_text_lines
 
 __all__ = [
     "TABLE_NAMES",
     "load_table",
-    "load_tables",
     "read_csv",
     "read_jsonl",
     "read_text_lines",

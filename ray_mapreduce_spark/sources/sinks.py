@@ -8,7 +8,10 @@ bucketed saveAsTable path for shuffle-free downstream joins.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import math
+
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 
 def write_parquet(
@@ -92,8 +95,6 @@ def compact_parquet(
     the rewrite atomic-by-rename like every serious table format does.
     The output files are listed under the input's schema (no second
     schema-inference job)."""
-    import math
-
     df = spark.read.parquet(src)
     size_bytes = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
     n = max(1, math.ceil(size_bytes / (target_mb * 1024 * 1024)))
@@ -128,8 +129,6 @@ def write_zordered(
     byte-identical to the input rows."""
     nq = (1 << bits) - 1
     probs = [i / (nq + 1) for i in range(1, nq + 1)]
-    from pyspark.sql import functions as F
-
     code = F.lit(0).cast("bigint")
     for ci, c in enumerate(cols):
         cuts = df.approxQuantile(c, probs, 0.001)
@@ -195,9 +194,6 @@ def merge_upsert_parquet(
     update inserts and a null-keyed base row survives. An update whose
     delete flag is null drops its key's base rows and is itself
     dropped, counted in none of the stats."""
-    from pyspark.sql import Observation
-    from pyspark.sql import functions as F
-
     keys = [key] if isinstance(key, str) else list(key)
     b = spark.read.parquet(base)
     is_del = F.col(delete_col) if delete_col is not None else F.lit(False)

@@ -13,6 +13,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 TABLE_NAMES = (
     "region",
@@ -74,8 +75,6 @@ def events_ts(df: DataFrame) -> DataFrame:
     div 1000`` stays in integer arithmetic — nanos since epoch (~8e17)
     overflow a double's 53-bit mantissa, so a float division would
     corrupt timestamps. Micros: cast the TIMESTAMP_NTZ."""
-    from pyspark.sql import functions as F
-
     ts_type = dict(df.dtypes)["ts"]
     if ts_type == "bigint":  # TIMESTAMP(NANOS) read as long
         return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
@@ -108,6 +107,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         return events_ts(events_raw(spark, sf_dir))
     return _read_parquet(spark, sf_dir, f"{name}.parquet")
 
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLE_NAMES}

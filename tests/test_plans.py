@@ -677,7 +677,7 @@ def test_centroid_classifier_broadcasts_centroids(spark, sf_dir):
 # VERDICT r9 #2: the five fact-proportional global-ordered windows
 # (gini / RFM / pareto / ABC / peak-concurrency) were swapped to the
 # two-pass range-partition + broadcast-offsets pattern
-# (functions/scale.py::two_pass_rank / two_pass_cumsum). Pin: in the
+# (functions/scale.py::two_pass_cumsum). Pin: in the
 # executed final plan, every Window that runs on a single partition
 # must be the pattern's intentionally-tiny offsets window (one row
 # per range partition — its lineage contains the `_pid` scratch

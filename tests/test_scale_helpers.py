@@ -1,5 +1,6 @@
-"""Unit equivalence gates for the two-pass global rank / running-sum
-helpers (functions/scale.py, VERDICT r9 #2): on frames small enough
+"""Unit equivalence gates for the two-pass running-sum kernel
+(functions/scale.py::two_pass_cumsum, VERDICT r9 #2; a rank is its
+running sum of ``F.lit(1)``): on frames small enough
 to run the engine-native single-partition window, the two-pass result
 must be IDENTICAL — global and grouped rank, running sum, and the
 derived ntile for every bucket count that divides unevenly. Random
@@ -13,11 +14,9 @@ import random
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ray_mapreduce_spark.functions.scale import (
-    ntile_from_rank,
-    two_pass_cumsum,
-    two_pass_rank,
-)
+import pytest
+
+from ray_mapreduce_spark.functions.scale import ntile_from_rank, two_pass_cumsum
 
 
 def _frame(spark, n=500, groups=None, seed=11):
@@ -37,7 +36,7 @@ def test_two_pass_rank_matches_native_global(spark):
     df = _frame(spark, 500)
     got = {
         r["id"]: r["rn"]
-        for r in two_pass_rank(df, ["v", "id"], "rn").collect()
+        for r in two_pass_cumsum(df, ["v", "id"], F.lit(1), "rn").collect()
     }
     want = {
         r["id"]: r["rn"]
@@ -52,8 +51,8 @@ def test_two_pass_rank_grouped_matches_native(spark):
     df = _frame(spark, 600, groups=["a", "b", "c"])
     got = {
         (r["g"], r["id"]): (r["rn"], r["tot"])
-        for r in two_pass_rank(
-            df, ["v", "id"], "rn", total_col="tot", group_cols=["g"]
+        for r in two_pass_cumsum(
+            df, ["v", "id"], F.lit(1), "rn", total_col="tot", group_cols=["g"]
         ).collect()
     }
     w = Window.partitionBy("g").orderBy("v", "id")
@@ -89,7 +88,7 @@ def test_two_pass_cumsum_matches_native(spark):
 def test_ntile_from_rank_matches_native_ntile(spark):
     # 103 rows / k in {4, 5, 7, 10}: every uneven split shape.
     df = _frame(spark, 103, seed=7)
-    ranked = two_pass_rank(df, ["v", "id"], "rn", total_col="tot")
+    ranked = two_pass_cumsum(df, ["v", "id"], F.lit(1), "rn", total_col="tot")
     for k in (4, 5, 7, 10):
         got = {
             r["id"]: r["t"]
@@ -118,8 +117,8 @@ def test_two_pass_partition_invariance(spark):
             spark.conf.set("spark.sql.shuffle.partitions", parts)
             out[parts] = {
                 (r["g"], r["id"]): r["rn"]
-                for r in two_pass_rank(
-                    df, ["v", "id"], "rn", group_cols=["g"]
+                for r in two_pass_cumsum(
+                    df, ["v", "id"], F.lit(1), "rn", group_cols=["g"]
                 ).collect()
             }
         assert out["32"] == out["3"]
@@ -133,7 +132,7 @@ def test_ntile_from_rank_fewer_rows_than_buckets(spark):
     rows (CaseWhen is lazy per row — pin that it doesn't raise under
     ANSI or return garbage)."""
     df = _frame(spark, 3, seed=3)
-    ranked = two_pass_rank(df, ["v", "id"], "rn", total_col="tot")
+    ranked = two_pass_cumsum(df, ["v", "id"], F.lit(1), "rn", total_col="tot")
     got = {
         r["id"]: r["t"]
         for r in ranked.withColumn(
@@ -147,3 +146,38 @@ def test_ntile_from_rank_fewer_rows_than_buckets(spark):
         ).collect()
     }
     assert got == want
+
+
+def test_two_pass_cumsum_grouped_matches_native(spark):
+    df = _frame(spark, 600, groups=["a", "b", "c"])
+    got = {
+        (r["g"], r["id"]): (r["cs"], r["tot"])
+        for r in two_pass_cumsum(
+            df, ["v", "id"], "v", "cs", total_col="tot", group_cols=["g"]
+        ).collect()
+    }
+    w = (
+        Window.partitionBy("g")
+        .orderBy("v", "id")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    want = {
+        (r["g"], r["id"]): (r["cs"], r["tot"])
+        for r in df.withColumn("cs", F.sum("v").over(w))
+        .withColumn("tot", F.sum("v").over(Window.partitionBy("g")))
+        .collect()
+    }
+    assert got == want
+
+
+def test_two_pass_cumsum_rejects_scratch_names(spark):
+    """The kernel adds and then drops its scratch columns, so an output
+    or input column of the same name would vanish from the result; the
+    call must fail at once and name the column instead."""
+    df = _frame(spark, 10)
+    with pytest.raises(ValueError, match="'_total'"):
+        two_pass_cumsum(df, ["v", "id"], F.lit(1), "rn", total_col="_total")
+    with pytest.raises(ValueError, match="'_pid'"):
+        two_pass_cumsum(df, ["v", "id"], F.lit(1), "_pid")
+    with pytest.raises(ValueError, match="'_lcs'"):
+        two_pass_cumsum(df.withColumn("_lcs", F.lit(0)), ["v", "id"], "v", "cs")

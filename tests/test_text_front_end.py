@@ -5,7 +5,8 @@ word count and k-gram lead chain and the DuckDB tokenizer
 from SHINGLE_K and spells the oracles' shingle set once;
 ``functions/pairs.py`` holds the canonical ``a.id < b.id`` self-join
 every near-dup pair generator calls; ``functions/grain.py`` holds the
-UTC day, integer cents and the Knuth hash split for both engines.
+UTC day, integer cents and the Knuth hash split for both engines;
+lineages that two queries share are written once in their module.
 A guard keeps inline copies from coming back; a parity test pins the
 two engines' shingles to each other."""
 
@@ -16,19 +17,29 @@ import re
 
 _PKG = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "ray_mapreduce_spark")
 
-# pattern -> the one file (relative to the package) allowed to spell it
+# pattern -> (the one file, relative to the package, allowed to spell
+# it; whether it may appear only ONCE there). A home of None means the
+# spelling has no home: it is generated code. Spellings that are
+# allowed once are lineages two queries share: a second copy in the
+# home file itself is a second definition.
 _SINGLE_DEFINITIONS = {
-    re.compile(r"F\.split\(F\.lower\("): "functions/text.py",
-    re.compile(r"F\.size\(F\.split\(\"text\", \" \"\)\)"): "functions/text.py",
-    re.compile(r"string_split\(lower\(text\), ' '\)"): "functions/text.py",
-    re.compile(r"string_split\(lower\(text\), ' '\)\[i\] \|\|"): None,
-    re.compile(r"F\.col\(\"a\.\w+\"\) < F\.col\(\"b\.\w+\"\)"): "functions/pairs.py",
-    re.compile(r"list_distinct\(\{SHINGLE_LIST_SQL\}\) AS shingles"): "plans/dedup.py",
-    re.compile(r"unix_micros\(ts\) div 86400000000"): "functions/grain.py",
-    re.compile(r"epoch_us\(CAST\(ts AS TIMESTAMP\)\) // 86400000000"): "functions/grain.py",
-    re.compile(r"F\.round\(F\.col\(\"value\"\) \* 100\)"): "functions/grain.py",
-    re.compile(r"round\(value \* 100\)"): "functions/grain.py",
-    re.compile(r"2654435761"): "functions/grain.py",
+    re.compile(r"F\.split\(F\.lower\("): ("functions/text.py", False),
+    re.compile(r"F\.size\(F\.split\(\"text\", \" \"\)\)"): ("functions/text.py", False),
+    re.compile(r"string_split\(lower\(text\), ' '\)"): ("functions/text.py", False),
+    re.compile(r"string_split\(lower\(text\), ' '\)\[i\] \|\|"): (None, False),
+    re.compile(r"F\.col\(\"a\.\w+\"\) < F\.col\(\"b\.\w+\"\)"): ("functions/pairs.py", False),
+    re.compile(r"list_distinct\(\{SHINGLE_LIST_SQL\}\) AS shingles"): ("plans/dedup.py", False),
+    re.compile(r"unix_micros\(ts\) div 86400000000"): ("functions/grain.py", False),
+    re.compile(r"epoch_us\(CAST\(ts AS TIMESTAMP\)\) // 86400000000"): ("functions/grain.py", False),
+    re.compile(r"F\.round\(F\.col\(\"value\"\) \* 100\)"): ("functions/grain.py", False),
+    re.compile(r"round\(value \* 100\)"): ("functions/grain.py", False),
+    re.compile(r"2654435761"): ("functions/grain.py", False),
+    re.compile(r"F\.lead\(\"event_type\"\)"): ("plans/advanced.py", True),
+    re.compile(r"lead\(event_type\) OVER"): ("plans/advanced.py", True),
+    re.compile(r"greatest\(max\(CAST\(l\.l_shipdate AS DATE\)\)"): ("plans/advanced.py", True),
+    re.compile(r"greatest\(CAST\(s21 AS DOUBLE\)"): ("plans/advanced.py", True),
+    re.compile(r"list_intersect\(a\.shingles, b\.shingles\)\) AS DOUBLE\)"): ("plans/dedup.py", True),
+    re.compile(r"F\.spark_partition_id\(\)"): ("functions/scale.py", True),
 }
 
 
@@ -43,8 +54,12 @@ def test_text_front_end_defined_once():
     (Spark ``unix_micros(ts) div 86400000000``, DuckDB
     ``epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000``), the cents of
     ``value`` (``round(value * 100)`` in either spelling) and the
-    Knuth multiplier ``2654435761``."""
+    Knuth multiplier ``2654435761``. These may appear only once: the
+    event-type ``lead`` sequence (Spark and DuckDB), the order close
+    day, the Welch z of the two-arm oracles, the oracles' Jaccard
+    predicate and the two-pass kernel's partition id."""
     hits = []
+    seen: dict = {}
     for root, _, files in os.walk(_PKG):
         for name in sorted(files):
             if not name.endswith(".py"):
@@ -53,18 +68,22 @@ def test_text_front_end_defined_once():
             rel = os.path.relpath(path, _PKG).replace(os.sep, "/")
             with open(path, encoding="utf-8") as f:
                 for lineno, line in enumerate(f, 1):
-                    for pattern, home in _SINGLE_DEFINITIONS.items():
-                        if pattern.search(line) and rel != home:
-                            hits.append(
-                                f"ray_mapreduce_spark/{rel}:{lineno}: {line.strip()}"
-                                f"  (defined in {home or 'generated code'})"
-                            )
+                    for pattern, (home, once) in _SINGLE_DEFINITIONS.items():
+                        if not pattern.search(line):
+                            continue
+                        where = f"ray_mapreduce_spark/{rel}:{lineno}: {line.strip()}"
+                        if rel != home:
+                            hits.append(f"{where}  (defined in {home or 'generated code'})")
+                        elif once and pattern in seen:
+                            hits.append(f"{where}  (second copy; first at {seen[pattern]})")
+                        seen.setdefault(pattern, f"{rel}:{lineno}")
     assert not hits, (
         "inline copy of a shared definition; call functions/text.py's tokens() / "
         "n_words(), functions/pairs.py's canonical_pairs() or functions/grain.py's "
         "utc_day() / cents() / knuth_bucket(), or interpolate TOKENS_SQL, "
         "DAY_SQL, CENTS_SQL, KNUTH / MOD_2_32 or plans/dedup.py's SHINGLE_LIST_SQL / "
-        "SHINGLE_SET_SQL / SHINGLED_CTE_SQL:\n" + "\n".join(hits)
+        "SHINGLE_SET_SQL / SHINGLED_CTE_SQL; for a shared lineage call or interpolate "
+        "its one definition:\n" + "\n".join(hits)
     )
 
 

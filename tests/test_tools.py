@@ -67,4 +67,20 @@ def test_plan_digests_ignore_session_counters(spark, sf_dir):
     first, second = spec.builder(spark, sf_dir), spec.builder(spark, sf_dir)
     raw = [df._jdf.queryExecution().analyzed().toString() for df in (first, second)]
     assert raw[0] != raw[1]
-    assert query_digests(spark, spec, sf_dir) == query_digests(spark, spec, sf_dir)
+    digests = query_digests(spark, spec, sf_dir)
+    assert sorted(digests) == ["oracle", "oracle_output", "output", "plan"]
+    assert digests == query_digests(spark, spec, sf_dir)
+
+
+def test_oracle_output_digest_repeats(spark, sf_dir):
+    """The ``oracle_output`` digest hashes the oracle's DuckDB rows, so
+    an oracle whose text moved into a shared CTE can be shown to
+    return the same rows; it must repeat run to run."""
+    from audit_sweep import oracle_rows, query_digests
+
+    from ray_mapreduce_spark.plans import all_queries
+
+    spec = all_queries()["events_markov_transitions"]
+    assert oracle_rows(spec.oracle, sf_dir)
+    first = query_digests(spark, spec, sf_dir)
+    assert first["oracle_output"] == query_digests(spark, spec, sf_dir)["oracle_output"]

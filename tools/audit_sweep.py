@@ -18,11 +18,13 @@ Usage:
   (``tests/test_extensions.py``: recall and exactness contracts of the
   rows-only LSH/sketch queries) at SF_DIR instead of the test default.
 
-- ``plans``: for EVERY registered query record three sha256 digests
+- ``plans``: for EVERY registered query record four sha256 digests
   — the oracle text, the analyzed logical plan with expression ids
   (``#N``) and PySpark lambda-variable suffixes (``x_79``) renumbered
-  by first appearance, and the sorted collected rows — as JSON in
-  ``--out``. ``--against`` compares with an earlier file and names
+  by first appearance, the sorted collected rows, and the oracle's
+  sorted DuckDB rows at the same SF_DIR (``oracle_output``: a
+  refactored oracle text must still return the same rows) — as JSON
+  in ``--out``. ``--against`` compares with an earlier file and names
   every query whose digests differ. The output digest is needed as
   well as the plan digest: an eager ``localCheckpoint`` frame shows
   up in the analyzed plan as a bare ``LogicalRDD`` leaf, which hides
@@ -275,8 +277,23 @@ def normalized_plan(df) -> str:
     return text
 
 
+def oracle_rows(oracle: str | None, sf_dir: str) -> list:
+    """The oracle's DuckDB rows at ``sf_dir`` as sorted reprs; empty
+    for a rows-only query (no oracle)."""
+    from ray_mapreduce_spark.testing import duckdb_connection
+
+    if not oracle:
+        return []
+    con = duckdb_connection(sf_dir)
+    try:
+        return sorted(repr(tuple(r)) for r in con.execute(oracle).fetchall())
+    finally:
+        con.close()
+
+
 def query_digests(spark, spec, sf_dir: str) -> dict:
-    """Oracle, normalized-plan and sorted-output sha256 digests."""
+    """Oracle-text, normalized-plan, sorted-output and sorted
+    oracle-output sha256 digests."""
 
     def sha(text: str) -> str:
         return hashlib.sha256(text.encode()).hexdigest()
@@ -287,6 +304,7 @@ def query_digests(spark, spec, sf_dir: str) -> dict:
         "oracle": sha(spec.oracle or ""),
         "plan": sha(normalized_plan(df)),
         "output": sha("\n".join(rows)),
+        "oracle_output": sha("\n".join(oracle_rows(spec.oracle, sf_dir))),
     }
 
 
@@ -318,7 +336,7 @@ def plans_sweep(sf_dir: str, out: str, against: str | None = None) -> int:
             bad.append(f"{name} ({', '.join(k for k in sorted(a) if a[k] != b.get(k))})")
     same = sum(1 for n in digests if before.get(n) == digests[n])
     print(
-        f"{summary}; {same}/{len(digests)} identical oracle+plan+output vs {against},"
+        f"{summary}; {same}/{len(digests)} identical oracle+plan+output+oracle_output vs {against},"
         f" differing: {bad or 'none'}"
     )
     return 1 if bad else 0
