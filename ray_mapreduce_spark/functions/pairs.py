@@ -5,6 +5,8 @@ of two identical sides on that key keeps ``a.id < b.id``, one row per
 pair per shared block (deduplicating is the caller's job). The
 window's hash exchange is the join's own distribution, so the join
 adds none, and AQE reuses one exchange for both sides (gotcha #14).
+``both_directions`` turns such an undirected pair list into the
+directed edge list the graph operators walk.
 """
 
 from __future__ import annotations
@@ -98,3 +100,24 @@ def jaccard_verify(
         .filter(F.col("jaccard") >= threshold)
         .select("doc_a", "doc_b", F.round("jaccard", 4).alias("jaccard"))
     )
+
+
+def both_directions(
+    pairs: DataFrame, src: str, dst: str, names: Sequence[str] | None = None
+) -> DataFrame:
+    """Each undirected ``(src, dst)`` pair as its two directed edges,
+    named ``names`` (default ``(src, dst)``). One explode over the
+    pair row, never a self-union: a union references the ``pairs``
+    subtree twice, and the two branches race to execute the whole
+    upstream pair-generation lineage (e.g. the minhash LSH pipeline)
+    concurrently; persist() upstream does not help (both sides miss
+    the not-yet-materialized cache, measured ~2x the LSH cost).
+    explode duplicates rows, not the plan."""
+    u, v = names or (src, dst)
+    edge = F.explode(
+        F.array(
+            F.struct(F.col(src).alias(u), F.col(dst).alias(v)),
+            F.struct(F.col(dst).alias(u), F.col(src).alias(v)),
+        )
+    )
+    return pairs.select(edge.alias("e")).select(f"e.{u}", f"e.{v}")

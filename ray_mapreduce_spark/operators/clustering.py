@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
+from ..functions.pairs import both_directions
+
 
 def connected_components(
     pairs: DataFrame,
@@ -46,22 +48,10 @@ def connected_components(
     measured -0.1-0.2s on pipeline_clean_corpus at sf0.1). A caller
     with a heavily duplicated pair list should dedupe it once
     upstream rather than carry the duplicates through every round."""
-    # Both edge directions via ONE explode over the pair row — never a
-    # self-union: a union references the ``pairs`` subtree twice, and
-    # the two branches race to execute the full upstream
-    # pair-generation lineage (e.g. the whole minhash LSH pipeline)
-    # concurrently; persist() upstream doesn't help (both sides miss
-    # the not-yet-materialized cache — measured ~2x the LSH cost).
-    # explode duplicates ROWS, not the plan, so one checkpoint job
-    # materializes everything exactly once.
-    both_dirs = F.explode(
-        F.array(
-            F.struct(F.col(src).alias("u"), F.col(dst).alias("v")),
-            F.struct(F.col(dst).alias("u"), F.col(src).alias("v")),
-        )
-    )
-    # materialize: every iteration joins against edges
-    edges = pairs.select(both_dirs.alias("e")).select("e.u", "e.v").localCheckpoint(eager=True)
+    # Both edge directions by one explode (not a self-union), so one
+    # checkpoint job materializes the pair lineage exactly once;
+    # every iteration joins against the edges.
+    edges = both_directions(pairs, src, dst, ("u", "v")).localCheckpoint(eager=True)
     # Initial labels = min over the CLOSED neighborhood (self + direct
     # neighbors). The identity init ("comp = node") needs a distinct —
     # a shuffle by node — anyway, so computing round 1's result inside
@@ -136,15 +126,20 @@ def dedup_cluster_survivors(docs: DataFrame, pairs: DataFrame) -> DataFrame:
     ``is_survivor = (doc_id == cluster)`` is the identical flag with
     no exchange and no sort (one full shuffle removed).
 
-    The contract is not checked. A pair endpoint missing from ``docs``
-    is dropped from the output, but it still labels its component: if
-    it is that component's minimum, every member's ``cluster`` is the
-    missing id and the cluster has no survivor (all ``is_survivor``
-    false)."""
+    The contract is checked inside the plan: docs and components meet
+    in a full join, and a component node with no doc row raises
+    (naming the id) when the frame is evaluated, instead of labelling
+    its cluster with an id that is not a doc."""
     comps = connected_components(pairs)
+    missing = F.concat(
+        F.lit("dedup_cluster_survivors: pair endpoint "),
+        F.col("node").cast("string"),
+        F.lit(" is not a doc_id of docs"),
+    )
     return (
         docs.select("doc_id")
-        .join(comps, docs.doc_id == comps.node, "left")
+        .join(comps, docs.doc_id == comps.node, "full")
+        .filter(F.when(F.col("doc_id").isNull(), F.raise_error(missing)).otherwise(F.lit(True)))
         .select(
             "doc_id",
             F.coalesce("comp", F.col("doc_id")).alias("cluster"),

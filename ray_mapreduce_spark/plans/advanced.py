@@ -2963,6 +2963,10 @@ def events_ewma_volatility(spark: SparkSession, sf_dir: str) -> DataFrame:
 # cents floor-div (the q22 cents discipline), sizes/counts are
 # bigints; no float anywhere.
 KANON_BUCKET_CENTS = 50_000  # $500 acctbal buckets
+# The QI balance bucket of the three privacy queries, in Spark SQL
+# (``div``) and in DuckDB (``//``).
+_QI_BUCKET = f"CAST(round(c_acctbal * 100) AS BIGINT) div {KANON_BUCKET_CENTS}"
+_QI_BUCKET_SQL = f"CAST(round(c_acctbal * 100) AS BIGINT) // {KANON_BUCKET_CENTS}"
 
 
 @register(
@@ -2972,7 +2976,7 @@ KANON_BUCKET_CENTS = 50_000  # $500 acctbal buckets
     WITH qi AS (
       SELECT c_nationkey AS nation,
              c_mktsegment AS segment,
-             CAST(round(c_acctbal * 100) AS BIGINT) // {KANON_BUCKET_CENTS} AS bal_bucket
+             {_QI_BUCKET_SQL} AS bal_bucket
       FROM customer
     ),
     grp AS (
@@ -3008,9 +3012,7 @@ def privacy_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
     qi = c.select(
         F.col("c_nationkey").alias("nation"),
         F.col("c_mktsegment").alias("segment"),
-        F.expr(
-            f"CAST(round(c_acctbal * 100) AS BIGINT) div {KANON_BUCKET_CENTS}"
-        ).alias("bal_bucket"),
+        F.expr(_QI_BUCKET).alias("bal_bucket"),
     )
     grp = (
         qi.rollup("nation", "segment", "bal_bucket")
@@ -3151,6 +3153,16 @@ def orders_benford_digits(spark: SparkSession, sf_dir: str) -> DataFrame:
 # pre-round bias).
 PSI_BUCKET_CENTS = 1_000  # value buckets 10.00 wide, in exact cents
 
+# The split day of the events two-period queries: the midpoint of the
+# UTC day range, rounded up, over a frame with a ``day`` column.
+_MID_DAY_SQL = "(min(day) + max(day) + 1) // 2 AS mid"
+
+
+def _mid_day(e: DataFrame) -> DataFrame:
+    """The one-row ``mid`` frame of ``e``: the Spark twin of
+    ``_MID_DAY_SQL``."""
+    return e.agg(F.expr("(min(day) + max(day) + 1) div 2").alias("mid"))
+
 
 @register(
     "events_psi_drift",
@@ -3162,9 +3174,7 @@ PSI_BUCKET_CENTS = 1_000  # value buckets 10.00 wide, in exact cents
              {CENTS_SQL} // {PSI_BUCKET_CENTS} AS bucket
       FROM events
     ),
-    mid AS (
-      SELECT (min(day) + max(day) + 1) // 2 AS mid FROM e
-    ),
+    mid AS (SELECT {_MID_DAY_SQL} FROM e),
     g AS (
       SELECT event_type, bucket,
              sum(CASE WHEN day < mid THEN 1 ELSE 0 END) AS na,
@@ -3213,9 +3223,7 @@ def events_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"{CENTS_SQL} div {PSI_BUCKET_CENTS}"
         ).alias("bucket"),
     )
-    mid = e.agg(
-        F.expr("(min(day) + max(day) + 1) div 2").alias("mid")
-    )
+    mid = _mid_day(e)
     g = (
         e.crossJoin(F.broadcast(mid))
         .groupBy("event_type", "bucket")
@@ -3597,7 +3605,7 @@ def events_dau_wau_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH grp AS (
       SELECT c_nationkey AS nation,
-             CAST(round(c_acctbal * 100) AS BIGINT) // {KANON_BUCKET_CENTS}
+             {_QI_BUCKET_SQL}
                AS bal_bucket,
              count(*) AS sz,
              count(DISTINCT c_mktsegment) AS l
@@ -3626,9 +3634,7 @@ def privacy_l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer")
     grp = c.select(
         F.col("c_nationkey").alias("nation"),
-        F.expr(
-            f"CAST(round(c_acctbal * 100) AS BIGINT) div {KANON_BUCKET_CENTS}"
-        ).alias("bal_bucket"),
+        F.expr(_QI_BUCKET).alias("bal_bucket"),
         "c_mktsegment",
     ).groupBy("nation", "bal_bucket").agg(
         F.count(F.lit(1)).alias("sz"),
@@ -4358,7 +4364,7 @@ def events_daily_peaks(spark: SparkSession, sf_dir: str) -> DataFrame:
              {CENTS_SQL} AS vc
       FROM events
     ),
-    mid AS (SELECT (min(day) + max(day) + 1) // 2 AS mid FROM e),
+    mid AS (SELECT {_MID_DAY_SQL} FROM e),
     u AS (
       SELECT event_type, user_id,
              sum(CASE WHEN day < mid THEN 1 ELSE 0 END) AS an,
@@ -4405,7 +4411,7 @@ def events_cuped_readout(spark: SparkSession, sf_dir: str) -> DataFrame:
         utc_day().alias("day"),
         cents().alias("vc"),
     )
-    mid = e.agg(F.expr("(min(day) + max(day) + 1) div 2").alias("mid"))
+    mid = _mid_day(e)
     u = (
         e.crossJoin(F.broadcast(mid))
         .groupBy("event_type", "user_id")
@@ -4599,7 +4605,7 @@ def events_pettitt_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH base AS (
       SELECT c_nationkey AS nation,
-             CAST(round(c_acctbal * 100) AS BIGINT) // {KANON_BUCKET_CENTS}
+             {_QI_BUCKET_SQL}
                AS bal_bucket,
              c_mktsegment AS seg
       FROM customer
@@ -4653,9 +4659,7 @@ def privacy_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer")
     base = c.select(
         F.col("c_nationkey").alias("nation"),
-        F.expr(
-            f"CAST(round(c_acctbal * 100) AS BIGINT) div {KANON_BUCKET_CENTS}"
-        ).alias("bal_bucket"),
+        F.expr(_QI_BUCKET).alias("bal_bucket"),
         F.col("c_mktsegment").alias("seg"),
     )
     cell = base.groupBy("nation", "bal_bucket", "seg").agg(
@@ -4716,7 +4720,7 @@ def privacy_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
              {CENTS_SQL} AS vc
       FROM events
     ),
-    mid AS (SELECT (min(day) + max(day) + 1) // 2 AS mid FROM e),
+    mid AS (SELECT {_MID_DAY_SQL} FROM e),
     cells AS (
       SELECT event_type, treat,
              CASE WHEN day >= mid THEN 1 ELSE 0 END AS post,
@@ -4774,7 +4778,7 @@ def events_did_readout(spark: SparkSession, sf_dir: str) -> DataFrame:
         utc_day().alias("day"),
         cents().alias("vc"),
     )
-    mid = e.agg(F.expr("(min(day) + max(day) + 1) div 2").alias("mid"))
+    mid = _mid_day(e)
     cells = (
         e.crossJoin(F.broadcast(mid))
         .withColumn(
@@ -4847,7 +4851,7 @@ def events_did_readout(spark: SparkSession, sf_dir: str) -> DataFrame:
              {DAY_SQL} AS day
       FROM events
     ),
-    mid AS (SELECT (min(day) + max(day) + 1) // 2 AS mid FROM e),
+    mid AS (SELECT {_MID_DAY_SQL} FROM e),
     v AS (
       SELECT event_type, value,
              CAST(sum(CASE WHEN day < mid THEN 1 ELSE 0 END) AS BIGINT)
@@ -4895,7 +4899,7 @@ def events_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         "value",
         utc_day().alias("day"),
     )
-    mid = e.agg(F.expr("(min(day) + max(day) + 1) div 2").alias("mid"))
+    mid = _mid_day(e)
     v = (
         e.crossJoin(F.broadcast(mid))
         .groupBy("event_type", "value")
@@ -6619,6 +6623,19 @@ _EWMA_STEPS_SQL = f"""daily AS (
 _EWMA_DIV_SQL = "CAST(shiftleft(CAST(1 AS BIGINT), CAST(i AS INT)) AS DOUBLE)"
 
 
+# events_double_ewma_holt's oracle twin of ``_ewma_steps``' step
+# weight (2 at i = 1, else 2^(i-1)), used by both smoothing passes.
+# The i > 62 guard mirrors the Spark plan's raise_error (ADVICE r13):
+# past 62 steps the 1::BIGINT << i shift would silently wrap where
+# Spark raises; error() keeps the oracle loud standalone too (lazy
+# inside CASE, verified).
+_HOLT_WEIGHT_SQL = (
+    "CAST(1::BIGINT << CASE WHEN i > 62 THEN CAST(error("
+    "'events_double_ewma_holt: series longer than 62 steps — chunk by re-basing') AS INT)"
+    " WHEN i = 1 THEN 1 ELSE CAST(i - 1 AS INT) END AS DOUBLE)"
+)
+
+
 def _ewma_steps(spark: SparkSession, sf_dir: str, query: str) -> tuple[DataFrame, Column]:
     """The ``(event_type, day, x, i)`` frame (x = the day's cent sum,
     i = the 1-based day index per type) and the step weight Column:
@@ -6980,18 +6997,8 @@ def events_winsorized_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH {_EWMA_STEPS_SQL},
     w1 AS (
-      -- the i > 62 guard mirrors the Spark plan's raise_error
-      -- (ADVICE r13): past 62 steps the 1::BIGINT << i shift would
-      -- silently wrap where Spark raises — error() keeps the oracle
-      -- loud standalone too (lazy inside CASE, verified).
       SELECT event_type, day, x, i,
-             sum(CAST(x AS DOUBLE)
-                 * CAST(1::BIGINT << CASE WHEN i > 62 THEN CAST(error(
-                            'events_double_ewma_holt: series longer '
-                            'than 62 steps — chunk by re-basing') AS INT)
-                                          WHEN i = 1 THEN 1
-                                          ELSE CAST(i - 1 AS INT) END
-                        AS DOUBLE)) OVER (
+             sum(CAST(x AS DOUBLE) * {_HOLT_WEIGHT_SQL}) OVER (
                PARTITION BY event_type ORDER BY i) AS wt
       FROM idx
     ),
@@ -7002,13 +7009,7 @@ def events_winsorized_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     w2 AS (
       SELECT event_type, day, x, i, s1,
-             sum(s1
-                 * CAST(1::BIGINT << CASE WHEN i > 62 THEN CAST(error(
-                            'events_double_ewma_holt: series longer '
-                            'than 62 steps — chunk by re-basing') AS INT)
-                                          WHEN i = 1 THEN 1
-                                          ELSE CAST(i - 1 AS INT) END
-                        AS DOUBLE)) OVER (
+             sum(s1 * {_HOLT_WEIGHT_SQL}) OVER (
                PARTITION BY event_type ORDER BY i) AS vt
       FROM s1
     ),
@@ -7367,24 +7368,16 @@ def orders_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     "events_cuped_adjusted_ab",
     tags=("events", "stats", "experiment", "cuped", "aggregate"),
     oracle=f"""
-    WITH b AS (
-      SELECT (min({DAY_SQL})
-              + max({DAY_SQL})
-              + 1) // 2 AS mid
-      FROM events
+    WITH e AS (
+      SELECT user_id, {DAY_SQL} AS day, {CENTS_SQL} AS cents FROM events
     ),
+    b AS (SELECT {_MID_DAY_SQL} FROM e),
     u AS (
       SELECT user_id,
              CAST(user_id * {KNUTH} % {MOD_2_32} % 2 AS BIGINT) AS arm,
-             CAST(sum(CASE WHEN epoch_us(CAST(ts AS TIMESTAMP))
-                                // 86400000000 < mid
-                           THEN {CENTS_SQL}
-                           ELSE 0 END) AS BIGINT) AS pre,
-             CAST(sum(CASE WHEN epoch_us(CAST(ts AS TIMESTAMP))
-                                // 86400000000 >= mid
-                           THEN {CENTS_SQL}
-                           ELSE 0 END) AS BIGINT) AS post
-      FROM events CROSS JOIN b GROUP BY 1, 2
+             CAST(sum(CASE WHEN day < mid THEN cents ELSE 0 END) AS BIGINT) AS pre,
+             CAST(sum(CASE WHEN day >= mid THEN cents ELSE 0 END) AS BIGINT) AS post
+      FROM e CROSS JOIN b GROUP BY 1, 2
     ),
     m AS (
       SELECT arm,
@@ -7483,9 +7476,7 @@ def events_cuped_adjusted_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
         utc_day().alias("day"),
         cents().alias("cents"),
     )
-    b = e.agg(
-        F.expr("(min(day) + max(day) + 1) div 2").alias("mid")
-    )
+    b = _mid_day(e)
     dec = "decimal(38,0)"
     u = (
         e.crossJoin(F.broadcast(b))

@@ -29,7 +29,8 @@ from pyspark.sql.window import Window
 from ..functions.grain import KNUTH, MOD_2_32, knuth_bucket
 from ..functions.pairs import canonical_pairs, cap_blocks, jaccard_verify, saturation_guard
 from ..functions.scale import spread_by as _spread_by
-from ..functions.text import QUALITY_RAW_SQL, TOKENS_SQL, lead_chain, quality_raw_col, tokens
+from ..functions.text import NORM_TEXT_SQL, QUALITY_RAW_SQL, TOKENS_SQL, lead_chain
+from ..functions.text import normalized_text, quality_raw_col, tokens
 from ..operators.clustering import connected_components, dedup_cluster_survivors
 from ..sources import load_table
 from .registry import register
@@ -1297,18 +1298,14 @@ def corpus_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 # punctuation stripping, and whitespace collapsing — catches the
 # trivial variants (recapitalized titles, doubled spaces, moved
 # commas) byte-exact dedup misses, at exactly the same shuffle cost
-# (the digest is computed on the normalized form at scan speed).
-# Both engines apply the same two regexes; parity of the character
-# classes is part of what the oracle verifies.
+# (the digest is computed on the normalized form at scan speed,
+# functions/text.normalized_text).
 @register(
     "dedup_exact_normalized",
     tags=("dedup", "exact", "normalization"),
-    oracle="""
+    oracle=f"""
     WITH n AS (
-      SELECT doc_id, lang,
-             trim(regexp_replace(regexp_replace(lower(text),
-                                                '[.,;:!?''"()-]', '', 'g'),
-                                 ' +', ' ', 'g')) AS norm
+      SELECT doc_id, lang, {NORM_TEXT_SQL} AS norm
       FROM documents
     )
     SELECT CAST(count(*) AS BIGINT) AS n_docs,
@@ -1326,13 +1323,7 @@ def dedup_exact_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan-speed projection, the count-distincts shuffle 32-byte
     digests."""
     d = load_table(spark, sf_dir, "documents")
-    norm = F.trim(
-        F.regexp_replace(
-            F.regexp_replace(F.lower("text"), r"""[.,;:!?'"()-]""", ""),
-            " +",
-            " ",
-        )
-    )
+    norm = normalized_text()
     return d.select(
         F.sha2(norm, 256).alias("hn"), F.sha2(F.col("text"), 256).alias("hr")
     ).agg(

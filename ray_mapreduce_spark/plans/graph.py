@@ -26,16 +26,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.pairs import canonical_pairs
+from ..functions.pairs import both_directions
 from ..sources import load_table
 from .registry import register
-from .similarity import _cos, _with_vec
-
-# Edge rule shared with dedup_embedding_cosine (plans/similarity.py):
-# same-label pairs at cosine >= EDGE_COS_THRESHOLD. The oracles
-# re-encode it via list_cosine_similarity, which is hash-verified
-# against the HOF kernel in dedup_embedding_cosine.
-EDGE_COS_THRESHOLD = 0.35
+from .similarity import EDGE_COS_THRESHOLD, _near_dup_pairs, _near_dup_sql, _with_vec
 
 # Link prediction needs WEDGES (paths of length 2), not just edges:
 # at the 0.35 near-dup threshold the driver graph is matching-shaped
@@ -57,32 +51,28 @@ def _edge_sql(threshold: float) -> str:
     ),
     prs AS (
       SELECT a.vec_id AS src, b.vec_id AS dst
-      FROM v a JOIN v b ON a.label = b.label AND a.vec_id < b.vec_id
-      WHERE list_cosine_similarity(a.vec, b.vec) >= {threshold}
+      {_near_dup_sql(threshold)}
     )
 """
 
 
 # damping 0.85 expressed as integer numerator/denominator
 _PR_EDGE_SQL = _edge_sql(EDGE_COS_THRESHOLD)
+# Both directions of every prs edge (the SQL side of both_directions).
+_UNDIRECTED_SQL = "SELECT src, dst FROM prs UNION ALL SELECT dst AS src, src AS dst FROM prs"
 
 
 def _pair_edges(v: DataFrame, threshold: float = EDGE_COS_THRESHOLD) -> DataFrame:
-    """Canonical (src < dst) near-dup edges from a _with_vec frame.
-    Self-join of one identical subtree — AQE runtime exchange-reuse
-    computes the projection once (gotcha #14, self-join case)."""
-    return (
-        canonical_pairs(v, ["label"], "vec_id")
-        .withColumn("cos", _cos("a.vec", "b.vec"))
-        .filter(F.col("cos") >= threshold)
-        .select(F.col("a.vec_id").alias("src"), F.col("b.vec_id").alias("dst"))
+    """Canonical (src < dst) near-dup edges from a _with_vec frame."""
+    return _near_dup_pairs(v, threshold).select(
+        F.col("a.vec_id").alias("src"), F.col("b.vec_id").alias("dst")
     )
 
 
 def _pagerank_oracle(iters: int, scale: int) -> str:
     parts = [
         "WITH " + _PR_EDGE_SQL.strip(),
-        "edges AS (SELECT src, dst FROM prs UNION ALL SELECT dst AS src, src AS dst FROM prs)",
+        f"edges AS ({_UNDIRECTED_SQL})",
         "deg AS (SELECT src, count(*) AS deg FROM edges GROUP BY src)",
         "n AS (SELECT count(*) AS n FROM v)",
         f"r0 AS (SELECT vec_id, ({scale} // n.n) AS r FROM v, n)",
@@ -132,8 +122,8 @@ def graph_pagerank_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     node/base frame are LOOP-INVARIANT and eager-localCheckpointed
     once (iterative-operator rule — an uncheckpointed invariant
     re-executes the whole LSH/cosine lineage every round); the pair
-    frame is checkpointed BEFORE the forward+reverse self-union
-    (sibling branches race the same lineage, gotcha #9). Each round
+    frame is checkpointed before it is exploded into both edge
+    directions (functions/pairs.both_directions). Each round
     is one equi-join ranks⋈edges on src (O(E) contributions) plus
     one partial-aggregated groupBy(dst) and a left join back to the
     node frame (O(V)) — the canonical distributed PageRank shuffle;
@@ -150,11 +140,9 @@ def pagerank_from_edges(
 ) -> DataFrame:
     """Fixed-point integer PageRank core over a (vec_id) node frame
     and a canonical (src, dst) undirected pair frame (pass pairs
-    already checkpointed — they are consumed by the forward+reverse
-    self-union). See graph_pagerank_neardup for the rationale."""
-    edges = pairs.union(
-        pairs.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
+    already checkpointed). See graph_pagerank_neardup for the
+    rationale."""
+    edges = both_directions(pairs, "src", "dst")
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     ed = edges.join(deg, "src").localCheckpoint(eager=True)
     n_frame = nodes.agg(F.count(F.lit(1)).alias("n"))
@@ -310,7 +298,7 @@ def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     instead of a div-by-zero path)."""
     v = _with_vec(load_table(spark, sf_dir, "embeddings"))
     prs = _pair_edges(v).localCheckpoint(eager=True)
-    e2 = prs.union(prs.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+    e2 = both_directions(prs, "src", "dst")
     deg = (
         e2.groupBy(F.col("src").alias("node"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("d"))
@@ -351,7 +339,7 @@ def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("graph", "triangles", "dedup-signal"),
     oracle=f"""
     WITH {_PR_EDGE_SQL.strip()},
-    edges AS (SELECT src, dst FROM prs UNION ALL SELECT dst AS src, src AS dst FROM prs),
+    edges AS ({_UNDIRECTED_SQL}),
     deg AS (SELECT src AS vec_id, count(*) AS deg FROM edges GROUP BY src),
     {_TRIANGLES_SQL}
     SELECT v.vec_id,
@@ -372,7 +360,7 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     correctly-rounded double of identical integers on both engines
     (+1e-9 pre-round bias per gotcha #3; lcc >= 0 so no signed-zero
     leg). Scale shape: the checkpointed pair frame feeds BOTH the
-    triangle wedge joins and the degree union (sibling consumers —
+    triangle wedge joins and the degree count (sibling consumers —
     the checkpoint is the gotcha #9 fix); wedge/closure are the same
     equi-joins as graph_triangle_count, degree is one partial agg;
     the final assembly joins two node-sized frames. At crawl scale
@@ -381,9 +369,7 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = _with_vec(load_table(spark, sf_dir, "embeddings"))
     prs = _pair_edges(v).localCheckpoint(eager=True)
     tri = triangle_counts(v.select("vec_id"), prs)
-    edges = prs.union(
-        prs.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
+    edges = both_directions(prs, "src", "dst")
     deg = edges.groupBy(F.col("src").alias("vec_id")).agg(
         F.count(F.lit(1)).alias("deg")
     )
@@ -439,8 +425,7 @@ _KCORE_EDGE_SQL = _PR_EDGE_SQL.replace(" AS (", " AS MATERIALIZED (")
 def _kcore_oracle(k: int, rounds: int) -> str:
     parts = [
         "WITH " + _KCORE_EDGE_SQL.strip(),
-        "e0 AS MATERIALIZED (SELECT src, dst FROM prs"
-        " UNION ALL SELECT dst AS src, src AS dst FROM prs)",
+        f"e0 AS MATERIALIZED ({_UNDIRECTED_SQL})",
     ]
     for i in range(1, rounds + 1):
         parts.append(
@@ -481,9 +466,9 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     cyclic families). Determinism: pure integer degree counts and
     semi/anti-join membership — no floats anywhere past the
     (hash-verified) edge rule. Scale shape: the undirected edge frame
-    is checkpointed once (the forward+reverse self-union races one
-    lineage, gotcha #9) and each round is one partial-aggregated
-    degree count + two semi joins on edge keys, re-checkpointed so
+    is checkpointed once (every round reads it) and each round is
+    one partial-aggregated degree count + two semi joins on edge
+    keys, re-checkpointed so
     lineage stays flat (iterative-operator rule); per-round removed
     frames read only the two adjacent checkpoints, and work per round
     shrinks with the surviving edge set. The fixed round budget is
@@ -492,9 +477,7 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     IS the fixpoint on this corpus (zero final-round removals)."""
     v = _with_vec(load_table(spark, sf_dir, "embeddings"))
     prs = _pair_edges(v).localCheckpoint(eager=True)
-    edges = prs.union(
-        prs.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint(eager=True)
+    edges = both_directions(prs, "src", "dst").localCheckpoint(eager=True)
     return kcore_peel_rounds(edges, KCORE_K, KCORE_ROUNDS)
 
 
@@ -560,9 +543,7 @@ def kcore_peel_rounds(edges: DataFrame, k: int, rounds: int) -> DataFrame:
     tags=("graph", "linkpred", "wedge"),
     oracle=f"""
     WITH {_edge_sql(LINKPRED_COS_THRESHOLD).strip()},
-    edges AS (
-      SELECT src, dst FROM prs UNION ALL SELECT dst AS src, src AS dst FROM prs
-    ),
+    edges AS ({_UNDIRECTED_SQL}),
     deg AS (SELECT src AS v, count(*) AS deg FROM edges GROUP BY 1),
     wedge AS (
       SELECT e1.dst AS u, e2.dst AS w, e1.src AS mid
@@ -608,9 +589,7 @@ def adamic_adar_from_edges(prs: DataFrame) -> DataFrame:
     """Score non-adjacent wedge pairs from a canonical (src < dst)
     pair frame (already checkpointed by the caller — it feeds three
     consumers)."""
-    und = prs.union(
-        prs.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
+    und = both_directions(prs, "src", "dst")
     deg = und.groupBy(F.col("src").alias("v")).agg(F.count(F.lit(1)).alias("deg"))
     e1 = und.alias("e1")
     e2 = und.alias("e2")

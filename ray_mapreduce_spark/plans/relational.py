@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.pairs import canonical_pairs, cap_blocks
+from ..functions.stats import ordered_fold, ordered_fold_sql
 from ..operators.skew import salted_join
 from ..sources import load_table
 from .registry import register
@@ -2158,10 +2159,15 @@ def lineitem_discount_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
 # sum in flag order on BOTH engines, adding identical
 # correctly-rounded doubles in identical order; every later quantity
 # derives from those identical doubles in identical expression order.
+_ANOVA_SUMS_SQL = {
+    "cn": "n", "cs": "s", "css": "ss", "cterm": "CAST(s * s AS DOUBLE) / n"
+}
+
+
 @register(
     "lineitem_returnflag_anova",
     tags=("relational", "anova", "statistics", "aggregate"),
-    oracle="""
+    oracle=f"""
     WITH m AS (
       SELECT l_returnflag,
              CAST(count(*) AS BIGINT) AS n,
@@ -2170,17 +2176,7 @@ def lineitem_discount_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
                       * CAST(l_quantity AS BIGINT)) AS BIGINT) AS ss
       FROM lineitem GROUP BY 1
     ),
-    folded AS (
-      SELECT l_returnflag,
-             row_number() OVER (ORDER BY l_returnflag) AS rk,
-             count(*) OVER () AS k,
-             sum(n) OVER w AS cn, sum(s) OVER w AS cs, sum(ss) OVER w AS css,
-             sum(CAST(s * s AS DOUBLE) / n) OVER w AS cterm
-      FROM m
-      WINDOW w AS (ORDER BY l_returnflag ROWS BETWEEN UNBOUNDED PRECEDING
-                   AND CURRENT ROW)
-    ),
-    last AS (SELECT * FROM folded WHERE rk = k)
+    last AS ({ordered_fold_sql("m", "l_returnflag", _ANOVA_SUMS_SQL)})
     SELECT CAST(k AS BIGINT) AS k,
            CAST(cn AS BIGINT) AS n,
            round(cterm - CAST(cs * cs AS DOUBLE) / cn + 1e-9, 6)
@@ -2215,26 +2211,16 @@ def lineitem_returnflag_anova(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("q").cast("bigint").alias("s"),
         F.sum(F.col("q") * F.col("q")).cast("bigint").alias("ss"),
     )
-    w = (
-        Window.orderBy("l_returnflag")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    last = ordered_fold(
+        m,
+        ["l_returnflag"],
+        {
+            "cn": "n",
+            "cs": "s",
+            "css": "ss",
+            "cterm": (F.col("s") * F.col("s")).cast("double") / F.col("n"),
+        },
     )
-    folded = m.select(
-        "l_returnflag",
-        F.row_number().over(Window.orderBy("l_returnflag")).alias("rk"),
-        F.count(F.lit(1)).over(
-            Window.rowsBetween(
-                Window.unboundedPreceding, Window.unboundedFollowing
-            )
-        ).alias("k"),
-        F.sum("n").over(w).alias("cn"),
-        F.sum("s").over(w).alias("cs"),
-        F.sum("ss").over(w).alias("css"),
-        F.sum((F.col("s") * F.col("s")).cast("double") / F.col("n"))
-        .over(w)
-        .alias("cterm"),
-    )
-    last = folded.filter(F.col("rk") == F.col("k"))
     ssb = F.col("cterm") - (F.col("cs") * F.col("cs")).cast("double") / F.col(
         "cn"
     )
@@ -2740,10 +2726,23 @@ def lineitem_supplier_switching(spark: SparkSession, sf_dir: str) -> DataFrame:
 # month marginals REUSE the cell aggregate (no second fact scan); the
 # folds and the final algebra run on bounded frames (25 + 80 + 2000
 # rows) cross-joined as 1-row broadcasts.
+_FE_MARGIN_SUMS_SQL = {
+    "cxy": "CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE) / n",
+    "cxx": "CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE) / n",
+}
+_FE_CELL_SUMS_SQL = {
+    "cxy": "CAST(c.n AS DOUBLE) * (CAST(i.sx AS DOUBLE) * CAST(t.sy AS DOUBLE)"
+    " + CAST(t.sx AS DOUBLE) * CAST(i.sy AS DOUBLE))"
+    " / (CAST(i.n AS DOUBLE) * CAST(t.n AS DOUBLE))",
+    "cxx": "CAST(c.n AS DOUBLE) * (2.0 * CAST(i.sx AS DOUBLE) * CAST(t.sx AS DOUBLE))"
+    " / (CAST(i.n AS DOUBLE) * CAST(t.n AS DOUBLE))",
+}
+
+
 @register(
     "orders_twoway_fixed_effects",
     tags=("relational", "regression", "fixed-effects", "window"),
-    oracle="""
+    oracle=f"""
     WITH r AS (
       SELECT n.n_name AS nat,
              CAST(year(o.o_orderdate) * 12 + month(o.o_orderdate)
@@ -2782,74 +2781,24 @@ def lineitem_supplier_switching(spark: SparkSession, sf_dir: str) -> DataFrame:
              sum(sxy) AS sxy
       FROM cell
     ),
-    fi AS (
-      SELECT rk, k, cxy, cxx FROM (
-        SELECT row_number() OVER (ORDER BY nat) AS rk,
-               count(*) OVER () AS k,
-               sum(CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE) / n) OVER w
-                 AS cxy,
-               sum(CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE) / n) OVER w
-                 AS cxx
-        FROM ni
-        WINDOW w AS (ORDER BY nat ROWS BETWEEN UNBOUNDED PRECEDING
-                     AND CURRENT ROW)
-      ) WHERE rk = k
-    ),
-    ft AS (
-      SELECT rk, k, cxy, cxx FROM (
-        SELECT row_number() OVER (ORDER BY mth) AS rk,
-               count(*) OVER () AS k,
-               sum(CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE) / n) OVER w
-                 AS cxy,
-               sum(CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE) / n) OVER w
-                 AS cxx
-        FROM nt
-        WINDOW w AS (ORDER BY mth ROWS BETWEEN UNBOUNDED PRECEDING
-                     AND CURRENT ROW)
-      ) WHERE rk = k
-    ),
-    fcp AS (
-      -- HIERARCHICAL fold (two levels, each over a SMALL frame): a
-      -- single running sum over all ~|nations|x|months| cell terms
-      -- diverges from the sequential order past ~1-2k rows — DuckDB
-      -- parallelizes/chunks window aggregation, so its windowed
-      -- running sum stops being a left-to-right sequential fold on
-      -- large frames (found bitwise at sf0.1: 2000-row fold off by
-      -- 2 ulp while the 25- and 80-row folds matched exactly). Fold
-      -- per nation over months (<= |months| rows), then fold the
-      -- |nations| partials.
-      SELECT nat, cxy, cxx FROM (
-        SELECT c.nat,
-               row_number() OVER (PARTITION BY c.nat ORDER BY c.mth)
-                 AS rk,
-               count(*) OVER (PARTITION BY c.nat) AS k,
-               sum(CAST(c.n AS DOUBLE)
-                   * (CAST(i.sx AS DOUBLE) * CAST(t.sy AS DOUBLE)
-                      + CAST(t.sx AS DOUBLE) * CAST(i.sy AS DOUBLE))
-                   / (CAST(i.n AS DOUBLE) * CAST(t.n AS DOUBLE))) OVER w
-                 AS cxy,
-               sum(CAST(c.n AS DOUBLE)
-                   * (2.0 * CAST(i.sx AS DOUBLE) * CAST(t.sx AS DOUBLE))
-                   / (CAST(i.n AS DOUBLE) * CAST(t.n AS DOUBLE))) OVER w
-                 AS cxx
-        FROM cell c
-        JOIN ni i ON i.nat = c.nat
-        JOIN nt t ON t.mth = c.mth
-        WINDOW w AS (PARTITION BY c.nat ORDER BY c.mth
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-      ) WHERE rk = k
-    ),
-    fc AS (
-      SELECT rk, k, cxy, cxx FROM (
-        SELECT row_number() OVER (ORDER BY nat) AS rk,
-               count(*) OVER () AS k,
-               sum(cxy) OVER w AS cxy,
-               sum(cxx) OVER w AS cxx
-        FROM fcp
-        WINDOW w AS (ORDER BY nat ROWS BETWEEN UNBOUNDED PRECEDING
-                     AND CURRENT ROW)
-      ) WHERE rk = k
-    )
+    fi AS ({ordered_fold_sql("ni", "nat", _FE_MARGIN_SUMS_SQL)}),
+    ft AS ({ordered_fold_sql("nt", "mth", _FE_MARGIN_SUMS_SQL)}),
+    -- HIERARCHICAL fold (two levels, each over a SMALL frame): a
+    -- single running sum over all ~|nations|x|months| cell terms
+    -- diverges from the sequential order past ~1-2k rows — DuckDB
+    -- parallelizes/chunks window aggregation, so its windowed
+    -- running sum stops being a left-to-right sequential fold on
+    -- large frames (found bitwise at sf0.1: 2000-row fold off by
+    -- 2 ulp while the 25- and 80-row folds matched exactly). Fold
+    -- per nation over months (<= |months| rows), then fold the
+    -- |nations| partials.
+    fcp AS ({ordered_fold_sql(
+        "cell c JOIN ni i ON i.nat = c.nat JOIN nt t ON t.mth = c.mth",
+        "c.mth",
+        _FE_CELL_SUMS_SQL,
+        by="c.nat",
+    )}),
+    fc AS ({ordered_fold_sql("fcp", "nat", {"cxy": "cxy", "cxx": "cxx"})})
     SELECT g.n AS n_orders,
            CAST(fi.k AS BIGINT) AS n_nations,
            CAST(ft.k AS BIGINT) AS n_months,
@@ -2924,35 +2873,17 @@ def orders_twoway_fixed_effects(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("sxy").alias("sxy"),
     )
 
-    def _fold(df, keys, term_xy, term_xx):
-        w = Window.orderBy(*keys).rowsBetween(
-            Window.unboundedPreceding, Window.currentRow
-        )
-        folded = df.select(
-            F.row_number().over(Window.orderBy(*keys)).alias("rk"),
-            F.count(F.lit(1))
-            .over(
-                Window.rowsBetween(
-                    Window.unboundedPreceding, Window.unboundedFollowing
-                )
-            )
-            .alias("k"),
-            F.sum(term_xy).over(w).alias("cxy"),
-            F.sum(term_xx).over(w).alias("cxx"),
-        )
-        return folded.filter(F.col("rk") == F.col("k"))
-
     dbl = lambda c: F.col(c).cast("double")  # noqa: E731
-    fi = _fold(
-        ni, ["nat"], dbl("sx") * dbl("sy") / F.col("n"),
-        dbl("sx") * dbl("sx") / F.col("n"),
-    ).select(F.col("k").alias("ki"), F.col("cxy").alias("fi_xy"),
-             F.col("cxx").alias("fi_xx"))
-    ft = _fold(
-        ntf, ["mth"], dbl("sx") * dbl("sy") / F.col("n"),
-        dbl("sx") * dbl("sx") / F.col("n"),
-    ).select(F.col("k").alias("kt"), F.col("cxy").alias("ft_xy"),
-             F.col("cxx").alias("ft_xx"))
+    margin = {
+        "cxy": dbl("sx") * dbl("sy") / F.col("n"),
+        "cxx": dbl("sx") * dbl("sx") / F.col("n"),
+    }
+    fi = ordered_fold(ni, ["nat"], margin).select(
+        F.col("k").alias("ki"), F.col("cxy").alias("fi_xy"), F.col("cxx").alias("fi_xx")
+    )
+    ft = ordered_fold(ntf, ["mth"], margin).select(
+        F.col("k").alias("kt"), F.col("cxy").alias("ft_xy"), F.col("cxx").alias("ft_xx")
+    )
     cj = (
         cell.select("nat", "mth", F.col("n").alias("cn"))
         .join(
@@ -2978,11 +2909,6 @@ def orders_twoway_fixed_effects(spark: SparkSession, sf_dir: str) -> DataFrame:
     # running sums over months, then a fold of the |nations| partials
     # — every frame stays small enough that both engines' windowed
     # running sums are true sequential folds.
-    w_nat = (
-        Window.partitionBy("nat")
-        .orderBy("mth")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
     term_xy = (
         dbl("cn")
         * (dbl("i_sx") * dbl("t_sy") + dbl("t_sx") * dbl("i_sy"))
@@ -2993,20 +2919,10 @@ def orders_twoway_fixed_effects(spark: SparkSession, sf_dir: str) -> DataFrame:
         * (F.lit(2.0) * dbl("i_sx") * dbl("t_sx"))
         / (dbl("i_n") * dbl("t_n"))
     )
-    fcp = (
-        cj.select(
-            "nat",
-            F.row_number()
-            .over(Window.partitionBy("nat").orderBy("mth"))
-            .alias("rk"),
-            F.count(F.lit(1)).over(Window.partitionBy("nat")).alias("k"),
-            F.sum(term_xy).over(w_nat).alias("cxy"),
-            F.sum(term_xx).over(w_nat).alias("cxx"),
-        )
-        .filter(F.col("rk") == F.col("k"))
-        .select("nat", "cxy", "cxx")
+    fcp = ordered_fold(cj, ["mth"], {"cxy": term_xy, "cxx": term_xx}, by=["nat"]).select(
+        "nat", "cxy", "cxx"
     )
-    fc = _fold(fcp, ["nat"], F.col("cxy"), F.col("cxx")).select(
+    fc = ordered_fold(fcp, ["nat"], {"cxy": "cxy", "cxx": "cxx"}).select(
         F.col("cxy").alias("fc_xy"), F.col("cxx").alias("fc_xx")
     )
     out = (
@@ -3064,7 +2980,7 @@ def orders_twoway_fixed_effects(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "lineitem_theil_index",
     tags=("relational", "inequality", "theil", "window"),
-    oracle="""
+    oracle=f"""
     WITH sup AS (
       SELECT s.s_nationkey AS nat, l.l_suppkey AS sk,
              CAST(sum(CAST(round(l.l_extendedprice * 100) AS BIGINT))
@@ -3089,32 +3005,19 @@ def orders_twoway_fixed_effects(spark: SparkSession, sf_dir: str) -> DataFrame:
                * ln(CAST(sup.x AS DOUBLE) * g.ng / g.totg) AS t_win
       FROM sup JOIN g ON g.nat = sup.nat CROSS JOIN tot
     ),
-    fp AS (
-      SELECT nat, ct, cw FROM (
-        SELECT nat,
-               row_number() OVER (PARTITION BY nat ORDER BY sk) AS rk,
-               count(*) OVER (PARTITION BY nat) AS k,
-               sum(t_tot) OVER w AS ct,
-               sum(t_win) OVER w AS cw
-        FROM terms
-        WINDOW w AS (PARTITION BY nat ORDER BY sk
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-      ) WHERE rk = k
-    ),
-    fn AS (
-      SELECT ct, cw, cb FROM (
-        SELECT row_number() OVER (ORDER BY fp.nat) AS rk,
-               count(*) OVER () AS k,
-               sum(fp.ct) OVER w AS ct,
-               sum(fp.cw) OVER w AS cw,
-               sum(CAST(g.totg AS DOUBLE) / tot.tot
-                   * ln(CAST(g.totg AS DOUBLE) * tot.n
-                        / (CAST(tot.tot AS DOUBLE) * g.ng))) OVER w AS cb
-        FROM fp JOIN g ON g.nat = fp.nat CROSS JOIN tot
-        WINDOW w AS (ORDER BY fp.nat ROWS BETWEEN UNBOUNDED PRECEDING
-                     AND CURRENT ROW)
-      ) WHERE rk = k
-    )
+    fp AS ({ordered_fold_sql(
+        "terms", "sk", {"ct": "t_tot", "cw": "t_win"}, by="nat"
+    )}),
+    fn AS ({ordered_fold_sql(
+        "fp JOIN g ON g.nat = fp.nat CROSS JOIN tot",
+        "fp.nat",
+        {
+            "ct": "fp.ct",
+            "cw": "fp.cw",
+            "cb": "CAST(g.totg AS DOUBLE) / tot.tot * ln(CAST(g.totg AS DOUBLE) * tot.n"
+            " / (CAST(tot.tot AS DOUBLE) * g.ng))",
+        },
+    )})
     SELECT tot.n AS n_suppliers,
            CAST((SELECT count(*) FROM g) AS BIGINT) AS n_nations,
            round(fn.ct + 1e-9, 6) AS theil_total,
@@ -3165,21 +3068,8 @@ def lineitem_theil_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("t_win"),
         )
     )
-    w_nat = (
-        Window.partitionBy("nat")
-        .orderBy("sk")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    fp = (
-        terms.select(
-            "nat",
-            F.row_number().over(Window.partitionBy("nat").orderBy("sk")).alias("rk"),
-            F.count(F.lit(1)).over(Window.partitionBy("nat")).alias("k"),
-            F.sum("t_tot").over(w_nat).alias("ct"),
-            F.sum("t_win").over(w_nat).alias("cw"),
-        )
-        .filter(F.col("rk") == F.col("k"))
-        .select("nat", "ct", "cw")
+    fp = ordered_fold(terms, ["sk"], {"ct": "t_tot", "cw": "t_win"}, by=["nat"]).select(
+        "nat", "ct", "cw"
     )
     b_term = (
         F.col("totg").cast("double")
@@ -3190,26 +3080,10 @@ def lineitem_theil_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             / (F.col("tot").cast("double") * F.col("ng"))
         )
     )
-    w_all = Window.orderBy("nat").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    fn = (
-        fp.join(F.broadcast(g), "nat")
-        .crossJoin(F.broadcast(tot))
-        .select(
-            F.row_number().over(Window.orderBy("nat")).alias("rk"),
-            F.count(F.lit(1))
-            .over(
-                Window.rowsBetween(
-                    Window.unboundedPreceding, Window.unboundedFollowing
-                )
-            )
-            .alias("k"),
-            F.sum("ct").over(w_all).alias("ct"),
-            F.sum("cw").over(w_all).alias("cw"),
-            F.sum(b_term).over(w_all).alias("cb"),
-        )
-        .filter(F.col("rk") == F.col("k"))
+    fn = ordered_fold(
+        fp.join(F.broadcast(g), "nat").crossJoin(F.broadcast(tot)),
+        ["nat"],
+        {"ct": "ct", "cw": "cw", "cb": b_term},
     )
     ng_count = g.agg(F.count(F.lit(1)).cast("bigint").alias("n_nations"))
     return (

@@ -29,7 +29,8 @@ from pyspark.sql.window import Window
 
 from ..functions.grain import KNUTH, MOD_2_32, knuth_bucket
 from ..functions.scale import two_pass_cumsum
-from ..functions.text import QUALITY_RAW_SQL, TOKENS_SQL, n_words, quality_raw_col, tokens
+from ..functions.text import NORM_TEXT_SQL, QUALITY_RAW_SQL, TOKENS_SQL, n_words
+from ..functions.text import normalized_text, quality_raw_col, tokens
 from ..sources import load_table
 from .registry import register
 
@@ -698,13 +699,11 @@ def sample_epoch_mixture_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "sample_dedup_aware_weights",
     tags=("sampling", "dedup", "weights"),
-    oracle="""
+    oracle=f"""
     WITH k AS (
       SELECT doc_id, source,
-             count(*) OVER (PARTITION BY sha256(substr(
-               trim(regexp_replace(regexp_replace(lower(text),
-                                                  '[.,;:!?\'\'"()-]', '', 'g'),
-                                   ' +', ' ', 'g')), 1, 200))) AS dup_count
+             count(*) OVER (PARTITION BY sha256(substr({NORM_TEXT_SQL}, 1, 200)))
+               AS dup_count
       FROM documents
     )
     SELECT doc_id, source,
@@ -722,13 +721,7 @@ def sample_dedup_aware_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     no sort); the text column is consumed by the pre-exchange digest
     projection and never shuffles."""
     d = load_table(spark, sf_dir, "documents")
-    norm = F.trim(
-        F.regexp_replace(
-            F.regexp_replace(F.lower("text"), r"""[.,;:!?'"()-]""", ""),
-            " +",
-            " ",
-        )
-    )
+    norm = normalized_text()
     w = Window.partitionBy(F.sha2(F.substring(norm, 1, 200), 256))
     return d.select(
         "doc_id",

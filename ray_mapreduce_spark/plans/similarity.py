@@ -37,13 +37,12 @@ from pyspark.sql.window import Window
 from ..functions.pairs import canonical_pairs, cap_blocks
 from ..functions.scale import spread as _spread
 from ..functions.scale import spread_by as _spread_by
-from ..functions.text import TOKENS_SQL, tokens
+from ..functions.text import BM25_SCORED_SQL, BM25_TF_SQL, TOKENS_SQL, bm25_stats, bm25_tf
+from ..functions.text import bm25_weight, tokens
 from ..sources import load_table
 from .dedup import DEFAULT_DF_CAP, JACCARD_THRESHOLD, SHINGLE_MIN_SQL, SHINGLE_PAIRS_SQL
 from .dedup import SHINGLE_SET_SQL, SHINGLED_CTE_SQL, ngram_jaccard_pairs
 from .registry import register
-from .text_analysis import BM25_B as _RRF_B
-from .text_analysis import BM25_K1 as _RRF_K1
 
 TOP_K = 5
 N_QUERIES = 10  # vec_id < 10 are the query vectors
@@ -75,6 +74,14 @@ def _d2(a: Column | str, b: Column | str) -> Column:
     rule: both engines fold the same dots left to right, and the
     round absorbs the last-ulp drift before any argmin compares."""
     return F.round(_dot(a, a) - 2 * _dot(a, b) + _dot(b, b), 4)
+
+
+def _query_vecs(v: DataFrame) -> DataFrame:
+    """The query side ``(query_id, qvec)`` of a ``_with_vec`` frame:
+    its first N_QUERIES vectors."""
+    return v.filter(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("query_id"), F.col("vec").alias("qvec")
+    )
 
 
 def _with_vec(d: DataFrame) -> DataFrame:
@@ -128,9 +135,7 @@ def _with_vec(d: DataFrame) -> DataFrame:
 def similarity_topk_brute(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact cosine top-{K} neighbors for query vectors vec_id < 10."""
     v = _with_vec(load_table(spark, sf_dir, "embeddings"))
-    q = v.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("vec").alias("qvec")
-    )
+    q = _query_vecs(v)
     c = v.select(F.col("vec_id").alias("neighbor_id"), F.col("vec").alias("cvec"))
     scored = (
         F.broadcast(q)
@@ -154,32 +159,54 @@ def _topk_cosine(scored: DataFrame) -> DataFrame:
 
 # --------------------------------------------------------------------------
 # Embedding-cosine near-duplicate pairs (the §2d "embedding-cosine
-# near-dup" dedup variant lives here with the shared kernels).
+# near-dup" dedup variant lives here with the shared kernels). The
+# edge rule, same-label pairs at cosine >= EDGE_COS_THRESHOLD, is also
+# the near-dup graph of plans/graph.py. 0.35 sits at ~p99.9 of this
+# synthetic corpus's within-label cosine distribution (max ~0.51), so
+# the result is non-empty at every sf; a real near-dup pipeline would
+# use ~0.95+.
+EDGE_COS_THRESHOLD = 0.35
+
+
+def _near_dup_pairs(v: DataFrame, threshold: float = EDGE_COS_THRESHOLD) -> DataFrame:
+    """Label-blocked canonical pairs ``a``/``b`` of a ``_with_vec``
+    frame whose cosine ``cos`` reaches ``threshold`` — at scale the
+    block key becomes an LSH bucket (same join shape). A self-join of
+    one identical subtree: AQE runtime exchange-reuse computes the
+    projection once (gotcha #14, self-join case)."""
+    return (
+        canonical_pairs(v, ["label"], "vec_id")
+        .withColumn("cos", _cos("a.vec", "b.vec"))
+        .filter(F.col("cos") >= threshold)
+    )
+
+
+def _near_dup_sql(threshold: float = EDGE_COS_THRESHOLD) -> str:
+    """The oracles' twin of ``_near_dup_pairs``: the FROM and WHERE
+    clauses over a CTE ``v (vec_id, label, vec)``. list_cosine_similarity
+    is hash-verified against the HOF kernel by dedup_embedding_cosine."""
+    return f"""FROM v a JOIN v b ON a.label = b.label AND a.vec_id < b.vec_id
+      WHERE list_cosine_similarity(a.vec, b.vec) >= {threshold}"""
+
+
 @register(
     "dedup_embedding_cosine",
     tags=("dedup", "similarity", "cosine"),
-    oracle="""
+    oracle=f"""
     WITH v AS (
       SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS vec FROM embeddings
     )
     SELECT a.vec_id AS id_a, b.vec_id AS id_b,
            round(list_cosine_similarity(a.vec, b.vec), 4) AS cosine
-    FROM v a JOIN v b
-      ON a.label = b.label AND a.vec_id < b.vec_id
-    WHERE list_cosine_similarity(a.vec, b.vec) >= 0.35
+    {_near_dup_sql()}
     """,
 )
 def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup vector pairs (cosine >= threshold), blocked by label —
-    at scale the block key becomes an LSH bucket (same join shape).
-    Threshold 0.35 sits at ~p99.9 of this synthetic corpus's
-    within-label cosine distribution (max ~0.51), so the result is
-    non-empty at every sf; a real near-dup pipeline would use ~0.95+."""
+    """Near-dup vector pairs (cosine >= EDGE_COS_THRESHOLD), blocked
+    by label."""
     v = _with_vec(load_table(spark, sf_dir, "embeddings"))
     return (
-        canonical_pairs(v, ["label"], "vec_id")
-        .withColumn("cos", _cos("a.vec", "b.vec"))
-        .filter(F.col("cos") >= 0.35)
+        _near_dup_pairs(v)
         .select(
             F.col("a.vec_id").alias("id_a"),
             F.col("b.vec_id").alias("id_b"),
@@ -385,9 +412,7 @@ def _ivf_probe_topk(v: DataFrame, centroids: DataFrame) -> DataFrame:
     corpus_cells = _ranked_cells(corpus, centroids, "cvec_n", 1).select(
         "neighbor_id", "cvec_n", "cell"
     )
-    queries = v.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("vec").alias("qvec")
-    )
+    queries = _query_vecs(v)
     query_cells = _ranked_cells(queries, centroids, "qvec", N_PROBE).select(
         "query_id", "qvec", "cell"
     )
@@ -1025,9 +1050,7 @@ def _rerank_sides(v: DataFrame) -> tuple[DataFrame, DataFrame, Column]:
     """The exact rerank's query side ``(query_id, qvec)`` (the first
     N_QUERIES vectors), its corpus side ``(neighbor_id, nvec)`` and
     the squared L2 of a joined pair."""
-    qv = v.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("vec").alias("qvec")
-    )
+    qv = _query_vecs(v)
     nv = v.select(F.col("vec_id").alias("neighbor_id"), F.col("vec").alias("nvec"))
     d2 = _dot("nvec", "nvec") - 2 * _dot("qvec", "nvec") + _dot("qvec", "qvec")
     return qv, nv, d2
@@ -1788,41 +1811,18 @@ def sample_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
 RRF_K = 60
 RRF_TOP = 50
 RRF_SCALE = 10**12  # 1/(k+rank) in exact integer units: SCALE div (k+rank)
-# BM25 params shared with text_bm25_topdocs so the legs cannot drift
-# (imported at top of file).
+# The lexical leg scores with the BM25 of text_bm25_topdocs
+# (functions/text.py).
 
 _RRF_ORACLE = f"""
-    WITH tok AS (
-      SELECT doc_id, unnest({TOKENS_SQL}) AS tok FROM documents
-    ),
-    dl AS (SELECT doc_id, CAST(count(*) AS DOUBLE) AS dlen FROM tok GROUP BY doc_id),
-    stats AS (SELECT CAST(count(*) AS DOUBLE) AS n, avg(dlen) AS avgdl FROM dl),
+    WITH {BM25_TF_SQL},
     qterms AS (SELECT DISTINCT tok FROM tok WHERE doc_id = 0),
-    tf AS (
-      SELECT doc_id, tok, CAST(count(*) AS DOUBLE) AS tf
-      FROM tok GROUP BY doc_id, tok
-    ),
-    df AS (SELECT tok, CAST(count(*) AS DOUBLE) AS df FROM tf GROUP BY tok),
-    lex_scored AS (
-      SELECT tf.doc_id,
-             sum(
-               ln((stats.n - df.df + 0.5) / (df.df + 0.5) + 1)
-               * tf.tf * ({_RRF_K1} + 1)
-               / (tf.tf + {_RRF_K1} * (1 - {_RRF_B} + {_RRF_B} * dl.dlen / stats.avgdl))
-             ) AS score
-      FROM tf
-      JOIN qterms USING (tok)
-      JOIN df USING (tok)
-      JOIN dl USING (doc_id)
-      CROSS JOIN stats
-      WHERE tf.doc_id <> 0
-      GROUP BY tf.doc_id
-    ),
+    {BM25_SCORED_SQL},
     lex AS (
       SELECT doc_id, rk FROM (
         SELECT doc_id,
                row_number() OVER (ORDER BY round(score, 4) DESC, doc_id) AS rk
-        FROM lex_scored
+        FROM scored WHERE doc_id <> 0
       ) WHERE rk <= {RRF_TOP}
     ),
     v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vec FROM embeddings),
@@ -1875,32 +1875,14 @@ def similarity_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     construction, like every serving-side fusion."""
     d = load_table(spark, sf_dir, "documents")
     tok = d.select("doc_id", F.explode(tokens()).alias("tok"))
-    tf = tok.groupBy("doc_id", "tok").agg(
-        F.count(F.lit(1)).cast("double").alias("tf")
-    )
-    tf = tf.withColumn(
-        "dlen", F.sum("tf").over(Window.partitionBy("doc_id"))
-    ).withColumn("df", F.count(F.lit(1)).over(Window.partitionBy("tok")))
+    tf = bm25_tf(tok)
     qterms = tok.filter(F.col("doc_id") == 0).select("tok").distinct()
-    stats = (
-        tf.groupBy("doc_id")
-        .agg(F.first("dlen").alias("dlen"))
-        .agg(
-            F.count(F.lit(1)).cast("double").alias("n"),
-            F.avg("dlen").alias("avgdl"),
-        )
-    )
-    idf = F.log((F.col("n") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1)
-    tf_part = (F.col("tf") * (_RRF_K1 + 1)) / (
-        F.col("tf")
-        + _RRF_K1 * (1 - _RRF_B + _RRF_B * F.col("dlen") / F.col("avgdl"))
-    )
     lex_scored = (
         tf.filter(F.col("doc_id") != 0)
         .join(qterms, "tok", "left_semi")
-        .crossJoin(F.broadcast(stats))
+        .crossJoin(F.broadcast(bm25_stats(tf)))
         .groupBy("doc_id")
-        .agg(F.sum(idf * tf_part).alias("score"))
+        .agg(F.sum(bm25_weight()).alias("score"))
     )
     w_lex = Window.orderBy(F.round("score", 4).desc(), "doc_id")
     lex = (
@@ -2599,9 +2581,7 @@ def similarity_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     consumers of one tiny lineage, gotcha #9) — so iteration cost is
     independent of corpus size."""
     v = _persisted_corpus(spark, sf_dir)
-    q = v.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("vec").alias("qvec")
-    )
+    q = _query_vecs(v)
     n = v.select(F.col("vec_id").alias("nid"), F.col("vec").alias("nvec"))
     qcos = F.round(_cos("qvec", "nvec"), 6)
     wp = Window.partitionBy("query_id").orderBy(F.col("qcos").desc(), "nid")

@@ -19,8 +19,9 @@ from ..functions.grain import KNUTH, MOD_2_32, knuth_bucket
 from ..functions.scale import ntile_from_rank, two_pass_cumsum
 from ..functions.scale import spread as _spread
 from ..functions.scale import spread_by as _spread_by
-from ..functions.stats import moment_sums
-from ..functions.text import QUALITY_RAW_SQL, TOKENS_SQL, lead_chain, n_words, quality_raw_col, tokens
+from ..functions.stats import moment_sums, ordered_fold, ordered_fold_sql
+from ..functions.text import BM25_SCORED_SQL, BM25_TF_SQL, QUALITY_RAW_SQL, TOKENS_SQL, bm25_stats, bm25_tf
+from ..functions.text import bm25_weight, bm25_weight_sql, lead_chain, n_words, quality_raw_col, tokens
 from ..sources import load_table
 from .dedup import SHINGLE_K, SHINGLE_LIST_SQL, SHINGLE_MIN_SQL
 from .registry import register
@@ -60,6 +61,24 @@ _LANG_BEST_SQL = f"""markers AS (
         FROM scores
       ) WHERE rn = 1
     )"""
+
+
+def _term_counts(d: DataFrame, key: str, count: str = "c") -> DataFrame:
+    """``(key, t, count)``: how often each token ``t`` occurs per
+    ``key`` value, the vocabulary-spectrum queries' one tokenize
+    aggregate (map-side partial counts, one shuffle on (key, t))."""
+    return (
+        d.select(key, F.explode(tokens()).alias("t"))
+        .groupBy(key, "t")
+        .agg(F.count(F.lit(1)).cast("bigint").alias(count))
+    )
+
+
+def _term_counts_sql(key: str, count: str = "c") -> str:
+    """The DuckDB twin of ``_term_counts`` over ``documents``."""
+    return f"""SELECT {key}, t, CAST(count(*) AS BIGINT) AS {count} FROM (
+        SELECT {key}, unnest({TOKENS_SQL}) AS t FROM documents
+      ) GROUP BY 1, 2"""
 
 
 def _lang_best(d: DataFrame) -> DataFrame:
@@ -521,9 +540,7 @@ def text_redact_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 # query-term set (the distinct tokens of the first N_QUERY_DOCS
 # documents — a stand-in for "find training docs similar to these").
 # The retrieval primitive behind decontamination-by-retrieval and
-# targeted corpus curation. Okapi BM25 with k1=1.2, b=0.75.
-BM25_K1 = 1.2
-BM25_B = 0.75
+# targeted corpus curation. Okapi BM25 (functions/text.py).
 BM25_QUERY_DOCS = 3
 BM25_TOP_N = 50
 
@@ -532,35 +549,11 @@ BM25_TOP_N = 50
     "text_bm25_topdocs",
     tags=("text", "bm25", "retrieval", "window"),
     oracle=f"""
-    WITH tok AS (
-      SELECT doc_id, unnest({TOKENS_SQL}) AS tok FROM documents
-    ),
-    dl AS (SELECT doc_id, CAST(count(*) AS DOUBLE) AS dlen FROM tok GROUP BY doc_id),
-    stats AS (
-      SELECT CAST(count(*) AS DOUBLE) AS n, avg(dlen) AS avgdl FROM dl
-    ),
+    WITH {BM25_TF_SQL},
     qterms AS (
       SELECT DISTINCT tok FROM tok WHERE doc_id < {BM25_QUERY_DOCS}
     ),
-    tf AS (
-      SELECT doc_id, tok, CAST(count(*) AS DOUBLE) AS tf
-      FROM tok GROUP BY doc_id, tok
-    ),
-    df AS (SELECT tok, CAST(count(*) AS DOUBLE) AS df FROM tf GROUP BY tok),
-    scored AS (
-      SELECT tf.doc_id,
-             sum(
-               ln((stats.n - df.df + 0.5) / (df.df + 0.5) + 1)
-               * tf.tf * ({BM25_K1} + 1)
-               / (tf.tf + {BM25_K1} * (1 - {BM25_B} + {BM25_B} * dl.dlen / stats.avgdl))
-             ) AS score
-      FROM tf
-      JOIN qterms USING (tok)
-      JOIN df USING (tok)
-      JOIN dl USING (doc_id)
-      CROSS JOIN stats
-      GROUP BY tf.doc_id
-    )
+    {BM25_SCORED_SQL}
     SELECT doc_id, round(score, 4) AS bm25, rk FROM (
       SELECT doc_id, score,
              row_number() OVER (ORDER BY round(score, 4) DESC, doc_id) AS rk
@@ -584,28 +577,15 @@ def text_bm25_topdocs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     d = load_table(spark, sf_dir, "documents")
     tok = d.select("doc_id", F.explode(tokens()).alias("tok"))
-    tf = tok.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).cast("double").alias("tf"))
-    # doc length = sum of tf over the doc; df = docs containing tok —
-    # both as windows over the tf table: one lineage, no rejoin.
-    tf = tf.withColumn("dlen", F.sum("tf").over(Window.partitionBy("doc_id"))).withColumn(
-        "df", F.count(F.lit(1)).over(Window.partitionBy("tok"))
-    )
+    tf = bm25_tf(tok)
     qterms = (
         tok.filter(F.col("doc_id") < BM25_QUERY_DOCS).select("tok").distinct()
     )
-    stats = tf.groupBy("doc_id").agg(F.first("dlen").alias("dlen")).agg(
-        F.count(F.lit(1)).cast("double").alias("n"), F.avg("dlen").alias("avgdl")
-    )
-    idf = F.log((F.col("n") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1)
-    tf_part = (F.col("tf") * (BM25_K1 + 1)) / (
-        F.col("tf")
-        + BM25_K1 * (1 - BM25_B + BM25_B * F.col("dlen") / F.col("avgdl"))
-    )
     scored = (
         tf.join(qterms, "tok", "left_semi")
-        .crossJoin(F.broadcast(stats))
+        .crossJoin(F.broadcast(bm25_stats(tf)))
         .groupBy("doc_id")
-        .agg(F.sum(idf * tf_part).alias("score"))
+        .agg(F.sum(bm25_weight()).alias("score"))
     )
     w = Window.orderBy(F.round("score", 4).desc(), "doc_id")
     return (
@@ -811,14 +791,9 @@ def bm25_score_batch(
         .withColumn("df", F.coalesce("df", F.lit(0.0)))
         .crossJoin(F.broadcast(scalars))
     )
-    idf = F.log((F.col("n") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1)
-    tf_part = (F.col("tf") * (BM25_K1 + 1)) / (
-        F.col("tf")
-        + BM25_K1 * (1 - BM25_B + BM25_B * F.col("dlen") / F.col("avgdl"))
-    )
     return matched.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_match"),
-        F.round(F.sum(idf * tf_part), 4).alias("bm25"),
+        F.round(F.sum(bm25_weight()), 4).alias("bm25"),
     )
 
 
@@ -850,11 +825,9 @@ def bm25_score_batch(
     bdl AS (SELECT doc_id, CAST(sum(tf) AS DOUBLE) AS dlen FROM btf GROUP BY doc_id)
     SELECT b.doc_id,
            CAST(count(*) AS BIGINT) AS n_match,
-           round(sum(
-             ln((scal.n - coalesce(t.df, 0) + 0.5) / (coalesce(t.df, 0) + 0.5) + 1)
-             * b.tf * ({BM25_K1} + 1)
-             / (b.tf + {BM25_K1} * (1 - {BM25_B} + {BM25_B} * bdl.dlen / scal.avgdl))
-           ), 4) AS bm25
+           round(sum({bm25_weight_sql(
+             "scal.n", "coalesce(t.df, 0)", "b.tf", "bdl.dlen", "scal.avgdl"
+           )}), 4) AS bm25
     FROM btf b
     JOIN qterms q ON b.tok = q.tok
     LEFT JOIN terms t ON b.tok = t.tok
@@ -1372,13 +1345,7 @@ def text_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     "corpus_source_kl",
     tags=("text", "kl", "composition", "drift"),
     oracle=f"""
-    WITH tok AS (
-      SELECT source, unnest({TOKENS_SQL}) AS t FROM documents
-    ),
-    c AS (
-      SELECT source, t, CAST(count(*) AS BIGINT) AS c_st
-      FROM tok GROUP BY source, t
-    ),
+    WITH c AS ({_term_counts_sql("source", "c_st")}),
     s AS (
       SELECT source, CAST(sum(c_st) AS BIGINT) AS n_s
       FROM c GROUP BY source
@@ -1413,8 +1380,7 @@ def corpus_source_kl(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial-aggregates. Token text appears only in the first groupBy
     key; every later stage moves counts."""
     d = _spread(load_table(spark, sf_dir, "documents"))
-    tok = d.select("source", F.explode(tokens()).alias("t"))
-    c = tok.groupBy("source", "t").agg(F.count(F.lit(1)).cast("bigint").alias("c_st"))
+    c = _term_counts(d, "source", "c_st")
 
     c = c.withColumn("n_s", F.sum("c_st").over(Window.partitionBy("source"))).withColumn(
         "c_t", F.sum("c_st").over(Window.partitionBy("t"))
@@ -1528,13 +1494,7 @@ def heavy_hitters_mg(tok: DataFrame, k: int) -> DataFrame:
     "text_vocab_coverage",
     tags=("text", "vocab", "coverage", "zipf"),
     oracle=f"""
-    WITH tok AS (
-      SELECT lang, unnest({TOKENS_SQL}) AS t FROM documents
-    ),
-    c AS (
-      SELECT lang, t, CAST(count(*) AS BIGINT) AS c
-      FROM tok GROUP BY lang, t
-    ),
+    WITH c AS ({_term_counts_sql("lang")}),
     r AS (
       SELECT lang, t, c,
              row_number() OVER (PARTITION BY lang ORDER BY c DESC, t) AS rk,
@@ -1564,9 +1524,7 @@ def text_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     it is a per-language vocab-sized sort (millions of rows at crawl
     scale, not corpus-sized), the same shape as quality decile
     calibration."""
-    d = _spread(load_table(spark, sf_dir, "documents"))
-    tok = d.select("lang", F.explode(tokens()).alias("t"))
-    c = tok.groupBy("lang", "t").agg(F.count(F.lit(1)).cast("bigint").alias("c"))
+    c = _term_counts(_spread(load_table(spark, sf_dir, "documents")), "lang")
     order = [F.col("c").desc(), F.col("t")]
     r = (
         c.withColumn("rk", F.row_number().over(Window.partitionBy("lang").orderBy(*order)))
@@ -1882,14 +1840,7 @@ LOGODDS_TOP_N = 5
     "text_distinctive_terms",
     tags=("documents", "log-odds", "comparative", "topk"),
     oracle=f"""
-    WITH tok AS (
-      SELECT source, unnest({TOKENS_SQL}) AS t
-      FROM documents
-    ),
-    st AS (
-      SELECT source, t, CAST(count(*) AS BIGINT) AS c_st
-      FROM tok GROUP BY source, t
-    ),
+    WITH st AS ({_term_counts_sql("source", "c_st")}),
     m AS (
       SELECT source, t, c_st,
              sum(c_st) OVER (PARTITION BY source) AS n_s,
@@ -1933,12 +1884,7 @@ def text_distinctive_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     tiebreak on the ROUNDED score (WindowGroupLimit pushes rn≤N
     into the sort)."""
     d = load_table(spark, sf_dir, "documents")
-    st = (
-        d.select("source", F.explode(tokens()).alias("t"))
-        .groupBy("source", "t")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("c_st"))
-        .localCheckpoint(eager=True)
-    )
+    st = _term_counts(d, "source", "c_st").localCheckpoint(eager=True)
     a = F.lit(LOGODDS_ALPHA)
     total = st.agg(F.sum("c_st").cast("bigint").alias("n_total"))
     m = (
@@ -2339,11 +2285,7 @@ def text_charclass_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     "text_hapax_ratio",
     tags=("text", "vocabulary", "diagnostics"),
     oracle=f"""
-    WITH t AS (
-      SELECT source, unnest({TOKENS_SQL}) AS tok
-      FROM documents
-    ),
-    c AS (SELECT source, tok, count(*) AS n FROM t GROUP BY 1, 2)
+    WITH c AS ({_term_counts_sql("source", "n")})
     SELECT source,
            CAST(sum(n) AS BIGINT) AS n_tokens,
            CAST(count(*) AS BIGINT) AS vocab,
@@ -2361,11 +2303,7 @@ def text_hapax_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side partial counts; the source report re-aggregates the
     (source, token) frame on its own partitioning prefix."""
     d = load_table(spark, sf_dir, "documents")
-    c = (
-        d.select("source", F.explode(tokens()).alias("tok"))
-        .groupBy("source", "tok")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
+    c = _term_counts(d, "source", "n")
     hap = F.sum(F.when(F.col("n") == 1, 1).otherwise(0))
     return c.groupBy("source").agg(
         F.sum("n").cast("bigint").alias("n_tokens"),
@@ -3072,13 +3010,7 @@ def corpus_lang_source_independence(spark: SparkSession, sf_dir: str) -> DataFra
     "text_source_js_divergence",
     tags=("text", "jsd", "composition", "drift"),
     oracle=f"""
-    WITH tok AS (
-      SELECT source, unnest({TOKENS_SQL}) AS t FROM documents
-    ),
-    c AS (
-      SELECT source, t, CAST(count(*) AS BIGINT) AS c_st
-      FROM tok GROUP BY source, t
-    ),
+    WITH c AS ({_term_counts_sql("source", "c_st")}),
     s AS (
       SELECT source, t, c_st,
              CAST(sum(c_st) OVER (PARTITION BY source) AS BIGINT) AS n_s
@@ -3138,11 +3070,7 @@ def text_source_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows, never O(corpus); the JSD fold partial-aggregates per pair;
     the spine and its non-equi pair frame are O(|sources|) /
     O(|sources|^2) broadcast-size."""
-    d = _spread(load_table(spark, sf_dir, "documents"))
-    tok = d.select("source", F.explode(tokens()).alias("t"))
-    c = tok.groupBy("source", "t").agg(
-        F.count(F.lit(1)).cast("bigint").alias("c_st")
-    )
+    c = _term_counts(_spread(load_table(spark, sf_dir, "documents")), "source", "c_st")
 
     s = c.withColumn(
         "n_s", F.sum("c_st").over(Window.partitionBy("source"))
@@ -3364,14 +3292,7 @@ def text_quality_length_spearman(
     "text_good_turing_coverage",
     tags=("text", "coverage", "good-turing", "diversity", "aggregate"),
     oracle=f"""
-    WITH tok AS (
-      SELECT lang, unnest({TOKENS_SQL}) AS t
-      FROM documents
-    ),
-    c AS (
-      SELECT lang, t, CAST(count(*) AS BIGINT) AS n
-      FROM tok GROUP BY 1, 2
-    ),
+    WITH c AS ({_term_counts_sql("lang", "n")}),
     a AS (
       SELECT lang,
              CAST(sum(n) AS BIGINT) AS n_tokens,
@@ -3399,11 +3320,7 @@ def text_good_turing_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     gt_coverage, simpson_repeat): Good-Turing missing-mass and
     Simpson repeat-rate per language (see header)."""
     d = load_table(spark, sf_dir, "documents")
-    c = (
-        d.select("lang", F.explode(tokens()).alias("t"))
-        .groupBy("lang", "t")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-    )
+    c = _term_counts(d, "lang", "n")
     dec = "decimal(38,0)"
     a = c.groupBy("lang").agg(
         F.sum("n").cast("bigint").alias("n_tokens"),
@@ -3613,12 +3530,7 @@ BURROWS_TOP_K = 40
     "text_burrows_delta",
     tags=("text", "stylometry", "burrows", "delta", "window"),
     oracle=f"""
-    WITH stc AS (
-      SELECT source, t, CAST(count(*) AS BIGINT) AS c FROM (
-        SELECT source, unnest({TOKENS_SQL}) AS t
-        FROM documents
-      ) GROUP BY 1, 2
-    ),
+    WITH stc AS ({_term_counts_sql("source")}),
     tot AS (
       SELECT source, CAST(sum(c) AS BIGINT) AS total FROM stc GROUP BY 1
     ),
@@ -3658,18 +3570,7 @@ BURROWS_TOP_K = 40
              abs(a.z6 - b.z6) AS d
       FROM z a JOIN z b ON a.t = b.t AND a.source < b.source
     ),
-    fold AS (
-      SELECT source_a, source_b, k, cd FROM (
-        SELECT source_a, source_b,
-               row_number() OVER (
-                 PARTITION BY source_a, source_b ORDER BY t) AS rk,
-               count(*) OVER (PARTITION BY source_a, source_b) AS k,
-               sum(d) OVER (PARTITION BY source_a, source_b ORDER BY t
-                            ROWS BETWEEN UNBOUNDED PRECEDING
-                            AND CURRENT ROW) AS cd
-        FROM pairs
-      ) WHERE rk = k
-    )
+    fold AS ({ordered_fold_sql("pairs", "t", {"cd": "d"}, by="source_a, source_b")})
     SELECT source_a, source_b, CAST(k AS BIGINT) AS n_words,
            round(cd / k + 1e-9, 6) AS delta
     FROM fold
@@ -3680,11 +3581,7 @@ def text_burrows_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     distance between every source pair over the corpus top-K words
     (see header; z-scores clear denominators into exact integers, the
     pair fold runs over a <= K-row frame)."""
-    d = _spread(load_table(spark, sf_dir, "documents"))
-    tok = d.select("source", F.explode(tokens()).alias("t"))
-    stc = tok.groupBy("source", "t").agg(
-        F.count(F.lit(1)).cast("bigint").alias("c")
-    )
+    stc = _term_counts(_spread(load_table(spark, sf_dir, "documents")), "source")
     # Three differently-shaped sibling consumers (totals, vocabulary,
     # spine probe) — checkpoint the tokenize aggregate once
     # (gotcha #14; the text_distinctive_terms precedent).
@@ -3761,18 +3658,7 @@ def text_burrows_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("ta").alias("t"),
         F.abs(F.col("za") - F.col("zb")).alias("d"),
     )
-    wp = Window.partitionBy("source_a", "source_b").orderBy("t")
-    folded = pairs.select(
-        "source_a",
-        "source_b",
-        F.row_number().over(wp).alias("rk"),
-        F.count(F.lit(1))
-        .over(Window.partitionBy("source_a", "source_b"))
-        .alias("k"),
-        F.sum("d")
-        .over(wp.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-        .alias("cd"),
-    ).filter(F.col("rk") == F.col("k"))
+    folded = ordered_fold(pairs, ["t"], {"cd": "d"}, by=["source_a", "source_b"])
     return folded.select(
         "source_a",
         "source_b",
@@ -3802,14 +3688,7 @@ def text_burrows_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     "text_yule_k",
     tags=("text", "vocabulary", "richness", "yule"),
     oracle=f"""
-    WITH tok AS (
-      SELECT lang, unnest({TOKENS_SQL}) AS t
-      FROM documents
-    ),
-    c AS (
-      SELECT lang, t, CAST(count(*) AS BIGINT) AS c
-      FROM tok GROUP BY 1, 2
-    ),
+    WITH c AS ({_term_counts_sql("lang")}),
     s AS (
       SELECT lang, CAST(sum(c) AS BIGINT) AS s1,
              CAST(count(*) AS BIGINT) AS n_types,
@@ -3827,9 +3706,7 @@ def text_yule_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(lang, n_tokens, n_types, yule_k): Yule's K repetitiveness of
     the token-frequency spectrum per language (see header; exact
     integer spectrum sums, one identical division)."""
-    d = _spread(load_table(spark, sf_dir, "documents"))
-    tok = d.select("lang", F.explode(tokens()).alias("t"))
-    c = tok.groupBy("lang", "t").agg(F.count(F.lit(1)).cast("bigint").alias("c"))
+    c = _term_counts(_spread(load_table(spark, sf_dir, "documents")), "lang")
     s = c.groupBy("lang").agg(
         F.sum("c").cast("bigint").alias("s1"),
         F.count(F.lit(1)).cast("bigint").alias("n_types"),
@@ -3991,14 +3868,7 @@ def text_ttr_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     "text_freq_spectrum",
     tags=("text", "vocabulary", "spectrum", "hapax"),
     oracle=f"""
-    WITH tok AS (
-      SELECT lang, unnest({TOKENS_SQL}) AS t
-      FROM documents
-    ),
-    c AS (
-      SELECT lang, t, CAST(count(*) AS BIGINT) AS c
-      FROM tok GROUP BY 1, 2
-    ),
+    WITH c AS ({_term_counts_sql("lang")}),
     s AS (
       SELECT lang,
              CAST(sum(c) AS BIGINT) AS n_tokens,
@@ -4021,9 +3891,7 @@ def text_freq_spectrum(spark: SparkSession, sf_dir: str) -> DataFrame:
     token-frequency spectrum V_m (types seen exactly m times) per
     language with hapax/dis shares (see header; exact integers, two
     single divisions)."""
-    d = _spread(load_table(spark, sf_dir, "documents"))
-    tok = d.select("lang", F.explode(tokens()).alias("t"))
-    c = tok.groupBy("lang", "t").agg(F.count(F.lit(1)).cast("bigint").alias("c"))
+    c = _term_counts(_spread(load_table(spark, sf_dir, "documents")), "lang")
     aggs = [
         F.sum("c").cast("bigint").alias("n_tokens"),
         F.count(F.lit(1)).cast("bigint").alias("n_types"),

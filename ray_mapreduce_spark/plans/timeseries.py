@@ -9,7 +9,7 @@ export as unix micros (pairing rule).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -229,6 +229,24 @@ def timeseries_twap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
+# The daily mean value of the events series (timeseries_acf_lags,
+# timeseries_rolling_median, timeseries_metric_correlations): an
+# exact cent sum over 100 * count, locked to 6dp so the later
+# statistics start from identical doubles on both engines.
+_DAILY_MEAN_SQL = (
+    f"round(CAST(CAST(sum({CENTS_SQL}) AS BIGINT) AS DOUBLE) / (100.0 * count(*)), 6) AS meanv"
+)
+
+
+def _daily_mean() -> Column:
+    """The Spark twin of ``_DAILY_MEAN_SQL``, an aggregate over a
+    day-grouped events frame."""
+    return F.round(
+        F.sum(cents()).cast("double") / (F.lit(100.0) * F.count(F.lit(1))), 6
+    ).alias("meanv")
+
+
+# --------------------------------------------------------------------------
 # Autocorrelation function at lags 1..7 of the daily series — the
 # seasonality/persistence diagnostic behind forecast-model choice
 # (weekly cadence shows as a lag-7 peak). Two series per lag: the
@@ -242,8 +260,7 @@ def timeseries_twap(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH d AS (
       SELECT {DAY_SQL} AS day,
              CAST(count(*) AS BIGINT) AS cnt,
-             round(CAST(CAST(sum({CENTS_SQL}) AS BIGINT)
-                        AS DOUBLE) / (100.0 * count(*)), 6) AS meanv
+             {_DAILY_MEAN_SQL}
       FROM events GROUP BY 1
     ),
     p AS (
@@ -290,11 +307,7 @@ def timeseries_acf_lags(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
     d = e.groupBy(utc_day().alias("day")).agg(
         F.count(F.lit(1)).cast("bigint").alias("cnt"),
-        F.round(
-            F.sum(cents()).cast("double")
-            / (F.lit(100.0) * F.count(F.lit(1))),
-            6,
-        ).alias("meanv"),
+        _daily_mean(),
     )
     d = d.localCheckpoint(eager=True)
     lags = spark.range(1, 8).select(F.col("id").alias("lag"))
@@ -365,8 +378,7 @@ def timeseries_acf_lags(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH d AS (
       SELECT event_type,
              {DAY_SQL} AS day,
-             round(CAST(CAST(sum({CENTS_SQL}) AS BIGINT)
-                        AS DOUBLE) / (100.0 * count(*)), 6) AS meanv
+             {_DAILY_MEAN_SQL}
       FROM events GROUP BY 1, 2
     )
     SELECT event_type, day,
@@ -392,11 +404,7 @@ def timeseries_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         utc_day().alias("day"),
     ).agg(
-        F.round(
-            F.sum(cents()).cast("double")
-            / (F.lit(100.0) * F.count(F.lit(1))),
-            6,
-        ).alias("meanv")
+        _daily_mean()
     )
     w = Window.partitionBy("event_type").orderBy("day").rowsBetween(-6, 0)
     return d.select(
@@ -429,8 +437,7 @@ def timeseries_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT {DAY_SQL} AS day,
              CAST(count(*) AS BIGINT) AS cnt,
              CAST(count(DISTINCT user_id) AS BIGINT) AS du,
-             round(CAST(CAST(sum({CENTS_SQL}) AS BIGINT)
-                        AS DOUBLE) / (100.0 * count(*)), 6) AS meanv
+             {_DAILY_MEAN_SQL}
       FROM events GROUP BY 1
     ),
     s AS (
@@ -477,11 +484,7 @@ def timeseries_metric_correlations(spark: SparkSession, sf_dir: str) -> DataFram
     d = e.groupBy(utc_day().alias("day")).agg(
         F.count(F.lit(1)).cast("bigint").alias("cnt"),
         F.countDistinct("user_id").cast("bigint").alias("du"),
-        F.round(
-            F.sum(cents()).cast("double")
-            / (F.lit(100.0) * F.count(F.lit(1))),
-            6,
-        ).alias("meanv"),
+        _daily_mean(),
     )
     s = d.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),

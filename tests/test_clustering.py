@@ -172,13 +172,22 @@ def test_cluster_survivors_all_singletons(spark):
     assert all(r["is_survivor"] and r["cluster"] == k for k, r in rows.items())
 
 
+def _survivors_raise(spark, pairs, missing):
+    docs = spark.createDataFrame([(2,), (3,), (10,), (11,)], "doc_id long")
+    prs = spark.createDataFrame(pairs, "doc_a long, doc_b long")
+    with pytest.raises(Exception, match=f"pair endpoint {missing} is not a doc_id"):
+        dedup_cluster_survivors(docs, prs).collect()
+
+
 def test_cluster_survivors_missing_min_endpoint(spark):
     """Outside the pairs ⊆ docs contract: a pair endpoint missing from
-    ``docs`` that is its component's minimum still labels the
-    component, so that cluster has no survivor. Other clusters are
-    unaffected."""
-    docs = spark.createDataFrame([(2,), (3,), (10,), (11,)], "doc_id long")
-    pairs = spark.createDataFrame([(1, 2), (2, 3), (10, 11)], "doc_a long, doc_b long")
-    rows = {r["doc_id"]: (r["cluster"], r["is_survivor"])
-            for r in dedup_cluster_survivors(docs, pairs).collect()}
-    assert rows == {2: (1, False), 3: (1, False), 10: (10, True), 11: (10, False)}
+    ``docs`` that is its component's minimum would label the component
+    with an id that is no doc, leaving that cluster without a
+    survivor. It raises instead, naming the id."""
+    _survivors_raise(spark, [(1, 2), (2, 3), (10, 11)], 1)
+
+
+def test_cluster_survivors_missing_endpoint(spark):
+    """A missing endpoint that is not its component's minimum raises
+    too: every pair endpoint must be a doc."""
+    _survivors_raise(spark, [(2, 3), (10, 11), (11, 99)], 99)

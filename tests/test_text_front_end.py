@@ -6,7 +6,9 @@ from SHINGLE_K and spells the oracles' shingle set once;
 ``functions/pairs.py`` holds the canonical ``a.id < b.id`` self-join
 every near-dup pair generator calls; ``functions/grain.py`` holds the
 UTC day, integer cents and the Knuth hash split for both engines;
-lineages that two queries share are written once in their module.
+``functions/stats.py`` holds the ordered fold (gotcha #15) and
+``functions/text.py`` the BM25 weight for both engines; lineages that
+two queries share are written once in their module.
 A guard keeps inline copies from coming back; a parity test pins the
 two engines' shingles to each other."""
 
@@ -40,6 +42,19 @@ _SINGLE_DEFINITIONS = {
     re.compile(r"greatest\(CAST\(s21 AS DOUBLE\)"): ("plans/advanced.py", True),
     re.compile(r"list_intersect\(a\.shingles, b\.shingles\)\) AS DOUBLE\)"): ("plans/dedup.py", True),
     re.compile(r"F\.spark_partition_id\(\)"): ("functions/scale.py", True),
+    re.compile(r"F\.col\(\"rk\"\) == F\.col\(\"k\"\)"): ("functions/stats.py", True),
+    re.compile(r"WHERE rk = k\b"): ("functions/stats.py", True),
+    re.compile(r"\(min\(day\) \+ max\(day\) \+ 1\) div 2"): ("plans/advanced.py", True),
+    re.compile(r"\(min\(day\) \+ max\(day\) \+ 1\) // 2"): ("plans/advanced.py", True),
+    re.compile(r"\(F\.lit\(100\.0\) \* F\.count\(F\.lit\(1\)\)\), 6"): ("plans/timeseries.py", True),
+    re.compile(r"AS DOUBLE\) / \(100\.0 \* count\(\*\)\), 6\)"): ("plans/timeseries.py", True),
+    re.compile(r"c_acctbal \* 100\) AS BIGINT\) div"): ("plans/advanced.py", True),
+    re.compile(r"c_acctbal \* 100\) AS BIGINT\) //"): ("plans/advanced.py", True),
+    re.compile(r"F\.col\(\"n\"\) - F\.col\(\"df\"\) \+ 0\.5"): ("functions/text.py", True),
+    re.compile(r"ln\(\(.* - .* \+ 0\.5\) / \("): ("functions/text.py", True),
+    re.compile(r"1::BIGINT << CASE WHEN i > 62"): ("plans/advanced.py", True),
+    re.compile(r"UNION ALL SELECT dst AS src, src AS dst"): ("plans/graph.py", True),
+    re.compile(r"\[\.,;:!\?"): ("functions/text.py", False),
 }
 
 
@@ -54,10 +69,15 @@ def test_text_front_end_defined_once():
     (Spark ``unix_micros(ts) div 86400000000``, DuckDB
     ``epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000``), the cents of
     ``value`` (``round(value * 100)`` in either spelling) and the
-    Knuth multiplier ``2654435761``. These may appear only once: the
+    Knuth multiplier ``2654435761``, and the exact-dedup normal form's
+    punctuation class ``[.,;:!?``. These may appear only once: the
     event-type ``lead`` sequence (Spark and DuckDB), the order close
     day, the Welch z of the two-arm oracles, the oracles' Jaccard
-    predicate and the two-pass kernel's partition id."""
+    predicate, the two-pass kernel's partition id, the ordered fold's
+    ``rk == k`` filter (Spark and DuckDB), the two-period midpoint
+    day, the daily mean value, the QI balance bucket, the BM25 weight
+    (Spark and DuckDB), the guarded EWMA step weight and the
+    oracles' both-directions edge list."""
     hits = []
     seen: dict = {}
     for root, _, files in os.walk(_PKG):
@@ -76,10 +96,12 @@ def test_text_front_end_defined_once():
                             hits.append(f"{where}  (defined in {home or 'generated code'})")
                         elif once and pattern in seen:
                             hits.append(f"{where}  (second copy; first at {seen[pattern]})")
-                        seen.setdefault(pattern, f"{rel}:{lineno}")
+                        else:
+                            seen[pattern] = f"{rel}:{lineno}"
     assert not hits, (
         "inline copy of a shared definition; call functions/text.py's tokens() / "
-        "n_words(), functions/pairs.py's canonical_pairs() or functions/grain.py's "
+        "n_words() / bm25_weight(), functions/stats.py's ordered_fold(), "
+        "functions/pairs.py's canonical_pairs() or functions/grain.py's "
         "utc_day() / cents() / knuth_bucket(), or interpolate TOKENS_SQL, "
         "DAY_SQL, CENTS_SQL, KNUTH / MOD_2_32 or plans/dedup.py's SHINGLE_LIST_SQL / "
         "SHINGLE_SET_SQL / SHINGLED_CTE_SQL; for a shared lineage call or interpolate "

@@ -1,4 +1,5 @@
-"""Tests for tools/ — the audit-sweep cache key and plan digests.
+"""Tests for tools/ — the audit-sweep cache key, plan digests and the
+repeated-line count.
 
 The --changed-only cache must invalidate a query's key when ANY code
 that can alter its result changes: the builder's own plans module,
@@ -13,7 +14,7 @@ import sys
 
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"))
 
-from audit_sweep import _plan_hashes  # noqa: E402
+from audit_sweep import _plan_hashes, repeated_lines  # noqa: E402
 
 
 def test_helper_edit_changes_every_cache_key():
@@ -53,6 +54,18 @@ def test_own_module_edit_changes_only_its_dependents():
     assert base["window_running_and_lag"] != edited["window_running_and_lag"]
     assert base["dedup_exact"] == edited["dedup_exact"]
     assert base["q1_pricing_summary"] == edited["q1_pricing_summary"]
+
+
+def test_planted_copy_raises_repeated_line_count():
+    """``dups`` counts the lines of every 6-line window that occurs
+    twice: appending a copy of 6 counted lines that occur nowhere else
+    adds 12, while blank, comment and short lines do not count."""
+    block = [f"value_{i} = compute_{i}(frame)" for i in range(6)]
+    base = repeated_lines()
+    fresh = "\n".join(block) + "\n"
+    assert repeated_lines({"planted.py": fresh}) == base
+    twice = fresh + "\n# a comment\n\nx\n" + fresh
+    assert repeated_lines({"planted.py": twice}) == base + 12
 
 
 def test_plan_digests_ignore_session_counters(spark, sf_dir):

@@ -7,6 +7,7 @@ Usage:
     python tools/audit_sweep.py recall [SF_DIR]
     python tools/audit_sweep.py plans [SF_DIR] --out FILE [--against FILE]
     python tools/audit_sweep.py shapes [SF_DIR]
+    python tools/audit_sweep.py dups
 
 - ``oracle``: compare every oracle-paired query against DuckDB at
   SF_DIR (default sf0.1 — 10x the driver's scale; ties and rounding
@@ -38,6 +39,12 @@ Usage:
   recomputes the ledger at that SF_DIR and fails on any difference,
   so regenerate it in the change that moves a plan.
 
+- ``dups``: print the package's repeated-line count (ROADMAP item
+  5): over windows of 6 consecutive stripped lines of each module
+  (blank lines, comment lines and lines under 4 characters skipped),
+  the number of lines covered by a window whose text occurs 2+ times
+  anywhere in the package. Needs no Spark session.
+
 Each prints one summary line; non-empty failure lists exit 1.
 
 ``--changed-only`` skips queries whose plan hash already passed this
@@ -60,6 +67,7 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+import pathlib
 import re
 import sys
 import time
@@ -72,6 +80,39 @@ _CACHE_PATH = os.path.join(os.path.dirname(os.path.abspath(__file__)), ".sweep_c
 _LEDGER_PATH = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tests", "plan_shapes.json"
 )
+
+
+def _package_sources(source_overrides: dict | None = None) -> dict:
+    """Package-relative path -> source of every package module, with
+    ``source_overrides`` (path -> replacement source) applied."""
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "ray_mapreduce_spark"
+    srcs = {p.relative_to(pkg).as_posix(): p.read_text() for p in sorted(pkg.rglob("*.py"))}
+    srcs.update(source_overrides or {})
+    return srcs
+
+
+def repeated_lines(source_overrides: dict | None = None, window: int = 6) -> int:
+    """The ``dups`` count: package lines covered by a ``window``-line
+    window (stripped; blank, comment and under-4-character lines
+    skipped) whose text occurs at least twice in the package."""
+    where: dict = {}
+    for rel, text in _package_sources(source_overrides).items():
+        kept = [
+            (i, s)
+            for i, line in enumerate(text.splitlines(), 1)
+            if len(s := line.strip()) >= 4 and not s.startswith("#")
+        ]
+        for j in range(len(kept) - window + 1):
+            win = kept[j : j + window]
+            where.setdefault(tuple(s for _, s in win), []).append((rel, win))
+    covered = {
+        (rel, i)
+        for occurrences in where.values()
+        if len(occurrences) > 1
+        for rel, win in occurrences
+        for i, _ in win
+    }
+    return len(covered)
 
 
 def _plan_hashes(source_overrides: dict | None = None) -> dict:
@@ -90,17 +131,9 @@ def _plan_hashes(source_overrides: dict | None = None) -> dict:
 
     ``source_overrides`` maps package-relative paths (e.g.
     ``sources/__init__.py``) to replacement source — test hook."""
-    import pathlib
-
     from ray_mapreduce_spark.plans import all_queries
 
-    pkg = pathlib.Path(__file__).resolve().parent.parent / "ray_mapreduce_spark"
-    srcs = {
-        p.relative_to(pkg).as_posix(): p.read_text()
-        for p in sorted(pkg.rglob("*.py"))
-    }
-    if source_overrides:
-        srcs.update(source_overrides)
+    srcs = _package_sources(source_overrides)
 
     shared = hashlib.sha256()
     for rel in sorted(srcs):
@@ -409,6 +442,9 @@ if __name__ == "__main__":
     out, against = _option(args, "--out"), _option(args, "--against")
     changed_only = "--changed-only" in sys.argv[1:]
     mode = args[0] if args else "oracle"
+    if mode == "dups":
+        print(f"# repeated lines (6-line windows): {repeated_lines()}")
+        sys.exit(0)
     if mode == "shapes":
         sys.exit(shapes_ledger(args[1] if len(args) > 1 else _ledger()["sf_dir"]))
     sf = args[1] if len(args) > 1 else "/root/testdata/sf0.1"
