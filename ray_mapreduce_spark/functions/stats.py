@@ -39,20 +39,12 @@ def ordered_fold(
     ``(*by, rk, k, *sums)``, where each ``sums`` column is the running
     sum of its term over the group's rows in ``order`` and ``k`` is the
     group's row count."""
-    run = (
-        Window.partitionBy(*by)
-        .orderBy(*order)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    rows = (
-        Window.partitionBy(*by)
-        if by
-        else Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    )
+    w = Window.partitionBy(*by).orderBy(*order)
+    run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     return df.select(
         *by,
-        F.row_number().over(Window.partitionBy(*by).orderBy(*order)).alias("rk"),
-        F.count(F.lit(1)).over(rows).alias("k"),
+        F.row_number().over(w).alias("rk"),
+        F.count(F.lit(1)).over(Window.partitionBy(*by)).alias("k"),
         *[F.sum(term).over(run).alias(name) for name, term in sums.items()],
     ).filter(F.col("rk") == F.col("k"))
 

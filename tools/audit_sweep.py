@@ -91,8 +91,11 @@ def _package_sources(source_overrides: dict | None = None) -> dict:
     return srcs
 
 
-def repeated_lines(source_overrides: dict | None = None, window: int = 6) -> int:
-    """The ``dups`` count: package lines covered by a ``window``-line
+_DUP_WINDOW = 6
+
+
+def repeated_lines(source_overrides: dict | None = None) -> int:
+    """The ``dups`` count: package lines covered by a ``_DUP_WINDOW``-line
     window (stripped; blank, comment and under-4-character lines
     skipped) whose text occurs at least twice in the package."""
     where: dict = {}
@@ -102,8 +105,8 @@ def repeated_lines(source_overrides: dict | None = None, window: int = 6) -> int
             for i, line in enumerate(text.splitlines(), 1)
             if len(s := line.strip()) >= 4 and not s.startswith("#")
         ]
-        for j in range(len(kept) - window + 1):
-            win = kept[j : j + window]
+        for j in range(len(kept) - _DUP_WINDOW + 1):
+            win = kept[j : j + _DUP_WINDOW]
             where.setdefault(tuple(s for _, s in win), []).append((rel, win))
     covered = {
         (rel, i)
@@ -443,7 +446,7 @@ if __name__ == "__main__":
     changed_only = "--changed-only" in sys.argv[1:]
     mode = args[0] if args else "oracle"
     if mode == "dups":
-        print(f"# repeated lines (6-line windows): {repeated_lines()}")
+        print(f"# repeated lines ({_DUP_WINDOW}-line windows): {repeated_lines()}")
         sys.exit(0)
     if mode == "shapes":
         sys.exit(shapes_ledger(args[1] if len(args) > 1 else _ledger()["sf_dir"]))
