@@ -1,6 +1,16 @@
 """Connected components over near-duplicate pairs: the clustering
 stage that turns a pair list (from minhash/simhash/cosine candidates)
-into dedup groups with one canonical survivor each.
+into dedup groups with one canonical survivor each, and the three
+dedup decisions every dedup query makes, each written once here:
+
+- the exact-duplicate keeper (``exact_keepers``; oracle twin
+  ``EXACT_KEEP_SQL``): the min doc_id per text digest;
+- the near-dup cluster label (``cluster_labels``; oracle twin
+  ``CLOSURE_SQL``): every doc gets its component's min id, or its own
+  id when it is in no pair, and a pair endpoint that is not a doc
+  raises;
+- the quality survivor (``cluster_best``): the best-scored member per
+  cluster, ties to the smaller doc_id, with the member count.
 
 Algorithm: iterative min-label propagation (the "small-star" half of
 large-star/small-star, sufficient because near-dup components are
@@ -17,7 +27,7 @@ the same pattern GraphX/GraphFrames use).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..functions.pairs import both_directions
@@ -111,38 +121,111 @@ def connected_components(
     return labels
 
 
+# The oracles' twin of exact_keepers over ``documents``: the min doc_id
+# of each distinct text.
+EXACT_KEEP_SQL = "SELECT min(doc_id) AS doc_id FROM documents GROUP BY sha256(text)"
+
+# The oracles' twin of connected_components: DuckDB's recursive
+# transitive closure over a CTE ``pairs (doc_a, doc_b)``, ending in
+# the CTE ``clus (doc_id, cluster)`` of every paired doc and the min
+# id it reaches. Follows a WITH RECURSIVE head.
+CLOSURE_SQL = """edges AS (
+      SELECT doc_a AS u, doc_b AS v FROM pairs
+      UNION
+      SELECT doc_b AS u, doc_a AS v FROM pairs
+    ),
+    reach AS (
+      SELECT u AS node, v AS r FROM edges
+      UNION
+      SELECT t.node, e.v AS r
+      FROM reach t JOIN edges e ON t.r = e.u
+    ),
+    clus AS (
+      SELECT node AS doc_id, least(node, min(r)) AS cluster
+      FROM reach GROUP BY node
+    )"""
+
+
+def exact_keepers(df: DataFrame, digest: Column, *payload: str) -> DataFrame:
+    """The exact-duplicate keeper: ``(doc_id, *payload)`` of the min
+    doc_id row per ``digest`` value (a digest of the text, so the
+    shuffle key is 32 bytes, never a document body).
+
+    An argmin AGGREGATE, ``min(struct(doc_id, *payload))`` (guide
+    §2.3): it partial-aggregates map-side (as a sort aggregate: a
+    struct buffer is not hash-aggregatable), so the digest exchange
+    carries one row per (digest, input partition), and there is no
+    join back to a second scan of the docs. doc_id is unique, so the
+    kept row does not depend on partitioning."""
+    return (
+        df.groupBy(digest.alias("_h"))
+        .agg(F.min(F.struct("doc_id", *payload)).alias("_keep"))
+        .select("_keep.*")
+    )
+
+
+def cluster_labels(docs: DataFrame, pairs: DataFrame) -> DataFrame:
+    """The near-dup cluster label: ``docs`` with a ``cluster`` column,
+    the min doc_id of the doc's connected component over ``pairs``, or
+    the doc's own id when it is in no pair.
+
+    Requires pair endpoints ⊆ docs.doc_id (true by construction for
+    every caller — pairs are derived from the same docs frame). The
+    contract is checked inside the plan, with no extra job: docs and
+    components meet in a full join, and a component node with no doc
+    row raises (naming the id) when the frame is evaluated, instead of
+    labelling its cluster with an id that is not a doc."""
+    comps = connected_components(pairs)
+    missing = F.concat(
+        F.lit("cluster_labels: pair endpoint "),
+        F.col("node").cast("string"),
+        F.lit(" is not a doc_id of docs"),
+    )
+    return (
+        docs.join(comps, docs.doc_id == comps.node, "full")
+        .filter(F.when(F.col("doc_id").isNull(), F.raise_error(missing)).otherwise(F.lit(True)))
+        .select(*docs.columns, F.coalesce("comp", F.col("doc_id")).alias("cluster"))
+    )
+
+
+def cluster_best(labeled: DataFrame, score: str, *payload: str) -> DataFrame:
+    """The quality survivor: per ``cluster`` of a ``cluster_labels``
+    frame, ``(cluster, doc_id, score, *payload, n_members)`` of the
+    member with the highest ``score``, ties to the smaller doc_id.
+
+    An argmax AGGREGATE, ``max(struct(score, -doc_id, *payload))``,
+    next to the member count (guide §2.3 "aggregate before you
+    shuffle"): it partial-aggregates map-side (as a sort aggregate),
+    so the cluster exchange carries one row per (cluster, input
+    partition) instead of every member. The ordering key (score,
+    -doc_id) is unique, so the kept row does not depend on
+    partitioning."""
+    best = F.max(F.struct(F.col(score), (-F.col("doc_id")).alias("_nid"), *payload))
+    return (
+        labeled.groupBy("cluster")
+        .agg(best.alias("_best"), F.count(F.lit(1)).alias("n_members"))
+        .select(
+            "cluster",
+            (-F.col("_best._nid")).alias("doc_id"),
+            *[F.col(f"_best.{c}").alias(c) for c in (score, *payload)],
+            "n_members",
+        )
+    )
+
+
 def dedup_cluster_survivors(docs: DataFrame, pairs: DataFrame) -> DataFrame:
     """Full cluster-dedup: docs + near-dup pairs -> every doc mapped to
     its cluster and a keep/drop flag (survivor = min doc_id per
     cluster; singletons survive trivially).
 
-    Requires pair endpoints ⊆ docs.doc_id (true by construction for
-    every caller — pairs are derived from the same docs frame). Under
-    that contract the min-doc_id-per-cluster window this used to run
-    is REDUNDANT (r16, guide §2.4): ``cluster`` IS the min member of
-    its component — connected_components labels every component by its
-    min node id, that node is itself a doc of the cluster, and
-    singletons are labeled by their own doc_id — so
-    ``is_survivor = (doc_id == cluster)`` is the identical flag with
-    no exchange and no sort (one full shuffle removed).
-
-    The contract is checked inside the plan: docs and components meet
-    in a full join, and a component node with no doc row raises
-    (naming the id) when the frame is evaluated, instead of labelling
-    its cluster with an id that is not a doc."""
-    comps = connected_components(pairs)
-    missing = F.concat(
-        F.lit("dedup_cluster_survivors: pair endpoint "),
-        F.col("node").cast("string"),
-        F.lit(" is not a doc_id of docs"),
-    )
-    return (
-        docs.select("doc_id")
-        .join(comps, docs.doc_id == comps.node, "full")
-        .filter(F.when(F.col("doc_id").isNull(), F.raise_error(missing)).otherwise(F.lit(True)))
-        .select(
-            "doc_id",
-            F.coalesce("comp", F.col("doc_id")).alias("cluster"),
-        )
-        .withColumn("is_survivor", F.col("doc_id") == F.col("cluster"))
+    ``cluster_labels`` checks the pairs ⊆ docs contract, and under it
+    the min-doc_id-per-cluster window this used to run is REDUNDANT
+    (r16, guide §2.4): ``cluster`` IS the min member of its component
+    — connected_components labels every component by its min node id,
+    that node is itself a doc of the cluster, and singletons are
+    labeled by their own doc_id — so ``is_survivor = (doc_id ==
+    cluster)`` is the identical flag with no exchange and no sort (one
+    full shuffle removed)."""
+    return cluster_labels(docs.select("doc_id"), pairs).withColumn(
+        "is_survivor", F.col("doc_id") == F.col("cluster")
     )

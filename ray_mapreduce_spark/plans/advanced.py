@@ -6619,8 +6619,11 @@ _EWMA_STEPS_SQL = f"""daily AS (
                PARTITION BY event_type ORDER BY day) AS BIGINT) AS i
       FROM daily
     )"""
-# 2^i as an exact double: integer shiftleft, never libm pow.
-_EWMA_DIV_SQL = "CAST(shiftleft(CAST(1 AS BIGINT), CAST(i AS INT)) AS DOUBLE)"
+# 2^i as an exact double: integer shiftleft, never libm pow. The
+# Spark expression, and its oracle twin (unguarded: past 62 steps
+# DuckDB raises its own shift overflow).
+_EWMA_DIV_EXPR = "CAST(shiftleft(CAST(1 AS BIGINT), CAST(i AS INT)) AS DOUBLE)"
+_EWMA_DIV_SQL = "CAST(1::BIGINT << CAST(i AS INT) AS DOUBLE)"
 
 
 # events_double_ewma_holt's oracle twin of ``_ewma_steps``' step
@@ -6703,7 +6706,7 @@ def _ewma_steps(spark: SparkSession, sf_dir: str, query: str) -> tuple[DataFrame
     ),
     s AS (
       SELECT event_type, day, x,
-             wt / CAST(1::BIGINT << CAST(i AS INT) AS DOUBLE) AS ewma
+             wt / {_EWMA_DIV_SQL} AS ewma
       FROM w
     )
     SELECT event_type, day, x AS daily_cents,
@@ -6727,7 +6730,7 @@ def events_ewma_residuals(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     s = w.select(
-        "event_type", "day", "x", (F.col("wt") / F.expr(_EWMA_DIV_SQL)).alias("ewma")
+        "event_type", "day", "x", (F.col("wt") / F.expr(_EWMA_DIV_EXPR)).alias("ewma")
     )
     w_day = Window.partitionBy("event_type").orderBy("day")
     return s.select(
@@ -7004,7 +7007,7 @@ def events_winsorized_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     s1 AS (
       SELECT event_type, day, x, i,
-             wt / CAST(1::BIGINT << CAST(i AS INT) AS DOUBLE) AS s1
+             wt / {_EWMA_DIV_SQL} AS s1
       FROM w1
     ),
     w2 AS (
@@ -7015,7 +7018,7 @@ def events_winsorized_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     s2 AS (
       SELECT event_type, day, x, s1,
-             vt / CAST(1::BIGINT << CAST(i AS INT) AS DOUBLE) AS s2
+             vt / {_EWMA_DIV_SQL} AS s2
       FROM w2
     )
     SELECT event_type, day, x AS daily_cents,
@@ -7037,12 +7040,12 @@ def events_double_ewma_holt(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     s1f = w1.select(
         "event_type", "day", "x", "i",
-        (F.col("wt") / F.expr(_EWMA_DIV_SQL)).alias("s1"),
+        (F.col("wt") / F.expr(_EWMA_DIV_EXPR)).alias("s1"),
     )
     w2 = s1f.withColumn("vt", F.sum(F.col("s1") * shift_w).over(w_i))
     s2f = w2.select(
         "event_type", "day", "x", "s1",
-        (F.col("vt") / F.expr(_EWMA_DIV_SQL)).alias("s2"),
+        (F.col("vt") / F.expr(_EWMA_DIV_EXPR)).alias("s2"),
     )
     return s2f.select(
         "event_type",

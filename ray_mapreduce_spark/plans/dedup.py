@@ -17,6 +17,14 @@ Five dedup families, each with the scale rationale that matters at
   candidate pairs — the verifier stage behind the LSH candidates, and
   SQL-expressible, so it doubles as the oracle-checked exact variant.
 - embedding cosine near-dup: see similarity.py (shares the kernels).
+
+Three dedup decisions recur across these queries, and each is written
+once, in operators/clustering.py, for both engines: the exact keeper
+(min doc_id per text digest: ``exact_keepers`` / ``EXACT_KEEP_SQL``),
+the near-dup cluster label (component min id, else the doc's own id,
+checked against the docs: ``cluster_labels`` / ``CLOSURE_SQL``) and
+the quality survivor (best score per cluster, ties to the smaller
+doc_id, with the member count: ``cluster_best``).
 """
 
 from __future__ import annotations
@@ -31,7 +39,8 @@ from ..functions.pairs import canonical_pairs, cap_blocks, jaccard_verify, satur
 from ..functions.scale import spread_by as _spread_by
 from ..functions.text import NORM_TEXT_SQL, QUALITY_RAW_SQL, TOKENS_SQL, lead_chain
 from ..functions.text import normalized_text, quality_raw_col, tokens
-from ..operators.clustering import connected_components, dedup_cluster_survivors
+from ..operators.clustering import CLOSURE_SQL, EXACT_KEEP_SQL, cluster_best, cluster_labels
+from ..operators.clustering import connected_components, dedup_cluster_survivors, exact_keepers
 from ..sources import load_table
 from .registry import register
 
@@ -97,30 +106,21 @@ def _jaccard_at_least_sql(thr: float) -> str:
 # --------------------------------------------------------------------------
 # Exact dedup: canonical survivor (min doc_id) per distinct text.
 # Scale: group on sha2(text) so shuffle rows carry a 64-hex digest +
-# doc_id, not document bodies; min(doc_id) is algebraic (partial agg).
+# (doc_id, lang, source), not document bodies; the argmin is algebraic
+# (partial agg) and needs no join back (operators/clustering.py).
 @register(
     "dedup_exact",
     bench=True,
     tags=("dedup", "exact"),
-    oracle="""
+    oracle=f"""
     SELECT d.doc_id, d.lang, d.source
     FROM documents d
-    JOIN (
-      SELECT min(doc_id) AS keep_id
-      FROM documents
-      GROUP BY sha256(text)
-    ) k ON d.doc_id = k.keep_id
+    JOIN ({EXACT_KEEP_SQL}) k ON d.doc_id = k.doc_id
     """,
 )
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    keep = (
-        d.select("doc_id", F.sha2(F.col("text"), 256).alias("h"))
-        .groupBy("h")
-        .agg(F.min("doc_id").alias("keep_id"))
-        .select("keep_id")
-    )
-    return d.join(keep, d.doc_id == keep.keep_id).select("doc_id", "lang", "source")
+    return exact_keepers(d, F.sha2(F.col("text"), 256), "lang", "source")
 
 
 # Duplicate-group statistics: how much of the corpus is duplicated.
@@ -171,9 +171,7 @@ _NGRAM_JACCARD_ORACLE = f"""
     tags=("dedup", "ngram", "jaccard"),
     oracle=_NGRAM_JACCARD_ORACLE,
 )
-def dedup_ngram_jaccard(
-    spark: SparkSession, sf_dir: str, df_cap: int = DEFAULT_DF_CAP
-) -> DataFrame:
+def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Inverted-index plan (NOT the naive O(n²) cross join): explode
     shingles, drop singleton shingles (df=1 can't contribute to any
     pair — exactness preserved since denominators use pre-filter
@@ -184,14 +182,14 @@ def dedup_ngram_jaccard(
     plan that survives 100x the corpus; the cross-join version was
     ~100x slower at sf0.1.
 
-    ``df_cap`` additionally drops shingles shared by more than that
-    many docs (see DEFAULT_DF_CAP): the self-join on a df=k shingle
+    The df cap additionally drops shingles shared by more than
+    DEFAULT_DF_CAP docs: the self-join on a df=k shingle
     emits O(k²) rows, so one boilerplate sentence across a crawl-scale
     corpus would otherwise be quadratic. Capped shingles are excluded
     from pair EVIDENCE only (denominators keep the full shingle
     count), so similarity never inflates; pairs whose overlap is
     entirely boilerplate drop out by design."""
-    return ngram_jaccard_pairs(load_table(spark, sf_dir, "documents"), df_cap=df_cap)
+    return ngram_jaccard_pairs(load_table(spark, sf_dir, "documents"))
 
 
 def _ngram_common_counts(d: DataFrame, df_cap: int = DEFAULT_DF_CAP) -> DataFrame:
@@ -258,9 +256,7 @@ CONTAINMENT_THRESHOLD = 0.7
                    CAST(n_common AS DOUBLE) / n_b) >= {CONTAINMENT_THRESHOLD}
     """,
 )
-def dedup_containment_pairs(
-    spark: SparkSession, sf_dir: str, df_cap: int = DEFAULT_DF_CAP
-) -> DataFrame:
+def dedup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_a, doc_b, contain_ab, contain_ba) for same-lang pairs where
     either directed containment |A∩B|/|A| or |A∩B|/|B| reaches
     CONTAINMENT_THRESHOLD — catches subset/quote duplication that
@@ -275,7 +271,7 @@ def dedup_containment_pairs(
     (IEEE-exact on both engines); output rounding carries the +1e-9
     half-boundary guard (k/n lands exactly on 4dp half-boundaries,
     e.g. 1/32 — see text_quality_score)."""
-    return containment_pairs(load_table(spark, sf_dir, "documents"), df_cap=df_cap)
+    return containment_pairs(load_table(spark, sf_dir, "documents"))
 
 
 def containment_pairs(
@@ -505,9 +501,7 @@ SIMHASH_MAX_CANDIDATES_PER_DOC = 1024.0
     oracle=None,  # hash-function specific; pytest pins determinism + recall
     tags=("dedup", "simhash"),
 )
-def dedup_simhash_pairs(
-    spark: SparkSession, sf_dir: str, bucket_cap: int = DEFAULT_DF_CAP
-) -> DataFrame:
+def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pairs with simhash hamming distance <= 3 (verified).
 
     Fingerprint construction is the scale-friendly shape: explode
@@ -515,7 +509,7 @@ def dedup_simhash_pairs(
     groupBy(doc_id) computing all 64 bit-votes as parallel algebraic
     sums (partial-aggregated map-side). Bit positions / shift amounts
     are plan-time Python ints, so the whole tree is codegen'd."""
-    return simhash_pairs(load_table(spark, sf_dir, "documents"), bucket_cap=bucket_cap)
+    return simhash_pairs(load_table(spark, sf_dir, "documents"))
 
 
 def simhash_pairs(
@@ -604,20 +598,10 @@ def simhash_pairs(
     oracle=None,
     tags=("dedup", "clustering", "iterative"),
 )
-def dedup_clusters(
-    spark: SparkSession, sf_dir: str, pairs: DataFrame | None = None
-) -> DataFrame:
-    """(doc_id, cluster, is_survivor) over near-dup pairs.
-
-    ``pairs`` lets a composing caller thread an already-computed (and
-    typically persisted/checkpointed) pair frame through instead of
-    re-running the LSH pipeline — connected_components eagerly
-    checkpoints its edge list, so whichever frame arrives here
-    executes its lineage exactly once either way."""
+def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, cluster, is_survivor) over near-dup pairs."""
     d = load_table(spark, sf_dir, "documents")
-    if pairs is None:
-        pairs = dedup_minhash_pairs(spark, sf_dir)
-    return dedup_cluster_survivors(d, pairs)
+    return dedup_cluster_survivors(d, dedup_minhash_pairs(spark, sf_dir))
 
 
 # --------------------------------------------------------------------------
@@ -646,25 +630,14 @@ def pipeline_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     quality = quality_raw_col() + F.lit(1e-9)  # half-boundary guard
     scored = d.withColumn("quality", F.round(quality, 4)).filter(F.col("quality") >= 0.5)
 
-    # 2. exact dedup (keep min doc_id per sha256) as an argmin
-    # AGGREGATE instead of a row_number window (r16 — the same swap
-    # r15 made for the survivor stage, guide §2.3): min(struct(doc_id,
-    # …)) partial-aggregates map-side, so the sha2 exchange carries one
-    # row per (digest, input partition) and the window's per-partition
-    # sort is gone from the pipeline's heaviest job (the CC edge
-    # checkpoint executes this lineage). doc_id is unique, so the
-    # selected row is identical to the old window's rn=1 row.
-    exact = (
-        scored.groupBy(F.sha2(F.col("text"), 256).alias("_h"))
-        .agg(F.min(F.struct("doc_id", "lang", "text", "quality")).alias("_first"))
-        .select("_first.doc_id", "_first.lang", "_first.text", "_first.quality")
-    )
-    # The survivor set feeds TWO consumers (the LSH stage below and the
+    # 2. exact dedup: keep min doc_id per sha256 (the argmin
+    # aggregate, partial-aggregated before the digest exchange). The
+    # survivor set feeds TWO consumers (the LSH stage below and the
     # final cluster join) — dependency-ordered (the cluster join
     # consumes comps <- pairs <- the LSH stage), so a lazy persist
-    # computes the quality+window lineage exactly once without the
+    # computes the quality+argmin lineage exactly once without the
     # eager checkpoint's write-barrier job (see minhash_pairs).
-
+    exact = exact_keepers(scored, F.sha2(F.col("text"), 256), "lang", "text", "quality")
     exact = exact.persist(StorageLevel.MEMORY_AND_DISK)
 
     # 3. near-dup pairs (minhash LSH) computed ON the surviving set —
@@ -675,27 +648,10 @@ def pipeline_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     # dropped bridge docs).
     pairs = minhash_pairs(exact.select("doc_id", "lang", "text"))
 
-    # 4. cluster and keep the best-quality doc per cluster
-    comps = connected_components(pairs)
-    clustered = exact.join(comps, exact.doc_id == comps.node, "left").select(
-        "doc_id", "lang", "quality", F.coalesce("comp", F.col("doc_id")).alias("cluster")
-    )
-    # Survivor = best (quality desc, doc_id asc) row per cluster, as an
-    # argmax AGGREGATE instead of a row_number window (r15, guide
-    # §2.3 "aggregate before you shuffle"): max(struct(quality,
-    # -doc_id, lang)) partial-aggregates map-side — the cluster
-    # exchange carries one row per (cluster, input partition) instead
-    # of every clustered doc — and drops the window's per-partition
-    # sort. The ordering key (quality, -doc_id) is unique (doc_id is
-    # unique), so the selected row is identical to the old window's
-    # rk=1 row and the swap is result-exact.
-    survivors = clustered.groupBy("cluster").agg(
-        F.max(
-            F.struct(
-                F.col("quality"), (-F.col("doc_id")).alias("_nid"), F.col("lang")
-            )
-        ).alias("_best")
-    ).select(F.col("_best.lang").alias("lang"), F.col("_best.quality").alias("quality"))
+    # 4. cluster (checked join) and keep the best-quality doc per
+    # cluster, ties to the smaller doc_id (the argmax aggregate)
+    clustered = cluster_labels(exact.select("doc_id", "lang", "quality"), pairs)
+    survivors = cluster_best(clustered, "quality", "lang")
 
     # 5. clean-corpus stats per language
     return survivors.groupBy("lang").agg(
@@ -763,12 +719,7 @@ def dedup_incremental_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     ingest, each increment costs O(|batch|) + a digest-key join."""
     batch, corpus_hashes = _batch_and_corpus(spark, sf_dir)
     fresh = batch.join(corpus_hashes, "h", "left_anti")
-    w = Window.partitionBy("h").orderBy("doc_id")
-    return (
-        fresh.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("doc_id", "lang")
-    )
+    return exact_keepers(fresh, F.col("h"), "lang")
 
 
 # --------------------------------------------------------------------------
@@ -874,20 +825,8 @@ def decontaminate_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
       {SHINGLE_PAIRS_SQL}
       WHERE {_jaccard_at_least_sql(JACCARD_THRESHOLD)}
     ),
-    edges AS (
-      SELECT doc_a AS u, doc_b AS v FROM pairs
-      UNION
-      SELECT doc_b AS u, doc_a AS v FROM pairs
-    ),
-    reach AS (
-      SELECT u AS node, v AS r FROM edges
-      UNION
-      SELECT t.node, e.v AS r
-      FROM reach t JOIN edges e ON t.r = e.u
-    )
-    SELECT node AS doc_id, least(node, min(r)) AS cluster
-    FROM reach
-    GROUP BY node
+    {CLOSURE_SQL}
+    SELECT doc_id, cluster FROM clus
     """,
 )
 def dedup_clusters_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -986,25 +925,11 @@ def dedup_repeated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _survivors_quality_oracle() -> str:
     return f"""
     WITH RECURSIVE {SHINGLED_CTE_SQL},
-    prs AS (
+    pairs AS (
       {SHINGLE_PAIRS_SQL}
       WHERE {_jaccard_at_least_sql(JACCARD_THRESHOLD)}
     ),
-    edges AS (
-      SELECT doc_a AS u, doc_b AS v FROM prs
-      UNION
-      SELECT doc_b AS u, doc_a AS v FROM prs
-    ),
-    reach AS (
-      SELECT u AS node, v AS r FROM edges
-      UNION
-      SELECT t.node, e.v AS r
-      FROM reach t JOIN edges e ON t.r = e.u
-    ),
-    clus AS (
-      SELECT node AS doc_id, least(node, min(r)) AS cluster
-      FROM reach GROUP BY node
-    ),
+    {CLOSURE_SQL},
     q AS (
       SELECT d.doc_id, d.lang,
              coalesce(c.cluster, d.doc_id) AS cluster,
@@ -1045,39 +970,25 @@ def dedup_survivors_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the iterative CC operator does the heavy lifting
     (checkpointed label propagation, see operators/clustering.py);
-    the survivor pick is then ONE exchange on the cluster key — the
-    row_number and the member count share the same window partition,
-    and docs never in a pair short-circuit via the left join +
-    coalesce(cluster, doc_id) without entering the pair lineage at
-    all. Output is the deduplicated corpus manifest: |clusters| +
-    |singletons| rows."""
+    the checked cluster join labels docs never in a pair with their
+    own id, and the survivor pick is then ONE partial-aggregated
+    exchange on the cluster key — the argmax and the member count
+    share one aggregate. Output is the deduplicated corpus manifest:
+    |clusters| + |singletons| rows."""
     return survivors_quality(load_table(spark, sf_dir, "documents"))
 
 
 def survivors_quality(d: DataFrame) -> DataFrame:
     """Frame-level survivor-selection core over any (doc_id, lang,
     text) frame — see ``dedup_survivors_quality``."""
-    clusters = connected_components(ngram_jaccard_pairs(d)).select(
-        F.col("node").alias("doc_id"), F.col("comp").alias("cluster")
-    )
     q = d.select("doc_id", "lang", quality_raw_col().alias("qr"))
-    with_c = (
-        q.join(clusters, "doc_id", "left")
-        .withColumn("cluster", F.coalesce("cluster", "doc_id"))
-    )
-    w = Window.partitionBy("cluster").orderBy(F.desc("qr"), "doc_id")
-    wc = Window.partitionBy("cluster")
-    return (
-        with_c.withColumn("rn", F.row_number().over(w))
-        .withColumn("n_members", F.count(F.lit(1)).over(wc).cast("bigint"))
-        .filter(F.col("rn") == 1)
-        .select(
-            "cluster",
-            "doc_id",
-            "lang",
-            "n_members",
-            F.round(F.col("qr") + F.lit(1e-9), 4).alias("quality"),
-        )
+    best = cluster_best(cluster_labels(q, ngram_jaccard_pairs(d)), "qr", "lang")
+    return best.select(
+        "cluster",
+        "doc_id",
+        "lang",
+        "n_members",
+        F.round(F.col("qr") + F.lit(1e-9), 4).alias("quality"),
     )
 
 

@@ -250,11 +250,7 @@ def triangle_counts(nodes: DataFrame, prs: DataFrame) -> DataFrame:
     tags=("graph", "stats", "dedup-signal"),
     oracle=f"""
     WITH {_PR_EDGE_SQL.strip()},
-    e2 AS (
-      SELECT src, dst FROM prs
-      UNION ALL
-      SELECT dst AS src, src AS dst FROM prs
-    ),
+    e2 AS ({_UNDIRECTED_SQL}),
     deg AS (
       SELECT src AS node, CAST(count(*) AS BIGINT) AS d
       FROM e2 GROUP BY src

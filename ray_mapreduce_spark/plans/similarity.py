@@ -39,6 +39,7 @@ from ..functions.scale import spread as _spread
 from ..functions.scale import spread_by as _spread_by
 from ..functions.text import BM25_SCORED_SQL, BM25_TF_SQL, TOKENS_SQL, bm25_stats, bm25_tf
 from ..functions.text import bm25_weight, tokens
+from ..operators.clustering import EXACT_KEEP_SQL, exact_keepers
 from ..sources import load_table
 from .dedup import DEFAULT_DF_CAP, JACCARD_THRESHOLD, SHINGLE_MIN_SQL, SHINGLE_PAIRS_SQL
 from .dedup import SHINGLE_SET_SQL, SHINGLED_CTE_SQL, ngram_jaccard_pairs
@@ -2157,7 +2158,7 @@ def embedding_diversity_gram(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("dedup", "pipeline", "report", "jaccard", "embedding"),
     oracle=f"""
     WITH s1 AS MATERIALIZED (
-      SELECT min(doc_id) AS doc_id FROM documents GROUP BY sha256(text)
+      {EXACT_KEEP_SQL}
     ),
     d1 AS MATERIALIZED (
       SELECT d.doc_id, d.lang, d.text FROM documents d JOIN s1 USING (doc_id)
@@ -2179,14 +2180,13 @@ def embedding_diversity_gram(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT s1.doc_id FROM s1 LEFT JOIN rm2 USING (doc_id)
       WHERE rm2.doc_id IS NULL
     ),
-    v2 AS MATERIALIZED (
+    v AS MATERIALIZED (
       SELECT e.vec_id, e.label, CAST(e.embedding AS DOUBLE[]) AS vec
       FROM embeddings e JOIN s2 ON s2.doc_id = e.vec_id
     ),
     rm3 AS MATERIALIZED (
       SELECT DISTINCT b.vec_id AS doc_id
-      FROM v2 a JOIN v2 b ON a.label = b.label AND a.vec_id < b.vec_id
-      WHERE list_cosine_similarity(a.vec, b.vec) >= 0.35
+      {_near_dup_sql()}
     ),
     n AS (
       SELECT (SELECT count(*) FROM documents) AS n0,
@@ -2219,13 +2219,9 @@ def dedup_funnel_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     CC-collapse pipeline (pipeline_clean_corpus) is the
     cluster-exact sibling; this report trades transitive collapse
     for SQL-checkable counts."""
-    d = load_table(spark, sf_dir, "documents").select("doc_id", "lang", "text")
-    w_exact = Window.partitionBy(F.sha2(F.col("text"), 256)).orderBy("doc_id")
-    s1 = (
-        d.withColumn("_rn", F.row_number().over(w_exact))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-        .localCheckpoint(eager=True)
+    d = load_table(spark, sf_dir, "documents")
+    s1 = exact_keepers(d, F.sha2(F.col("text"), 256), "lang", "text").localCheckpoint(
+        eager=True
     )
     pairs = ngram_jaccard_pairs(s1)
     rm2 = pairs.select(F.col("doc_b").alias("doc_id")).distinct()
@@ -2237,12 +2233,7 @@ def dedup_funnel_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     v2 = _with_vec(load_table(spark, sf_dir, "embeddings")).join(
         s2.select(F.col("doc_id").alias("vec_id")), "vec_id", "left_semi"
     )
-    rm3 = (
-        canonical_pairs(v2, ["label"], "vec_id")
-        .filter(_cos("a.vec", "b.vec") >= 0.35)
-        .select(F.col("b.vec_id").alias("doc_id"))
-        .distinct()
-    )
+    rm3 = _near_dup_pairs(v2).select(F.col("b.vec_id").alias("doc_id")).distinct()
     n0 = d.count()
     n1 = s1.count()
     n2 = s2.count()

@@ -7,10 +7,12 @@ from pyspark.sql import functions as F
 import pytest
 
 from ray_mapreduce_spark.operators.clustering import (
+    cluster_labels,
     connected_components,
     dedup_cluster_survivors,
 )
 from ray_mapreduce_spark.plans import all_queries
+from ray_mapreduce_spark.plans import dedup
 from ray_mapreduce_spark.sources import load_table
 
 
@@ -172,22 +174,37 @@ def test_cluster_survivors_all_singletons(spark):
     assert all(r["is_survivor"] and r["cluster"] == k for k, r in rows.items())
 
 
-def _survivors_raise(spark, pairs, missing):
-    docs = spark.createDataFrame([(2,), (3,), (10,), (11,)], "doc_id long")
+def _survivors_raise(spark, monkeypatch, pairs, missing):
+    """Every caller of the cluster join raises on ``pairs``:
+    ``dedup_cluster_survivors``, the pipeline's join of docs that carry
+    payload columns, and ``survivors_quality`` (its pair source
+    replaced by ``pairs``)."""
+    docs = spark.createDataFrame(
+        [(i, "en", f"doc {i}", 0.5) for i in (2, 3, 10, 11)],
+        "doc_id long, lang string, text string, quality double",
+    )
     prs = spark.createDataFrame(pairs, "doc_a long, doc_b long")
-    with pytest.raises(Exception, match=f"pair endpoint {missing} is not a doc_id"):
-        dedup_cluster_survivors(docs, prs).collect()
+    monkeypatch.setattr(dedup, "ngram_jaccard_pairs", lambda d: prs)
+    callers = {
+        "dedup_cluster_survivors": lambda: dedup_cluster_survivors(docs.select("doc_id"), prs),
+        "cluster_labels": lambda: cluster_labels(docs.select("doc_id", "lang", "quality"), prs),
+        "survivors_quality": lambda: dedup.survivors_quality(docs.drop("quality")),
+    }
+    for name, run in callers.items():
+        with pytest.raises(Exception, match=f"pair endpoint {missing} is not a doc_id"):
+            run().collect()
+            pytest.fail(f"{name} did not raise")
 
 
-def test_cluster_survivors_missing_min_endpoint(spark):
+def test_cluster_survivors_missing_min_endpoint(spark, monkeypatch):
     """Outside the pairs ⊆ docs contract: a pair endpoint missing from
     ``docs`` that is its component's minimum would label the component
     with an id that is no doc, leaving that cluster without a
     survivor. It raises instead, naming the id."""
-    _survivors_raise(spark, [(1, 2), (2, 3), (10, 11)], 1)
+    _survivors_raise(spark, monkeypatch, [(1, 2), (2, 3), (10, 11)], 1)
 
 
-def test_cluster_survivors_missing_endpoint(spark):
+def test_cluster_survivors_missing_endpoint(spark, monkeypatch):
     """A missing endpoint that is not its component's minimum raises
     too: every pair endpoint must be a doc."""
-    _survivors_raise(spark, [(2, 3), (10, 11), (11, 99)], 99)
+    _survivors_raise(spark, monkeypatch, [(2, 3), (10, 11), (11, 99)], 99)

@@ -561,7 +561,8 @@ def test_semantic_kmeans_complete_and_consistent(spark, sf_dir):
 def test_survivors_quality_keeps_best_not_min_id(spark):
     """The operator's reason to exist vs dedup_survivors_window: in a
     near-dup cluster the HIGHEST-quality member must survive even
-    when it has the larger doc_id (min-id would pick the other)."""
+    when it has the larger doc_id (min-id would pick the other). On an
+    equal-quality tie the smaller doc_id survives."""
     from ray_mapreduce_spark.plans.dedup import survivors_quality
 
     # doc 1: 30-token doc with every token repeated (low diversity ->
@@ -570,14 +571,18 @@ def test_survivors_quality_keeps_best_not_min_id(spark):
     base = " ".join(f"tok{i}" for i in range(28))
     low = base + " tok0 tok1"          # repeats drop uniq ratio
     high = base + " fresh1 fresh2"
-    docs = spark.createDataFrame(
-        [(1, "en", low), (2, "en", high), (3, "en", "solo doc entirely different")],
-        "doc_id: long, lang: string, text: string",
-    )
-    rows = {r["cluster"]: r for r in survivors_quality(docs).collect()}
-    assert rows[1]["doc_id"] == 2  # cluster rooted at min id 1, survivor is doc 2
-    assert rows[1]["n_members"] == 2
-    assert rows[3]["doc_id"] == 3 and rows[3]["n_members"] == 1  # singleton
+    solo = (3, "en", "solo doc entirely different")
+    # second input: docs 8 and 5 share one text (jaccard 1, equal
+    # quality), the larger id listed first.
+    cases = [
+        ([(1, "en", low), (2, "en", high), solo], {1: (2, 2), 3: (3, 1)}),
+        ([(8, "en", high), (5, "en", high), solo], {5: (5, 2), 3: (3, 1)}),
+    ]
+    for docs, want in cases:
+        frame = spark.createDataFrame(docs, "doc_id: long, lang: string, text: string")
+        rows = survivors_quality(frame).collect()
+        # cluster -> (survivor doc_id, n_members)
+        assert {r["cluster"]: (r["doc_id"], r["n_members"]) for r in rows} == want
 
 
 def test_calibration_deciles_are_contiguous_and_monotone(spark, sf_dir):

@@ -7,10 +7,13 @@ from SHINGLE_K and spells the oracles' shingle set once;
 every near-dup pair generator calls; ``functions/grain.py`` holds the
 UTC day, integer cents and the Knuth hash split for both engines;
 ``functions/stats.py`` holds the ordered fold (gotcha #15) and
-``functions/text.py`` the BM25 weight for both engines; lineages that
-two queries share are written once in their module.
-A guard keeps inline copies from coming back; a parity test pins the
-two engines' shingles to each other."""
+``functions/text.py`` the BM25 weight for both engines;
+``operators/clustering.py`` the dedup decisions' oracle twins (the
+exact keeper and the recursive closure); lineages that two queries
+share are written once in their module.
+A guard keeps inline copies from coming back, also when a copy is
+split across lines; a parity test pins the two engines' shingles to
+each other."""
 
 from __future__ import annotations
 
@@ -21,9 +24,12 @@ _PKG = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
 
 # pattern -> (the one file, relative to the package, allowed to spell
 # it; whether it may appear only ONCE there). A home of None means the
-# spelling has no home: it is generated code. Spellings that are
-# allowed once are lineages two queries share: a second copy in the
-# home file itself is a second definition.
+# spelling has no home: it is generated code, or a named constant's
+# value. Spellings that are allowed once are lineages two queries
+# share: a second copy in the home file itself is a second definition.
+# Patterns match a module's text with every whitespace run collapsed
+# to one space, so they spell each whitespace run as one space and use
+# no pattern that spans unbounded text (``.*``).
 _SINGLE_DEFINITIONS = {
     re.compile(r"F\.split\(F\.lower\("): ("functions/text.py", False),
     re.compile(r"F\.size\(F\.split\(\"text\", \" \"\)\)"): ("functions/text.py", False),
@@ -51,11 +57,34 @@ _SINGLE_DEFINITIONS = {
     re.compile(r"c_acctbal \* 100\) AS BIGINT\) div"): ("plans/advanced.py", True),
     re.compile(r"c_acctbal \* 100\) AS BIGINT\) //"): ("plans/advanced.py", True),
     re.compile(r"F\.col\(\"n\"\) - F\.col\(\"df\"\) \+ 0\.5"): ("functions/text.py", True),
-    re.compile(r"ln\(\(.* - .* \+ 0\.5\) / \("): ("functions/text.py", True),
+    re.compile(r"ln\(\([^()]* - [^()]* \+ 0\.5\) / \("): ("functions/text.py", True),
     re.compile(r"1::BIGINT << CASE WHEN i > 62"): ("plans/advanced.py", True),
     re.compile(r"UNION ALL SELECT dst AS src, src AS dst"): ("plans/graph.py", True),
     re.compile(r"\[\.,;:!\?"): ("functions/text.py", False),
+    re.compile(r"1::BIGINT << CAST\(i AS INT\) AS DOUBLE"): ("plans/advanced.py", True),
+    re.compile(r"FROM reach t JOIN edges e ON t\.r = e\.u"): ("operators/clustering.py", True),
+    re.compile(r"min\(doc_id\)( AS \w+)? FROM documents GROUP BY sha256\(text\)"): (
+        "operators/clustering.py",
+        True,
+    ),
+    re.compile(r"(list_cosine_similarity|_cos)\([^()]*\) >= \d"): (None, False),
 }
+
+
+def _collapsed(text: str) -> tuple[str, list]:
+    """``text`` with every whitespace run as one space, and the line
+    number of each character of the result."""
+    out, lines, lineno = [], [], 1
+    for m in re.finditer(r"\s+|\S+", text):
+        run = m.group()
+        if run[0].isspace():
+            out.append(" ")
+            lines.append(lineno)
+            lineno += run.count("\n")
+        else:
+            out.append(run)
+            lines.extend([lineno] * len(run))
+    return "".join(out), lines
 
 
 def test_text_front_end_defined_once():
@@ -69,15 +98,21 @@ def test_text_front_end_defined_once():
     (Spark ``unix_micros(ts) div 86400000000``, DuckDB
     ``epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000``), the cents of
     ``value`` (``round(value * 100)`` in either spelling) and the
-    Knuth multiplier ``2654435761``, and the exact-dedup normal form's
-    punctuation class ``[.,;:!?``. These may appear only once: the
-    event-type ``lead`` sequence (Spark and DuckDB), the order close
-    day, the Welch z of the two-arm oracles, the oracles' Jaccard
-    predicate, the two-pass kernel's partition id, the ordered fold's
-    ``rk == k`` filter (Spark and DuckDB), the two-period midpoint
-    day, the daily mean value, the QI balance bucket, the BM25 weight
-    (Spark and DuckDB), the guarded EWMA step weight and the
-    oracles' both-directions edge list."""
+    Knuth multiplier ``2654435761``, the exact-dedup normal form's
+    punctuation class ``[.,;:!?``, and a cosine compared with a bare
+    number (a near-dup threshold is similarity.py's named constant,
+    and its rule ``_near_dup_pairs`` / ``_near_dup_sql``). These may
+    appear only once: the event-type ``lead`` sequence (Spark and
+    DuckDB), the order close day, the Welch z of the two-arm oracles,
+    the oracles' Jaccard predicate, the two-pass kernel's partition
+    id, the ordered fold's ``rk == k`` filter (Spark and DuckDB), the
+    two-period midpoint day, the daily mean value, the QI balance
+    bucket, the BM25 weight (Spark and DuckDB), the guarded EWMA step
+    weight and the oracles' EWMA divisor, the oracles'
+    both-directions edge list, the oracles' recursive closure and
+    their exact keeper. Each module is
+    matched with whitespace runs collapsed, so a copy split across
+    lines is found too, reported at the line where it starts."""
     hits = []
     seen: dict = {}
     for root, _, files in os.walk(_PKG):
@@ -87,24 +122,27 @@ def test_text_front_end_defined_once():
             path = os.path.join(root, name)
             rel = os.path.relpath(path, _PKG).replace(os.sep, "/")
             with open(path, encoding="utf-8") as f:
-                for lineno, line in enumerate(f, 1):
-                    for pattern, (home, once) in _SINGLE_DEFINITIONS.items():
-                        if not pattern.search(line):
-                            continue
-                        where = f"ray_mapreduce_spark/{rel}:{lineno}: {line.strip()}"
-                        if rel != home:
-                            hits.append(f"{where}  (defined in {home or 'generated code'})")
-                        elif once and pattern in seen:
-                            hits.append(f"{where}  (second copy; first at {seen[pattern]})")
-                        else:
-                            seen[pattern] = f"{rel}:{lineno}"
+                raw = f.read()
+            text, line_of = _collapsed(raw)
+            src_lines = raw.splitlines()
+            for pattern, (home, once) in _SINGLE_DEFINITIONS.items():
+                for m in pattern.finditer(text):
+                    lineno = line_of[m.start()]
+                    where = f"ray_mapreduce_spark/{rel}:{lineno}: {src_lines[lineno - 1].strip()}"
+                    if rel != home:
+                        hits.append(f"{where}  (defined in {home or 'generated code or a named constant'})")
+                    elif once and pattern in seen:
+                        hits.append(f"{where}  (second copy; first at {seen[pattern]})")
+                    else:
+                        seen[pattern] = f"{rel}:{lineno}"
     assert not hits, (
         "inline copy of a shared definition; call functions/text.py's tokens() / "
         "n_words() / bm25_weight(), functions/stats.py's ordered_fold(), "
         "functions/pairs.py's canonical_pairs() or functions/grain.py's "
         "utc_day() / cents() / knuth_bucket(), or interpolate TOKENS_SQL, "
         "DAY_SQL, CENTS_SQL, KNUTH / MOD_2_32 or plans/dedup.py's SHINGLE_LIST_SQL / "
-        "SHINGLE_SET_SQL / SHINGLED_CTE_SQL; for a shared lineage call or interpolate "
+        "SHINGLE_SET_SQL / SHINGLED_CTE_SQL or operators/clustering.py's EXACT_KEEP_SQL / "
+        "CLOSURE_SQL; for a shared lineage call or interpolate "
         "its one definition:\n" + "\n".join(hits)
     )
 
